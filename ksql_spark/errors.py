@@ -43,3 +43,8 @@ class UnsupportedTypeError(KsqlError):
     Reference analog: kinds/ktype.go:116-137 rejecting unsigned ints,
     structs, etc.
     """
+
+
+class QueryTimeoutError(KsqlError):
+    """A query did not finish within its timeout; the engine stopped it
+    rather than return partial results from a query left running."""

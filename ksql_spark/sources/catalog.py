@@ -306,8 +306,12 @@ class Catalog:
             return sink.read_data(self.spark)
         if rel.format in ("iceberg", "bucketed_table"):
             return self.spark.read.table(rel.path)
-        df = self.spark.read.parquet(self._data_glob(rel))
-        return df
+        # a declared schema is read as-is, like read_stream: no inference
+        # job, and a created relation nobody inserted into reads as empty
+        reader = self.spark.read
+        if rel.schema is not None:
+            reader = reader.schema(rel.schema)
+        return reader.parquet(self._data_glob(rel))
 
     def read_stream(self, name: str) -> DataFrame:
         """Unbounded streaming read (STREAM relations)."""

@@ -23,11 +23,15 @@ import os
 import re
 from typing import Any, Iterable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _make_type_verifier
 
 from ..builder import CreateBuilder, EmitMode, InsertBuilder, Ref, SelectBuilder
-from ..errors import AnalysisError, CatalogError
+from ..errors import AnalysisError, CatalogError, QueryTimeoutError, SchemaError
 from ..operators.compile import DEFAULT_GRACE, compile_select
 from ..sources.catalog import QUERYABLE_PREFIX, Catalog, Relation
 from .metrics import EngineMetricsListener
@@ -94,6 +98,44 @@ def check_state_schema(checkpoint: str, descriptor: list[list[str]], query: str)
     os.makedirs(checkpoint, exist_ok=True)
     with open(marker, "w") as fh:
         json.dump({"fingerprint": fp, "descriptor": descriptor}, fh)
+
+
+def values_frame(
+    spark: SparkSession, name: str, schema: T.StructType, rows: list[dict[str, Any]]
+) -> DataFrame:
+    """The rows of ``INSERT INTO <name> VALUES`` as a local Arrow relation.
+
+    Each row goes through the checks and conversion that
+    ``spark.createDataFrame(rows, schema)`` applies (PySpark's row verifier,
+    then ``toInternal``), so the same values are accepted and a naive
+    datetime keeps its local-time meaning.  The converted rows then reach
+    the JVM as one Arrow batch, a ``LocalRelation``, instead of pickled rows
+    behind a ``LogicalRDD`` that every action re-runs through Python
+    workers.  A row key that names no column, or a value its column cannot
+    hold, raises :class:`SchemaError`; a column left out is NULL.
+    """
+    columns = set(schema.names)
+    verify = _make_type_verifier(schema)
+    internal = []
+    for row in rows:
+        unknown = next((k for k in row if k not in columns), None)
+        if unknown is not None:
+            raise SchemaError(
+                f"INSERT into {name}: column {unknown!r} is not in its schema {schema.names}"
+            )
+        try:
+            verify(row)
+        except (TypeError, ValueError) as e:  # PySparkTypeError / PySparkValueError
+            raise SchemaError(f"INSERT into {name}: {e}") from e
+        internal.append(dict(zip(schema.names, schema.toInternal(row))))
+    table = pa.Table.from_pylist(internal, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema=schema)
+
+
+def _column_types(schema: T.StructType) -> dict[str, str]:
+    """Column name (case-insensitive, as Spark resolves it) -> type, without
+    nullability."""
+    return {f.name.lower(): f.dataType.simpleString() for f in schema.fields}
 
 
 class PersistentQuery:
@@ -324,10 +366,11 @@ class PersistentQueryManager:
         return pq
 
     def drop(self, name: str) -> None:
-        """DROP the relation and stop its query (drop_builder semantics)."""
+        """DROP the relation and stop its query (drop_builder semantics);
+        its cached table state is released."""
         if name in self.queries:
             self.stop(name)
-            del self.queries[name]
+            self.queries.pop(name).sink.release()
         self.catalog.drop(name)
 
     # ------------------------------------------------------------------
@@ -337,14 +380,20 @@ class PersistentQueryManager:
     def insert(self, ib: InsertBuilder) -> None:
         ib.validate()
         rel = self.catalog.get(ib.name)
+        schema = rel.schema or self.catalog.read(ib.name).schema
         if ib.rows:
-            schema = rel.schema or self.catalog.read(ib.name).schema
-            df = self.spark.createDataFrame(ib.rows, schema=schema)
-            self.catalog.append(ib.name, df)
+            df = values_frame(self.spark, ib.name, schema, ib.rows)
         else:
             assert ib.select is not None
             df = compile_select(ib.select, spark=self.spark, catalog=self.catalog)
-            self.catalog.append(ib.name, df)
+            # the relation is read back with its schema, so a file of other
+            # columns or types would fail every later read of it
+            if _column_types(df.schema) != _column_types(schema):
+                raise SchemaError(
+                    f"INSERT into {ib.name}: the query yields {df.schema.simpleString()}, "
+                    f"the relation holds {schema.simpleString()}"
+                )
+        self.catalog.append(ib.name, df)
 
     def select_once(self, sb: SelectBuilder) -> list:
         """Pull query: one-shot read of current materialized data
@@ -358,7 +407,10 @@ class PersistentQueryManager:
 
         Runs the plan as a real streaming query into an idempotent sink and
         yields the committed changelog rows.  A continuous deployment would
-        keep the query running; availableNow gives tests determinism.
+        keep the query running; availableNow gives tests determinism.  A
+        query that has not drained within ``timeout_seconds`` is stopped and
+        :class:`QueryTimeoutError` raised: no partial rows, no query left
+        running.
         """
         if sb.emit != EmitMode.CHANGES:
             raise AnalysisError("select_with_emit requires EMIT CHANGES")
@@ -380,6 +432,10 @@ class PersistentQueryManager:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(timeout_seconds)
+        if not q.awaitTermination(timeout_seconds):
+            q.stop()
+            raise QueryTimeoutError(
+                f"push query {qname} did not drain within {timeout_seconds} s; it was stopped"
+            )
         for row in sink.read_data(self.spark).collect():
             yield row

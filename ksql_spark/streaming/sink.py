@@ -31,6 +31,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import threading
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -48,6 +49,10 @@ class ExactlyOnceParquetSink:
         self.root = root
         self.op = op
         self.lineage = lineage
+        # (key, frame) of the last read_latest_state, where key is
+        # (session, committed epochs, key columns)
+        self._state: tuple[tuple, DataFrame] | None = None
+        self._state_lock = threading.Lock()
         os.makedirs(self.data_dir, exist_ok=True)
         os.makedirs(self.commit_dir, exist_ok=True)
 
@@ -129,9 +134,11 @@ class ExactlyOnceParquetSink:
 
     # -- reading back ----------------------------------------------------------
 
-    def read(self, spark: SparkSession) -> DataFrame:
-        """Union of committed epochs only (uncommitted dirs are invisible)."""
-        batches = self.committed_batches()
+    def read(self, spark: SparkSession, batches: list[int] | None = None) -> DataFrame:
+        """Union of committed epochs only (uncommitted dirs are invisible).
+        ``batches`` is a committed-epoch listing the caller already made."""
+        if batches is None:
+            batches = self.committed_batches()
         if not batches:
             raise FileNotFoundError(f"no committed batches under {self.root}")
         paths = [self._batch_path(b) for b in batches]
@@ -150,8 +157,43 @@ class ExactlyOnceParquetSink:
         tables/specification.go:323-355) — derived from the changelog, the
         stream/table duality made literal.  One hash-agg over the changelog;
         in production this is an Iceberg MERGE-maintained table instead.
+
+        The frame is kept and served again while the committed epochs stay
+        the same.  The first call at a new epoch set builds it unpersisted,
+        so a point lookup's key filter still reaches the parquet scan, and a
+        table that commits between pulls never pays for caching; a second
+        call at the same epochs persists it, and later pulls on the
+        unchanged table scan cached state.  A new epoch set unpersists the
+        old frame; :meth:`release` drops it.
         """
-        df = self.read(spark)
+        with self._state_lock:
+            # listed under the lock, so the slot only moves to newer epochs
+            batches = self.committed_batches()
+            key = (spark, tuple(batches), tuple(keys))
+            if self._state is not None and self._state[0] == key:
+                state = self._state[1]
+                if not state.is_cached:
+                    state.persist()
+                return state
+            # unpersist first: the cache manager is shared by every session,
+            # and an equal plan cached twice would be one cache entry
+            self._release_locked()
+            state = self._latest_state(self.read(spark, batches), keys)
+            self._state = (key, state)
+            return state
+
+    def release(self) -> None:
+        """Forget the latest state, unpersisting it if it was cached."""
+        with self._state_lock:
+            self._release_locked()
+
+    def _release_locked(self) -> None:
+        if self._state is not None and self._state[1].is_cached:
+            self._state[1].unpersist()
+        self._state = None
+
+    @staticmethod
+    def _latest_state(df: DataFrame, keys: list[str]) -> DataFrame:
         lineage = {"__op", "__part_id", "__batch_id"}
         value_cols = [c for c in df.columns if c not in keys and c not in lineage]
         # update-mode changelogs emit at most one row per key per epoch, so

@@ -3,6 +3,10 @@
 
 from __future__ import annotations
 
+import datetime
+import os
+import time
+
 import pytest
 
 from ksql_spark import (
@@ -136,3 +140,141 @@ def test_topic_surface(spark, tmp_path):
     assert "raw_events_topic" in names and "raw_events" in names
     d = cat.describe_topic("raw_events_topic")
     assert d["bytes"] > 0 and d["partitions"] >= 1
+
+
+def _stream_with_manager(cat, spark, workdir, name, *fields):
+    from ksql_spark.streaming.engine import PersistentQueryManager
+
+    cat.create(Create(STREAM, name).SchemaFields(*fields))
+    return PersistentQueryManager(spark, cat, workdir=f"{workdir}/{name}_e", enable_metrics=False)
+
+
+@pytest.fixture()
+def tx_mgr(cat, spark, workdir):
+    return _stream_with_manager(
+        cat, spark, workdir, "tx", SchemaField("ID", KType.BIGINT), SchemaField("AMOUNT", KType.DOUBLE)
+    )
+
+
+def test_insert_unknown_column_rejected(cat, tx_mgr):
+    """A row key must name a column exactly: a mis-cased key is not
+    silently dropped with NULL written in its place."""
+    with pytest.raises(SchemaError, match=r"INSERT into tx: column 'id' is not in its schema"):
+        tx_mgr.insert(Insert(STREAM, "tx").Rows({"id": 1, "AMOUNT": 1.0}))
+    assert cat.read("tx").count() == 0
+
+
+def test_insert_value_of_wrong_type_rejected(cat, tx_mgr):
+    with pytest.raises(SchemaError, match="FIELD_DATA_TYPE_UNACCEPTABLE"):
+        tx_mgr.insert(Insert(STREAM, "tx").Rows({"ID": 1, "AMOUNT": "1.0"}))
+    with pytest.raises(SchemaError, match="FIELD_DATA_TYPE_UNACCEPTABLE"):
+        tx_mgr.insert(Insert(STREAM, "tx").Rows({"ID": 1.5, "AMOUNT": 1.0}))
+    assert cat.read("tx").count() == 0
+
+
+def test_insert_missing_column_writes_null(cat, tx_mgr):
+    tx_mgr.insert(Insert(STREAM, "tx").Rows({"ID": 1}, {"AMOUNT": 2.5}))
+    assert sorted(map(tuple, cat.read("tx").collect()), key=str) == [(1, None), (None, 2.5)]
+
+
+def test_empty_created_stream_pulls_empty(cat, spark, workdir):
+    from ksql_spark import F, Schema, Select
+
+    mgr = _stream_with_manager(cat, spark, workdir, "quiet", SchemaField("ID", KType.BIGINT))
+    assert mgr.select_once(Select(F("ID")).From(Schema("quiet", STREAM))) == []
+
+
+def test_insert_as_select_must_match_declared_types(cat, spark, workdir, tx_mgr):
+    """A stream is read with its declared schema, so an AS SELECT yielding a
+    wider type is rejected rather than written as a file no pull can read."""
+    from ksql_spark import F, Schema, Select
+
+    tx_mgr.insert(Insert(STREAM, "tx").Rows({"ID": 1, "AMOUNT": 2.5}))
+    q = Select(F("ID"), F("AMOUNT")).From(Schema("tx", STREAM))
+    mgr = _stream_with_manager(
+        cat, spark, workdir, "narrow", SchemaField("ID", KType.INT), SchemaField("AMOUNT", KType.DOUBLE)
+    )
+    with pytest.raises(SchemaError, match=r"INSERT into narrow: the query yields .*ID:bigint"):
+        mgr.insert(Insert(STREAM, "narrow").AsSelect(q))
+    assert mgr.select_once(Select(F("ID"), F("AMOUNT")).From(Schema("narrow", STREAM))) == []
+
+    same = Create(STREAM, "same").SchemaFields(
+        SchemaField("ID", KType.BIGINT), SchemaField("AMOUNT", KType.DOUBLE)
+    )
+    cat.create(same)
+    mgr.insert(Insert(STREAM, "same").AsSelect(q))
+    got = mgr.select_once(Select(F("ID"), F("AMOUNT")).From(Schema("same", STREAM)))
+    assert [tuple(r) for r in got] == [(1, 2.5)]
+
+
+# INSERT values per KType: edge values, empty collections, bytes and bytearray,
+# naive and tz-aware timestamps (the naive ones across a DST change)
+_UTC_PLUS_5 = datetime.timezone(datetime.timedelta(hours=5))
+_VALUES = {
+    KType.BOOL: [True, False],
+    KType.INT: [0, -(2**31), 2**31 - 1],
+    KType.BIGINT: [-(2**63), 2**63 - 1, 7],
+    KType.DOUBLE: [1.5, -0.0, 1e300, float("inf")],
+    KType.STRING: ["", "abc", "ünïcode ✓"],
+    KType.BYTES: [b"\x00\xff", bytearray(b"ab")],
+    KType.TIMESTAMP: [
+        datetime.datetime(2024, 1, 1, 12),
+        datetime.datetime(2024, 7, 1, 12, 30, 15, 123456),
+        datetime.datetime(2024, 1, 1, 12, tzinfo=datetime.timezone.utc),
+        datetime.datetime(2024, 1, 1, 12, tzinfo=_UTC_PLUS_5),
+    ],
+    KType.ARR_BOOL: [[True, False], []],
+    KType.ARR_INT: [[1, -2], ()],
+    KType.ARR_BIGINT: [[2**40]],
+    KType.ARR_DOUBLE: [[1.25, -3.5]],
+    KType.ARR_STRING: [["x", ""], []],
+    KType.ARR_BYTES: [[b"a", bytearray(b"\x01")]],
+    KType.ARR_FLOAT: [[1.1, 2.2, -0.5]],
+    KType.MAP_BOOL: [{"k": True}, {}],
+    KType.MAP_INT: [{"a": 1, "b": -1}],
+    KType.MAP_BIGINT: [{"a": 2**50}],
+    KType.MAP_DOUBLE: [{"a": 0.1}],
+    KType.MAP_STRING: [{"a": "b", "": "c"}],
+    KType.MAP_BYTES: [{"a": b"\x00"}],
+}
+
+
+@pytest.fixture()
+def new_york_tz():
+    old = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    yield
+    if old is None:
+        del os.environ["TZ"]
+    else:
+        os.environ["TZ"] = old
+    time.tzset()
+
+
+def test_insert_values_cover_every_ktype():
+    assert set(_VALUES) == set(KType)
+
+
+@pytest.mark.parametrize("ktype", list(KType), ids=lambda k: k.name)
+def test_insert_matches_create_dataframe_per_ktype(cat, spark, workdir, new_york_tz, ktype):
+    """INSERT ... VALUES writes what spark.createDataFrame(rows, schema)
+    holds, type by type, under a process time zone other than UTC (a naive
+    datetime is local time there, as it is for createDataFrame)."""
+    mgr = _stream_with_manager(
+        cat, spark, workdir, "vals", SchemaField("ID", KType.INT), SchemaField("V", ktype)
+    )
+    rows = [{"ID": i, "V": v} for i, v in enumerate(_VALUES[ktype])] + [{"ID": -1}]
+    mgr.insert(Insert(STREAM, "vals").Rows(*rows))
+    got = sorted(cat.read("vals").collect())
+    want = sorted(spark.createDataFrame(rows, schema=cat.get("vals").schema).collect())
+    assert got == want
+
+
+def test_insert_naive_timestamp_is_local_time(cat, spark, workdir, new_york_tz):
+    from pyspark.sql import functions as Fn
+
+    mgr = _stream_with_manager(cat, spark, workdir, "at", SchemaField("TS", KType.TIMESTAMP))
+    mgr.insert(Insert(STREAM, "at").Rows({"TS": datetime.datetime(2024, 1, 1, 12)}))
+    # 12:00 in New York (EST, UTC-5) is 17:00 UTC
+    assert cat.read("at").select(Fn.unix_seconds("TS")).first()[0] == 1704128400

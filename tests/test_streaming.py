@@ -642,3 +642,199 @@ def test_iceberg_sink_call_executes_against_contract_double(spark):
     sink(FakeBatchDF(spark), 2)           # next epoch merges again
     assert views == ["__ksql_batch_1", "__ksql_batch_2"]
     assert executed[-1] == sink.merge_sql("__ksql_batch_2")
+
+
+def _conv_counts_table(spark, workdir, name):
+    """A CTAS conv_id -> count over a two-file source dir; returns the
+    manager and a writer that adds a source file."""
+    base = Fn.lit("2026-01-01 00:00:00").cast("timestamp")
+    src = f"{workdir}/{name}_src"
+
+    def write(rows):
+        spark.createDataFrame(rows, "conv_id string, off long").select(
+            "conv_id",
+            (base + Fn.col("off") * Fn.expr("INTERVAL 60 SECONDS")).alias("ts"),
+            Fn.col("off").alias("turn_idx"),
+        ).coalesce(1).write.mode("append").parquet(src)
+
+    write([("a", 0), ("a", 1), ("b", 2)])
+    write([("b", 3), ("c", 4)])
+    cat = Catalog(spark, root=f"{workdir}/{name}_cat")
+    cat.register_parquet("src", src, ref=STREAM, event_time_col="ts")
+    eng = PersistentQueryManager(spark, cat, workdir=f"{workdir}/{name}_eng", enable_metrics=False)
+    eng.create_as_select(
+        Create(TABLE, name).AsSelect(
+            Select(F("conv_id"), Count(F("turn_idx")).Alias("n"))
+            .From(Schema("src", STREAM))
+            .GroupBy(F("conv_id"))
+            .EmitChanges()
+        )
+    )
+    return eng, write
+
+
+def _pull(eng, table):
+    sb = Select("conv_id", "n").From(Schema(table, TABLE))
+    return sorted(map(tuple, eng.select_once(sb)))
+
+
+def test_pull_after_resume_sees_new_commits(spark, workdir):
+    """The cached table state is keyed by the committed epochs: a pull after
+    the query committed more epochs rebuilds it and unpersists the old one."""
+    eng, write = _conv_counts_table(spark, workdir, "cached_counts")
+    assert _pull(eng, "QUERYABLE_cached_counts") == [("a", 2), ("b", 2), ("c", 1)]
+    assert _pull(eng, "QUERYABLE_cached_counts") == [("a", 2), ("b", 2), ("c", 1)]
+    old = eng.catalog.read("QUERYABLE_cached_counts")
+    assert old.is_cached
+    write([("a", 5), ("d", 6)])
+    eng.resume("cached_counts")
+    assert _pull(eng, "QUERYABLE_cached_counts") == [("a", 3), ("b", 2), ("c", 1), ("d", 1)]
+    assert not old.is_cached
+
+
+def test_table_and_queryable_twin_share_cached_state(spark, workdir):
+    """The first read at a set of committed epochs is left unpersisted; the
+    next, under either name, persists that same frame and later reads reuse
+    it."""
+    eng, _ = _conv_counts_table(spark, workdir, "shared_counts")
+    state = eng.catalog.read("shared_counts")
+    assert not state.is_cached
+    assert eng.catalog.read("QUERYABLE_shared_counts") is state
+    assert state.is_cached
+    assert eng.catalog.read("shared_counts") is state
+
+
+def test_first_pull_after_commit_pushes_key_filter_to_scan(spark, workdir):
+    """A pull on epochs no earlier pull saw reads the changelog, not a
+    cache, so a point lookup's key filter reaches the parquet scan."""
+    eng, _ = _conv_counts_table(spark, workdir, "pushed_counts")
+    df = eng.catalog.read("QUERYABLE_pushed_counts").where(Fn.col("conv_id") == "b")
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryTableScan" not in plan
+    assert "EqualTo(conv_id,b)" in plan
+    assert sorted(map(tuple, df.collect())) == [("b", 2)]
+
+
+def test_drop_releases_cached_state(spark, workdir):
+    def persisted():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    eng, _ = _conv_counts_table(spark, workdir, "dropped_counts")
+    before = persisted()
+    _pull(eng, "QUERYABLE_dropped_counts")
+    _pull(eng, "dropped_counts")
+    assert persisted() == before + 1
+    eng.drop("dropped_counts")
+    assert persisted() == before
+
+
+def test_insert_values_frame_is_local_relation(spark):
+    from ksql_spark.streaming.engine import values_frame
+
+    df = values_frame(spark, "s", spark.range(1).schema, [{"id": 1}, {"id": 2}])
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.startswith("LocalRelation") and "LogicalRDD" not in plan
+    assert [r.id for r in df.collect()] == [1, 2]
+
+
+def test_select_with_emit_timeout_stops_query(spark, engine):
+    from ksql_spark import QueryTimeoutError
+
+    sb = (
+        Select(F("conv_id"), Count(F("turn_idx")).Alias("n"))
+        .From(Schema("transcripts", STREAM))
+        .GroupBy(F("conv_id"))
+        .EmitChanges()
+    )
+    with pytest.raises(QueryTimeoutError, match="did not drain"):
+        list(engine.select_with_emit(sb, timeout_seconds=0.001))
+    assert not [q.name for q in spark.streams.active if (q.name or "").startswith("__emit_")]
+
+
+def test_cached_state_concurrent_pulls_and_commits(spark, workdir):
+    """Threads pulling a table while its epochs commit: every pull sees a
+    committed prefix, and every superseded state was unpersisted (a lost
+    update on the cache slot would leave one persisted for good)."""
+    import sys
+    import threading
+
+    from ksql_spark.streaming.sink import ExactlyOnceParquetSink
+
+    sink = ExactlyOnceParquetSink(f"{workdir}/concurrent", op="U")
+    sink(spark.createDataFrame([("a", 0)], "k string, v long"), 0)
+    frames, seen, errors = [], [], []
+
+    def pull():
+        try:
+            for _ in range(3):
+                state = sink.read_latest_state(spark, ["k"])
+                frames.append(state)
+                seen.append(sorted(map(tuple, state.collect())))
+        except Exception as e:  # noqa: BLE001 — reported by the assertion below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=pull) for _ in range(6)]
+        for t in threads:
+            t.start()
+        for epoch in (1, 2, 3):
+            sink(spark.createDataFrame([("a", epoch)], "k string, v long"), epoch)
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not errors and not any(t.is_alive() for t in threads)
+    assert len(seen) == 18 and all(s in ([("a", e)] for e in range(4)) for s in seen)
+    sink.read_latest_state(spark, ["k"])
+    final = sink.read_latest_state(spark, ["k"])
+    assert sorted(map(tuple, final.collect())) == [("a", 3)] and final.is_cached
+    assert [f for f in frames if f is not final and f.is_cached] == []
+    sink.release()
+    assert not final.is_cached
+
+
+def test_cached_state_never_moves_back_to_older_epochs(spark, workdir):
+    """A pull that listed the epochs before a commit, and reaches the cache
+    slot after a pull that listed them after it, must not replace the newer
+    state with its older one."""
+    import threading
+
+    from ksql_spark.streaming.sink import ExactlyOnceParquetSink
+
+    sink = ExactlyOnceParquetSink(f"{workdir}/ordered", op="U")
+    sink(spark.createDataFrame([("a", 0)], "k string, v long"), 0)
+    listed, go = threading.Event(), threading.Event()
+    list_epochs = sink.committed_batches
+
+    def list_then_wait():
+        # the first listing (the slow pull's) stalls until released
+        sink.committed_batches = list_epochs
+        batches = list_epochs()
+        listed.set()
+        go.wait(timeout=60)
+        return batches
+
+    sink.committed_batches = list_then_wait
+    got = {}
+    slow = threading.Thread(target=lambda: got.update(slow=sink.read_latest_state(spark, ["k"])))
+    slow.start()
+    assert listed.wait(timeout=60)
+    sink(spark.createDataFrame([("a", 1)], "k string, v long"), 1)
+
+    def fast_pulls():
+        sink.read_latest_state(spark, ["k"])
+        got["fast"] = sink.read_latest_state(spark, ["k"])
+
+    fast = threading.Thread(target=fast_pulls)
+    fast.start()
+    fast.join(timeout=2)  # returns at once if the slow pull does not hold the slot
+    go.set()
+    slow.join(timeout=60)
+    fast.join(timeout=60)
+    assert sorted(map(tuple, got["slow"].collect())) in ([("a", 0)], [("a", 1)])
+    newest = got["fast"]
+    assert sorted(map(tuple, newest.collect())) == [("a", 1)] and newest.is_cached
+    assert sink.read_latest_state(spark, ["k"]) is newest
+    sink.release()
