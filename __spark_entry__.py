@@ -11,25 +11,112 @@ The flagship (``entry`` and ``streaming_tumbling_changelog``) runs the real
 Structured Streaming path — CSAS persistent query, exactly-once sink,
 changelog state — and its oracle is plain batch SQL: streaming == batch is
 the core parity claim (BASELINE.json north_rule).
+
+Streaming entries only declare their query: the engine
+(``streaming/engine.py::start_stream``) pins the declared state parallelism
+and decides whether a bounded run keeps its trailing no-data micro-batch.
 """
 
 from __future__ import annotations
 
 import atexit
+import datetime
 import os
+import shutil
 import sys
 import tempfile
-from contextlib import contextmanager as _contextmanager
 from collections.abc import Callable
 
 # resolve the ksql_spark package relative to this file, regardless of the
 # driver's working directory
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as Fn
 
+from ksql_spark import (
+    STREAM,
+    TABLE,
+    TOPIC,
+    Avg,
+    Case,
+    Catalog,
+    CollectList,
+    CollectSet,
+    Count,
+    Create,
+    EarliestByOffset,
+    F,
+    Histogram,
+    HoppingWindow,
+    Insert,
+    KType,
+    LatestByOffset,
+    Literal,
+    Max,
+    Min,
+    RawColumn,
+    Schema,
+    SchemaField,
+    Select,
+    SelectStruct,
+    SessionWindow,
+    Sum,
+    TimeUnit,
+    TopK,
+    TopKDistinct,
+    TumblingWindow,
+    compile_select,
+)
+from ksql_spark.errors import AnalysisError, SchemaError
+from ksql_spark.expr import Conditional
 from ksql_spark.functions.numeric import portable_round
+from ksql_spark.functions.text import (
+    fingerprint,
+    lang_id,
+    quality_score,
+    token_count_bpe,
+    token_count_ws,
+)
+from ksql_spark.migrations import Migrator, create_migration
+from ksql_spark.operators.cep import match_sequence, repeat
+from ksql_spark.operators.cep_nfa import (
+    match_pattern,
+    match_pattern_stream,
+    match_quantified,
+    match_quantified_stream,
+)
+from ksql_spark.operators.chunking import chunk_documents
+from ksql_spark.operators.compile import DEFAULT_GRACE
+from ksql_spark.operators.dedup import (
+    cleanup_persisted,
+    dedup_clusters,
+    embedding_neardup_pairs,
+    embedding_neardup_pairs_lsh,
+    exact_dedup,
+    exact_dedup_stream,
+    minhash_index,
+    minhash_lsh_pairs,
+    minhash_lsh_pairs_incremental,
+    ngram_jaccard_pairs,
+    simhash_pairs_blocked,
+)
+from ksql_spark.operators.multimodal import (
+    extract_features,
+    synthesize_media,
+    synthesize_media_real,
+)
+from ksql_spark.operators.sampling import hash_sample, stratified_sample
+from ksql_spark.operators.similarity import add_lsh_buckets, cosine_topk, lsh_topk, lsh_topk_batch
+from ksql_spark.streaming.engine import PersistentQueryManager, start_stream
+from ksql_spark.streaming.sink import ExactlyOnceParquetSink
+from ksql_spark.streaming.skew import (
+    salted_join,
+    salted_stream_stream_join,
+    salted_two_phase_agg,
+)
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
@@ -48,28 +135,22 @@ def _fmt(col):
     return Fn.date_format(col, "yyyy-MM-dd HH:mm:ss")
 
 
-@_contextmanager
-def _no_data_batches_off(spark: SparkSession):
-    """Skip the trailing no-data micro-batch for bounded runs whose output
-    does not depend on watermark-close emission (r7).
+def _session_us(df: DataFrame) -> DataFrame:
+    """Session-window rows as (start_us, end_us, user_id, cnt)."""
+    return df.select(
+        Fn.unix_micros(Fn.col("window_start").cast("timestamp")).alias("session_start_us"),
+        Fn.unix_micros(Fn.col("window_end").cast("timestamp")).alias("session_end_us"),
+        "user_id",
+        "cnt",
+    )
 
-    availableNow always appends one empty batch after the data is drained
-    so watermark-driven output (append-mode windows, outer-join
-    null-extension, timeout flushes) can complete — at the cost of a full
-    state reload + commit for every store.  UPDATE-mode changelogs and
-    eager INNER stream-stream joins emit every row in the data batches;
-    their no-data batch only evicts state that a bounded run is about to
-    discard anyway.  Entries in that class wrap their query start with
-    this guard (oracle-verified identical output); EMIT FINAL, negation
-    legs (outer joins) and the NFA timeout-flush entries keep the
-    default — their results ARE the watermark-close emissions."""
-    key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
+
+def _ranked(df: DataFrame, arr: str, rank: str, value: str, *keep: str) -> DataFrame:
+    """Canonicalize an array column to (rank, value) rows so the driver can
+    hash it; the rank also verifies the engine's stable-order contract."""
+    return df.select("user_id", *keep, Fn.posexplode(arr).alias(rank, value)).select(
+        "user_id", *keep, Fn.col(rank).cast("bigint").alias(rank), value
+    )
 
 
 def _scratch_dir(prefix: str) -> str:
@@ -100,13 +181,64 @@ def _cleanup_scratch() -> None:
     do not accumulate state in the RAM-backed fs.  (Results are always
     fully drained before the process exits — the driver counts each
     entry's frame before moving on.)"""
-    import shutil
-
     for d in _SCRATCH_DIRS:
         shutil.rmtree(d, ignore_errors=True)
 
 
 atexit.register(_cleanup_scratch)
+
+
+def _engine(spark: SparkSession, prefix: str, grace: str = DEFAULT_GRACE) -> PersistentQueryManager:
+    """A fresh catalog and persistent-query manager in their own scratch
+    dir, on UTC session time."""
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    work = _scratch_dir(prefix)
+    cat = Catalog(spark, root=os.path.join(work, "catalog"))
+    return PersistentQueryManager(
+        spark, cat, workdir=os.path.join(work, "engine"), grace=grace, enable_metrics=False
+    )
+
+
+def _events_engine(
+    spark: SparkSession, sf_dir: str, prefix: str, grace: str, *names: str
+) -> PersistentQueryManager:
+    """:func:`_engine` with the events table registered as a STREAM under
+    each of ``names`` (default ``events``): event time ``ts``, (ts,
+    event_id) order, 8 declared partitions."""
+    mgr = _engine(spark, prefix, grace)
+    for name in names or ("events",):
+        mgr.catalog.register_parquet(
+            name,
+            os.path.join(sf_dir, "events.parquet"),
+            ref=STREAM,
+            event_time_col="ts",
+            event_order_cols=["ts", "event_id"],
+            partitions=8,
+        )
+    return mgr
+
+
+def _utc_ts(df: DataFrame) -> DataFrame:
+    """``ts`` as TIMESTAMP (the test data may store TIMESTAMP_NTZ)."""
+    if dict(df.dtypes).get("ts") == "timestamp_ntz":
+        return df.withColumn("ts", Fn.col("ts").cast("timestamp"))
+    return df
+
+
+def _drain(
+    df: DataFrame, work: str, output_mode: str = "append", state_partitions: int | None = 8
+) -> DataFrame:
+    """Run the streaming frame ``df`` to completion through the engine into
+    an exactly-once sink under ``work``; return its committed rows.  The
+    default 8 state partitions fit the events keyspace: the session default
+    would multiply the per-batch state-store open/commit cost per operator
+    for no speedup."""
+    sink = ExactlyOnceParquetSink(os.path.join(work, "sink"), lineage=False)
+    start_stream(
+        df, sink, os.path.join(work, "ckpt"),
+        output_mode=output_mode, state_partitions=state_partitions,
+    ).awaitTermination()
+    return sink.read_data(df.sparkSession)
 
 
 def _stage_events_sentinels(spark: SparkSession, sf_dir: str, work: str, types: list[str]):
@@ -121,13 +253,9 @@ def _stage_events_sentinels(spark: SparkSession, sf_dir: str, work: str, types: 
     Returns the readStream frame with ts normalized to TIMESTAMP.
 
     Sentinels are the i-th type at (event_id, user_id) = -(i+1) with
-    value 0.0, props '{}' — the exact rows the entries inlined before."""
-    import datetime
-    import shutil
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
+    value 0.0, props '{}' — the exact rows the entries inlined before.  A
+    source column the sentinel row has no value for raises
+    :class:`SchemaError` naming it."""
     src_path = os.path.join(sf_dir, "events.parquet")
     ev_dir = os.path.join(work, "ev")
     os.makedirs(ev_dir, exist_ok=True)
@@ -180,16 +308,40 @@ def _stage_events_sentinels(spark: SparkSession, sf_dir: str, work: str, types: 
         "value": [0.0] * len(types),
         "props": ["{}"] * len(types),
     }
+    unknown = [f.name for f in schema if f.name not in values]
+    if unknown:
+        raise SchemaError(
+            f"{src_path} has column {unknown[0]!r}, which the watermark "
+            f"sentinel rows have no value for (they know {sorted(values)})"
+        )
     arrays = [
         pa.array(values[f.name], type=f.type) for f in schema
     ]
     pq.write_table(pa.table(arrays, schema=schema), os.path.join(ev_dir, "sentinel.parquet"))
 
     spark_schema = spark.read.parquet(files[0]).schema
-    src = spark.readStream.schema(spark_schema).parquet(ev_dir)
-    if dict(src.dtypes).get("ts") == "timestamp_ntz":
-        src = src.withColumn("ts", Fn.col("ts").cast("timestamp"))
-    return src
+    return _utc_ts(spark.readStream.schema(spark_schema).parquet(ev_dir))
+
+
+def _sentinel_events(
+    spark: SparkSession, sf_dir: str, prefix: str, types: list[str]
+) -> tuple[DataFrame, str]:
+    """(events stream plus one far-future sentinel per leg type, watermarked
+    at 30 minutes; its scratch dir), on UTC session time."""
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    work = _scratch_dir(prefix)
+    src = _stage_events_sentinels(spark, sf_dir, work, types)
+    return src.withWatermark("ts", "30 minutes"), work
+
+
+def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The documents table, after releasing the PREVIOUS entry's persisted
+    signature frames: the driver collects each entry fully before calling
+    the next, so caller-side cleanup here is safe and bounds the
+    MEMORY_AND_DISK footprint to one entry (operators themselves never
+    flush the registry — ADVICE r3)."""
+    cleanup_persisted()
+    return _load(spark, sf_dir, "documents")["documents"]
 
 
 # ---------------------------------------------------------------------------
@@ -198,8 +350,6 @@ def _stage_events_sentinels(spark: SparkSession, sf_dir: str, work: str, types: 
 
 
 def q_filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ksql_spark import F, Literal, STREAM, Schema, Select, compile_select
-
     src = _load(spark, sf_dir, "lineitem")
     q = (
         Select(
@@ -216,8 +366,6 @@ def q_filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_filter_in_null(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ksql_spark import F, STREAM, Schema, Select, compile_select
-
     src = _load(spark, sf_dir, "orders")
     q = (
         Select(F("o_orderkey"), F("o_orderpriority"), F("o_orderstatus"))
@@ -232,8 +380,6 @@ def q_filter_in_null(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_case_when(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ksql_spark import Case, F, STREAM, Schema, Select, compile_select
-
     src = _load(spark, sf_dir, "orders")
     q = (
         Select(
@@ -250,8 +396,6 @@ def q_case_when(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_groupby_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ksql_spark import Avg, Count, F, Max, Min, STREAM, Schema, Select, Sum, compile_select
-
     src = _load(spark, sf_dir, "lineitem")
     q = (
         Select(
@@ -280,8 +424,6 @@ def q_groupby_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_having(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ksql_spark import Count, F, STREAM, Schema, Select, compile_select
-
     src = _load(spark, sf_dir, "orders")
     q = (
         Select(F("o_custkey"), Count(F("o_orderkey")).Alias("n_orders"))
@@ -294,8 +436,6 @@ def q_having(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_orderby_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ksql_spark import F, STREAM, Schema, Select, compile_select
-
     src = _load(spark, sf_dir, "orders")
     q = (
         Select(F("o_orderkey"), F("o_totalprice"))
@@ -308,8 +448,6 @@ def q_orderby_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ksql_spark import F, TABLE, Schema, Select, compile_select
-
     src = _load(spark, sf_dir, "orders", "customer", "nation")
     q = (
         Select(F("o.o_orderkey"), F("c.c_name"), F("n.n_name"))
@@ -322,8 +460,6 @@ def q_join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ksql_spark import Count, F, TABLE, Schema, Select, compile_select
-
     src = _load(spark, sf_dir, "customer", "orders")
     q = (
         Select(F("c.c_custkey"), Count(F("o.o_orderkey")).Alias("n_orders"))
@@ -335,8 +471,6 @@ def q_join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_join_right(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ksql_spark import F, TABLE, Schema, Select, compile_select
-
     src = _load(spark, sf_dir, "orders", "customer")
     # RIGHT JOIN keeps all customers, with nulls for order columns
     q = (
@@ -352,8 +486,6 @@ def q_join_right(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ksql_spark import F, TABLE, Schema, Select, compile_select
-
     src = _load(spark, sf_dir, "customer", "supplier")
     c = src["customer"].groupBy("c_nationkey").agg(Fn.count(Fn.lit(1)).alias("n_cust"))
     s = src["supplier"].groupBy("s_nationkey").agg(Fn.count(Fn.lit(1)).alias("n_supp"))
@@ -366,8 +498,6 @@ def q_join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_cross_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ksql_spark import F, TABLE, Schema, Select, compile_select
-
     src = _load(spark, sf_dir, "region", "nation")
     q = (
         Select(F("r.r_name"), F("n.n_name"))
@@ -378,8 +508,6 @@ def q_cross_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_multi_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ksql_spark import F, Sum, TABLE, Schema, Select, compile_select
-
     src = _load(spark, sf_dir, "orders", "customer", "nation", "region")
     q = (
         Select(F("r.r_name"), F("n.n_name"), Sum(F("o.o_totalprice")).Alias("revenue"))
@@ -394,8 +522,6 @@ def q_multi_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ksql_spark import Count, F, TABLE, Schema, Select, compile_select
-
     src = _load(spark, sf_dir, "orders", "customer")
     big = (
         Select(F("o_orderkey"), F("o_custkey"))
@@ -413,8 +539,6 @@ def q_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ksql_spark import F, TABLE, Schema, Select, compile_select
-
     src = _load(spark, sf_dir, "lineitem")
     q = (
         Select(F("l_returnflag"), F("l_linestatus"))
@@ -428,8 +552,6 @@ def q_scalar_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _load(spark, sf_dir, "customer")
     # closed scalar-function registry exposure (SURVEY.md §2.2): upper/lower/
     # concat/substr/length — plain JVM built-ins through the engine's RawColumn
-    from ksql_spark import F, RawColumn, TABLE, Schema, Select, compile_select
-
     q = Select(
         F("c_custkey"),
         RawColumn(Fn.upper(Fn.col("c_name")), "name_upper"),
@@ -443,8 +565,6 @@ def q_scalar_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_bool_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # IS TRUE / IS FALSE conditionals (reference: conditionals.go IsTrue/IsFalse)
-    from ksql_spark import F, RawColumn, STREAM, Schema, Select, compile_select
-
     src = _load(spark, sf_dir, "events")
     q = (
         Select(F("event_id"), RawColumn(Fn.col("value") > 50, "is_big"))
@@ -461,26 +581,8 @@ def q_ddl_insert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DDL + DML lifecycle: CREATE STREAM with declared SchemaFields ->
     INSERT VALUES (reference: create_builder.go:132-209,
     insert_builder.go:56-161) -> pull read.  Oracle = the same VALUES."""
-    from ksql_spark import (
-        Catalog,
-        Create,
-        F,
-        Insert,
-        KType,
-        STREAM,
-        Schema,
-        SchemaField,
-        Select,
-        compile_select,
-    )
-    from ksql_spark.streaming.engine import PersistentQueryManager
-
-    work = _scratch_dir("ksql_driver_ddl_")
-    cat = Catalog(spark, root=os.path.join(work, "catalog"))
-    mgr = PersistentQueryManager(
-        spark, cat, workdir=os.path.join(work, "engine"), enable_metrics=False
-    )
-    cat.create(
+    mgr = _engine(spark, "ksql_driver_ddl_")
+    mgr.catalog.create(
         Create(STREAM, "tx").SchemaFields(
             SchemaField("id", KType.BIGINT),
             SchemaField("amount", KType.DOUBLE),
@@ -495,7 +597,7 @@ def q_ddl_insert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     q = Select(F("id"), F("amount"), F("tag")).From(Schema("tx", STREAM))
-    return compile_select(q, spark=spark, catalog=cat)
+    return compile_select(q, spark=spark, catalog=mgr.catalog)
 
 
 def q_catalog_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -504,24 +606,8 @@ def q_catalog_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     third, then return LIST + DESCRIBE facts as rows (reference:
     insert_builder.go AS SELECT, list_builder.go:19-41, describe_builder.go,
     drop_builder.go:21-49).  Oracle = the expected catalog state as VALUES."""
-    from ksql_spark import (
-        Catalog,
-        Create,
-        F,
-        Insert,
-        KType,
-        STREAM,
-        Schema,
-        SchemaField,
-        Select,
-    )
-    from ksql_spark.streaming.engine import PersistentQueryManager
-
-    work = _scratch_dir("ksql_driver_cat_")
-    cat = Catalog(spark, root=os.path.join(work, "catalog"))
-    mgr = PersistentQueryManager(
-        spark, cat, workdir=os.path.join(work, "engine"), enable_metrics=False
-    )
+    mgr = _engine(spark, "ksql_driver_cat_")
+    cat = mgr.catalog
     fields = [
         SchemaField("id", KType.BIGINT),
         SchemaField("amount", KType.DOUBLE),
@@ -560,8 +646,6 @@ def q_catalog_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_select_struct(spark: SparkSession, sf_dir: str) -> DataFrame:
     # typed-struct projection (reference: SelectStruct, select_builder.go:264-285)
-    from ksql_spark import KType, STREAM, Schema, SchemaField, SelectStruct, compile_select
-
     src = _load(spark, sf_dir, "lineitem")
     q = SelectStruct(
         [
@@ -587,8 +671,6 @@ def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_collect_list(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ksql_spark import CollectList, F, STREAM, Schema, Select, compile_select
-
     src = _load(spark, sf_dir, "lineitem")
     q = (
         Select(F("l_orderkey"), CollectList(F("l_linenumber")).Alias("line_numbers"))
@@ -605,8 +687,6 @@ def q_collect_list(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_collect_set(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ksql_spark import CollectSet, F, STREAM, Schema, Select, compile_select
-
     src = _load(spark, sf_dir, "events")
     q = (
         Select(F("user_id"), CollectSet(F("event_type")).Alias("types"))
@@ -614,15 +694,10 @@ def q_collect_set(spark: SparkSession, sf_dir: str) -> DataFrame:
         .GroupBy(F("user_id"))
         .EmitChanges()
     )
-    df = compile_select(q, sources=src)
-    return df.select("user_id", Fn.posexplode("types").alias("pos", "event_type")).select(
-        "user_id", Fn.col("pos").cast("bigint").alias("pos"), "event_type"
-    )
+    return _ranked(compile_select(q, sources=src), "types", "pos", "event_type")
 
 
 def q_latest_by_offset(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ksql_spark import F, LatestByOffset, STREAM, Schema, Select, compile_select
-
     src = _load(spark, sf_dir, "events")
     q = (
         Select(
@@ -637,8 +712,6 @@ def q_latest_by_offset(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_earliest_by_offset(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ksql_spark import EarliestByOffset, F, STREAM, Schema, Select, compile_select
-
     src = _load(spark, sf_dir, "events")
     q = (
         Select(
@@ -655,8 +728,6 @@ def q_earliest_by_offset(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ksql_spark import F, RawColumn, STREAM, Schema, Select, TopK, compile_select
-
     src = _load(spark, sf_dir, "events")
     q = (
         Select(
@@ -667,15 +738,10 @@ def q_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .GroupBy(F("user_id"))
         .EmitChanges()
     )
-    df = compile_select(q, sources=src)
-    return df.select("user_id", Fn.posexplode("top_vals").alias("rank", "top_val")).select(
-        "user_id", Fn.col("rank").cast("bigint").alias("rank"), "top_val"
-    )
+    return _ranked(compile_select(q, sources=src), "top_vals", "rank", "top_val")
 
 
 def q_topk_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ksql_spark import F, STREAM, Schema, Select, TopKDistinct, compile_select
-
     src = _load(spark, sf_dir, "events")
     q = (
         Select(F("user_id"), TopKDistinct(F("event_type"), 2).Alias("top_types"))
@@ -683,15 +749,10 @@ def q_topk_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         .GroupBy(F("user_id"))
         .EmitChanges()
     )
-    df = compile_select(q, sources=src)
-    return df.select("user_id", Fn.posexplode("top_types").alias("rank", "top_type")).select(
-        "user_id", Fn.col("rank").cast("bigint").alias("rank"), "top_type"
-    )
+    return _ranked(compile_select(q, sources=src), "top_types", "rank", "top_type")
 
 
 def q_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ksql_spark import F, Histogram, STREAM, Schema, Select, compile_select
-
     src = _load(spark, sf_dir, "events")
     q = (
         Select(F("user_id"), Histogram(F("event_type"), 3).Alias("hist"))
@@ -710,8 +771,6 @@ def q_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_window_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ksql_spark import Count, F, STREAM, Schema, Select, Sum, TimeUnit, TumblingWindow, compile_select
-
     src = _load(spark, sf_dir, "events")
     q = (
         Select(F("event_type"), Count(F("event_id")).Alias("cnt"), Sum(F("value")).Alias("sum_val"))
@@ -729,8 +788,6 @@ def q_window_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_window_hopping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ksql_spark import Count, F, HoppingWindow, STREAM, Schema, Select, TimeUnit, compile_select
-
     src = _load(spark, sf_dir, "events")
     q = (
         Select(F("event_type"), Count(F("event_id")).Alias("cnt"))
@@ -743,8 +800,6 @@ def q_window_hopping(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_window_session(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ksql_spark import Count, F, STREAM, Schema, SessionWindow, Select, TimeUnit, compile_select
-
     src = _load(spark, sf_dir, "events")
     q = (
         Select(F("user_id"), Count(F("event_id")).Alias("cnt"))
@@ -752,13 +807,7 @@ def q_window_session(spark: SparkSession, sf_dir: str) -> DataFrame:
         .WindowedBy(SessionWindow(30, TimeUnit.MINUTES))
         .GroupBy(F("user_id"))
     )
-    df = compile_select(q, sources=src, event_time="ts")
-    return df.select(
-        Fn.unix_micros(Fn.col("window_start").cast("timestamp")).alias("session_start_us"),
-        Fn.unix_micros(Fn.col("window_end").cast("timestamp")).alias("session_end_us"),
-        "user_id",
-        "cnt",
-    )
+    return _session_us(compile_select(q, sources=src, event_time="ts"))
 
 
 # ---------------------------------------------------------------------------
@@ -771,50 +820,21 @@ def streaming_tumbling_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     event_type through the exactly-once changelog sink; returns the
     materialized QUERYABLE state.  Oracle is plain batch SQL — proving
     streaming == batch row-for-row."""
-    from ksql_spark import (
-        TABLE,
-        Catalog,
-        Count,
-        Create,
-        F,
-        STREAM,
-        Schema,
-        Select,
-        Sum,
-        TimeUnit,
-        TumblingWindow,
-    )
-    from ksql_spark.streaming.engine import PersistentQueryManager
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    work = _scratch_dir("ksql_driver_")
-    cat = Catalog(spark, root=os.path.join(work, "catalog"))
-    cat.register_parquet(
-        "events",
-        os.path.join(sf_dir, "events.parquet"),
-        ref=STREAM,
-        event_time_col="ts",
-        event_order_cols=["ts", "event_id"],
-        partitions=8,
-    )
-    mgr = PersistentQueryManager(
-        spark, cat, workdir=os.path.join(work, "engine"), grace="365 days", enable_metrics=False
-    )
-    csas = Create(TABLE, "hourly_stats").AsSelect(
-        Select(
-            F("event_type"),
-            Count(F("event_id")).Alias("cnt"),
-            Sum(F("value")).Alias("sum_val"),
+    mgr = _events_engine(spark, sf_dir, "ksql_driver_", "365 days")
+    mgr.create_as_select(
+        Create(TABLE, "hourly_stats").AsSelect(
+            Select(
+                F("event_type"),
+                Count(F("event_id")).Alias("cnt"),
+                Sum(F("value")).Alias("sum_val"),
+            )
+            .From(Schema("events", STREAM))
+            .WindowedBy(TumblingWindow(1, TimeUnit.HOURS))
+            .GroupBy(F("event_type"))
+            .EmitChanges()
         )
-        .From(Schema("events", STREAM))
-        .WindowedBy(TumblingWindow(1, TimeUnit.HOURS))
-        .GroupBy(F("event_type"))
-        .EmitChanges()
     )
-    with _no_data_batches_off(spark):
-        mgr.create_as_select(csas, available_now=True, await_termination=True)
-    state = cat.read("QUERYABLE_hourly_stats")
-    return state.select(
+    return mgr.catalog.read("QUERYABLE_hourly_stats").select(
         _fmt("window_start").alias("window_start"),
         "event_type",
         "cnt",
@@ -827,50 +847,21 @@ def streaming_emit_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly once, when the watermark closes it (reference semantics:
     ksql/select_builder.go:164-169,649-651).  Oracle = batch recomputation
     restricted to watermark-closed windows (window_end <= max(ts) - grace)."""
-    from ksql_spark import (
-        TABLE,
-        Catalog,
-        Count,
-        Create,
-        F,
-        STREAM,
-        Schema,
-        Select,
-        Sum,
-        TimeUnit,
-        TumblingWindow,
-    )
-    from ksql_spark.streaming.engine import PersistentQueryManager
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    work = _scratch_dir("ksql_driver_final_")
-    cat = Catalog(spark, root=os.path.join(work, "catalog"))
-    cat.register_parquet(
-        "events",
-        os.path.join(sf_dir, "events.parquet"),
-        ref=STREAM,
-        event_time_col="ts",
-        event_order_cols=["ts", "event_id"],
-        partitions=8,
-    )
-    mgr = PersistentQueryManager(
-        spark, cat, workdir=os.path.join(work, "engine"), grace="30 minutes",
-        enable_metrics=False,
-    )
-    csas = Create(TABLE, "hourly_finals").AsSelect(
-        Select(
-            F("event_type"),
-            Count(F("event_id")).Alias("cnt"),
-            Sum(F("value")).Alias("sum_val"),
+    mgr = _events_engine(spark, sf_dir, "ksql_driver_final_", "30 minutes")
+    pq_ = mgr.create_as_select(
+        Create(TABLE, "hourly_finals").AsSelect(
+            Select(
+                F("event_type"),
+                Count(F("event_id")).Alias("cnt"),
+                Sum(F("value")).Alias("sum_val"),
+            )
+            .From(Schema("events", STREAM))
+            .WindowedBy(TumblingWindow(1, TimeUnit.HOURS))
+            .GroupBy(F("event_type"))
+            .EmitFinal()
         )
-        .From(Schema("events", STREAM))
-        .WindowedBy(TumblingWindow(1, TimeUnit.HOURS))
-        .GroupBy(F("event_type"))
-        .EmitFinal()
     )
-    mgr.create_as_select(csas, available_now=True, await_termination=True)
-    out = mgr.queries["hourly_finals"].sink.read_data(spark)
-    return out.select(
+    return pq_.sink.read_data(spark).select(
         _fmt("window_start").alias("window_start"),
         "event_type",
         "cnt",
@@ -881,45 +872,17 @@ def streaming_emit_final(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_hopping_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hopping (sliding) window CSAS through the changelog — the streaming
     twin of window_hopping; oracle = the batch sliding-window recompute."""
-    from ksql_spark import (
-        TABLE,
-        Catalog,
-        Count,
-        Create,
-        F,
-        HoppingWindow,
-        STREAM,
-        Schema,
-        Select,
-        TimeUnit,
+    mgr = _events_engine(spark, sf_dir, "ksql_driver_hop_", "365 days")
+    mgr.create_as_select(
+        Create(TABLE, "hop_stats").AsSelect(
+            Select(F("event_type"), Count(F("event_id")).Alias("cnt"))
+            .From(Schema("events", STREAM))
+            .WindowedBy(HoppingWindow(60, 30, TimeUnit.MINUTES))
+            .GroupBy(F("event_type"))
+            .EmitChanges()
+        )
     )
-    from ksql_spark.streaming.engine import PersistentQueryManager
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    work = _scratch_dir("ksql_driver_hop_")
-    cat = Catalog(spark, root=os.path.join(work, "catalog"))
-    cat.register_parquet(
-        "events",
-        os.path.join(sf_dir, "events.parquet"),
-        ref=STREAM,
-        event_time_col="ts",
-        event_order_cols=["ts", "event_id"],
-        partitions=8,
-    )
-    mgr = PersistentQueryManager(
-        spark, cat, workdir=os.path.join(work, "engine"), grace="365 days",
-        enable_metrics=False,
-    )
-    csas = Create(TABLE, "hop_stats").AsSelect(
-        Select(F("event_type"), Count(F("event_id")).Alias("cnt"))
-        .From(Schema("events", STREAM))
-        .WindowedBy(HoppingWindow(60, 30, TimeUnit.MINUTES))
-        .GroupBy(F("event_type"))
-        .EmitChanges()
-    )
-    mgr.create_as_select(csas, available_now=True, await_termination=True)
-    state = cat.read("QUERYABLE_hop_stats")
-    return state.select(
+    return mgr.catalog.read("QUERYABLE_hop_stats").select(
         _fmt("window_start").alias("window_start"), "event_type", "cnt"
     )
 
@@ -929,51 +892,17 @@ def streaming_session_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     stateful operator (Spark's built-in session_window rejects update mode).
     Upserts + merge tombstones materialize to exactly the batch gap-session
     result; oracle = the DuckDB lag/gap-session recomputation."""
-    from ksql_spark import (
-        TABLE,
-        Catalog,
-        Count,
-        Create,
-        F,
-        STREAM,
-        Schema,
-        Select,
-        SessionWindow,
-        TimeUnit,
+    mgr = _events_engine(spark, sf_dir, "ksql_driver_sess_", "365 days")
+    mgr.create_as_select(
+        Create(TABLE, "session_stats").AsSelect(
+            Select(F("user_id"), Count(F("event_id")).Alias("cnt"))
+            .From(Schema("events", STREAM))
+            .WindowedBy(SessionWindow(30, TimeUnit.MINUTES))
+            .GroupBy(F("user_id"))
+            .EmitChanges()
+        )
     )
-    from ksql_spark.streaming.engine import PersistentQueryManager
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    work = _scratch_dir("ksql_driver_sess_")
-    cat = Catalog(spark, root=os.path.join(work, "catalog"))
-    cat.register_parquet(
-        "events",
-        os.path.join(sf_dir, "events.parquet"),
-        ref=STREAM,
-        event_time_col="ts",
-        event_order_cols=["ts", "event_id"],
-        partitions=8,
-    )
-    mgr = PersistentQueryManager(
-        spark, cat, workdir=os.path.join(work, "engine"), grace="365 days",
-        enable_metrics=False,
-    )
-    csas = Create(TABLE, "session_stats").AsSelect(
-        Select(F("user_id"), Count(F("event_id")).Alias("cnt"))
-        .From(Schema("events", STREAM))
-        .WindowedBy(SessionWindow(30, TimeUnit.MINUTES))
-        .GroupBy(F("user_id"))
-        .EmitChanges()
-    )
-    with _no_data_batches_off(spark):
-        mgr.create_as_select(csas, available_now=True, await_termination=True)
-    state = cat.read("QUERYABLE_session_stats")
-    return state.select(
-        Fn.unix_micros(Fn.col("window_start").cast("timestamp")).alias("session_start_us"),
-        Fn.unix_micros(Fn.col("window_end").cast("timestamp")).alias("session_end_us"),
-        "user_id",
-        "cnt",
-    )
+    return _session_us(mgr.catalog.read("QUERYABLE_session_stats"))
 
 
 def streaming_topk_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -981,39 +910,19 @@ def streaming_topk_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     (streaming/bounded.py): per-group state is the running top-k (O(k), not
     O(history) — the native collect_list fold is the unbounded anti-pattern
     this replaces).  Oracle = the batch top-k recompute."""
-    from ksql_spark import TABLE, Catalog, Create, F, RawColumn, STREAM, Schema, Select, TopK
-    from ksql_spark.streaming.engine import PersistentQueryManager
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    work = _scratch_dir("ksql_driver_topk_")
-    cat = Catalog(spark, root=os.path.join(work, "catalog"))
-    cat.register_parquet(
-        "events",
-        os.path.join(sf_dir, "events.parquet"),
-        ref=STREAM,
-        event_time_col="ts",
-        event_order_cols=["ts", "event_id"],
-        partitions=8,
-    )
-    mgr = PersistentQueryManager(
-        spark, cat, workdir=os.path.join(work, "engine"), grace="365 days",
-        enable_metrics=False,
-    )
-    csas = Create(TABLE, "user_topk").AsSelect(
-        Select(
-            F("user_id"),
-            TopK(RawColumn(Fn.round(Fn.col("value"), 4)), 3).Alias("top_vals"),
+    mgr = _events_engine(spark, sf_dir, "ksql_driver_topk_", "365 days")
+    mgr.create_as_select(
+        Create(TABLE, "user_topk").AsSelect(
+            Select(
+                F("user_id"),
+                TopK(RawColumn(Fn.round(Fn.col("value"), 4)), 3).Alias("top_vals"),
+            )
+            .From(Schema("events", STREAM))
+            .GroupBy(F("user_id"))
+            .EmitChanges()
         )
-        .From(Schema("events", STREAM))
-        .GroupBy(F("user_id"))
-        .EmitChanges()
     )
-    with _no_data_batches_off(spark):
-        mgr.create_as_select(csas, available_now=True, await_termination=True)
-    state = cat.read("QUERYABLE_user_topk")
-    return state.select("user_id", Fn.posexplode("top_vals").alias("rank", "top_val")).select(
-        "user_id", Fn.col("rank").cast("bigint").alias("rank"), "top_val"
-    )
+    return _ranked(mgr.catalog.read("QUERYABLE_user_topk"), "top_vals", "rank", "top_val")
 
 
 def streaming_histogram_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1021,32 +930,16 @@ def streaming_histogram_changelog(spark: SparkSession, sf_dir: str) -> DataFrame
     operator — exact while per-group distinct values fit the sketch capacity
     (they do here: 3 event types), state O(capacity) regardless of group
     size.  Oracle = the batch most-frequent recompute."""
-    from ksql_spark import TABLE, Catalog, Create, F, Histogram, STREAM, Schema, Select
-    from ksql_spark.streaming.engine import PersistentQueryManager
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    work = _scratch_dir("ksql_driver_hist_")
-    cat = Catalog(spark, root=os.path.join(work, "catalog"))
-    cat.register_parquet(
-        "events",
-        os.path.join(sf_dir, "events.parquet"),
-        ref=STREAM,
-        event_time_col="ts",
-        event_order_cols=["ts", "event_id"],
-        partitions=8,
+    mgr = _events_engine(spark, sf_dir, "ksql_driver_hist_", "365 days")
+    mgr.create_as_select(
+        Create(TABLE, "user_hist").AsSelect(
+            Select(F("user_id"), Histogram(F("event_type"), 3).Alias("hist"))
+            .From(Schema("events", STREAM))
+            .GroupBy(F("user_id"))
+            .EmitChanges()
+        )
     )
-    mgr = PersistentQueryManager(
-        spark, cat, workdir=os.path.join(work, "engine"), grace="365 days",
-        enable_metrics=False,
-    )
-    csas = Create(TABLE, "user_hist").AsSelect(
-        Select(F("user_id"), Histogram(F("event_type"), 3).Alias("hist"))
-        .From(Schema("events", STREAM))
-        .GroupBy(F("user_id"))
-        .EmitChanges()
-    )
-    mgr.create_as_select(csas, available_now=True, await_termination=True)
-    state = cat.read("QUERYABLE_user_hist")
+    state = mgr.catalog.read("QUERYABLE_user_hist")
     return state.select("user_id", Fn.explode("hist").alias("event_type", "cnt"))
 
 
@@ -1055,35 +948,16 @@ def streaming_collect_set_changelog(spark: SparkSession, sf_dir: str) -> DataFra
     per-group state capped at the ksqlDB collect limit (first-N distinct),
     exact when groups stay under it (they do here).  Oracle = the batch
     distinct-set recompute, arrays canonicalized to (pos, value) rows."""
-    from ksql_spark import TABLE, Catalog, CollectSet, Create, F, STREAM, Schema, Select
-    from ksql_spark.streaming.engine import PersistentQueryManager
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    work = _scratch_dir("ksql_driver_cset_")
-    cat = Catalog(spark, root=os.path.join(work, "catalog"))
-    cat.register_parquet(
-        "events",
-        os.path.join(sf_dir, "events.parquet"),
-        ref=STREAM,
-        event_time_col="ts",
-        event_order_cols=["ts", "event_id"],
-        partitions=8,
+    mgr = _events_engine(spark, sf_dir, "ksql_driver_cset_", "365 days")
+    mgr.create_as_select(
+        Create(TABLE, "user_types").AsSelect(
+            Select(F("user_id"), CollectSet(F("event_type")).Alias("types"))
+            .From(Schema("events", STREAM))
+            .GroupBy(F("user_id"))
+            .EmitChanges()
+        )
     )
-    mgr = PersistentQueryManager(
-        spark, cat, workdir=os.path.join(work, "engine"), grace="365 days",
-        enable_metrics=False,
-    )
-    csas = Create(TABLE, "user_types").AsSelect(
-        Select(F("user_id"), CollectSet(F("event_type")).Alias("types"))
-        .From(Schema("events", STREAM))
-        .GroupBy(F("user_id"))
-        .EmitChanges()
-    )
-    mgr.create_as_select(csas, available_now=True, await_termination=True)
-    state = cat.read("QUERYABLE_user_types")
-    return state.select("user_id", Fn.posexplode("types").alias("pos", "event_type")).select(
-        "user_id", Fn.col("pos").cast("bigint").alias("pos"), "event_type"
-    )
+    return _ranked(mgr.catalog.read("QUERYABLE_user_types"), "types", "pos", "event_type")
 
 
 def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1091,90 +965,54 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     SURVEY.md §2.3): same-user event pairs within ±300 s, each emitted
     exactly once through the append changelog.  Oracle = the equivalent
     DuckDB time-range join."""
-    from ksql_spark import Catalog, Create, F, STREAM, Schema, Select
-    from ksql_spark.streaming.engine import PersistentQueryManager
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    work = _scratch_dir("ksql_driver_ssj_")
-    cat = Catalog(spark, root=os.path.join(work, "catalog"))
-    for name in ("events_l", "events_r"):
-        cat.register_parquet(
-            name,
-            os.path.join(sf_dir, "events.parquet"),
-            ref=STREAM,
-            event_time_col="ts",
-            event_order_cols=["ts", "event_id"],
-            partitions=8,
+    mgr = _events_engine(spark, sf_dir, "ksql_driver_ssj_", "365 days", "events_l", "events_r")
+    pq_ = mgr.create_as_select(
+        Create(STREAM, "user_event_pairs").AsSelect(
+            Select(
+                F("l.event_id").Alias("id_l"),
+                F("r.event_id").Alias("id_r"),
+                F("l.user_id").Alias("user_id"),
+            )
+            .From(Schema("events_l", STREAM).As("l"))
+            .Join(
+                Schema("events_r", STREAM).As("r"),
+                F("l.user_id").Equal(F("r.user_id")),
+                within_seconds=300,
+            )
+            .Where(F("l.event_id").Less(F("r.event_id")))
+            .EmitChanges()
         )
-    mgr = PersistentQueryManager(
-        spark, cat, workdir=os.path.join(work, "engine"), grace="365 days",
-        enable_metrics=False,
     )
-    csas = Create(STREAM, "user_event_pairs").AsSelect(
-        Select(
-            F("l.event_id").Alias("id_l"),
-            F("r.event_id").Alias("id_r"),
-            F("l.user_id").Alias("user_id"),
-        )
-        .From(Schema("events_l", STREAM).As("l"))
-        .Join(
-            Schema("events_r", STREAM).As("r"),
-            F("l.user_id").Equal(F("r.user_id")),
-            within_seconds=300,
-        )
-        .Where(F("l.event_id").Less(F("r.event_id")))
-        .EmitChanges()
-    )
-    with _no_data_batches_off(spark):
-        mgr.create_as_select(csas, available_now=True, await_termination=True)
-    return mgr.queries["user_event_pairs"].sink.read_data(spark)
+    return pq_.sink.read_data(spark)
 
 
 def streaming_stream_table_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-table join (ksqlDB's bread-and-butter enrichment): events
     stream broadcast-joined to the customer dimension, through a CSAS
     append changelog.  Oracle = the equivalent batch join."""
-    from ksql_spark import Catalog, Create, F, STREAM, Schema, Select, TABLE
-    from ksql_spark.streaming.engine import PersistentQueryManager
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    work = _scratch_dir("ksql_driver_stj_")
-    cat = Catalog(spark, root=os.path.join(work, "catalog"))
-    cat.register_parquet(
-        "events",
-        os.path.join(sf_dir, "events.parquet"),
-        ref=STREAM,
-        event_time_col="ts",
-        event_order_cols=["ts", "event_id"],
-        partitions=8,
-    )
-    cat.register_parquet(
+    mgr = _events_engine(spark, sf_dir, "ksql_driver_stj_", "365 days")
+    mgr.catalog.register_parquet(
         "customer", os.path.join(sf_dir, "customer.parquet"), ref=TABLE, broadcast=True
     )
-    mgr = PersistentQueryManager(
-        spark, cat, workdir=os.path.join(work, "engine"), grace="365 days",
-        enable_metrics=False,
-    )
-    csas = Create(STREAM, "enriched").AsSelect(
-        Select(
-            F("e.event_id").Alias("event_id"),
-            F("e.event_type").Alias("event_type"),
-            F("c.c_mktsegment").Alias("segment"),
+    pq_ = mgr.create_as_select(
+        Create(STREAM, "enriched").AsSelect(
+            Select(
+                F("e.event_id").Alias("event_id"),
+                F("e.event_type").Alias("event_type"),
+                F("c.c_mktsegment").Alias("segment"),
+            )
+            .From(Schema("events", STREAM).As("e"))
+            .Join(Schema("customer", TABLE).As("c"), F("e.user_id").Equal(F("c.c_custkey")))
+            .EmitChanges()
         )
-        .From(Schema("events", STREAM).As("e"))
-        .Join(Schema("customer", TABLE).As("c"), F("e.user_id").Equal(F("c.c_custkey")))
-        .EmitChanges()
     )
-    mgr.create_as_select(csas, available_now=True, await_termination=True)
-    return mgr.queries["enriched"].sink.read_data(spark)
+    return pq_.sink.read_data(spark)
 
 
 def q_skew_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-phase salted aggregation over a skewed key (event_type has only a
     handful of values — every key is hot).  Oracle = plain GROUP BY; the
     salted decomposition must be algebraically exact."""
-    from ksql_spark.streaming.skew import salted_two_phase_agg
-
     src = _load(spark, sf_dir, "events")
     out = salted_two_phase_agg(
         src["events"],
@@ -1202,8 +1040,6 @@ def q_skew_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Salted equi-join: skewed fact side salted, small side exploded across
     buckets.  Oracle = the plain join + aggregation."""
-    from ksql_spark.streaming.skew import salted_join
-
     src = _load(spark, sf_dir, "orders", "customer")
     joined = salted_join(
         src["orders"].withColumnRenamed("o_custkey", "c_custkey"),
@@ -1225,14 +1061,6 @@ def q_skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ksql_spark.functions.text import (
-        fingerprint,
-        lang_id,
-        quality_score,
-        token_count_bpe,
-        token_count_ws,
-    )
-
     src = _load(spark, sf_dir, "documents")
     return src["documents"].select(
         "doc_id",
@@ -1253,71 +1081,29 @@ def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ksql_spark.operators.dedup import exact_dedup
-
     src = _load(spark, sf_dir, "documents")
     return exact_dedup(src["documents"])
 
 
 def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # release the PREVIOUS entry's persisted signature frames: the driver
-    # collects each entry fully before calling the next, so caller-side
-    # cleanup here is safe and bounds the MEMORY_AND_DISK footprint to one
-    # entry (operators themselves never flush the registry — ADVICE r3)
-    from ksql_spark.operators.dedup import cleanup_persisted
-
-    cleanup_persisted()
-    from ksql_spark.operators.dedup import ngram_jaccard_pairs
-
-    src = _load(spark, sf_dir, "documents")
-    return ngram_jaccard_pairs(src["documents"], shingle_n=3, threshold=0.7)
+    return ngram_jaccard_pairs(_documents(spark, sf_dir), shingle_n=3, threshold=0.7)
 
 
 def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # release the PREVIOUS entry's persisted signature frames: the driver
-    # collects each entry fully before calling the next, so caller-side
-    # cleanup here is safe and bounds the MEMORY_AND_DISK footprint to one
-    # entry (operators themselves never flush the registry — ADVICE r3)
-    from ksql_spark.operators.dedup import cleanup_persisted
-
-    cleanup_persisted()
-    from ksql_spark.operators.dedup import minhash_lsh_pairs
-
-    src = _load(spark, sf_dir, "documents")
     return minhash_lsh_pairs(
-        src["documents"], n_hashes=48, bands=16, shingle_n=3, threshold=0.7
+        _documents(spark, sf_dir), n_hashes=48, bands=16, shingle_n=3, threshold=0.7
     )
 
 
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # release the PREVIOUS entry's persisted signature frames: the driver
-    # collects each entry fully before calling the next, so caller-side
-    # cleanup here is safe and bounds the MEMORY_AND_DISK footprint to one
-    # entry (operators themselves never flush the registry — ADVICE r3)
-    from ksql_spark.operators.dedup import cleanup_persisted
-
-    cleanup_persisted()
-    from ksql_spark.operators.dedup import simhash_pairs_blocked
-
-    src = _load(spark, sf_dir, "documents")
-    return simhash_pairs_blocked(src["documents"], bits=32, max_hamming=3)
+    return simhash_pairs_blocked(_documents(spark, sf_dir), bits=32, max_hamming=3)
 
 
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pairs -> connected components -> canonical keep/drop: the operator a
     # training-data pipeline actually runs (LSH emits PAIRS; keep decisions
     # need transitive closure).  Oracle: DuckDB recursive-CTE reachability.
-    # release the PREVIOUS entry's persisted signature frames: the driver
-    # collects each entry fully before calling the next, so caller-side
-    # cleanup here is safe and bounds the MEMORY_AND_DISK footprint to one
-    # entry (operators themselves never flush the registry — ADVICE r3)
-    from ksql_spark.operators.dedup import cleanup_persisted
-
-    cleanup_persisted()
-    from ksql_spark.operators.dedup import dedup_clusters, minhash_lsh_pairs
-
-    src = _load(spark, sf_dir, "documents")
-    docs = src["documents"]
+    docs = _documents(spark, sf_dir)
     pairs = minhash_lsh_pairs(docs, n_hashes=48, bands=16, shingle_n=3, threshold=0.7)
     return dedup_clusters(docs, pairs)
 
@@ -1326,8 +1112,6 @@ def _query_embedding(sf_dir: str, vec_id: int = 0) -> list:
     """The probe vector, read via a pyarrow predicate instead of a Spark
     job (r7: the ``.first()`` spelling cost a full scan job per entry).
     float32 elements widen to Python floats exactly as Spark's Row does."""
-    import pyarrow.parquet as pq
-
     tbl = pq.read_table(
         os.path.join(sf_dir, "embeddings.parquet"),
         columns=["vec_id", "embedding"],
@@ -1337,8 +1121,6 @@ def _query_embedding(sf_dir: str, vec_id: int = 0) -> list:
 
 
 def q_embed_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ksql_spark.operators.similarity import cosine_topk
-
     src = _load(spark, sf_dir, "embeddings")
     emb = src["embeddings"]
     query = _query_embedding(sf_dir)
@@ -1369,16 +1151,9 @@ def _embeddings_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scale path: banded hyperplane LSH + exact-cosine verify; oracle is the
     # brute-force recompute — pairs must match exactly (banding recall ~1 at
-    # the planted similarity)
-    # release the PREVIOUS entry's persisted signature frames: the driver
-    # collects each entry fully before calling the next, so caller-side
-    # cleanup here is safe and bounds the MEMORY_AND_DISK footprint to one
-    # entry (operators themselves never flush the registry — ADVICE r3)
-    from ksql_spark.operators.dedup import cleanup_persisted
-
+    # the planted similarity).  Releases the previous entry's persisted
+    # frames first, like _documents.
     cleanup_persisted()
-    from ksql_spark.operators.dedup import embedding_neardup_pairs_lsh
-
     # r=12 bits/band: P[band collision] at the planted similarity (~0.999)
     # is 0.986^12 = 0.84 per band (miss over 6 bands ~ 1.5e-5), while a
     # natural cos~0.5 pair collides with prob ~0.8% per band — the candidate
@@ -1390,8 +1165,6 @@ def q_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_embed_neardup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the O(n²) oracle-path operator, same planted corpus, same oracle
-    from ksql_spark.operators.dedup import embedding_neardup_pairs
-
     return embedding_neardup_pairs(_embeddings_planted(spark, sf_dir), threshold=0.99)
 
 
@@ -1400,8 +1173,6 @@ def q_embed_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # DuckDB mirror of the bucketing math (same md5-derived hyperplanes,
     # same probe set), so the approximate rows themselves hash-compare —
     # any drift in the bucket computation fails the gate.
-    from ksql_spark.operators.similarity import lsh_topk
-
     src = _load(spark, sf_dir, "embeddings")
     emb = src["embeddings"]
     query = _query_embedding(sf_dir)
@@ -1412,8 +1183,6 @@ def q_embed_lsh_ann_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # batched ANN: every 20th vector is a query, the rest the corpus; one
     # narrow bucket join answers all queries at once (the form that scales
     # to millions of queries).  Oracle = full DuckDB bucket-mirror.
-    from ksql_spark.operators.similarity import lsh_topk_batch
-
     src = _load(spark, sf_dir, "embeddings")
     emb = src["embeddings"]
     return lsh_topk_batch(
@@ -1430,8 +1199,6 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     # are md5-derived (v * 2^-16, exactly representable in float32), so the
     # DuckDB oracle recomputes them bit-for-bit — the Arrow batch plumbing,
     # schema contract, and feature math all hash-compare.
-    from ksql_spark.operators.multimodal import extract_features, synthesize_media
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     media = synthesize_media(spark, n=64, seed=42)
     feats = extract_features(media, decode_stub=True)
@@ -1446,8 +1213,6 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     # UNION (distinct) engine extension (SURVEY §2.7): nations that have a
     # customer OR a supplier, deduplicated
-    from ksql_spark import F, STREAM, Schema, Select, compile_select
-
     src = _load(spark, sf_dir, "customer", "supplier")
     q = (
         Select(F("c_nationkey").Alias("nationkey"))
@@ -1460,8 +1225,6 @@ def q_union(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ksql_spark import F, STREAM, Schema, Select, compile_select
-
     src = _load(spark, sf_dir, "orders")
     q = (
         Select(F("o_orderkey"), F("o_orderpriority"))
@@ -1478,8 +1241,6 @@ def q_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     # nations that have BOTH a customer and a supplier
-    from ksql_spark import F, STREAM, Schema, Select, compile_select
-
     src = _load(spark, sf_dir, "customer", "supplier")
     q = (
         Select(F("c_nationkey").Alias("nationkey"))
@@ -1493,8 +1254,6 @@ def q_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ordering customers outside the BUILDING segment
-    from ksql_spark import F, STREAM, Schema, Select, compile_select
-
     src = _load(spark, sf_dir, "orders", "customer")
     q = (
         Select(F("o_custkey").Alias("custkey"))
@@ -1511,8 +1270,6 @@ def q_except(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_sample_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reproducible dataset cut: membership depends only on the key's
     # portable hash — same rows on any engine/partitioning (oracle-exact)
-    from ksql_spark.operators.sampling import hash_sample
-
     src = _load(spark, sf_dir, "orders")
     return hash_sample(src["orders"], "o_orderkey", rate=0.1).select(
         "o_orderkey", "o_custkey", Fn.round("o_totalprice", 4).alias("o_totalprice")
@@ -1521,8 +1278,6 @@ def q_sample_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-stratum quota by hash order: deterministic reservoir sampling
-    from ksql_spark.operators.sampling import stratified_sample
-
     src = _load(spark, sf_dir, "events")
     return stratified_sample(
         src["events"], stratum_col="event_type", key_col="event_id", n_per_stratum=50
@@ -1532,8 +1287,6 @@ def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fixed-token chunk windows with overlap — one codegen'd projection, no
     # shuffle; DuckDB twin recomputes identical chunk boundaries
-    from ksql_spark.operators.chunking import chunk_documents
-
     src = _load(spark, sf_dir, "documents")
     return chunk_documents(src["documents"], chunk_tokens=64, overlap=16)
 
@@ -1543,36 +1296,12 @@ def streaming_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     upstream simulation via explode), dropDuplicatesWithinWatermark keeps
     one copy per event_id with state bounded by the watermark horizon.
     Oracle = the events table itself (each row exactly once)."""
-    from ksql_spark import Catalog, STREAM
-    from ksql_spark.operators.dedup import exact_dedup_stream
-    from ksql_spark.streaming.sink import ExactlyOnceParquetSink
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    work = _scratch_dir("ksql_driver_ddw_")
-    cat = Catalog(spark, root=os.path.join(work, "catalog"))
-    cat.register_parquet(
-        "events",
-        os.path.join(sf_dir, "events.parquet"),
-        ref=STREAM,
-        event_time_col="ts",
-        event_order_cols=["ts", "event_id"],
-    )
-    src = cat.read_stream("events")
-    if dict(src.dtypes).get("ts") == "timestamp_ntz":
-        src = src.withColumn("ts", Fn.col("ts").cast("timestamp"))
+    mgr = _events_engine(spark, sf_dir, "ksql_driver_ddw_", "365 days")
+    src = _utc_ts(mgr.catalog.read_stream("events"))
     doubled = src.withColumn("__c", Fn.explode(Fn.array(Fn.lit(1), Fn.lit(2)))).drop("__c")
     deduped = exact_dedup_stream(doubled, keys=["event_id"], ts_col="ts", grace="365 days")
-    sink = ExactlyOnceParquetSink(os.path.join(work, "engine", "ddw"), lineage=False)
-    q = (
-        deduped.select("event_id", "user_id", "event_type", Fn.round("value", 4).alias("value"))
-        .writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return sink.read_data(spark)
+    out = deduped.select("event_id", "user_id", "event_type", Fn.round("value", 4).alias("value"))
+    return _drain(out, mgr.workdir, state_partitions=None)
 
 
 def q_cep_match_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1580,8 +1309,6 @@ def q_cep_match_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
     AFTER MATCH SKIP TO FIRST (earliest match per key).  Lowered to two
     time-bounded self-joins + a min-tuple aggregate — pure codegen'd joins,
     the same plan shape a streaming run uses (operators/cep.py)."""
-    from ksql_spark.operators.cep import match_sequence
-
     src = _load(spark, sf_dir, "events")
     m = match_sequence(
         src["events"],
@@ -1601,24 +1328,8 @@ def streaming_cep_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
     lowered to a watermarked stream-stream self-join in append mode through
     the exactly-once sink — each match emitted exactly once; join state
     evicted by the time bound.  Oracle = the batch join recompute."""
-    from ksql_spark import Catalog, STREAM
-    from ksql_spark.operators.cep import match_sequence
-    from ksql_spark.streaming.sink import ExactlyOnceParquetSink
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    work = _scratch_dir("ksql_driver_cep_")
-    cat = Catalog(spark, root=os.path.join(work, "catalog"))
-    cat.register_parquet(
-        "events",
-        os.path.join(sf_dir, "events.parquet"),
-        ref=STREAM,
-        event_time_col="ts",
-        event_order_cols=["ts", "event_id"],
-    )
-    src = cat.read_stream("events")
-    if dict(src.dtypes).get("ts") == "timestamp_ntz":
-        src = src.withColumn("ts", Fn.col("ts").cast("timestamp"))
-    src = src.withWatermark("ts", "365 days")
+    mgr = _events_engine(spark, sf_dir, "ksql_driver_cep_", "365 days")
+    src = _utc_ts(mgr.catalog.read_stream("events")).withWatermark("ts", "365 days")
     m = match_sequence(
         src,
         [
@@ -1627,23 +1338,7 @@ def streaming_cep_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         within_seconds=14400,
     ).select("user_id", Fn.col("click_id"), Fn.col("purchase_id"))
-    sink = ExactlyOnceParquetSink(os.path.join(work, "engine", "cep"), lineage=False)
-    # declared query parallelism (see streaming_cep_negation)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        with _no_data_batches_off(spark):
-            q = (
-                m.writeStream.foreachBatch(sink)
-                .outputMode("append")
-                .option("checkpointLocation", os.path.join(work, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return sink.read_data(spark)
+    return _drain(m, mgr.workdir)
 
 
 def q_cep_negation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1652,8 +1347,6 @@ def q_cep_negation(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ts, id) order).  Lowered to the step chain plus a time-bounded LEFT
     OUTER join + IS NULL filter (operators/cep.py) — the anti-join spelling
     that also runs on streams.  Oracle = the join + NOT EXISTS recompute."""
-    from ksql_spark.operators.cep import match_sequence
-
     src = _load(spark, sf_dir, "events")
     m = match_sequence(
         src["events"],
@@ -1678,14 +1371,9 @@ def streaming_cep_negation(spark: SparkSession, sf_dir: str) -> DataFrame:
     advancing row.  Each surviving match is emitted exactly once through the
     idempotent sink; all join state is evictable once the watermark passes
     click_ts + 4h.  Oracle = the identical batch recompute."""
-
-    from ksql_spark.operators.cep import match_sequence
-    from ksql_spark.streaming.sink import ExactlyOnceParquetSink
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    work = _scratch_dir("ksql_driver_cepneg_")
-    src = _stage_events_sentinels(spark, sf_dir, work, ["click", "purchase", "view"])
-    src = src.withWatermark("ts", "30 minutes")
+    src, work = _sentinel_events(
+        spark, sf_dir, "ksql_driver_cepneg_", ["click", "purchase", "view"]
+    )
     m = match_sequence(
         src,
         [
@@ -1695,25 +1383,7 @@ def streaming_cep_negation(spark: SparkSession, sf_dir: str) -> DataFrame:
         within_seconds=14400,
         absent=[("blocker", Fn.col("event_type") == "view")],
     ).select("user_id", Fn.col("click_id"), Fn.col("purchase_id"))
-    sink = ExactlyOnceParquetSink(os.path.join(work, "engine", "cepneg"), lineage=False)
-    # declared query parallelism, like the engine's PARTITIONS metadata: 3
-    # chained stateful joins instantiate a state store per shuffle partition
-    # per op — 8 fits this keyspace; the session default (32) would triple
-    # the per-batch store open/commit overhead for no speedup
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            m.writeStream.foreachBatch(sink)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return sink.read_data(spark)
+    return _drain(m, work)
 
 
 def q_cep_optional(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1723,8 +1393,6 @@ def q_cep_optional(spark: SparkSession, sf_dir: str) -> DataFrame:
     (match, optional event).  Lowered to a time-bounded LEFT OUTER join
     (operators/cep.py); streaming parity is pytest-covered
     (tests/test_cep.py).  Oracle = the equivalent LEFT JOIN."""
-    from ksql_spark.operators.cep import match_sequence
-
     src = _load(spark, sf_dir, "events")
     m = match_sequence(
         src["events"],
@@ -1746,8 +1414,6 @@ def q_cep_quantifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     row_number over the view leg, an rn-banded self-join (<= n-m+1 partners
     per anchor), and a time-banded purchase join (operators/cep_nfa.py) —
     no UDF, no cartesian.  Oracle = the identical row_number self-join."""
-    from ksql_spark.operators.cep_nfa import match_quantified
-
     src = _load(spark, sf_dir, "events")
     return match_quantified(
         src["events"],
@@ -1773,37 +1439,14 @@ def streaming_cep_quantifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_cep_nfa.py).  Sentinel far-future rows advance the watermark
     past every anchor's close, standing in for the stream continuing.
     Oracle = the identical batch recompute."""
-
-    from ksql_spark.operators.cep_nfa import match_quantified_stream
-    from ksql_spark.streaming.sink import ExactlyOnceParquetSink
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    work = _scratch_dir("ksql_driver_cepq_")
-    src = _stage_events_sentinels(spark, sf_dir, work, ["view", "purchase"])
-    src = src.withWatermark("ts", "30 minutes")
+    src, work = _sentinel_events(spark, sf_dir, "ksql_driver_cepq_", ["view", "purchase"])
     m = match_quantified_stream(
         src,
         ("a", Fn.col("event_type") == "view", 2, 3),
         ("b", Fn.col("event_type") == "purchase"),
         within_seconds=86400,
     ).filter(Fn.col("user_id") >= 0)
-    sink = ExactlyOnceParquetSink(os.path.join(work, "engine", "cepq"), lineage=False)
-    # one stateful op over a small keyspace: declared parallelism 8 (the
-    # session's 32 would quadruple per-batch store open/commit overhead)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            m.writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return sink.read_data(spark).select(
+    return _drain(m, work, "update").select(
         "user_id", "a_first_id", "a_last_id", "a_count", "b_id"
     )
 
@@ -1816,39 +1459,27 @@ def streaming_cep_repeat4(spark: SparkSession, sf_dir: str) -> DataFrame:
     NFA twin (streaming_cep_quantifier); the NFA is the scale path, this is
     the fixed-n relaxed-contiguity (all ordered 4-subsets) semantics
     ``repeat`` documents.  Oracle = the 5-way ordered self-join."""
-
-    from ksql_spark.operators.cep import match_sequence, repeat
-    from ksql_spark.streaming.sink import ExactlyOnceParquetSink
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    work = _scratch_dir("ksql_driver_cepr4_")
-    src = _stage_events_sentinels(spark, sf_dir, work, ["view", "purchase"])
-    src = src.withWatermark("ts", "30 minutes")
+    src, work = _sentinel_events(spark, sf_dir, "ksql_driver_cepr4_", ["view", "purchase"])
     m = match_sequence(
         src,
         [*repeat("a", Fn.col("event_type") == "view", 4),
          ("b", Fn.col("event_type") == "purchase")],
         within_seconds=172800,
     ).select("user_id", "a1_id", "a2_id", "a3_id", "a4_id", "b_id")
-    sink = ExactlyOnceParquetSink(os.path.join(work, "engine", "cepr4"), lineage=False)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        with _no_data_batches_off(spark):
-            q = (
-                m.writeStream.foreachBatch(sink)
-                .outputMode("append")
-                .option("checkpointLocation", os.path.join(work, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return sink.read_data(spark)
+    return _drain(m, work)
 
 
-_PATTERN_LEGS = None  # built lazily (needs Fn at import of entry fns)
+_PATTERN_COLS = ["user_id", "v_first_id", "v_last_id", "v_count", "c_id", "p_id"]
+
+
+def _nfa_stream(spark, sf_dir, prefix, legs, mode, cols=_PATTERN_COLS) -> DataFrame:
+    """A view/click/purchase pattern on the sentinel-staged events stream
+    through the streaming NFA (within 24h), sentinel keys dropped."""
+    src, work = _sentinel_events(spark, sf_dir, prefix, ["view", "click", "purchase"])
+    m = match_pattern_stream(src, legs, within_seconds=86400, mode=mode).filter(
+        Fn.col("user_id") >= 0
+    )
+    return _drain(m, work, "update").select(*cols)
 
 
 def _pattern_legs():
@@ -1867,8 +1498,6 @@ def q_cep_pattern_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/cep_nfa.py match_pattern): per-quantified-leg rn self-join +
     chained ordered joins, no UDF.  Oracle = the identical row_number
     self-join chain."""
-    from ksql_spark.operators.cep_nfa import match_pattern
-
     src = _load(spark, sf_dir, "events")
     return match_pattern(src["events"], _pattern_legs(), within_seconds=86400).select(
         "user_id", "v_first_id", "v_last_id", "v_count", "c_id", "p_id"
@@ -1881,34 +1510,7 @@ def streaming_cep_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
     the active 24h horizon + a flush cursor), versus one state store per
     step for the chained-join lowering.  Exactly-once flush at anchor
     close; sentinels advance the watermark.  Oracle = the batch twin."""
-
-    from ksql_spark.operators.cep_nfa import match_pattern_stream
-    from ksql_spark.streaming.sink import ExactlyOnceParquetSink
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    work = _scratch_dir("ksql_driver_ceppat_")
-    src = _stage_events_sentinels(spark, sf_dir, work, ["view", "click", "purchase"])
-    src = src.withWatermark("ts", "30 minutes")
-    m = match_pattern_stream(src, _pattern_legs(), within_seconds=86400).filter(
-        Fn.col("user_id") >= 0
-    )
-    sink = ExactlyOnceParquetSink(os.path.join(work, "engine", "ceppat"), lineage=False)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            m.writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return sink.read_data(spark).select(
-        "user_id", "v_first_id", "v_last_id", "v_count", "c_id", "p_id"
-    )
+    return _nfa_stream(spark, sf_dir, "ksql_driver_ceppat_", _pattern_legs(), "all")
 
 
 def _pattern_negation_legs():
@@ -1929,8 +1531,6 @@ def q_cep_pattern_negation(spark: SparkSession, sf_dir: str) -> DataFrame:
     IS NULL anti-join — the streaming-legal anti-join spelling — around
     the same banded-join chain as cep_pattern_multi.  Oracle = the
     identical chain with a DuckDB NOT EXISTS."""
-    from ksql_spark.operators.cep_nfa import match_pattern
-
     src = _load(spark, sf_dir, "events")
     return match_pattern(
         src["events"], _pattern_negation_legs(), within_seconds=86400
@@ -1946,33 +1546,9 @@ def streaming_cep_pattern_negation(spark: SparkSession, sf_dir: str) -> DataFram
     guarded gap by the kernel at anchor-close flush.  Exactly-once via the
     flush cursor; sentinels advance the watermark.  Oracle = the batch
     NOT-EXISTS twin."""
-
-    from ksql_spark.operators.cep_nfa import match_pattern_stream
-    from ksql_spark.streaming.sink import ExactlyOnceParquetSink
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    work = _scratch_dir("ksql_driver_cepneg_")
-    src = _stage_events_sentinels(spark, sf_dir, work, ["view", "click", "purchase"])
-    src = src.withWatermark("ts", "30 minutes")
-    m = match_pattern_stream(
-        src, _pattern_negation_legs(), within_seconds=86400
-    ).filter(Fn.col("user_id") >= 0)
-    sink = ExactlyOnceParquetSink(os.path.join(work, "engine", "cepneg"), lineage=False)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            m.writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return sink.read_data(spark).select(
-        "user_id", "v_first_id", "v_last_id", "v_count", "p_id"
+    return _nfa_stream(
+        spark, sf_dir, "ksql_driver_cepneg_", _pattern_negation_legs(), "all",
+        ["user_id", "v_first_id", "v_last_id", "v_count", "p_id"],
     )
 
 
@@ -1984,8 +1560,6 @@ def q_cep_pattern_optional(spark: SparkSession, sf_dir: str) -> DataFrame:
     expands present/absent configurations and UNION ALLs them
     (operators/cep_nfa.py match_pattern).  Oracle = base-pair SELECT with
     NULL literals UNION ALL the 3-way ordered join."""
-    from ksql_spark.operators.cep_nfa import match_pattern
-
     src = _load(spark, sf_dir, "events")
     legs = [
         ("v", Fn.col("event_type") == "view", 1, 1),
@@ -2006,8 +1580,6 @@ def q_cep_pattern_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     the all-matches banded-join algebra plus one per-key row_number over
     the order tuples (operators/cep_nfa.py match_pattern mode='first').
     Oracle = the identical chain wrapped in the identical row_number."""
-    from ksql_spark.operators.cep_nfa import match_pattern
-
     src = _load(spark, sf_dir, "events")
     return match_pattern(
         src["events"], _pattern_legs(), within_seconds=86400, mode="first"
@@ -2023,34 +1595,7 @@ def streaming_cep_pattern_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     and re-emits nothing for the rest of the stream.  Matches emit at
     anchor close (determinism under late data), exactly-once via the flush
     cursor.  Oracle = the batch row_number twin."""
-
-    from ksql_spark.operators.cep_nfa import match_pattern_stream
-    from ksql_spark.streaming.sink import ExactlyOnceParquetSink
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    work = _scratch_dir("ksql_driver_cepfirst_")
-    src = _stage_events_sentinels(spark, sf_dir, work, ["view", "click", "purchase"])
-    src = src.withWatermark("ts", "30 minutes")
-    m = match_pattern_stream(
-        src, _pattern_legs(), within_seconds=86400, mode="first"
-    ).filter(Fn.col("user_id") >= 0)
-    sink = ExactlyOnceParquetSink(os.path.join(work, "engine", "cepfirst"), lineage=False)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            m.writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return sink.read_data(spark).select(
-        "user_id", "v_first_id", "v_last_id", "v_count", "c_id", "p_id"
-    )
+    return _nfa_stream(spark, sf_dir, "ksql_driver_cepfirst_", _pattern_legs(), "first")
 
 
 def q_cep_pattern_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2064,8 +1609,6 @@ def q_cep_pattern_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/cep_nfa.py _match_pattern_skip_batch).  Oracle = a DuckDB
     RECURSIVE CTE doing the identical greedy walk with a LATERAL
     next-match probe."""
-    from ksql_spark.operators.cep_nfa import match_pattern
-
     src = _load(spark, sf_dir, "events")
     return match_pattern(
         src["events"], _pattern_legs(), within_seconds=86400,
@@ -2083,34 +1626,7 @@ def streaming_cep_pattern_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingest.  Selections happen at anchor close in canonical order,
     exactly-once via the persisted (cursor, frontier) pair.  Oracle = the
     batch recursive-greedy twin."""
-
-    from ksql_spark.operators.cep_nfa import match_pattern_stream
-    from ksql_spark.streaming.sink import ExactlyOnceParquetSink
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    work = _scratch_dir("ksql_driver_cepskip_")
-    src = _stage_events_sentinels(spark, sf_dir, work, ["view", "click", "purchase"])
-    src = src.withWatermark("ts", "30 minutes")
-    m = match_pattern_stream(
-        src, _pattern_legs(), within_seconds=86400, mode="skip_past_last"
-    ).filter(Fn.col("user_id") >= 0)
-    sink = ExactlyOnceParquetSink(os.path.join(work, "engine", "cepskip"), lineage=False)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            m.writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return sink.read_data(spark).select(
-        "user_id", "v_first_id", "v_last_id", "v_count", "c_id", "p_id"
-    )
+    return _nfa_stream(spark, sf_dir, "ksql_driver_cepskip_", _pattern_legs(), "skip_past_last")
 
 
 def q_cep_pattern_skip_next(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2124,8 +1640,6 @@ def q_cep_pattern_skip_next(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ts, id)) — operators/cep_nfa.py match_pattern mode='skip_to_next'.
     Oracle = the mode='first' chain with the row_number partitioned by
     (user_id, anchor ts, anchor id)."""
-    from ksql_spark.operators.cep_nfa import match_pattern
-
     src = _load(spark, sf_dir, "events")
     return match_pattern(
         src["events"], _pattern_legs(), within_seconds=86400,
@@ -2144,35 +1658,8 @@ def streaming_cep_pattern_skip_next(spark: SparkSession, sf_dir: str) -> DataFra
     lineage-marker state field makes a mode flip across a checkpoint
     resume a named error.  Oracle = the batch per-anchor row_number
     twin."""
-
-    from ksql_spark.operators.cep_nfa import match_pattern_stream
-    from ksql_spark.streaming.sink import ExactlyOnceParquetSink
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    work = _scratch_dir("ksql_driver_cepskipnext_")
-    src = _stage_events_sentinels(spark, sf_dir, work, ["view", "click", "purchase"])
-    src = src.withWatermark("ts", "30 minutes")
-    m = match_pattern_stream(
-        src, _pattern_legs(), within_seconds=86400, mode="skip_to_next"
-    ).filter(Fn.col("user_id") >= 0)
-    sink = ExactlyOnceParquetSink(
-        os.path.join(work, "engine", "cepskipnext"), lineage=False
-    )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            m.writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return sink.read_data(spark).select(
-        "user_id", "v_first_id", "v_last_id", "v_count", "c_id", "p_id"
+    return _nfa_stream(
+        spark, sf_dir, "ksql_driver_cepskipnext_", _pattern_legs(), "skip_to_next"
     )
 
 
@@ -2186,9 +1673,6 @@ def streaming_skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash (replay-stable), build side exploded across the 8 salt buckets,
     the WITHIN bound keeping both sides watermark-evictable.  Result is
     row-identical to the unsalted join; oracle = the batch SQL join."""
-    from ksql_spark.streaming.sink import ExactlyOnceParquetSink
-    from ksql_spark.streaming.skew import salted_stream_stream_join
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     work = _scratch_dir("ksql_driver_skewjoin_")
     skew_key = Fn.when(Fn.col("user_id") % 10 < 7, Fn.lit(0)).otherwise(
@@ -2201,55 +1685,30 @@ def streaming_skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # proportionate to the rest of the suite at sf0.1.  Staged with a
     # pyarrow predicate instead of a Spark read+filter+rewrite job (r7) —
     # identical rows under the source's own schema.
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    src_path = os.path.join(sf_dir, "events.parquet")
-    tbl = pq.read_table(src_path)
+    tbl = pq.read_table(os.path.join(sf_dir, "events.parquet"))
     mask = (tbl.column("event_id").to_numpy() % 3) == 0
-    os.makedirs(os.path.join(work, "ev"), exist_ok=True)
-    pq.write_table(tbl.filter(pa.array(mask)), os.path.join(work, "ev", "part-0.parquet"))
+    ev = os.path.join(work, "ev")
+    os.makedirs(ev, exist_ok=True)
+    pq.write_table(tbl.filter(pa.array(mask)), os.path.join(ev, "part-0.parquet"))
+    schema = spark.read.parquet(ev).schema
 
-    schema = spark.read.parquet(os.path.join(work, "ev")).schema
-    ts_is_ntz = any(f.name == "ts" and str(f.dataType) == "TimestampNTZType()" for f in schema)
-
-    def leg(event_type: str, id_out: str, ts_out: str):
-        src = spark.readStream.schema(schema).parquet(os.path.join(work, "ev"))
-        if ts_is_ntz:
-            src = src.withColumn("ts", Fn.col("ts").cast("timestamp"))
+    def leg(event_type: str, key: str, id_out: str, ts_out: str):
         return (
-            src.filter(Fn.col("event_type") == event_type)
+            _utc_ts(spark.readStream.schema(schema).parquet(ev))
+            .filter(Fn.col("event_type") == event_type)
             .select(
-                skew_key.alias("k") if id_out == "l_id" else skew_key.alias("__rk0"),
-                Fn.col("event_id").alias(id_out),
-                Fn.col("ts").alias(ts_out),
+                skew_key.alias(key), Fn.col("event_id").alias(id_out), Fn.col("ts").alias(ts_out)
             )
             .withWatermark(ts_out, "365 days")
         )
 
-    left = leg("click", "l_id", "l_ts")
-    right = leg("purchase", "r_id", "r_ts").withColumnRenamed("__rk0", "k")
+    left = leg("click", "k", "l_id", "l_ts")
+    right = leg("purchase", "__rk0", "r_id", "r_ts").withColumnRenamed("__rk0", "k")
     joined = salted_stream_stream_join(
         left, right, key="k", left_ts="l_ts", right_ts="r_ts",
         within_seconds=900, salt_buckets=8, left_salt_cols=["l_id"],
     ).select("k", "l_id", "r_id")
-    sink = ExactlyOnceParquetSink(os.path.join(work, "engine", "skewjoin"), lineage=False)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        with _no_data_batches_off(spark):
-            q = (
-                joined.writeStream.foreachBatch(sink)
-                .outputMode("append")
-                .option("checkpointLocation", os.path.join(work, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return sink.read_data(spark)
+    return _drain(joined, work)
 
 
 def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2261,16 +1720,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost proportional to the delta.  Oracle = brute-force exact-Jaccard
     restricted to pairs with >=1 new doc (same semantic oracle as
     dedup_minhash_lsh)."""
-    # release the PREVIOUS entry's persisted signature frames: the driver
-    # collects each entry fully before calling the next, so caller-side
-    # cleanup here is safe and bounds the MEMORY_AND_DISK footprint to one
-    # entry (operators themselves never flush the registry — ADVICE r3)
-    from ksql_spark.operators.dedup import cleanup_persisted
-
-    cleanup_persisted()
-    from ksql_spark.operators.dedup import minhash_index, minhash_lsh_pairs_incremental
-
-    docs = _load(spark, sf_dir, "documents")["documents"]
+    docs = _documents(spark, sf_dir)
     old = docs.filter(Fn.col("doc_id") % 10 != 0)
     new = docs.filter(Fn.col("doc_id") % 10 == 0)
     idx = minhash_index(old, n_hashes=32, bands=16, shingle_n=3)
@@ -2287,8 +1737,6 @@ def q_embed_lsh_ann_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     in tests/test_similarity.py and BENCH/PLANS.md) instead of re-projecting
     every vector per query.  Oracle = the same full bucket-mirror as
     embed_lsh_ann (identical result by construction)."""
-    from ksql_spark.operators.similarity import add_lsh_buckets, lsh_topk
-
     emb = _load(spark, sf_dir, "embeddings")["embeddings"]
     query = _query_embedding(sf_dir)
     work = _scratch_dir("ksql_driver_annsrv_")
@@ -2313,39 +1761,18 @@ def streaming_topk_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized state equals the batch recompute).  Before this, HAVING
     silently fell back to the unbounded native fold.  Oracle = batch top-k
     filtered by the same array comparison."""
-    from ksql_spark import TABLE, Catalog, Create, F, RawColumn, STREAM, Schema, Select, TopK
-    from ksql_spark.expr import Conditional
-    from ksql_spark.streaming.engine import PersistentQueryManager
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    work = _scratch_dir("ksql_driver_topkhav_")
-    cat = Catalog(spark, root=os.path.join(work, "catalog"))
-    cat.register_parquet(
-        "events",
-        os.path.join(sf_dir, "events.parquet"),
-        ref=STREAM,
-        event_time_col="ts",
-        event_order_cols=["ts", "event_id"],
-        partitions=8,
-    )
-    mgr = PersistentQueryManager(
-        spark, cat, workdir=os.path.join(work, "engine"), grace="365 days",
-        enable_metrics=False,
-    )
+    mgr = _events_engine(spark, sf_dir, "ksql_driver_topkhav_", "365 days")
     agg = TopK(RawColumn(Fn.round(Fn.col("value"), 4)), 3).Alias("top_vals")
-    csas = Create(TABLE, "user_topk_hav").AsSelect(
-        Select(F("user_id"), agg)
-        .From(Schema("events", STREAM))
-        .GroupBy(F("user_id"))
-        .Having(Conditional(agg, ">=", [300.0]))
-        .EmitChanges()
+    mgr.create_as_select(
+        Create(TABLE, "user_topk_hav").AsSelect(
+            Select(F("user_id"), agg)
+            .From(Schema("events", STREAM))
+            .GroupBy(F("user_id"))
+            .Having(Conditional(agg, ">=", [300.0]))
+            .EmitChanges()
+        )
     )
-    with _no_data_batches_off(spark):
-        mgr.create_as_select(csas, available_now=True, await_termination=True)
-    state = cat.read("QUERYABLE_user_topk_hav")
-    return state.select("user_id", Fn.posexplode("top_vals").alias("rank", "top_val")).select(
-        "user_id", Fn.col("rank").cast("bigint").alias("rank"), "top_val"
-    )
+    return _ranked(mgr.catalog.read("QUERYABLE_user_topk_hav"), "top_vals", "rank", "top_val")
 
 
 def streaming_multi_agg_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2354,51 +1781,26 @@ def streaming_multi_agg_changelog(spark: SparkSession, sf_dir: str) -> DataFrame
     next to the O(k) TOPK, so the mixed query no longer falls back to the
     native fold whose collect state grows with group history.  Oracle = the
     batch recompute (group stats joined to the unnested top-k)."""
-    from ksql_spark import (
-        TABLE, Catalog, Count, Create, F, Max, RawColumn, STREAM, Schema, Select, Sum, TopK,
-    )
-    from ksql_spark.streaming.engine import PersistentQueryManager
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    work = _scratch_dir("ksql_driver_multi_")
-    cat = Catalog(spark, root=os.path.join(work, "catalog"))
-    cat.register_parquet(
-        "events",
-        os.path.join(sf_dir, "events.parquet"),
-        ref=STREAM,
-        event_time_col="ts",
-        event_order_cols=["ts", "event_id"],
-        partitions=8,
-    )
-    mgr = PersistentQueryManager(
-        spark, cat, workdir=os.path.join(work, "engine"), grace="365 days",
-        enable_metrics=False,
-    )
+    mgr = _events_engine(spark, sf_dir, "ksql_driver_multi_", "365 days")
     rv = RawColumn(Fn.round(Fn.col("value"), 4))
-    csas = Create(TABLE, "user_mix").AsSelect(
-        Select(
-            F("user_id"),
-            Count(F("event_id")).Alias("cnt"),
-            Sum(rv).Alias("sum_val"),
-            Max(rv).Alias("max_val"),
-            TopK(rv, 3).Alias("top_vals"),
+    mgr.create_as_select(
+        Create(TABLE, "user_mix").AsSelect(
+            Select(
+                F("user_id"),
+                Count(F("event_id")).Alias("cnt"),
+                Sum(rv).Alias("sum_val"),
+                Max(rv).Alias("max_val"),
+                TopK(rv, 3).Alias("top_vals"),
+            )
+            .From(Schema("events", STREAM))
+            .GroupBy(F("user_id"))
+            .EmitChanges()
         )
-        .From(Schema("events", STREAM))
-        .GroupBy(F("user_id"))
-        .EmitChanges()
     )
-    with _no_data_batches_off(spark):
-        mgr.create_as_select(csas, available_now=True, await_termination=True)
-    state = cat.read("QUERYABLE_user_mix")
-    return state.select(
-        "user_id",
-        "cnt",
-        Fn.round("sum_val", 4).alias("sum_val"),
-        "max_val",
-        Fn.posexplode("top_vals").alias("rank", "top_val"),
-    ).select(
-        "user_id", "cnt", "sum_val", "max_val",
-        Fn.col("rank").cast("bigint").alias("rank"), "top_val",
+    state = mgr.catalog.read("QUERYABLE_user_mix")
+    return _ranked(
+        state.withColumn("sum_val", Fn.round("sum_val", 4)),
+        "top_vals", "rank", "top_val", "cnt", "sum_val", "max_val",
     )
 
 
@@ -2409,50 +1811,17 @@ def streaming_session_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     Each session is emitted exactly once when the watermark closes it.
     Oracle = the batch gap-session recompute restricted to watermark-closed
     sessions (session_end <= max(ts) - grace)."""
-    from ksql_spark import (
-        TABLE,
-        Catalog,
-        Count,
-        Create,
-        F,
-        STREAM,
-        Schema,
-        Select,
-        SessionWindow,
-        TimeUnit,
+    mgr = _events_engine(spark, sf_dir, "ksql_driver_sessfin_", "30 minutes")
+    pq_ = mgr.create_as_select(
+        Create(TABLE, "session_finals").AsSelect(
+            Select(F("user_id"), Count(F("event_id")).Alias("cnt"))
+            .From(Schema("events", STREAM))
+            .WindowedBy(SessionWindow(30, TimeUnit.MINUTES))
+            .GroupBy(F("user_id"))
+            .EmitFinal()
+        )
     )
-    from ksql_spark.streaming.engine import PersistentQueryManager
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    work = _scratch_dir("ksql_driver_sessfin_")
-    cat = Catalog(spark, root=os.path.join(work, "catalog"))
-    cat.register_parquet(
-        "events",
-        os.path.join(sf_dir, "events.parquet"),
-        ref=STREAM,
-        event_time_col="ts",
-        event_order_cols=["ts", "event_id"],
-        partitions=8,
-    )
-    mgr = PersistentQueryManager(
-        spark, cat, workdir=os.path.join(work, "engine"), grace="30 minutes",
-        enable_metrics=False,
-    )
-    csas = Create(TABLE, "session_finals").AsSelect(
-        Select(F("user_id"), Count(F("event_id")).Alias("cnt"))
-        .From(Schema("events", STREAM))
-        .WindowedBy(SessionWindow(30, TimeUnit.MINUTES))
-        .GroupBy(F("user_id"))
-        .EmitFinal()
-    )
-    mgr.create_as_select(csas, available_now=True, await_termination=True)
-    out = mgr.queries["session_finals"].sink.read_data(spark)
-    return out.select(
-        Fn.unix_micros(Fn.col("window_start").cast("timestamp")).alias("session_start_us"),
-        Fn.unix_micros(Fn.col("window_end").cast("timestamp")).alias("session_end_us"),
-        "user_id",
-        "cnt",
-    )
+    return _session_us(pq_.sink.read_data(spark))
 
 
 def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2460,8 +1829,6 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     # decoded by the pure-stdlib codecs and featurized from exact integer
     # statistics; the oracle recomputes those statistics from the generative
     # byte formula WITHOUT a codec — a decoding bug cannot pass.
-    from ksql_spark.operators.multimodal import extract_features, synthesize_media_real
-
     media = synthesize_media_real(spark, n=64, seed=42)
     feats = extract_features(media, decode_stub=False)
     return feats.select(
@@ -2479,8 +1846,6 @@ def q_migrations_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     migrations, AutoMigrate up (both applied), down (last reverted), up
     again (only the reverted one reapplied — seeker skip semantics), and
     return the step->versions trace.  Oracle = the expected trace VALUES."""
-    from ksql_spark.migrations import Migrator, create_migration
-
     work = _scratch_dir("ksql_driver_mig_")
     mdir = os.path.join(work, "migrations")
     os.makedirs(mdir)
@@ -2509,23 +1874,6 @@ def q_analyzer_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     (select_builder.go:768-794) and the create rules
     (create_builder.go:45-73).  Oracle = the expected truth table as VALUES,
     so a silently-dropped validation flips the row and fails the gate."""
-    from ksql_spark import (
-        TABLE,
-        TOPIC,
-        Count,
-        Create,
-        F,
-        KType,
-        STREAM,
-        Schema,
-        SchemaField,
-        Select,
-        Sum,
-        TimeUnit,
-        TumblingWindow,
-    )
-    from ksql_spark.errors import AnalysisError
-
     def probe(fn) -> bool:
         try:
             fn()
@@ -2664,18 +2012,7 @@ def q_select_once_pull(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SelectOnce — the pull-query client API (reference: SelectOnce,
     streams/specification.go:588-620): one-shot read of current data through
     the engine, returned as rows.  Oracle = the same filter in SQL."""
-    from ksql_spark import Catalog, F, STREAM, Schema, Select
-    from ksql_spark.streaming.engine import PersistentQueryManager
-
-    work = _scratch_dir("ksql_driver_pull_")
-    cat = Catalog(spark, root=os.path.join(work, "catalog"))
-    cat.register_parquet(
-        "events", os.path.join(sf_dir, "events.parquet"), ref=STREAM,
-        event_time_col="ts", event_order_cols=["ts", "event_id"],
-    )
-    mgr = PersistentQueryManager(
-        spark, cat, workdir=os.path.join(work, "engine"), enable_metrics=False
-    )
+    mgr = _events_engine(spark, sf_dir, "ksql_driver_pull_", DEFAULT_GRACE)
     sb = (
         Select(F("event_id"), F("user_id"), F("event_type"))
         .From(Schema("events", STREAM))
@@ -2691,20 +2028,7 @@ def q_select_with_emit(spark: SparkSession, sf_dir: str) -> DataFrame:
     completion, yielding the committed changelog rows.  One availableNow
     batch -> the changelog carries each key's final upsert; oracle = the
     batch aggregate."""
-    from ksql_spark import Catalog, Count, F, STREAM, Schema, Select
-    from ksql_spark.streaming.engine import PersistentQueryManager
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    work = _scratch_dir("ksql_driver_emit_")
-    cat = Catalog(spark, root=os.path.join(work, "catalog"))
-    cat.register_parquet(
-        "events", os.path.join(sf_dir, "events.parquet"), ref=STREAM,
-        event_time_col="ts", event_order_cols=["ts", "event_id"],
-    )
-    mgr = PersistentQueryManager(
-        spark, cat, workdir=os.path.join(work, "engine"), grace="365 days",
-        enable_metrics=False,
-    )
+    mgr = _events_engine(spark, sf_dir, "ksql_driver_emit_", "365 days")
     sb = (
         Select(F("event_type"), Count(F("event_id")).Alias("cnt"))
         .From(Schema("events", STREAM))

@@ -27,6 +27,9 @@ surface at all; Flink MATCH_RECOGNIZE is the inspiration):
     (first, last, terminal) triples — deterministic and oracle-checkable by
     a row_number self-join), with the run length as ``a_count``.
   * ``n=None`` is Kleene-plus: ``A{m,}`` — the within-bound caps the run.
+  * NULL partition keys never match, in batch or streaming:
+    ``match_pattern`` and ``match_pattern_stream`` drop NULL-key events
+    before any leg sees them.
 
 Batch lowering is pure DataFrame algebra (row_number + a rn-banded
 self-join + a time-banded terminal join — Catalyst plans, no UDF).  The
@@ -561,6 +564,8 @@ def match_pattern(
             f"unknown match mode {mode!r}: expected 'all', 'first', "
             f"'skip_past_last' or 'skip_to_next'"
         )
+    # NULL keys never match (the module's NULL-key contract)
+    df = df.filter(F.col(key_col).isNotNull())
     if mode == "skip_past_last":
         return _match_pattern_skip_batch(
             df, legs, within_seconds, key_col, ts_col, id_col
@@ -1046,7 +1051,8 @@ def match_pattern_stream(
     keep = F.coalesce(F.col("__p0"), F.lit(False))
     for i in range(1, len(preds)):
         keep = keep | F.coalesce(F.col(f"__p{i}"), F.lit(False))
-    proj = df.select(*sel).filter(keep)
+    # NULL keys never match (the module's NULL-key contract)
+    proj = df.select(*sel).filter(keep & F.col("__k").isNotNull())
 
     key_type = df.select(F.col(key_col)).schema[0].dataType
     id_type = df.select(F.col(id_col)).schema[0].dataType

@@ -248,63 +248,6 @@ def minhash_signature(text: Column, n_hashes: int = 32, shingle_n: int = 3) -> C
     return F.element_at(F.transform(F.array(base), build), 1)
 
 
-def minhash_signatures_arrow(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n_hashes: int = 32,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """Vectorized (id, shingles, signature) — bit-identical to the built-in
-    ``minhash_signature`` expression, ~10x cheaper per row.
-
-    Normalization + shingling stay JVM-side (``word_shingles``) so the text
-    canonical form is decided once, by one engine — Python ``str.lower`` and
-    Java ``toLowerCase`` disagree on some codepoints, and any divergence
-    would silently change every downstream hash.  The per-shingle md5 and
-    the k universal-hash mixes move to an Arrow batch: one hashlib pass over
-    the flat shingle array, then a numpy broadcast ``(a*h + b) mod M31`` and
-    ``minimum.reduceat`` per document — replacing ~n_hashes x n_shingles
-    interpreted HOF evaluations per row with two vector ops.
-    """
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-
-    consts = _mix_consts(n_hashes)
-    a_vec = np.array([a for a, _ in consts], dtype=np.int64)
-    b_vec = np.array([b for _, b in consts], dtype=np.int64)
-
-    base = df.select(
-        F.col(id_col).alias("id"), word_shingles(F.col(text_col), shingle_n).alias("sh")
-    )
-
-    def run(batches):
-        for pdf in batches:
-            if pdf.empty:
-                yield pd.DataFrame({"id": [], "sh": [], "sig": []})
-                continue
-            lengths = pdf["sh"].map(len).to_numpy()
-            flat = [s for arr in pdf["sh"] for s in arr]
-            h = np.fromiter(
-                (int(hashlib.md5(s.encode()).hexdigest()[:15], 16) % M31 for s in flat),
-                dtype=np.int64,
-                count=len(flat),
-            )
-            # (n_shingles, k) mix — products stay < 2^62, no overflow
-            mixed = (h[:, None] * a_vec[None, :] + b_vec[None, :]) % M31
-            offsets = np.zeros(len(pdf), dtype=np.int64)
-            np.cumsum(lengths[:-1], out=offsets[1:])
-            sigs = np.minimum.reduceat(mixed, offsets, axis=0)
-            yield pd.DataFrame({"id": pdf["id"], "sh": pdf["sh"], "sig": list(sigs)})
-
-    schema = (
-        f"id {dict(df.dtypes)[id_col]}, sh array<string>, sig array<bigint>"
-    )
-    return base.mapInPandas(run, schema=schema)
-
-
 def _band_explode(base: DataFrame, n_hashes: int, bands: int) -> DataFrame:
     """(id, sig) -> NARROW (id, band_id, band_hash) rows.
 
@@ -337,12 +280,9 @@ def _signature_base(
     text_col: str,
     n_hashes: int,
     shingle_n: int,
-    vectorized: bool,
 ) -> DataFrame:
     """One scan: (id, sh, sig) — shingles kept aside for verification, the
     narrow signature for banding."""
-    if vectorized:
-        return minhash_signatures_arrow(df, id_col, text_col, n_hashes, shingle_n)
     return df.select(
         F.col(id_col).alias("id"),
         word_shingles(F.col(text_col), shingle_n).alias("sh"),
@@ -397,17 +337,8 @@ def minhash_lsh_pairs(
     bands: int = 8,
     shingle_n: int = 3,
     threshold: float = 0.8,
-    vectorized: bool = False,
 ) -> DataFrame:
     """MinHash-LSH near-dup pairs, exact-Jaccard verified (id_l < id_r).
-
-    ``vectorized=True`` swaps the signature computation for the Arrow/numpy
-    path (``minhash_signatures_arrow``, bit-identical output).  Default off:
-    the expression path keeps the whole pipeline JVM-side, while the Arrow
-    path ships every shingle string across the Python boundary — under this
-    sandbox's contended host the two measure within noise of each other, so
-    the boundary-free plan wins by default; flip it where Python workers are
-    plentiful and executor JVM memory is the constraint.
 
     Plan shape:
       1. one scan: signature + shingles per doc;
@@ -427,10 +358,8 @@ def minhash_lsh_pairs(
     # single file (locally) — at cluster scale the scan is already parallel
     df = _ensure_parallel(df, id_col)
 
-    # one scan: shingles (wide, kept aside) + signature (narrow); the
-    # vectorized variant is the Arrow/numpy path (bit-identical — same
-    # md5-derived constants)
-    base = _signature_base(df, id_col, text_col, n_hashes, shingle_n, vectorized)
+    # one scan: shingles (wide, kept aside) + signature (narrow)
+    base = _signature_base(df, id_col, text_col, n_hashes, shingle_n)
     shingles = base.select("id", "sh")
     banded = _band_explode(base, n_hashes, bands)
     # persist the NARROW banded table only: the self-join scans it twice, and
@@ -480,7 +409,6 @@ def minhash_index(
     n_hashes: int = 32,
     bands: int = 8,
     shingle_n: int = 3,
-    vectorized: bool = False,
 ) -> DataFrame:
     """The maintainable LSH index relation: (id, band_id, band_hash).
 
@@ -493,7 +421,7 @@ def minhash_index(
     if n_hashes % bands != 0:
         raise ValueError("n_hashes must be divisible by bands")
     df = _ensure_parallel(df, id_col)
-    base = _signature_base(df, id_col, text_col, n_hashes, shingle_n, vectorized)
+    base = _signature_base(df, id_col, text_col, n_hashes, shingle_n)
     return _band_explode(base, n_hashes, bands).withColumnRenamed("id", id_col)
 
 
@@ -507,7 +435,6 @@ def minhash_lsh_pairs_incremental(
     bands: int = 8,
     shingle_n: int = 3,
     threshold: float = 0.8,
-    vectorized: bool = False,
 ) -> DataFrame:
     """Near-dup pairs for a NEW batch against an already-indexed corpus.
 
@@ -531,7 +458,7 @@ def minhash_lsh_pairs_incremental(
     if n_hashes % bands != 0:
         raise ValueError("n_hashes must be divisible by bands")
     new_df = _ensure_parallel(new_df, id_col)
-    new_base = _signature_base(new_df, id_col, text_col, n_hashes, shingle_n, vectorized)
+    new_base = _signature_base(new_df, id_col, text_col, n_hashes, shingle_n)
     new_banded = _persist(_band_explode(new_base, n_hashes, bands))
 
     idx = index.select(

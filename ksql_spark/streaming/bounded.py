@@ -297,7 +297,9 @@ def _bounded_func(specs: list[dict], n_keys: int, windowed: bool) -> Callable:
                 flat += [None if (v is not None and _is_nan(v)) else v, slot[1]]
         state.update(tuple(flat))
 
-    def func(key, pdf_iter: Iterator, state: GroupState) -> Iterator:
+    # the name shows in the plan: the engine reads it to tell this kernel,
+    # whose timeout only evicts, from one that emits on the watermark
+    def bounded_upsert(key, pdf_iter: Iterator, state: GroupState) -> Iterator:
         if state.hasTimedOut:
             # watermark passed window_end: the final upsert is already in the
             # changelog; just release the state (yield nothing — an empty
@@ -368,7 +370,7 @@ def _bounded_func(specs: list[dict], n_keys: int, windowed: bool) -> Callable:
                 outs.append(slot)
         yield emit(key, outs)
 
-    return func
+    return bounded_upsert
 
 
 def _spec_of(agg, collect_limit: int, hist_capacity: int | None) -> dict:

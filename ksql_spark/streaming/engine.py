@@ -21,6 +21,8 @@ import hashlib
 import json
 import os
 import re
+import uuid
+from contextlib import contextmanager
 from typing import Any, Iterable
 
 import pyarrow as pa
@@ -28,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import _make_type_verifier
 
 from ..builder import CreateBuilder, EmitMode, InsertBuilder, Ref, SelectBuilder
@@ -39,19 +42,27 @@ from .sink import OP_APPEND, OP_UPSERT, ExactlyOnceParquetSink
 
 
 _STATE_NODE_RE = re.compile(
-    r"FlatMapGroupsInPandasWithState [^\n]*?"
+    r"FlatMapGroupsInPandasWithState (\w+)\([^\n]*?"
     r"(\[StructField\([^\]]*\)\]), (\w+), (\w+Timeout)"
 )
+_STREAM_JOIN_RE = re.compile(r"~Join (\w+)")
+
+# The pandas state kernels the engine compiles from a builder EMIT CHANGES
+# query.  Their event-time timeout only evicts state whose final upsert the
+# changelog already holds (sessions.py and bounded.py, ``hasTimedOut``).
+_EVICT_ONLY_KERNELS = frozenset({"session_upsert", "bounded_upsert"})
+
+_NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
 
 
-def _state_schema_descriptor(df: DataFrame) -> list[list[str]] | None:
+def _state_schema_descriptor(plan: str) -> list[list[str]] | None:
     """Extract every custom stateful operator's (state schema, output mode,
-    timeout) from the analyzed plan — the persisted RocksDB state layout of
-    the bounded/session operators.  None when the plan has no custom
-    stateful op (native windowed aggregates are covered by Spark's own
-    state-schema compatibility checker)."""
-    plan = df._jdf.queryExecution().analyzed().toString()
-    found = [[m.group(1), m.group(2), m.group(3)] for m in _STATE_NODE_RE.finditer(plan)]
+    timeout) from an analyzed plan rendering — the persisted RocksDB state
+    layout of the bounded/session/NFA operators.  None when the plan has no
+    custom stateful op (native windowed aggregates are covered by Spark's
+    own state-schema compatibility checker)."""
+    found = [[m.group(2), m.group(3), m.group(4)] for m in _STATE_NODE_RE.finditer(plan)]
     if not found and "FlatMapGroupsInPandasWithState" in plan:
         # ADVICE r6: the plan HAS a custom stateful operator but the schema
         # regex no longer matches its rendering (e.g. a Spark upgrade
@@ -98,6 +109,96 @@ def check_state_schema(checkpoint: str, descriptor: list[list[str]], query: str)
     os.makedirs(checkpoint, exist_ok=True)
     with open(marker, "w") as fh:
         json.dump({"fingerprint": fp, "descriptor": descriptor}, fh)
+
+
+def keeps_no_data_batch(plan: str, output_mode: str) -> bool:
+    """Whether a bounded (``availableNow``) run of the analyzed ``plan``
+    needs Spark's trailing no-data micro-batch.
+
+    That batch only moves the watermark up to the data already read, at the
+    fixed cost of reopening and committing every state store.  It is kept
+    when some operator emits rows as the watermark passes:
+
+    * a streaming aggregate under append output mode (EMIT FINAL windows);
+    * a stream join that is not inner (outer null-extension, CEP negation;
+      a stateless stream-static join never gets a no-data batch anyway);
+    * a pandas state kernel with an event-time timeout (the CEP NFA flushes
+      its matches there), except the builder's EMIT CHANGES kernels, whose
+      timeout only evicts.
+
+    Everything else — update-mode aggregates, inner stream-stream joins,
+    watermark deduplication — has emitted every row in the data batches.
+    """
+    if output_mode == "append" and "~Aggregate" in plan:
+        return True
+    if any(kind != "Inner" for kind in _STREAM_JOIN_RE.findall(plan)):
+        return True
+    return any(
+        m.group(4) == "EventTimeTimeout" and m.group(1) not in _EVICT_ONLY_KERNELS
+        for m in _STATE_NODE_RE.finditer(plan)
+    )
+
+
+@contextmanager
+def _session_conf(spark: SparkSession, conf: dict[str, str]):
+    old = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+
+
+def start_stream(
+    df: DataFrame,
+    sink: ExactlyOnceParquetSink,
+    checkpoint: str,
+    *,
+    output_mode: str = "append",
+    name: str | None = None,
+    state_partitions: int | None = None,
+    available_now: bool = True,
+    processing_time: str | None = None,
+) -> StreamingQuery:
+    """Start the streaming frame ``df`` into ``sink``: the one place the
+    engine starts a stream, so the run policy is decided in one place.
+
+    * A checkpoint whose persisted state layout differs from ``df``'s is
+      refused (:func:`check_state_schema`).
+    * ``state_partitions`` pins ``spark.sql.shuffle.partitions``: stateful
+      operators open one state store per shuffle partition per batch, and
+      Spark bakes the value into the checkpoint at first start.
+    * An ``available_now`` run drops the trailing no-data micro-batch
+      unless :func:`keeps_no_data_batch` says an operator needs it.  A
+      processing-time run leaves that setting to the session.
+
+    Both settings are captured when the query starts; the session's own
+    values are restored right after.
+    """
+    plan = df._jdf.queryExecution().analyzed().toString()
+    desc = _state_schema_descriptor(plan)
+    if desc is not None:
+        check_state_schema(checkpoint, desc, name or checkpoint)
+    conf: dict[str, str] = {}
+    if state_partitions:
+        conf[_SHUFFLE_PARTITIONS] = str(state_partitions)
+    if available_now and not keeps_no_data_batch(plan, output_mode):
+        conf[_NO_DATA_BATCHES] = "false"
+    writer = (
+        df.writeStream.foreachBatch(sink)
+        .outputMode(output_mode)
+        .option("checkpointLocation", checkpoint)
+    )
+    if name:
+        writer = writer.queryName(name)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    elif processing_time:
+        writer = writer.trigger(processingTime=processing_time)
+    with _session_conf(df.sparkSession, conf):
+        return writer.start()
 
 
 def values_frame(
@@ -267,35 +368,17 @@ class PersistentQueryManager:
         await_termination: bool,
         max_files_per_trigger: int | None,
     ) -> None:
-        # Stateful operators instantiate one state store per shuffle
-        # partition per batch; sizing that to the query's declared
-        # parallelism (instead of the session default) is the difference
-        # between paying 32 RocksDB opens for 8 partitions' worth of data
-        # and paying for exactly what the data needs.  Spark captures the
-        # value at stream start and pins it in the checkpoint.
-        conf_key = "spark.sql.shuffle.partitions"
-        old = self.spark.conf.get(conf_key)
-        if pq.state_partitions:
-            self.spark.conf.set(conf_key, str(pq.state_partitions))
-        try:
-            df = self._compile_streaming(pq.create, max_files_per_trigger)
-            desc = _state_schema_descriptor(df)
-            if desc is not None:
-                check_state_schema(pq.checkpoint, desc, pq.name)
-            writer = (
-                df.writeStream.foreachBatch(pq.sink)
-                .outputMode(self._output_mode(pq.create))
-                .option("checkpointLocation", pq.checkpoint)
-                .queryName(pq.name)
-            )
-            if available_now:
-                writer = writer.trigger(availableNow=True)
-            elif processing_time:
-                writer = writer.trigger(processingTime=processing_time)
-            pq.streaming_query = writer.start()
-        finally:
-            if pq.state_partitions:
-                self.spark.conf.set(conf_key, old)
+        df = self._compile_streaming(pq.create, max_files_per_trigger)
+        pq.streaming_query = start_stream(
+            df,
+            pq.sink,
+            pq.checkpoint,
+            output_mode=self._output_mode(pq.create),
+            name=pq.name,
+            state_partitions=pq.state_partitions,
+            available_now=available_now,
+            processing_time=processing_time,
+        )
         if await_termination and available_now:
             pq.streaming_query.awaitTermination()
             pq.streaming_query = None
@@ -414,8 +497,6 @@ class PersistentQueryManager:
         """
         if sb.emit != EmitMode.CHANGES:
             raise AnalysisError("select_with_emit requires EMIT CHANGES")
-        import uuid
-
         qname = f"__emit_{uuid.uuid4().hex[:8]}"
         sink = ExactlyOnceParquetSink(
             os.path.join(self.workdir, "emit", qname), op=OP_UPSERT, lineage=False
@@ -424,13 +505,13 @@ class PersistentQueryManager:
             sb, spark=self.spark, catalog=self.catalog, streaming=True, grace=self.grace
         )
         stateful = bool(sb.group_by or sb.window)
-        q = (
-            df.writeStream.foreachBatch(sink)
-            .outputMode("update" if stateful else "append")
-            .option("checkpointLocation", os.path.join(self.workdir, "emit", qname, "_ckpt"))
-            .queryName(qname)
-            .trigger(availableNow=True)
-            .start()
+        q = start_stream(
+            df,
+            sink,
+            os.path.join(self.workdir, "emit", qname, "_ckpt"),
+            output_mode="update" if stateful else "append",
+            name=qname,
+            state_partitions=self._declared_partitions(sb),
         )
         if not q.awaitTermination(timeout_seconds):
             q.stop()

@@ -223,7 +223,9 @@ def _session_func(
     dbl_idx = [i for i, k in enumerate(slot_kinds) if k == "double"]
     n_long, n_dbl = len(long_idx), len(dbl_idx)
 
-    def func(key, pdf_iter: Iterator, state: GroupState) -> Iterator:
+    # the name shows in the plan: the engine reads it to tell this kernel,
+    # whose timeout only evicts, from one that emits on the watermark
+    def session_upsert(key, pdf_iter: Iterator, state: GroupState) -> Iterator:
         # -- load state: parallel arrays of open sessions -------------------
         if state.exists:
             starts, ends, e_starts, e_ends, p_long, p_dbl = state.get
@@ -349,7 +351,7 @@ def _session_func(
         t_ms = min(s["end"] for s in sessions) // 1000
         state.setTimeoutTimestamp(max(t_ms, wm_us // 1000 + 1))
 
-    return func
+    return session_upsert
 
 
 def session_changelog(

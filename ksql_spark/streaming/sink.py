@@ -3,9 +3,8 @@
 Structured Streaming's ``foreachBatch`` gives at-least-once epoch delivery:
 after a crash between "batch written" and "offsets committed", the same
 ``batch_id`` is re-delivered.  Exactly-once therefore needs an idempotent,
-atomic commit per epoch — exactly what Iceberg snapshot commits provide in
-production.  Locally (no Iceberg jars in this sandbox) we emulate the same
-contract with a parquet layout that is idempotent by construction:
+atomic commit per epoch.  The sink gets it from a parquet layout that is
+idempotent by construction:
 
     <root>/data/__batch_id=<epoch>/part-*.parquet   (one dir per epoch)
     <root>/_commits/<epoch>.json                    (atomic rename marker)
@@ -15,10 +14,6 @@ contract with a parquet layout that is idempotent by construction:
   written via ``os.rename`` (atomic on POSIX).  Partial dirs without a
   marker are invisible to readers.
 * Readers union only committed epoch dirs.
-
-On a cluster, swap ``IcebergChangelogSink`` in: ``MERGE INTO`` keyed on
-(group key, window_start) with the epoch id stored in snapshot summary
-properties; Iceberg's atomic swap plays the role of the rename.
 
 The changelog carries lineage columns (``__batch_id``, ``__op``) per the
 north rule; per-partition row counts are recorded in the commit marker, so
@@ -43,7 +38,7 @@ OP_DELETE = "D"
 
 
 class ExactlyOnceParquetSink:
-    """Idempotent per-epoch parquet changelog writer (local Iceberg stand-in)."""
+    """Idempotent per-epoch parquet changelog writer."""
 
     def __init__(self, root: str, op: str = OP_APPEND, lineage: bool = True):
         self.root = root
@@ -155,8 +150,7 @@ class ExactlyOnceParquetSink:
 
         This is the QUERYABLE_<name> projection (reference:
         tables/specification.go:323-355) — derived from the changelog, the
-        stream/table duality made literal.  One hash-agg over the changelog;
-        in production this is an Iceberg MERGE-maintained table instead.
+        stream/table duality made literal.  One hash-agg over the changelog.
 
         The frame is kept and served again while the committed epochs stay
         the same.  The first call at a new epoch set builds it unpersisted,
@@ -209,54 +203,3 @@ class ExactlyOnceParquetSink:
         out = out.filter(F.col("__v.__op") != OP_DELETE)
         return out.select(*keys, *[F.col(f"__v.{c}").alias(c) for c in value_cols])
 
-
-class IcebergChangelogSink:
-    """Production sink: exactly-once MERGE into an Iceberg table.
-
-    Not runnable in this sandbox (no Iceberg runtime jars); kept as the
-    deployment path with the identical interface.  Epoch idempotency comes
-    from checking the last committed epoch recorded in the table's snapshot
-    summary before merging.
-    """
-
-    def __init__(self, table: str, keys: list[str], op: str = OP_UPSERT):
-        self.table = table
-        self.keys = keys
-        self.op = op
-
-    # SQL generation is split out so the production path's statements are
-    # unit-testable without an Iceberg runtime (tests/test_streaming.py)
-
-    def last_epoch_sql(self) -> str:
-        """Latest committed epoch id from the snapshot summary properties."""
-        return (
-            f"SELECT summary['ksql.batch_id'] v FROM {self.table}.snapshots "
-            "ORDER BY committed_at DESC LIMIT 1"
-        )
-
-    def merge_sql(self, view: str) -> str:
-        """Keyed upsert MERGE — Iceberg's atomic snapshot swap is the commit
-        point (the parquet sink's os.rename analog)."""
-        on = " AND ".join(f"t.{k} = s.{k}" for k in self.keys)
-        return (
-            f"MERGE INTO {self.table} t USING {view} s ON {on} "
-            "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
-        )
-
-    @staticmethod
-    def should_skip(last_committed: object, batch_id: int) -> bool:
-        """Epoch-idempotency predicate: skip iff a snapshot already recorded
-        this epoch (or a later one — re-delivery is always of old epochs)."""
-        return last_committed is not None and int(last_committed) >= batch_id
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        # executed in pytest against a contract double (no Iceberg runtime
-        # in the sandbox): tests/test_streaming.py drives the skip branch,
-        # the merge ordering, and the __op column end-to-end
-        spark = batch_df.sparkSession
-        last = spark.sql(self.last_epoch_sql()).collect()
-        if last and self.should_skip(last[0]["v"], batch_id):
-            return  # epoch already merged
-        view = f"__ksql_batch_{batch_id}"
-        batch_df.withColumn("__op", F.lit(self.op)).createOrReplaceTempView(view)
-        spark.sql(self.merge_sql(view))

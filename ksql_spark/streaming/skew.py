@@ -57,21 +57,6 @@ def explode_time_buckets(
     return F.explode(F.array(*[b + F.lit(int(o)) for o in offsets]))
 
 
-def repartition_by_key(df: DataFrame, key: str | Sequence[str], num_partitions: int | None = None) -> DataFrame:
-    """Explicit hash repartitioning on the conversation key.
-
-    Matches the reference's WITH (PARTITIONS=n) metadata (ksql/metadata.go)
-    and the north rule's "explicit repartitioning on conv_id".  When the
-    downstream groupBy uses the same key and partition count, Catalyst
-    reuses this exchange instead of inserting a second shuffle.
-    """
-    keys = [key] if isinstance(key, str) else list(key)
-    cols = [F.col(k) for k in keys]
-    if num_partitions:
-        return df.repartition(num_partitions, *cols)
-    return df.repartition(*cols)
-
-
 def add_salt(df: DataFrame, salt_buckets: int, deterministic_cols: Sequence[str] | None = None) -> DataFrame:
     """Append a salt column in [0, salt_buckets).
 

@@ -1224,3 +1224,43 @@ def test_reserved_leg_name_prefix_rejected(spark):
              ("b", F.col("event_type") == "b", 1, 1)],
             within_seconds=60,
         )
+
+
+@pytest.mark.parametrize("mode", ["all", "skip_past_last"])
+def test_null_keys_never_match_batch_equals_streaming(spark, rand_events, tmp_path, mode):
+    """One NULL-key contract for batch and streaming: a user whose key is
+    NULL (a copy of user 0's events, which do match) yields no rows, and
+    the streaming NFA returns exactly the batch rows."""
+    from ksql_spark.operators.cep_nfa import match_pattern, match_pattern_stream
+    from ksql_spark.streaming.sink import ExactlyOnceParquetSink
+
+    null_user = rand_events.filter(Fn.col("user_id") == 0).select(
+        (Fn.col("event_id") + 10_000).alias("event_id"),
+        Fn.lit(None).cast("bigint").alias("user_id"),
+        "event_type",
+        "ts",
+    )
+    events = rand_events.unionByName(null_user)
+    legs = [("a", Fn.col("event_type") == "A", 1, 2), ("b", Fn.col("event_type") == "B", 1, 1)]
+    batch = match_pattern(events, legs, within_seconds=40, mode=mode).collect()
+    user0 = match_pattern(rand_events.filter(Fn.col("user_id") == 0), legs, 40, mode=mode)
+    assert user0.count() > 0  # the NULL-key copy would match if keys did not matter
+
+    path = str(tmp_path / "ev")
+    _write_stream_fixture(spark, events, path)
+    src = spark.readStream.schema(events.schema).parquet(path).withWatermark("ts", "5 seconds")
+    out = match_pattern_stream(src, legs, within_seconds=40, mode=mode)
+    sink = ExactlyOnceParquetSink(str(tmp_path / "sink"), lineage=False)
+    q = (
+        out.writeStream.foreachBatch(sink)
+        .outputMode("update")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    stream = [r for r in sink.read_data(spark).collect() if r["user_id"] != -1]
+
+    assert all(r["user_id"] is not None for r in batch + stream)
+    assert sorted(map(tuple, stream), key=_nsk) == sorted(map(tuple, batch), key=_nsk)
+    assert len(batch) > 5

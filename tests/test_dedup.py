@@ -108,24 +108,6 @@ def test_embedding_neardup_lsh_equals_bruteforce(spark):
     assert planted <= {(x[0], x[1]) for x in a}
 
 
-def test_minhash_arrow_matches_expression_path(spark, docs):
-    """The numpy/hashlib signature path must be bit-identical to the
-    built-in-expression path (same md5 base hash, same mix constants)."""
-    from ksql_spark.operators.dedup import minhash_signatures_arrow
-
-    expr = docs.select(
-        Fn.col("doc_id").alias("id"), minhash_signature(Fn.col("text"), 16).alias("sig")
-    )
-    arrow = minhash_signatures_arrow(docs, "doc_id", "text", 16).select("id", "sig")
-    a = {r["id"]: list(r["sig"]) for r in expr.collect()}
-    b = {r["id"]: list(r["sig"]) for r in arrow.collect()}
-    assert a == b
-
-    lsh_v = minhash_lsh_pairs(docs, n_hashes=32, bands=16, threshold=0.5, vectorized=True)
-    lsh_e = minhash_lsh_pairs(docs, n_hashes=32, bands=16, threshold=0.5, vectorized=False)
-    assert sorted(map(tuple, lsh_v.collect())) == sorted(map(tuple, lsh_e.collect()))
-
-
 def test_cleanup_persisted_releases_blocks(spark, docs):
     """Operators register persisted signature tables; cleanup_persisted
     releases them instead of leaking MEMORY_AND_DISK blocks for the session

@@ -10,7 +10,6 @@ from pyspark.sql import functions as Fn
 from ksql_spark.streaming.skew import (
     SALT_COL,
     add_salt,
-    repartition_by_key,
     salted_join,
     salted_two_phase_agg,
 )
@@ -65,21 +64,6 @@ def test_salt_is_deterministic(spark, transcripts):
     assert sorted(r[0] for r in s1.collect()) == sorted(r[0] for r in s2.collect())
     assert s1.agg(Fn.max(SALT_COL)).collect()[0][0] <= 7
     assert s1.agg(Fn.min(SALT_COL)).collect()[0][0] >= 0
-
-
-def test_repartition_by_key(spark, transcripts):
-    _, tdf = transcripts
-    out = repartition_by_key(tdf, "conv_id", 8)
-    assert out.rdd.getNumPartitions() == 8
-    # all rows of one conversation land in one partition (co-location)
-    parts = (
-        out.withColumn("p", Fn.spark_partition_id())
-        .groupBy("conv_id")
-        .agg(Fn.countDistinct("p").alias("np"))
-        .agg(Fn.max("np"))
-        .collect()[0][0]
-    )
-    assert parts == 1
 
 
 def test_salted_stream_stream_join_matches_plain(spark, tmp_path):

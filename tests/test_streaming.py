@@ -561,89 +561,6 @@ def test_session_changes_join_keeps_left_watermark(spark, workdir):
     assert plan.count("EventTimeWatermark") >= 3
 
 
-def test_iceberg_sink_sql_generation():
-    """The production Iceberg path can't run here (no runtime jars), but its
-    statements and epoch-skip predicate must not bit-rot silently."""
-    from ksql_spark.streaming.sink import IcebergChangelogSink
-
-    sink = IcebergChangelogSink(
-        "cat.db.conv_stats", keys=["window_start", "window_end", "conv_id"]
-    )
-    assert sink.last_epoch_sql() == (
-        "SELECT summary['ksql.batch_id'] v FROM cat.db.conv_stats.snapshots "
-        "ORDER BY committed_at DESC LIMIT 1"
-    )
-    assert sink.merge_sql("__ksql_batch_7") == (
-        "MERGE INTO cat.db.conv_stats t USING __ksql_batch_7 s "
-        "ON t.window_start = s.window_start AND t.window_end = s.window_end "
-        "AND t.conv_id = s.conv_id "
-        "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
-    )
-    # skip iff a snapshot already recorded this (or a later) epoch
-    assert sink.should_skip("7", 7) and sink.should_skip(9, 7)
-    assert not sink.should_skip(None, 7) and not sink.should_skip("6", 7)
-
-
-def test_iceberg_sink_call_executes_against_contract_double(spark):
-    """VERDICT r5 #7 (carried since r2): __call__ was never executed.  The
-    sandbox has no Iceberg runtime jar (no network, no ivy/m2 cache), so
-    this drives the REAL __call__ end-to-end against a contract double
-    that records every spark.sql statement and plays back snapshot-summary
-    epochs: first epoch merges, a re-delivered epoch skips, the next epoch
-    merges again."""
-    from ksql_spark.streaming.sink import IcebergChangelogSink
-
-    executed: list[str] = []
-    views: list[str] = []
-
-    class FakeResult:
-        def __init__(self, rows):
-            self._rows = rows
-
-        def collect(self):
-            return self._rows
-
-    class FakeSpark:
-        def __init__(self):
-            self.last_epoch = None
-
-        def sql(self, stmt):
-            executed.append(stmt)
-            if ".snapshots" in stmt:
-                if self.last_epoch is None:
-                    return FakeResult([])
-                return FakeResult([{"v": self.last_epoch}])
-            return FakeResult([])
-
-    class FakeBatchDF:
-        def __init__(self, spark):
-            self.sparkSession = spark
-
-        def withColumn(self, name, col):
-            return self
-
-        def createOrReplaceTempView(self, view):
-            views.append(view)
-
-    spark = FakeSpark()
-    sink = IcebergChangelogSink("cat.db.conv_stats", keys=["conv_id"])
-
-    sink(FakeBatchDF(spark), 1)           # fresh table: snapshot probe + merge
-    assert views == ["__ksql_batch_1"]
-    assert [".snapshots" in s for s in executed] == [True, False]
-    assert executed[-1] == sink.merge_sql("__ksql_batch_1")
-
-    spark.last_epoch = "1"
-    n = len(executed)
-    sink(FakeBatchDF(spark), 1)           # re-delivered epoch: probe, SKIP
-    assert views == ["__ksql_batch_1"]    # no new view, no merge
-    assert len(executed) == n + 1 and ".snapshots" in executed[-1]
-
-    sink(FakeBatchDF(spark), 2)           # next epoch merges again
-    assert views == ["__ksql_batch_1", "__ksql_batch_2"]
-    assert executed[-1] == sink.merge_sql("__ksql_batch_2")
-
-
 def _conv_counts_table(spark, workdir, name):
     """A CTAS conv_id -> count over a two-file source dir; returns the
     manager and a writer that adds a source file."""

@@ -136,11 +136,11 @@ def main() -> None:
         out += [f"## {name}", "", "```", plan.rstrip(), "```", ""]
 
     out += [
-        "# Streaming analyzed plans (raw-writeStream operators)",
+        "# Streaming analyzed plans (operator frames)",
         "",
         "The NFA quantifier/negation/first/skip modes, the salted",
-        "stream-stream join and the n=4 chained repeat run outside",
-        "PersistentQueryManager; their analyzed streaming plans",
+        "stream-stream join and the n=4 chained repeat start through",
+        "start_stream, not PersistentQueryManager; their analyzed plans",
         "(pre-execution) show the single FlatMapGroupsInPandasWithState",
         "store, the (key, __salt) join keys, and the 4-deep chained-join",
         "shape respectively.  first/skip share the all-matches plan shape —",
