@@ -194,9 +194,7 @@ def _engine(spark: SparkSession, prefix: str, grace: str = DEFAULT_GRACE) -> Per
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     work = _scratch_dir(prefix)
     cat = Catalog(spark, root=os.path.join(work, "catalog"))
-    return PersistentQueryManager(
-        spark, cat, workdir=os.path.join(work, "engine"), grace=grace, enable_metrics=False
-    )
+    return PersistentQueryManager(spark, cat, workdir=os.path.join(work, "engine"), grace=grace)
 
 
 def _events_engine(
@@ -233,7 +231,7 @@ def _drain(
     default 8 state partitions fit the events keyspace: the session default
     would multiply the per-batch state-store open/commit cost per operator
     for no speedup."""
-    sink = ExactlyOnceParquetSink(os.path.join(work, "sink"), lineage=False)
+    sink = ExactlyOnceParquetSink(os.path.join(work, "sink"))
     start_stream(
         df, sink, os.path.join(work, "ckpt"),
         output_mode=output_mode, state_partitions=state_partitions,

@@ -10,17 +10,12 @@ event-order key.
 
 Storage formats
 ---------------
-``iceberg``  — production: ``spark.read.table`` / ``writeTo().append()`` on an
-               Iceberg catalog table (``CREATE TABLE ... USING iceberg
-               PARTITIONED BY (bucket(N, <key>))``).  Atomic snapshot commits
-               give the exactly-once sink its transactionality.
-``parquet``  — local/test: a directory of parquet files plus a ``_commits/``
-               marker log that emulates Iceberg's atomic, idempotent commit
-               semantics (see ksql_spark.streaming.sink).  Same engine code
-               path; only the physical read/write differs.
-
-This indirection keeps every operator identical between the sandbox
-(no Iceberg jars available) and a real cluster.
+``parquet``         — a directory of parquet files.  A persistent query's
+                      output is read through its exactly-once sink's
+                      ``_commits/`` marker log (see ksql_spark.streaming.sink),
+                      so readers see committed epochs only.
+``bucketed_table``  — a managed table bucketed on its join key
+                      (:meth:`Catalog.write_bucketed`).
 """
 
 from __future__ import annotations
@@ -61,10 +56,9 @@ class Relation:
 class Catalog:
     """Stream/table registry + pre-flight checks (SURVEY.md §2.10)."""
 
-    def __init__(self, spark: SparkSession, root: str | None = None, default_format: str = "parquet"):
+    def __init__(self, spark: SparkSession, root: str | None = None):
         self.spark = spark
         self.root = root
-        self.default_format = default_format
         self._relations: dict[str, Relation] = {}
 
     # -- registration ------------------------------------------------------
@@ -110,7 +104,7 @@ class Catalog:
             name=name,
             ref=create_builder.ref,
             path=path,
-            format=self.default_format,
+            format="parquet",
             schema=schema,
             primary_key=pk,
             event_time_col=meta.get("timestamp"),
@@ -184,7 +178,7 @@ class Catalog:
         buckets (the same reason ksqlDB co-partitions topics on the join
         key).  Locally this uses the session's managed warehouse
         (``saveAsTable``); on a cluster the same call targets the shared
-        metastore / Iceberg catalog (``bucket(N, key)`` partition transform).
+        metastore.
         """
         keys = [bucket_key] if isinstance(bucket_key, str) else list(bucket_key)
         table = f"ksql_bucketed_{name.lower()}"
@@ -219,7 +213,7 @@ class Catalog:
         """Register a raw storage location as a TOPIC (no schema binding).
 
         ksqlDB topics are Kafka topics; the Spark analog is the physical
-        dataset a stream/table is bound to (parquet dir / Iceberg table).
+        dataset a stream/table is bound to (a parquet dir).
         """
         return self.register(Relation(name=name, ref=Ref.TOPIC, path=path, format=format))
 
@@ -304,7 +298,7 @@ class Catalog:
             if rel.ref == Ref.TABLE and rel.metadata.get("state_keys"):
                 return sink.read_latest_state(self.spark, rel.metadata["state_keys"])
             return sink.read_data(self.spark)
-        if rel.format in ("iceberg", "bucketed_table"):
+        if rel.format == "bucketed_table":
             return self.spark.read.table(rel.path)
         # a declared schema is read as-is, like read_stream: no inference
         # job, and a created relation nobody inserted into reads as empty
@@ -318,8 +312,6 @@ class Catalog:
         rel = self.get(name)
         if rel.ref == Ref.TABLE:
             raise CatalogError(f"{name} is a TABLE; use read() for its snapshot")
-        if rel.format == "iceberg":
-            return self.spark.readStream.format("iceberg").load(rel.path)
         schema = rel.schema or self.spark.read.parquet(self._data_glob(rel)).schema
         path = self._data_glob(rel)
         if os.path.isfile(path):
@@ -347,7 +339,4 @@ class Catalog:
         rel = self.get(name)
         if rel.ref == Ref.TABLE:
             raise CatalogError(f"INSERT into TABLE {name} is not supported")
-        if rel.format == "iceberg":
-            df.writeTo(rel.path).append()
-        else:
-            df.write.mode("append").parquet(rel.path)
+        df.write.mode("append").parquet(rel.path)

@@ -37,7 +37,6 @@ from ..builder import CreateBuilder, EmitMode, InsertBuilder, Ref, SelectBuilder
 from ..errors import AnalysisError, CatalogError, QueryTimeoutError, SchemaError
 from ..operators.compile import DEFAULT_GRACE, compile_select
 from ..sources.catalog import QUERYABLE_PREFIX, Catalog, Relation
-from .metrics import EngineMetricsListener
 from .sink import OP_APPEND, OP_UPSERT, ExactlyOnceParquetSink
 
 
@@ -240,14 +239,17 @@ def _column_types(schema: T.StructType) -> dict[str, str]:
 
 
 class PersistentQuery:
-    """Handle for one running CSAS/CTAS query."""
+    """Handle for one CSAS/CTAS persistent query."""
 
     def __init__(self, name: str, create: CreateBuilder, sink: ExactlyOnceParquetSink, checkpoint: str):
         self.name = name
         self.create = create
         self.sink = sink
         self.checkpoint = checkpoint
-        self.streaming_query = None  # live StreamingQuery or None when stopped
+        # the latest run's StreamingQuery, live or terminated (None before
+        # the first start); Spark keeps its recentProgress / lastProgress /
+        # exception() readable after termination
+        self.streaming_query: StreamingQuery | None = None
         self.state_partitions: int | None = None  # fixed at first start (checkpoint)
 
     def is_active(self) -> bool:
@@ -261,20 +263,13 @@ class PersistentQueryManager:
         catalog: Catalog,
         workdir: str,
         grace: str = DEFAULT_GRACE,
-        enable_metrics: bool = True,
-        lineage: bool = True,
     ):
         self.spark = spark
         self.catalog = catalog
         self.workdir = workdir
         self.grace = grace
-        self.lineage = lineage
         self.queries: dict[str, PersistentQuery] = {}
         os.makedirs(workdir, exist_ok=True)
-        self.listener: EngineMetricsListener | None = None
-        if enable_metrics:
-            self.listener = EngineMetricsListener(os.path.join(workdir, "_metrics"))
-            spark.streams.addListener(self.listener)
 
     # ------------------------------------------------------------------
     # CSAS / CTAS
@@ -308,7 +303,7 @@ class PersistentQueryManager:
         if pq is None:
             sink_root = os.path.join(self.workdir, "relations", name.lower())
             op = OP_UPSERT if create.ref == Ref.TABLE or sb.emit == EmitMode.CHANGES else OP_APPEND
-            sink = ExactlyOnceParquetSink(sink_root, op=op, lineage=self.lineage)
+            sink = ExactlyOnceParquetSink(sink_root, op=op)
             checkpoint = os.path.join(self.workdir, "checkpoints", name.lower())
             pq = PersistentQuery(name, create, sink, checkpoint)
             # state-op parallelism (the ksqlDB PARTITIONS analog): explicit
@@ -381,7 +376,6 @@ class PersistentQueryManager:
         )
         if await_termination and available_now:
             pq.streaming_query.awaitTermination()
-            pq.streaming_query = None
 
     def _register_output_relation(self, pq: PersistentQuery) -> None:
         create = pq.create
@@ -422,10 +416,9 @@ class PersistentQueryManager:
         pq = self.queries.get(name)
         if pq is None:
             raise CatalogError(f"no persistent query {name!r}")
-        if pq.streaming_query is not None and pq.streaming_query.isActive:
+        if pq.is_active():
             pq.streaming_query.stop()
             pq.streaming_query.awaitTermination()
-        pq.streaming_query = None
 
     def resume(
         self,
@@ -498,9 +491,7 @@ class PersistentQueryManager:
         if sb.emit != EmitMode.CHANGES:
             raise AnalysisError("select_with_emit requires EMIT CHANGES")
         qname = f"__emit_{uuid.uuid4().hex[:8]}"
-        sink = ExactlyOnceParquetSink(
-            os.path.join(self.workdir, "emit", qname), op=OP_UPSERT, lineage=False
-        )
+        sink = ExactlyOnceParquetSink(os.path.join(self.workdir, "emit", qname), op=OP_UPSERT)
         df = compile_select(
             sb, spark=self.spark, catalog=self.catalog, streaming=True, grace=self.grace
         )

@@ -16,9 +16,10 @@ idempotent by construction:
 * Readers union only committed epoch dirs.
 
 The changelog carries lineage columns (``__batch_id``, ``__op``) per the
-north rule; per-partition row counts are recorded in the commit marker, so
-every epoch's provenance (which partition produced how many rows) survives
-restarts.
+north rule; per-partition row counts are recorded in every commit marker, so
+each epoch's provenance (which partition produced how many rows) commits
+atomically with its data and survives restarts.  :meth:`lineage` reads the
+markers back.
 """
 
 from __future__ import annotations
@@ -40,10 +41,9 @@ OP_DELETE = "D"
 class ExactlyOnceParquetSink:
     """Idempotent per-epoch parquet changelog writer."""
 
-    def __init__(self, root: str, op: str = OP_APPEND, lineage: bool = True):
+    def __init__(self, root: str, op: str = OP_APPEND):
         self.root = root
         self.op = op
-        self.lineage = lineage
         # (key, frame) of the last read_latest_state, where key is
         # (session, committed epochs, key columns)
         self._state: tuple[tuple, DataFrame] | None = None
@@ -102,14 +102,14 @@ class ExactlyOnceParquetSink:
         # written — metadata-only reads (no second pass over the data, unlike
         # a re-read + groupBy which would double sink I/O every epoch).  The
         # writer task index embedded in each part file name IS the partition.
-        lineage_rows = self._file_lineage(path) if self.lineage else []
+        partitions = self._file_lineage(path)
 
         marker = {
             "batch_id": batch_id,
             "committed_at": time.time(),
             "op": self.op,
-            "partitions": lineage_rows,
-            "rows": sum(r["rows"] for r in lineage_rows) if lineage_rows else None,
+            "partitions": partitions,
+            "rows": sum(r["rows"] for r in partitions),
         }
         tmp = self._marker_path(batch_id) + ".tmp"
         with open(tmp, "w") as fh:
@@ -126,6 +126,16 @@ class ExactlyOnceParquetSink:
                 meta = pq.ParquetFile(os.path.join(path, f)).metadata
                 rows.append({"partition": int(f.split("-")[1]), "rows": meta.num_rows})
         return rows
+
+    def lineage(self) -> list[dict]:
+        """Commit markers in epoch order: ``batch_id``, ``committed_at``,
+        ``op``, ``partitions`` (``[{"partition", "rows"}]``) and ``rows``
+        (0 for an epoch that wrote no file)."""
+        markers = []
+        for batch_id in self.committed_batches():
+            with open(self._marker_path(batch_id)) as fh:
+                markers.append(json.load(fh))
+        return markers
 
     # -- reading back ----------------------------------------------------------
 

@@ -145,9 +145,7 @@ def events_stream(spark, workdir, tmp_path):
         event_order_cols=["ts", "event_id"],
         metadata={"max_files_per_trigger": 1},
     )
-    mgr = PersistentQueryManager(
-        spark, cat, workdir=f"{workdir}/eng", grace="365 days", enable_metrics=False
-    )
+    mgr = PersistentQueryManager(spark, cat, workdir=f"{workdir}/eng", grace="365 days")
     batch = spark.read.parquet(str(tmp_path / "ev"))
     return cat, mgr, batch
 
@@ -253,10 +251,8 @@ def test_streaming_topk_state_rows_bounded(spark, events_stream):
         .GroupBy(F("user_id"))
         .EmitChanges()
     )
-    pq = mgr.create_as_select(csas, available_now=True, await_termination=False)
-    pq.streaming_query.awaitTermination()
-    progress = pq.streaming_query.lastProgress
-    pq.streaming_query = None
+    pq = mgr.create_as_select(csas, available_now=True)
+    progress = pq.streaming_query.lastProgress  # the drained run's handle is kept
     n_groups = batch.select("user_id").distinct().count()
     ops = progress["stateOperators"]
     assert ops and ops[0]["numRowsTotal"] == n_groups
@@ -287,7 +283,6 @@ def test_streaming_topk_kill_resume_exactly_once(spark, events_stream):
         time.sleep(0.1)
     pq.streaming_query.stop()  # hard kill mid-stream
     pq.streaming_query.awaitTermination()
-    pq.streaming_query = None
     assert pq.sink.committed_batches(), "no epoch committed before kill"
 
     mgr.resume("tkr", available_now=True, await_termination=True)
@@ -350,9 +345,7 @@ def test_streaming_topk_nan_matches_batch(spark, tmp_path):
         event_time_col="ts",
         event_order_cols=["ts", "event_id"],
     )
-    mgr = PersistentQueryManager(
-        spark, cat, workdir=f"{workdir}/eng", grace="365 days", enable_metrics=False
-    )
+    mgr = PersistentQueryManager(spark, cat, workdir=f"{workdir}/eng", grace="365 days")
     csas = Create(TABLE, "tknan").AsSelect(
         Select(F("user_id"), TopK(F("value"), 2).Alias("tv"))
         .From(Schema("nanev", STREAM))
@@ -531,9 +524,7 @@ def test_mixed_agg_null_handling_per_agg(spark, tmp_path):
         "mxev", str(tmp_path / "mxev"), ref=STREAM,
         event_time_col="ts", event_order_cols=["ts", "event_id"],
     )
-    mgr = PersistentQueryManager(
-        spark, cat, workdir=f"{workdir}/eng", grace="365 days", enable_metrics=False
-    )
+    mgr = PersistentQueryManager(spark, cat, workdir=f"{workdir}/eng", grace="365 days")
     from ksql_spark import Count, Sum
 
     csas = Create(TABLE, "mxnull").AsSelect(
@@ -677,7 +668,6 @@ def test_streaming_multi_agg_kill_resume_exactly_once(spark, events_stream):
         time.sleep(0.1)
     pq.streaming_query.stop()  # hard kill mid-stream
     pq.streaming_query.awaitTermination()
-    pq.streaming_query = None
     assert pq.sink.committed_batches(), "no epoch committed before kill"
 
     mgr.resume("mxr", available_now=True, await_termination=True)

@@ -93,7 +93,7 @@ def test_insert_rows_and_read_back(cat, spark, workdir):
     cat.create(cb)
     from ksql_spark.streaming.engine import PersistentQueryManager
 
-    mgr = PersistentQueryManager(spark, cat, workdir=f"{workdir}/e", enable_metrics=False)
+    mgr = PersistentQueryManager(spark, cat, workdir=f"{workdir}/e")
     mgr.insert(Insert(STREAM, "tx").Rows({"ID": 1, "AMOUNT": 9.5}, {"ID": 2, "AMOUNT": 1.25}))
     rows = sorted(map(tuple, cat.read("tx").collect()))
     assert rows == [(1, 9.5), (2, 1.25)]
@@ -112,7 +112,7 @@ def test_insert_struct(cat, spark, workdir):
     )
     from ksql_spark.streaming.engine import PersistentQueryManager
 
-    mgr = PersistentQueryManager(spark, cat, workdir=f"{workdir}/e2", enable_metrics=False)
+    mgr = PersistentQueryManager(spark, cat, workdir=f"{workdir}/e2")
     mgr.insert(Insert(STREAM, "tx2").InsertStruct(Tx()))
     assert [tuple(r) for r in cat.read("tx2").collect()] == [(7, 3.5)]
 
@@ -146,7 +146,7 @@ def _stream_with_manager(cat, spark, workdir, name, *fields):
     from ksql_spark.streaming.engine import PersistentQueryManager
 
     cat.create(Create(STREAM, name).SchemaFields(*fields))
-    return PersistentQueryManager(spark, cat, workdir=f"{workdir}/{name}_e", enable_metrics=False)
+    return PersistentQueryManager(spark, cat, workdir=f"{workdir}/{name}_e")
 
 
 @pytest.fixture()

@@ -94,7 +94,7 @@ def test_streaming_matches_batch(spark, events, tmp_path):
         spark.readStream.schema(events.schema).parquet(path).withWatermark("ts", "1 day")
     )
     m = match_sequence(src, STEPS(), within_seconds=30).select("user_id", "a_id", "b_id")
-    sink = ExactlyOnceParquetSink(str(tmp_path / "sink"), lineage=False)
+    sink = ExactlyOnceParquetSink(str(tmp_path / "sink"))
     q = (
         m.writeStream.foreachBatch(sink)
         .outputMode("append")
@@ -219,7 +219,7 @@ def test_streaming_negation_matches_batch(spark, events, tmp_path):
     m = match_sequence(
         src, STEPS(), within_seconds=30, absent=[("x", Fn.col("event_type") == "X")]
     ).select("user_id", "a_id", "b_id")
-    sink = ExactlyOnceParquetSink(str(tmp_path / "sink"), lineage=False)
+    sink = ExactlyOnceParquetSink(str(tmp_path / "sink"))
     q = (
         m.writeStream.foreachBatch(sink)
         .outputMode("append")
@@ -274,7 +274,7 @@ def test_streaming_negation_kill_resume_exactly_once(spark, events, tmp_path):
             .start()
         )
 
-    sink = ExactlyOnceParquetSink(str(tmp_path / "sink"), lineage=False)
+    sink = ExactlyOnceParquetSink(str(tmp_path / "sink"))
     q = start(sink)
     deadline = time.time() + 60
     while not sink.committed_batches() and time.time() < deadline:
@@ -333,7 +333,7 @@ def test_streaming_cep_kill_resume_exactly_once(spark, events, tmp_path):
             .start()
         )
 
-    sink = ExactlyOnceParquetSink(str(tmp_path / "sink"), lineage=False)
+    sink = ExactlyOnceParquetSink(str(tmp_path / "sink"))
     q = start(sink)
     deadline = time.time() + 60
     while not sink.committed_batches() and time.time() < deadline:
@@ -413,7 +413,7 @@ def test_streaming_optional_matches_batch(spark, events, tmp_path):
     m = match_sequence(
         src, STEPS(), within_seconds=30, optional=[("x", Fn.col("event_type") == "X")]
     ).select("user_id", "a_id", "b_id", "x_id")
-    sink = ExactlyOnceParquetSink(str(tmp_path / "sink"), lineage=False)
+    sink = ExactlyOnceParquetSink(str(tmp_path / "sink"))
     q = (
         m.writeStream.foreachBatch(sink)
         .outputMode("append")
@@ -467,7 +467,7 @@ def test_streaming_two_optional_legs_matches_batch(spark, events, tmp_path):
     m = match_sequence(src, STEPS(), within_seconds=30, optional=opts).select(
         "user_id", "a_id", "b_id", "x_id", "y_id"
     )
-    sink = ExactlyOnceParquetSink(str(tmp_path / "sink"), lineage=False)
+    sink = ExactlyOnceParquetSink(str(tmp_path / "sink"))
     q = (
         m.writeStream.foreachBatch(sink)
         .outputMode("append")

@@ -199,7 +199,7 @@ def _run_stream(spark, schema, path, tmp_path, m, n, within, ckpt="ckpt", max_fi
         ("b", Fn.col("event_type") == "B"),
         within_seconds=within,
     )
-    sink = ExactlyOnceParquetSink(str(tmp_path / "sink"), lineage=False)
+    sink = ExactlyOnceParquetSink(str(tmp_path / "sink"))
     q = (
         out.writeStream.foreachBatch(sink)
         .outputMode("update")
@@ -379,7 +379,7 @@ def test_streaming_three_leg_pattern_matches_batch(spark, rand_events, tmp_path)
 
     src = spark.readStream.schema(rand_events.schema).parquet(path).withWatermark("ts", "5 seconds")
     out = match_pattern_stream(src, legs, within_seconds=45)
-    sink = ExactlyOnceParquetSink(str(tmp_path / "sink"), lineage=False)
+    sink = ExactlyOnceParquetSink(str(tmp_path / "sink"))
     q = (
         out.writeStream.foreachBatch(sink)
         .outputMode("update")
@@ -624,7 +624,7 @@ def test_streaming_pattern_negation_optional_matches_batch(spark, rand_events, t
     _write_stream_fixture(spark, rand_events, path)
     src = spark.readStream.schema(rand_events.schema).parquet(path).withWatermark("ts", "5 seconds")
     out = match_pattern_stream(src, legs, within_seconds=45)
-    sink = ExactlyOnceParquetSink(str(tmp_path / "sink"), lineage=False)
+    sink = ExactlyOnceParquetSink(str(tmp_path / "sink"))
     q = (
         out.writeStream.foreachBatch(sink)
         .outputMode("update")
@@ -677,7 +677,7 @@ def test_streaming_string_ids(spark, tmp_path):
     sent.coalesce(1).write.mode("append").parquet(path)
     src = spark.readStream.schema(df.schema).parquet(path).withWatermark("ts", "5 seconds")
     out = match_pattern_stream(src, legs, within_seconds=30, id_col="event_id")
-    sink = ExactlyOnceParquetSink(str(tmp_path / "sink"), lineage=False)
+    sink = ExactlyOnceParquetSink(str(tmp_path / "sink"))
     q = (
         out.writeStream.foreachBatch(sink)
         .outputMode("update")
@@ -825,7 +825,7 @@ def test_streaming_first_mode_matches_batch(spark, rand_events, tmp_path):
         .withWatermark("ts", "5 seconds")
     )
     out = match_pattern_stream(src, legs, within_seconds=40, mode="first")
-    sink = ExactlyOnceParquetSink(str(tmp_path / "sink"), lineage=False)
+    sink = ExactlyOnceParquetSink(str(tmp_path / "sink"))
     q = (
         out.writeStream.foreachBatch(sink)
         .outputMode("update")
@@ -987,7 +987,7 @@ def test_streaming_skip_matches_batch(spark, rand_events, tmp_path):
         .withWatermark("ts", "5 seconds")
     )
     out = match_pattern_stream(src, legs, within_seconds=40, mode="skip_past_last")
-    sink = ExactlyOnceParquetSink(str(tmp_path / "sink"), lineage=False)
+    sink = ExactlyOnceParquetSink(str(tmp_path / "sink"))
     q = (
         out.writeStream.foreachBatch(sink)
         .outputMode("update")
@@ -1033,7 +1033,7 @@ def test_streaming_skip_kill_resume_exactly_once(spark, rand_events, tmp_path):
             reader = reader.option("maxFilesPerTrigger", max_files)
         src = reader.parquet(path).withWatermark("ts", "5 seconds")
         out = match_pattern_stream(src, legs, within_seconds=40, mode="skip_past_last")
-        sink = ExactlyOnceParquetSink(str(tmp_path / "sink"), lineage=False)
+        sink = ExactlyOnceParquetSink(str(tmp_path / "sink"))
         q = (
             out.writeStream.foreachBatch(sink)
             .outputMode("update")
@@ -1182,7 +1182,7 @@ def test_streaming_skip_to_next_matches_batch(spark, rand_events, tmp_path):
         .withWatermark("ts", "5 seconds")
     )
     out = match_pattern_stream(src, legs, within_seconds=40, mode="skip_to_next")
-    sink = ExactlyOnceParquetSink(str(tmp_path / "sink"), lineage=False)
+    sink = ExactlyOnceParquetSink(str(tmp_path / "sink"))
     q = (
         out.writeStream.foreachBatch(sink)
         .outputMode("update")
@@ -1250,7 +1250,7 @@ def test_null_keys_never_match_batch_equals_streaming(spark, rand_events, tmp_pa
     _write_stream_fixture(spark, events, path)
     src = spark.readStream.schema(events.schema).parquet(path).withWatermark("ts", "5 seconds")
     out = match_pattern_stream(src, legs, within_seconds=40, mode=mode)
-    sink = ExactlyOnceParquetSink(str(tmp_path / "sink"), lineage=False)
+    sink = ExactlyOnceParquetSink(str(tmp_path / "sink"))
     q = (
         out.writeStream.foreachBatch(sink)
         .outputMode("update")

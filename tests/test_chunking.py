@@ -88,7 +88,7 @@ def test_streaming_dedup_across_batches(spark, tmp_path):
         .parquet(path)
     )
     out = exact_dedup_stream(src, keys=["event_id"], ts_col="ts", grace="1 day")
-    sink = ExactlyOnceParquetSink(str(tmp_path / "sink"), lineage=False)
+    sink = ExactlyOnceParquetSink(str(tmp_path / "sink"))
     q = (
         out.select("event_id", "event_type")
         .writeStream.foreachBatch(sink)

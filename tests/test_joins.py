@@ -88,7 +88,7 @@ def test_stream_table_join_streaming(spark, workdir, transcripts):
     dim.write.parquet(dimp)
     cat.register_parquet("roles", dimp, ref=TABLE, broadcast=True)
 
-    mgr = PersistentQueryManager(spark, cat, workdir=f"{workdir}/eng", enable_metrics=False)
+    mgr = PersistentQueryManager(spark, cat, workdir=f"{workdir}/eng")
     csas = Create(STREAM, "enriched").AsSelect(
         Select(F("t.conv_id"), F("t.turn_idx"), F("t.text"), F("r.role_rank"))
         .From(Schema("transcripts", STREAM).As("t"))
@@ -121,7 +121,7 @@ def test_stream_stream_join_time_bound(spark, workdir):
     cat = Catalog(spark, root=f"{workdir}/cat2")
     cat.register_parquet("turns", p, ref=STREAM, event_time_col="ts", event_order_cols=["ts", "turn_idx"])
 
-    mgr = PersistentQueryManager(spark, cat, workdir=f"{workdir}/eng2", grace="1 hour", enable_metrics=False)
+    mgr = PersistentQueryManager(spark, cat, workdir=f"{workdir}/eng2", grace="1 hour")
     csas = Create(STREAM, "paired").AsSelect(
         Select(F("l.conv_id"), F("l.text").Alias("q"), F("r.text").Alias("a"))
         .From(Schema("turns", STREAM).As("l"))

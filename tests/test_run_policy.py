@@ -158,8 +158,7 @@ def test_bounded_runs_skip_or_keep_the_no_data_batch(spark, workdir, transcripts
     cat = Catalog(spark, root=f"{workdir}/catalog2")
     cat.register_parquet("t", path, ref=STREAM, event_time_col="ts",
                          event_order_cols=["ts", "turn_idx"], partitions=2)
-    mgr = PersistentQueryManager(spark, cat, workdir=f"{workdir}/eng2",
-                                 grace="10 minutes", enable_metrics=False)
+    mgr = PersistentQueryManager(spark, cat, workdir=f"{workdir}/eng2", grace="10 minutes")
     before = spark.conf.get(NO_DATA)
     n = Count(F("turn_idx")).Alias("n")
     runs = {}
@@ -169,12 +168,9 @@ def test_bounded_runs_skip_or_keep_the_no_data_batch(spark, workdir, transcripts
             .WindowedBy(TumblingWindow(1, TimeUnit.MINUTES)).GroupBy(F("conv_id"))
         )
         pq = mgr.create_as_select(
-            Create(TABLE, name).AsSelect(sb.EmitFinal() if final else sb.EmitChanges()),
-            await_termination=False,
+            Create(TABLE, name).AsSelect(sb.EmitFinal() if final else sb.EmitChanges())
         )
-        pq.streaming_query.awaitTermination()
         runs[name] = _batches(pq.streaming_query)
-        pq.streaming_query = None
     assert spark.conf.get(NO_DATA) == before
     assert runs["changes"][0] >= 1 and runs["changes"][1] == 0
     assert runs["finals"][1] == 1

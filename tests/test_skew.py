@@ -105,7 +105,7 @@ def test_salted_stream_stream_join_matches_plain(spark, tmp_path):
 
     from ksql_spark.streaming.sink import ExactlyOnceParquetSink
 
-    sink = ExactlyOnceParquetSink(str(tmp_path / "sink"), lineage=False)
+    sink = ExactlyOnceParquetSink(str(tmp_path / "sink"))
     q = (
         joined.writeStream.foreachBatch(sink)
         .outputMode("append")
@@ -190,7 +190,7 @@ def test_time_bucket_join_boundaries(spark, tmp_path):
 
     from ksql_spark.streaming.sink import ExactlyOnceParquetSink
 
-    sink = ExactlyOnceParquetSink(str(tmp_path / "sink"), lineage=False)
+    sink = ExactlyOnceParquetSink(str(tmp_path / "sink"))
     q = (
         joined.writeStream.foreachBatch(sink)
         .outputMode("append")

@@ -6,7 +6,8 @@ availableNow trigger:
     per-turn text equality under stable turn ordering;
   * kill mid-stream + resume from checkpoint -> no duplicates, no gaps;
   * EMIT FINAL (append mode) emits only watermark-closed windows;
-  * per-partition lineage recorded atomically with every epoch.
+  * per-partition lineage recorded atomically with every epoch, per-batch
+    progress kept on the drained query's handle, and no listener added.
 """
 
 from __future__ import annotations
@@ -31,7 +32,6 @@ from ksql_spark import (
     TumblingWindow,
 )
 from ksql_spark.streaming.engine import PersistentQueryManager
-from ksql_spark.streaming.metrics import read_lineage
 
 
 @pytest.fixture()
@@ -100,7 +100,6 @@ def test_kill_resume_exactly_once(spark, engine, transcripts):
         time.sleep(0.1)
     pq.streaming_query.stop()  # hard kill mid-stream
     pq.streaming_query.awaitTermination()
-    pq.streaming_query = None
     assert pq.sink.committed_batches(), "no epoch committed before kill"
 
     engine.resume("conv_totals", available_now=True, await_termination=True)
@@ -160,19 +159,39 @@ def test_emit_final_only_closed_windows(spark, engine, transcripts):
     assert closed <= emitted
 
 
-def test_lineage_and_metrics_recorded(spark, engine, transcripts):
-    csas = Create(TABLE, "lin").AsSelect(
+def _conv_counts(name: str):
+    return Create(TABLE, name).AsSelect(
         Select(F("conv_id"), Count(F("turn_idx")).Alias("n"))
         .From(Schema("transcripts", STREAM))
         .GroupBy(F("conv_id"))
         .EmitChanges()
     )
-    pq = engine.create_as_select(csas, available_now=True)
-    lineage = read_lineage(pq.sink.commit_dir)
+
+
+def test_lineage_and_metrics_recorded(spark, engine, transcripts):
+    _, tdf = transcripts
+    pq = engine.create_as_select(_conv_counts("lin"), available_now=True)
+    # per-batch progress is Spark's own record on the drained run's handle
+    progress = pq.streaming_query.recentProgress
+    assert progress, "no progress reports"
+    assert sum(p["numInputRows"] for p in progress) == tdf.count()
+    lineage = pq.sink.lineage()
     assert lineage, "no commit markers"
-    assert all("partitions" in e for e in lineage)
-    total = sum(e["rows"] or 0 for e in lineage)
-    assert total >= engine.catalog.read("QUERYABLE_lin").count()
+    assert [e["batch_id"] for e in lineage] == pq.sink.committed_batches()
+    for e in lineage:
+        assert isinstance(e["rows"], int)
+        assert e["rows"] == sum(p["rows"] for p in e["partitions"])
+    assert sum(e["rows"] for e in lineage) == pq.sink.read(spark).count()
+
+
+def test_manager_registers_no_listener(spark, workdir, transcripts):
+    path, _ = transcripts
+    before = len(spark.streams._jsqm.listListeners())
+    cat = Catalog(spark, root=f"{workdir}/nl_catalog")
+    cat.register_parquet("transcripts", path, ref=STREAM, event_time_col="ts")
+    mgr = PersistentQueryManager(spark, cat, workdir=f"{workdir}/nl_eng", grace="10 minutes")
+    mgr.create_as_select(_conv_counts("nl"), available_now=True)
+    assert len(spark.streams._jsqm.listListeners()) == before
 
 
 def test_filter_project_stream_append(spark, engine, transcripts):
@@ -232,9 +251,7 @@ def test_session_window_emit_changes_merge_tombstones(spark, workdir):
     )
     from ksql_spark import SessionWindow, Sum, TimeUnit
 
-    eng = PersistentQueryManager(
-        spark, cat, workdir=f"{workdir}/sess_eng", grace="10 minutes", enable_metrics=False
-    )
+    eng = PersistentQueryManager(spark, cat, workdir=f"{workdir}/sess_eng", grace="10 minutes")
     csas = Create(TABLE, "sess_stats").AsSelect(
         Select(F("conv_id"), Count(F("turn_idx")).Alias("n"), Sum(F("turn_idx")).Alias("s"))
         .From(Schema("sess_transcripts", STREAM))
@@ -348,9 +365,7 @@ def test_session_changelog_kill_resume_exactly_once(spark, workdir):
         event_order_cols=["ts", "turn_idx"],
         metadata={"max_files_per_trigger": 1},
     )
-    eng = PersistentQueryManager(
-        spark, cat, workdir=f"{workdir}/skr_eng", grace="10 minutes", enable_metrics=False
-    )
+    eng = PersistentQueryManager(spark, cat, workdir=f"{workdir}/skr_eng", grace="10 minutes")
     csas = Create(TABLE, "skr_stats").AsSelect(
         Select(F("conv_id"), Count(F("turn_idx")).Alias("n"))
         .From(Schema("skr_transcripts", STREAM))
@@ -364,7 +379,6 @@ def test_session_changelog_kill_resume_exactly_once(spark, workdir):
         time.sleep(0.1)
     pq.streaming_query.stop()  # hard kill mid-stream
     pq.streaming_query.awaitTermination()
-    pq.streaming_query = None
     assert pq.sink.committed_batches(), "no epoch committed before kill"
 
     eng.resume("skr_stats", available_now=True, await_termination=True)
@@ -414,9 +428,7 @@ def test_session_changelog_backward_extension(spark, workdir):
         event_order_cols=["ts", "turn_idx"],
         metadata={"max_files_per_trigger": 1},
     )
-    eng = PersistentQueryManager(
-        spark, cat, workdir=f"{workdir}/bk_eng", grace="2 hours", enable_metrics=False
-    )
+    eng = PersistentQueryManager(spark, cat, workdir=f"{workdir}/bk_eng", grace="2 hours")
     csas = Create(TABLE, "bk_stats").AsSelect(
         Select(F("conv_id"), Count(F("turn_idx")).Alias("n"))
         .From(Schema("bk_transcripts", STREAM))
@@ -463,9 +475,7 @@ def test_session_changelog_bigint_sum_exact(spark, workdir):
     )
     from ksql_spark import SessionWindow
 
-    eng = PersistentQueryManager(
-        spark, cat, workdir=f"{workdir}/big_eng", grace="10 minutes", enable_metrics=False
-    )
+    eng = PersistentQueryManager(spark, cat, workdir=f"{workdir}/big_eng", grace="10 minutes")
     csas = Create(TABLE, "big_stats").AsSelect(
         Select(F("conv_id"), Sum(F("v")).Alias("s"), Count(F("v")).Alias("n"))
         .From(Schema("big_transcripts", STREAM))
@@ -578,7 +588,7 @@ def _conv_counts_table(spark, workdir, name):
     write([("b", 3), ("c", 4)])
     cat = Catalog(spark, root=f"{workdir}/{name}_cat")
     cat.register_parquet("src", src, ref=STREAM, event_time_col="ts")
-    eng = PersistentQueryManager(spark, cat, workdir=f"{workdir}/{name}_eng", enable_metrics=False)
+    eng = PersistentQueryManager(spark, cat, workdir=f"{workdir}/{name}_eng")
     eng.create_as_select(
         Create(TABLE, name).AsSelect(
             Select(F("conv_id"), Count(F("turn_idx")).Alias("n"))

@@ -87,8 +87,6 @@ def main() -> None:
         cat,
         workdir=os.path.join(work, "eng"),
         grace="10 minutes",
-        enable_metrics=False,
-        lineage=False,
     )
     # Throughput flagship: per-turn feature extraction (whitespace token
     # count, text length) + tumbling windowed per-conversation aggregation

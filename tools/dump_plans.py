@@ -70,7 +70,7 @@ STREAMING_QUERIES = [
 
 def capture_streaming_plans(entry_mod, spark, names: list[str]) -> dict[str, str]:
     """Run each streaming entry with PersistentQueryManager._start patched to
-    record the executed micro-batch physical plan before the handle drops."""
+    drain the query and record its executed micro-batch physical plan."""
     import ksql_spark.streaming.engine as eng
 
     captured: dict[str, str] = {}
@@ -81,7 +81,6 @@ def capture_streaming_plans(entry_mod, spark, names: list[str]) -> dict[str, str
         q = pq.streaming_query
         q.awaitTermination()
         captured[pq.name] = q._jsq.explainInternal(False)
-        pq.streaming_query = None
 
     eng.PersistentQueryManager._start = patched
     plans: dict[str, str] = {}
