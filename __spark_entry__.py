@@ -1408,10 +1408,11 @@ def q_cep_quantifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CEP variable quantifier (VERDICT r4 #3): view{2,3} then purchase per
     user within 24h — 2..3 CONSECUTIVE views (consecutive in the per-user
     (ts, id) order of view events) whose run and terminal purchase all land
-    within 24h of the run's first view.  Batch lowering is pure algebra:
-    row_number over the view leg, an rn-banded self-join (<= n-m+1 partners
-    per anchor), and a time-banded purchase join (operators/cep_nfa.py) —
-    no UDF, no cartesian.  Oracle = the identical row_number self-join."""
+    within 24h of the run's first view.  Batch lowering: one hash shuffle
+    of the view/purchase events on the user, a sort within each partition,
+    and one mapInPandas pass running the shared NFA kernel per user
+    (operators/cep_nfa.py match_pattern) — no join, no cartesian.  Oracle =
+    the row_number self-join."""
     src = _load(spark, sf_dir, "events")
     return match_quantified(
         src["events"],
@@ -1492,10 +1493,11 @@ def q_cep_pattern_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-leg quantified CEP pattern: view{1,2} click purchase per user
     within 24h — every leg is a consecutive run of its own predicate
     subsequence, legs strictly ordered by (ts, id), everything within 24h
-    of the first view.  Batch lowering is the general banded-join algebra
-    (operators/cep_nfa.py match_pattern): per-quantified-leg rn self-join +
-    chained ordered joins, no UDF.  Oracle = the identical row_number
-    self-join chain."""
+    of the first view.  Batch lowering (operators/cep_nfa.py
+    match_pattern): one hash shuffle on the user, a sort within each
+    partition, and the shared NFA kernel once per user inside one
+    mapInPandas call per partition.  Oracle = the row_number self-join
+    chain."""
     src = _load(spark, sf_dir, "events")
     return match_pattern(src["events"], _pattern_legs(), within_seconds=86400).select(
         "user_id", "v_first_id", "v_last_id", "v_count", "c_id", "p_id"
@@ -1525,10 +1527,10 @@ def q_cep_pattern_negation(spark: SparkSession, sf_dir: str) -> DataFrame:
     view-run, then a purchase strictly after it, with NO click event
     strictly between the run's last view and the purchase (the guarded
     gap, (ts, id) order).  Batch lowering (operators/cep_nfa.py
-    match_pattern) renders the negation leg as a time-bounded LEFT OUTER +
-    IS NULL anti-join — the streaming-legal anti-join spelling — around
-    the same banded-join chain as cep_pattern_multi.  Oracle = the
-    identical chain with a DuckDB NOT EXISTS."""
+    match_pattern): the same per-partition kernel pass as
+    cep_pattern_multi; the kernel checks the guarded gap against the
+    buffered click events.  Oracle = the row_number chain with a DuckDB
+    NOT EXISTS."""
     src = _load(spark, sf_dir, "events")
     return match_pattern(
         src["events"], _pattern_negation_legs(), within_seconds=86400
@@ -1554,10 +1556,11 @@ def q_cep_pattern_optional(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OPTIONAL leg inside the NFA pattern algebra: view [click?] purchase
     per user within 24h, all-combinations semantics — every (view,
     purchase) pair emits its empty-branch row (NULL click columns, count
-    0) AND one row per click strictly between them.  Batch lowering
-    expands present/absent configurations and UNION ALLs them
-    (operators/cep_nfa.py match_pattern).  Oracle = base-pair SELECT with
-    NULL literals UNION ALL the 3-way ordered join."""
+    0) AND one row per click strictly between them.  Batch lowering: the
+    per-partition kernel pass of cep_pattern_multi; the kernel explores
+    the empty branch before each click run (operators/cep_nfa.py
+    match_pattern).  Oracle = base-pair SELECT with NULL literals UNION
+    ALL the 3-way ordered join."""
     src = _load(spark, sf_dir, "events")
     legs = [
         ("v", Fn.col("event_type") == "view", 1, 1),
@@ -1574,10 +1577,12 @@ def q_cep_pattern_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchase pattern of cep_pattern_multi, but emitting ONE row per user —
     the first match in the NFA kernel's canonical enumeration order
     (anchor ascending, then per-leg (first_ts, first_id, last_ts, last_id)
-    ascending; run-length ties break short-run-first).  Batch lowering =
-    the all-matches banded-join algebra plus one per-key row_number over
-    the order tuples (operators/cep_nfa.py match_pattern mode='first').
-    Oracle = the identical chain wrapped in the identical row_number."""
+    ascending; run-length ties break short-run-first).  Batch lowering:
+    the per-partition kernel pass of cep_pattern_multi, with the kernel
+    aborting each user's enumeration at its first match
+    (operators/cep_nfa.py match_pattern mode='first').  Oracle = the
+    all-matches chain wrapped in a per-user row_number over the order
+    tuples."""
     src = _load(spark, sf_dir, "events")
     return match_pattern(
         src["events"], _pattern_legs(), within_seconds=86400, mode="first"
@@ -1601,12 +1606,12 @@ def q_cep_pattern_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
     click purchase pattern, greedy NON-OVERLAPPING selection — take the
     canonical-order first match, then the next match starting strictly
     after its last consumed element (the purchase), and so on.  Greedy
-    selection is inherently sequential per key, so the batch lowering runs
-    the shared NFA kernel per key via applyInPandas over the same narrow
-    (ts, id, leg-mask) projection the streaming NFA shuffles
-    (operators/cep_nfa.py _match_pattern_skip_batch).  Oracle = a DuckDB
-    RECURSIVE CTE doing the identical greedy walk with a LATERAL
-    next-match probe."""
+    selection is inherently sequential per key; the batch lowering runs
+    the shared NFA kernel once per user inside one mapInPandas call per
+    partition, over the same narrow (ts, id, leg-mask) projection the
+    streaming NFA shuffles (operators/cep_nfa.py match_pattern
+    mode='skip_past_last').  Oracle = a DuckDB RECURSIVE CTE doing the
+    identical greedy walk with a LATERAL next-match probe."""
     src = _load(spark, sf_dir, "events")
     return match_pattern(
         src["events"], _pattern_legs(), within_seconds=86400,
@@ -1632,12 +1637,12 @@ def q_cep_pattern_skip_next(spark: SparkSession, sf_dir: str) -> DataFrame:
     click purchase pattern, ONE match per ANCHOR — the canonically-first
     match of each leg-0 starting event; matches may overlap but no two
     share a starting row (Flink's SKIP TO NEXT ROW, the middle ground
-    between all-matches and the non-overlapping skip-past-last).  Stays
-    pure banded-join algebra: the same row_number rewrite as mode='first'
-    with the window additionally partitioned by the anchor (leg 0's first
-    (ts, id)) — operators/cep_nfa.py match_pattern mode='skip_to_next'.
-    Oracle = the mode='first' chain with the row_number partitioned by
-    (user_id, anchor ts, anchor id)."""
+    between all-matches and the non-overlapping skip-past-last).  Batch
+    lowering: the per-partition kernel pass of cep_pattern_multi, with the
+    kernel aborting each anchor's enumeration at its first match
+    (operators/cep_nfa.py match_pattern mode='skip_to_next').  Oracle =
+    the mode='first' chain with the row_number partitioned by (user_id,
+    anchor ts, anchor id)."""
     src = _load(spark, sf_dir, "events")
     return match_pattern(
         src["events"], _pattern_legs(), within_seconds=86400,

@@ -27,13 +27,22 @@ surface at all; Flink MATCH_RECOGNIZE is the inspiration):
     (first, last, terminal) triples — deterministic and oracle-checkable by
     a row_number self-join), with the run length as ``a_count``.
   * ``n=None`` is Kleene-plus: ``A{m,}`` — the within-bound caps the run.
-  * NULL partition keys never match, in batch or streaming:
-    ``match_pattern`` and ``match_pattern_stream`` drop NULL-key events
-    before any leg sees them.
+  * Events with a NULL key, a NULL event time or a NULL id never match, in
+    batch or streaming: ``match_pattern`` and ``match_pattern_stream``
+    drop them before any leg sees them (a NULL ts has no place in the
+    (ts, id) order, and a NULL id cannot be ordered against a tied ts).
 
-Batch lowering is pure DataFrame algebra (row_number + a rn-banded
-self-join + a time-banded terminal join — Catalyst plans, no UDF).  The
-streaming lowering is ONE ``applyInPandasWithState`` operator per key:
+Both lowerings run the same kernel (:func:`pattern_matches` /
+:func:`pattern_matches_skip`, picked by mode in :func:`_kernel`) over the
+same narrow projection (:func:`_project`: key, ``unix_micros`` ts, id, one
+mask per leg), so batch == streaming holds by construction.
+
+The batch lowering is one hash shuffle on the key plus a sort within each
+partition by (key, ts, id), then ONE ``mapInPandas`` call per partition:
+columns become Python lists once, key boundaries come from one numpy
+comparison, and the kernel runs once per key over that key's slice —
+no join, no window, no per-key Python call.  The streaming lowering is
+ONE ``applyInPandasWithState`` operator per key:
 
   * state = the key's quantified/terminal events inside the active horizon
     plus a flush cursor — O(events-per-within-window), the same bound ONE
@@ -51,6 +60,7 @@ of quantifier bounds; Arrow-batched state transfer, no per-row UDF.
 from __future__ import annotations
 
 import bisect
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -62,7 +72,6 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-from pyspark.sql.window import Window
 
 from ..errors import AnalysisError
 
@@ -340,7 +349,7 @@ def quantified_matches(
 
 
 # ---------------------------------------------------------------------------
-# batch lowering: row_number + banded self-join (no UDF)
+# batch lowering: the kernel once per shuffle partition
 # ---------------------------------------------------------------------------
 
 
@@ -360,11 +369,9 @@ def match_quantified(
     ``terminal`` is (name, predicate).  Output columns:
     ``key, <a>_first_id, <a>_last_id, <a>_count, <b>_id``.
 
-    Plan shape: one window shuffle for row_number over the (small) filtered
-    quantified leg, then two banded joins — rn-banded self-join (at most
-    ``n-m+1`` partners per anchor) and a time-banded terminal join.  All
-    codegen'd; scales like the LSH bucket joins, not like a cartesian.
-    Two-leg wrapper over :func:`match_pattern`.
+    Plan shape: one hash shuffle of the pattern-relevant events on the key,
+    a sort within each partition, and one ``mapInPandas`` pass that runs
+    the kernel per key.  Two-leg wrapper over :func:`match_pattern`.
     """
     return match_pattern(
         df,
@@ -384,8 +391,9 @@ def _check_bounds(m: int, n: int | None) -> None:
         raise AnalysisError(f"quantifier upper bound {n} < lower bound {m}")
 
 
-def _validate_legs(legs: list[tuple[str, Column, int, int | None]]) -> None:
-    """Shared pattern-shape validation for batch and streaming lowerings.
+def _validate_legs(legs: list[tuple[str, Column, int, int | None]], mode: str) -> None:
+    """Shared pattern-shape and mode validation for batch and streaming
+    lowerings.
 
     Leg kinds by (m, n): positive (m>=1), negation ``(0, 0)``, optional
     ``(0, n>=1)`` / ``(0, None)``.  Leg 0 anchors the match and the final
@@ -393,16 +401,19 @@ def _validate_legs(legs: list[tuple[str, Column, int, int | None]]) -> None:
     optional leg has no anchor, and a trailing negation/optional leg's
     guarded gap / window has no closing element (Flink MATCH_RECOGNIZE
     restricts trailing NOT the same way)."""
+    if mode not in ("all", "first", "skip_past_last", "skip_to_next"):
+        raise AnalysisError(
+            f"unknown match mode {mode!r}: expected 'all', 'first', "
+            f"'skip_past_last' or 'skip_to_next'"
+        )
     if len(legs) < 1:
         raise AnalysisError("pattern needs at least one leg")
     names = [nm for nm, _, _, _ in legs]
     if len(set(names)) != len(names):
         raise AnalysisError("leg names must be unique")
     for nm in names:
-        # ADVICE r6: the first/skip_to_next batch lowerings sweep every
-        # output column starting with '__o' as an order key; a user leg
-        # named with that prefix would have its columns silently misused.
-        # All engine-internal columns share the '__' prefix, so reserve it.
+        # engine-internal columns (__k, __ts, __id, __p<i>, ...) share the
+        # '__' prefix; reserving it keeps user names out of that namespace
         if nm.startswith("__"):
             raise AnalysisError(
                 f"leg name {nm!r} is reserved: names starting with '__' "
@@ -459,56 +470,6 @@ def match_quantified_stream(
 # ---------------------------------------------------------------------------
 
 
-def _leg_runs(df: DataFrame, pred: Column, m: int, n: int | None,
-              within: Column, key_col: str, ts_col: str, id_col: str, i: int) -> DataFrame:
-    """Leg i's run frame: (key, first_ts, first_id, last_ts, last_id, count).
-
-    A (1,1) leg is just its events (run == event, no self-join); a
-    quantified leg is the rn-banded self-join over its own filtered
-    subsequence.  ``last_ts <= first_ts + within`` bounds the band at
-    construction (any run inside some anchor's horizon satisfies it), so a
-    Kleene leg never builds an unbounded product.
-    """
-    base = df.filter(pred).select(
-        F.col(key_col).alias(f"__k{i}"),
-        F.col(ts_col).alias(f"__f{i}_ts"),
-        F.col(id_col).alias(f"__f{i}_id"),
-    )
-    if (m, n) == (1, 1):
-        return base.select(
-            f"__k{i}",
-            f"__f{i}_ts", f"__f{i}_id",
-            F.col(f"__f{i}_ts").alias(f"__l{i}_ts"),
-            F.col(f"__f{i}_id").alias(f"__l{i}_id"),
-            F.lit(1).cast("long").alias(f"__c{i}"),
-        )
-    w = Window.partitionBy(f"__k{i}").orderBy(f"__f{i}_ts", f"__f{i}_id")
-    a = base.withColumn(f"__rn{i}", F.row_number().over(w))
-    first = a
-    last = a.select(
-        F.col(f"__k{i}").alias(f"__lk{i}"),
-        F.col(f"__f{i}_ts").alias(f"__l{i}_ts"),
-        F.col(f"__f{i}_id").alias(f"__l{i}_id"),
-        F.col(f"__rn{i}").alias(f"__lrn{i}"),
-    )
-    band = F.col(f"__lrn{i}") - F.col(f"__rn{i}") >= F.lit(m - 1)
-    if n is not None:
-        band = band & (F.col(f"__lrn{i}") - F.col(f"__rn{i}") <= F.lit(n - 1))
-    return (
-        first.join(
-            last,
-            (F.col(f"__k{i}") == F.col(f"__lk{i}"))
-            & band
-            & (F.col(f"__l{i}_ts") <= F.col(f"__f{i}_ts") + within),
-        )
-        .select(
-            f"__k{i}",
-            f"__f{i}_ts", f"__f{i}_id", f"__l{i}_ts", f"__l{i}_id",
-            (F.col(f"__lrn{i}") - F.col(f"__rn{i}") + 1).cast("long").alias(f"__c{i}"),
-        )
-    )
-
-
 def match_pattern(
     df: DataFrame,
     legs: list[tuple[str, Column, int, int | None]],
@@ -532,267 +493,145 @@ def match_pattern(
     ``<name>_first_id, <name>_last_id, <name>_count``; per (1,1) leg:
     ``<name>_id``; negation legs emit no columns.
 
-    Lowering: optional legs expand into 2^k present/absent configurations
-    (k optional legs), each a pure banded-join chain over its consumed
-    legs, UNION ALL'd; negation legs become time-bounded LEFT OUTER +
-    IS NULL anti-joins on the guarded gap (the streaming-legal anti-join
-    spelling, same as cep.py).  Semantics defined by (and property-tested
-    against) :func:`pattern_matches`.
+    ``mode`` (the AFTER MATCH contract, identical to
+    :func:`match_pattern_stream`'s): ``"all"`` (default) emits every
+    match; ``"first"`` one row per key — the first match in
+    :func:`pattern_matches`'s canonical enumeration order;
+    ``"skip_to_next"`` (SKIP TO NEXT ROW) the canonically-first match of
+    EACH anchor — matches may overlap but no two share a starting row;
+    ``"skip_past_last"`` (SKIP PAST LAST ROW) greedy NON-OVERLAPPING
+    matches — the canonically-first match, then the next one starting
+    strictly after its last consumed element, and so on.
 
-    ``mode``: ``"all"`` (default) emits every match; ``"first"`` emits
-    one row per key — the first match in :func:`pattern_matches`'s
-    canonical enumeration order (AFTER MATCH ``first``, the alert-style
-    contract).  Relationally: a per-key ``row_number`` over the per-leg
-    (first_ts, first_id, last_ts, last_id) order tuples, absent optional
-    legs sorting first (NULLs-first = the kernel's
-    explore-the-empty-branch-first rule) — one extra per-key window
-    shuffle over the (already filtered) match set, nothing else changes.
-    ``"skip_past_last"`` emits greedy NON-OVERLAPPING matches (AFTER
-    MATCH SKIP PAST LAST ROW): canonically-first match, then the next
-    match starting strictly after its last consumed element, and so on —
-    sequential per key, lowered through the kernel via ``applyInPandas``
-    (see :func:`_match_pattern_skip_batch`).
-    ``"skip_to_next"`` (AFTER MATCH SKIP TO NEXT ROW) emits the
-    canonically-first match of EACH anchor — matches may overlap but no
-    two share a starting row; relationally the same row_number rewrite as
-    ``"first"`` with the window additionally partitioned by the anchor
-    (leg 0's first (ts, id)), so it stays pure banded-join algebra.
-    """
-    _validate_legs(legs)
-    if mode not in ("all", "first", "skip_past_last", "skip_to_next"):
-        raise AnalysisError(
-            f"unknown match mode {mode!r}: expected 'all', 'first', "
-            f"'skip_past_last' or 'skip_to_next'"
-        )
-    # NULL keys never match (the module's NULL-key contract)
-    df = df.filter(F.col(key_col).isNotNull())
-    if mode == "skip_past_last":
-        return _match_pattern_skip_batch(
-            df, legs, within_seconds, key_col, ts_col, id_col
-        )
-    within = F.expr(f"INTERVAL {within_seconds} SECONDS")
-    neg_idx = [i for i, (_, _, m, n) in enumerate(legs) if (m, n) == (0, 0)]
-    opt_idx = [i for i, (_, _, m, n) in enumerate(legs)
-               if m == 0 and (n is None or n >= 1)]
-    if len(opt_idx) > 6:
-        raise AnalysisError(
-            "more than 6 optional legs: the batch lowering expands 2^k "
-            "present/absent configurations — use fewer optional legs or the "
-            "streaming NFA"
-        )
-    id_type = df.select(F.col(id_col)).schema[0].dataType
-    ts_type = df.select(F.col(ts_col)).schema[0].dataType
-
-    def config(present: frozenset[int], with_order: bool) -> DataFrame:
-        consumed = [i for i, (_, _, m, _) in enumerate(legs)
-                    if m >= 1 or i in present]
-        out = None
-        prev = None
-        for i in consumed:
-            _, pred, m, n = legs[i]
-            em = m if m >= 1 else 1  # a present optional consumes a 1..n run
-            runs = _leg_runs(df, pred, em, n, within, key_col, ts_col, id_col, i)
-            if out is None:
-                out, prev = runs, i
-                continue
-            order = (F.col(f"__f{i}_ts") > F.col(f"__l{prev}_ts")) | (
-                (F.col(f"__f{i}_ts") == F.col(f"__l{prev}_ts"))
-                & (F.col(f"__f{i}_id") > F.col(f"__l{prev}_id"))
-            )
-            out = out.join(
-                runs,
-                (F.col("__k0") == F.col(f"__k{i}"))
-                & order
-                & (F.col(f"__l{i}_ts") <= F.col("__f0_ts") + within),
-            ).drop(f"__k{i}")
-            prev = i
-
-        # negation legs: LEFT OUTER + IS NULL over the guarded gap between
-        # the neighbouring CONSUMED legs (p, q) of THIS configuration; the
-        # vs-anchor bounds keep the anti side time-prunable
-        for g in neg_idx:
-            nm_g, pred_g = legs[g][0], legs[g][1]
-            p = max(c for c in consumed if c < g)
-            q = min(c for c in consumed if c > g)
-            a = df.filter(pred_g).select(
-                F.col(key_col).alias(f"__nk{g}"),
-                F.col(ts_col).alias(f"__n{g}_ts"),
-                F.col(id_col).alias(f"__n{g}_id"),
-            )
-            after = (F.col(f"__n{g}_ts") > F.col(f"__l{p}_ts")) | (
-                (F.col(f"__n{g}_ts") == F.col(f"__l{p}_ts"))
-                & (F.col(f"__n{g}_id") > F.col(f"__l{p}_id"))
-            )
-            before = (F.col(f"__n{g}_ts") < F.col(f"__f{q}_ts")) | (
-                (F.col(f"__n{g}_ts") == F.col(f"__f{q}_ts"))
-                & (F.col(f"__n{g}_id") < F.col(f"__f{q}_id"))
-            )
-            bound = F.col(f"__n{g}_ts") <= F.col("__f0_ts") + within
-            lower = F.col(f"__n{g}_ts") >= F.col("__f0_ts")
-            out = (
-                out.join(
-                    a,
-                    (F.col("__k0") == F.col(f"__nk{g}"))
-                    & after & before & bound & lower,
-                    "left_outer",
-                )
-                .filter(F.col(f"__n{g}_id").isNull())
-                .drop(f"__nk{g}", f"__n{g}_ts", f"__n{g}_id")
-            )
-
-        cols = [F.col("__k0").alias(key_col)]
-        for i, (nm, _, m, n) in enumerate(legs):
-            if (m, n) == (0, 0):
-                continue
-            if (m, n) == (1, 1):
-                cols.append(F.col(f"__f{i}_id").alias(f"{nm}_id"))
-            elif m == 0 and i not in present:
-                cols += [
-                    F.lit(None).cast(id_type).alias(f"{nm}_first_id"),
-                    F.lit(None).cast(id_type).alias(f"{nm}_last_id"),
-                    F.lit(0).cast("long").alias(f"{nm}_count"),
-                ]
-            else:
-                cols += [
-                    F.col(f"__f{i}_id").alias(f"{nm}_first_id"),
-                    F.col(f"__l{i}_id").alias(f"{nm}_last_id"),
-                    F.col(f"__c{i}").alias(f"{nm}_count"),
-                ]
-        if with_order:
-            # the kernel's canonical enumeration order, relationally: per
-            # consumed leg (first_ts, first_id, last_ts, last_id); absent
-            # optional legs carry NULLs, which sort FIRST — exactly the
-            # kernel's explore-the-empty-branch-first rule
-            for i, (nm, _, m, n) in enumerate(legs):
-                if (m, n) == (0, 0):
-                    continue
-                if m == 0 and i not in present:
-                    cols += [
-                        F.lit(None).cast(ts_type).alias(f"__o{i}_fts"),
-                        F.lit(None).cast(id_type).alias(f"__o{i}_fid"),
-                        F.lit(None).cast(ts_type).alias(f"__o{i}_lts"),
-                        F.lit(None).cast(id_type).alias(f"__o{i}_lid"),
-                    ]
-                else:
-                    cols += [
-                        F.col(f"__f{i}_ts").alias(f"__o{i}_fts"),
-                        F.col(f"__f{i}_id").alias(f"__o{i}_fid"),
-                        F.col(f"__l{i}_ts").alias(f"__o{i}_lts"),
-                        F.col(f"__l{i}_id").alias(f"__o{i}_lid"),
-                    ]
-        return out.select(*cols)
-
-    with_order = mode in ("first", "skip_to_next")
-    parts = [
-        config(frozenset(opt_idx[b] for b in range(len(opt_idx)) if mask & (1 << b)),
-               with_order)
-        for mask in range(1 << len(opt_idx))
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    if with_order:
-        ord_cols = [c for c in out.columns if c.startswith("__o")]
-        # skip_to_next: one winner PER ANCHOR (leg 0 is positive by
-        # validation, so its order columns are never NULL)
-        part_cols = (
-            [key_col, "__o0_fts", "__o0_fid"] if mode == "skip_to_next"
-            else [key_col]
-        )
-        w = Window.partitionBy(*part_cols).orderBy(
-            *[F.col(c).asc_nulls_first() for c in ord_cols]
-        )
-        out = (
-            out.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn", *ord_cols)
-        )
-    return out
-
-
-def _match_pattern_skip_batch(
-    df: DataFrame,
-    legs: list[tuple[str, Column, int, int | None]],
-    within_seconds: float,
-    key_col: str,
-    ts_col: str,
-    id_col: str,
-) -> DataFrame:
-    """Batch AFTER MATCH SKIP PAST LAST ROW.
-
-    Greedy non-overlapping selection is inherently sequential per key (the
-    i-th selection depends on the (i-1)-th match's last element), so no
-    banded-join algebra expresses it.  Lowering: project each key's
-    pattern-relevant events to (ts_us, id, leg-masks) — the same narrow
-    projection the streaming NFA shuffles — hash-repartition on the key,
-    and run the :func:`pattern_matches_skip` kernel over EVERY key of a
-    partition in one ``mapInPandas`` call (guide §4: the per-GROUP
-    ``applyInPandas`` spelling paid Arrow framing + a Python call + a
-    pandas-frame build per key, ~15× the kernel's own cost on small keys;
-    one call per partition amortizes all of it, with one output frame per
-    partition).  Per-task memory is one shuffle partition's
+    Lowering, for every mode: :func:`_project` keeps the pattern-relevant
+    events as (key, ts_us, id, leg masks), one hash shuffle on the key
+    and a sort within each partition by (key, ts, id) follow, and ONE
+    ``mapInPandas`` call per partition runs the kernel once per key (see
+    :func:`_partition_func`).  Per-task memory is one shuffle partition's
     pattern-relevant events — sized by ``spark.sql.shuffle.partitions``,
-    the same knob every wide op here scales with.  Oracle twin:
-    recursive-CTE greedy over the all-matches set (driver entry
-    cep_pattern_skip).
+    the same knob every wide op here scales with.  Any number of optional
+    legs is accepted: the kernel explores each one's empty branch itself.
     """
-    preds = [pred for _, pred, _, _ in legs]
-    n_legs = len(legs)
-    sel = [
-        F.col(key_col).alias("__k"),
-        F.unix_micros(F.col(ts_col).cast("timestamp")).alias("__ts"),
-        F.col(id_col).alias("__id"),
-    ] + [p.alias(f"__p{i}") for i, p in enumerate(preds)]
-    keep = F.coalesce(F.col("__p0"), F.lit(False))
-    for i in range(1, n_legs):
-        keep = keep | F.coalesce(F.col(f"__p{i}"), F.lit(False))
-    proj = df.select(*sel).filter(keep)
-
+    _validate_legs(legs, mode)
+    if df.isStreaming:
+        raise AnalysisError(
+            "match_pattern requires a batch DataFrame; use match_pattern_stream"
+        )
     key_type = df.select(F.col(key_col)).schema[0].dataType
     id_type = df.select(F.col(id_col)).schema[0].dataType
     out_fields, out_cols = _out_schema(legs, key_type, id_type)
-    bounds = [(m, n) for _, _, m, n in legs]
-    within_us = int(within_seconds * 1_000_000)
-
-    def skip_part(pdf_iter):
-        import pandas as pd  # noqa: PLC0415 — executor-side import
-
-        # a key's rows may straddle Arrow batches within the partition;
-        # concatenate before grouping (bounded by the partition, see above)
-        batches = [p for p in pdf_iter if not p.empty]
-        if not batches:
-            return
-        pdf = batches[0] if len(batches) == 1 else pd.concat(batches, ignore_index=True)
-        keys: list = []
-        all_matches: list = []
-        for key, g in pdf.groupby("__k", sort=False):
-            ts = g["__ts"].astype("int64").tolist()
-            ids = g["__id"].tolist()
-            leg_ev = []
-            for li in range(n_legs):
-                mask = g[f"__p{li}"].fillna(False).tolist()
-                leg_ev.append(
-                    sorted((int(t), i) for t, i, ok in zip(ts, ids, mask) if ok)
-                )
-            matches, _, _ = pattern_matches_skip(leg_ev, bounds, within_us)
-            if matches:
-                keys.extend([key] * len(matches))
-                all_matches.extend(matches)
-        if all_matches:
-            yield _matches_frame(all_matches, keys, bounds, out_cols)
-
+    func = _partition_func(mode, [(m, n) for _, _, m, n in legs],
+                           int(within_seconds * 1_000_000), out_cols)
     return (
-        proj.repartition(F.col("__k"))
-        .mapInPandas(skip_part, StructType(out_fields))
+        _project(df, legs, key_col, ts_col, id_col)
+        .repartition(F.col("__k"))
+        .sortWithinPartitions("__k", "__ts", "__id")
+        .mapInPandas(func, StructType(out_fields))
         .withColumnRenamed("__k", key_col)
     )
 
 
+def _project(df: DataFrame, legs: list, key_col: str, ts_col: str, id_col: str,
+             *extra: Column) -> DataFrame:
+    """The narrow projection both lowerings shuffle: key ``__k``, the
+    ``extra`` columns, event time ``__ts`` as ``unix_micros``, id
+    ``__id``, and one mask ``__p<i>`` per leg.  Keeps only events some
+    leg's predicate accepts, and drops events whose key, ts or id is NULL
+    (the module's NULL contract)."""
+    sel = [
+        F.col(key_col).alias("__k"),
+        *extra,
+        F.unix_micros(F.col(ts_col).cast("timestamp")).alias("__ts"),
+        F.col(id_col).alias("__id"),
+    ] + [pred.alias(f"__p{i}") for i, (_, pred, _, _) in enumerate(legs)]
+    relevant = reduce(
+        lambda a, b: a | b,
+        [F.coalesce(F.col(f"__p{i}"), F.lit(False)) for i in range(len(legs))],
+    )
+    not_null = F.col("__k").isNotNull() & F.col("__ts").isNotNull() & F.col("__id").isNotNull()
+    return df.select(*sel).filter(relevant & not_null)
+
+
+def _kernel(mode: str, leg_ev: list, bounds: list, within_us: int,
+            close_before_us: int | None = None, cursor=None, frontier=None,
+            work_cap: int | None = None):
+    """One key's matches under ``mode`` — the single mode → kernel mapping
+    both lowerings call.  Returns (matches, frontier, cursor); the
+    frontier only moves in ``skip_past_last``, and ``work_cap`` only
+    guards ``all`` (the other modes emit at most one match per anchor)."""
+    if mode == "skip_past_last":
+        return pattern_matches_skip(
+            leg_ev, bounds, within_us, close_before_us=close_before_us,
+            cursor=cursor, frontier=frontier,
+        )
+    matches, cursor = pattern_matches(
+        leg_ev, bounds, within_us, close_before_us=close_before_us, cursor=cursor,
+        work_cap=work_cap if mode == "all" else None,
+        first_only=mode == "first", per_anchor_first=mode == "skip_to_next",
+    )
+    return matches, frontier, cursor
+
+
+# a batch partition yields its matches as soon as this many accumulate, so
+# one output frame holds at most this many rows plus one key's matches
+_OUT_CHUNK_ROWS = 10_000
+
+
+def _partition_func(mode: str, bounds: list, within_us: int, out_cols: list):
+    """The batch ``mapInPandas`` function: every key of one shuffle
+    partition in one Python call.
+
+    Rows arrive sorted by (key, ts, id), so each key is one contiguous
+    run.  Columns become Python lists once per partition, one numpy
+    comparison finds the key boundaries, and each leg's events are cut
+    per key with ``searchsorted`` — no pandas ``groupby``, no per-key
+    column conversion.  Each leg slice still goes through ``sorted()``
+    (linear on sorted input), so correctness never rests on Spark's order
+    agreeing with Python's tuple order."""
+    n_legs = len(bounds)
+
+    def run(pdf_iter):
+        import numpy as np  # noqa: PLC0415 — executor-side import
+        import pandas as pd  # noqa: PLC0415
+
+        # a key's rows may straddle Arrow batches within the partition
+        batches = [p for p in pdf_iter if not p.empty]
+        if not batches:
+            return
+        pdf = batches[0] if len(batches) == 1 else pd.concat(batches, ignore_index=True)
+        keys = pdf["__k"].to_numpy()
+        cuts = np.concatenate(
+            ([0], np.flatnonzero(keys[1:] != keys[:-1]) + 1, [len(keys)])
+        )
+        events = list(zip(pdf["__ts"].tolist(), pdf["__id"].tolist()))
+        per_leg = []
+        for li in range(n_legs):
+            rows = np.flatnonzero(pdf[f"__p{li}"].to_numpy(dtype=bool, na_value=False))
+            per_leg.append(([events[r] for r in rows.tolist()],
+                            np.searchsorted(rows, cuts).tolist()))
+        cuts = cuts.tolist()
+        matches: list = []
+        key_rows: list = []
+        for g in range(len(cuts) - 1):
+            leg_ev = [sorted(evs[c[g]:c[g + 1]]) for evs, c in per_leg]
+            found, _, _ = _kernel(mode, leg_ev, bounds, within_us)
+            if found:
+                matches += found
+                key_rows += [cuts[g]] * len(found)
+                if len(matches) >= _OUT_CHUNK_ROWS:
+                    yield _matches_frame(matches, keys[key_rows], bounds, out_cols)
+                    matches, key_rows = [], []
+        if matches:
+            yield _matches_frame(matches, keys[key_rows], bounds, out_cols)
+
+    return run
+
+
 def _out_schema(legs, key_type, id_type) -> tuple[list[StructField], list[str]]:
-    """Output (fields, column names) shared by the streaming NFA and the
-    batch skip-past-last lowering: key, then per positive-quantified /
-    optional leg (first_id, last_id, count), per (1,1) leg just the id;
-    negation legs emit nothing."""
+    """Output (fields, column names) shared by the batch and streaming
+    lowerings: key, then per positive-quantified / optional leg (first_id,
+    last_id, count), per (1,1) leg just the id; negation legs emit
+    nothing."""
     out_fields = [StructField("__k", key_type)]
     out_cols = ["__k"]
     for nm, _, m, n in legs:
@@ -811,18 +650,14 @@ def _out_schema(legs, key_type, id_type) -> tuple[list[StructField], list[str]]:
     return out_fields, out_cols
 
 
-def _matches_frame(matches, key, bounds, out_cols):
-    """Kernel match tuples → one pandas frame shaped like ``out_cols``.
-
-    ``key`` is either one key (all matches share it) or a list aligned with
-    ``matches`` (the batched multi-key path)."""
+def _matches_frame(matches, keys, bounds, out_cols):
+    """Kernel match tuples → one pandas frame shaped like ``out_cols``;
+    ``keys`` is aligned with ``matches``."""
     import pandas as pd  # noqa: PLC0415 — executor-side import
 
     if not matches:
         return pd.DataFrame({c: [] for c in out_cols})
-    data: dict = {
-        out_cols[0]: list(key) if isinstance(key, list) else [key] * len(matches)
-    }
+    data: dict = {out_cols[0]: keys}
     ci = 1
     for li, (m, n) in enumerate(bounds):
         if (m, n) == (0, 0):
@@ -843,8 +678,6 @@ def _matches_frame(matches, key, bounds, out_cols):
 
 def _pattern_func(bounds: list, within_us: int, out_cols: list, n_legs: int,
                   work_cap: int | None, mode: str = "all"):
-    import pandas as pd  # noqa: PLC0415 — executor-side import
-
     first_only = mode == "first"
     skip = mode == "skip_past_last"
     anchor_first = mode == "skip_to_next"
@@ -856,17 +689,10 @@ def _pattern_func(bounds: list, within_us: int, out_cols: list, n_legs: int,
 
     def flush(key, state: GroupState, leg_ev, cursor, frontier):
         wm_us = state.getCurrentWatermarkMs() * 1000
-        if skip:
-            matches, frontier, cursor = pattern_matches_skip(
-                leg_ev, bounds, within_us, close_before_us=wm_us,
-                cursor=cursor, frontier=frontier,
-            )
-        else:
-            matches, cursor = pattern_matches(
-                leg_ev, bounds, within_us, close_before_us=wm_us, cursor=cursor,
-                work_cap=None if anchor_first else work_cap,
-                first_only=first_only, per_anchor_first=anchor_first,
-            )
+        matches, frontier, cursor = _kernel(
+            mode, leg_ev, bounds, within_us, close_before_us=wm_us,
+            cursor=cursor, frontier=frontier, work_cap=work_cap,
+        )
         if first_only and matches:
             state.update(done_state())
             # no timeout re-arm: the tombstone has nothing left to flush
@@ -910,7 +736,7 @@ def _pattern_func(bounds: list, within_us: int, out_cols: list, n_legs: int,
                 state.setTimeoutTimestamp(wm_us // 1000 + 1)
             elif state.exists:
                 state.remove()
-        return _matches_frame(matches, key[0], bounds, out_cols)
+        return _matches_frame(matches, [key[0]] * len(matches), bounds, out_cols)
 
     def load(state: GroupState):
         if not state.exists:
@@ -1032,27 +858,10 @@ def match_pattern_stream(
     field so a mode flip across a checkpoint resume is caught by the
     resume guard rather than silently reinterpreted.
     """
-    _validate_legs(legs)
-    if mode not in ("all", "first", "skip_past_last", "skip_to_next"):
-        raise AnalysisError(
-            f"unknown match mode {mode!r}: expected 'all', 'first', "
-            f"'skip_past_last' or 'skip_to_next'"
-        )
+    _validate_legs(legs, mode)
     if not df.isStreaming:
         raise AnalysisError("match_pattern_stream requires a streaming DataFrame")
-
-    preds = [pred for _, pred, _, _ in legs]
-    sel = [
-        F.col(key_col).alias("__k"),
-        F.col(ts_col).alias("__wmts"),
-        F.unix_micros(F.col(ts_col)).alias("__ts"),
-        F.col(id_col).alias("__id"),
-    ] + [p.alias(f"__p{i}") for i, p in enumerate(preds)]
-    keep = F.coalesce(F.col("__p0"), F.lit(False))
-    for i in range(1, len(preds)):
-        keep = keep | F.coalesce(F.col(f"__p{i}"), F.lit(False))
-    # NULL keys never match (the module's NULL-key contract)
-    proj = df.select(*sel).filter(keep & F.col("__k").isNotNull())
+    proj = _project(df, legs, key_col, ts_col, id_col, F.col(ts_col).alias("__wmts"))
 
     key_type = df.select(F.col(key_col)).schema[0].dataType
     id_type = df.select(F.col(id_col)).schema[0].dataType

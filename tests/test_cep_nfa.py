@@ -1,8 +1,8 @@
 """Variable CEP quantifiers A{m,n} / A{m,} then B (operators/cep_nfa.py).
 
-Three layers: the pure match kernel, the batch banded-join lowering, and
-the single-state-store streaming NFA (incl. kill/resume exactly-once and
-the state bound itself).
+Three layers: the pure match kernel, the batch per-partition kernel
+lowering, and the single-state-store streaming NFA (incl. kill/resume
+exactly-once and the state bound itself).
 """
 
 from __future__ import annotations
@@ -312,7 +312,7 @@ def _kernel_pattern_truth(df, legs, within_s):
         lists = by_key.setdefault(r["user_id"], [[] for _ in legs])
         ts_us = int(r["ts"].timestamp() * US)
         for li, (_, types, _, _) in enumerate(legs):
-            if r["event_type"] in types:
+            if types(r) if callable(types) else r["event_type"] in types:
                 lists[li].append((ts_us, r["event_id"]))
     want = []
     bounds = [(m, n) for _, _, m, n in legs]
@@ -359,7 +359,7 @@ def test_batch_three_leg_pattern_equals_kernel(spark, rand_events):
 
 def test_streaming_three_leg_pattern_matches_batch(spark, rand_events, tmp_path):
     """The general NFA on a stream: one state store for a 3-leg pattern
-    with a Kleene middle leg — result equals the batch banded-join twin."""
+    with a Kleene middle leg — result equals the batch twin."""
     from ksql_spark.operators.cep_nfa import match_pattern, match_pattern_stream
     from ksql_spark.streaming.sink import ExactlyOnceParquetSink
 
@@ -580,6 +580,38 @@ def test_batch_pattern_optional_equals_kernel(spark, rand_events):
     assert any(r[4] is not None for r in got)
 
 
+def test_batch_pattern_seven_optional_legs_equals_kernel(spark, rand_events, monkeypatch):
+    """Any number of optional legs: the kernel explores each one's empty
+    branch itself, so seven optional legs need no 2^7 expansion and hit
+    no leg limit.  Leg i takes the C events with event_id % 7 == i, which
+    keeps the all-combinations match count small.  A 16-row output chunk
+    makes each partition yield several frames."""
+    from ksql_spark.operators import cep_nfa
+    from ksql_spark.operators.cep_nfa import match_pattern
+
+    monkeypatch.setattr(cep_nfa, "_OUT_CHUNK_ROWS", 16)
+
+    legs_spec = [("a", {"A"}, 1, 1)]
+    legs = [("a", Fn.col("event_type") == "A", 1, 1)]
+    for i in range(7):
+        legs_spec.append(
+            (f"o{i}", lambda r, i=i: r["event_type"] == "C" and r["event_id"] % 7 == i, 0, 1)
+        )
+        legs.append(
+            (f"o{i}", (Fn.col("event_type") == "C") & (Fn.col("event_id") % 7 == i), 0, 1)
+        )
+    legs_spec.append(("b", {"B"}, 1, 1))
+    legs.append(("b", Fn.col("event_type") == "B", 1, 1))
+    got = sorted(
+        map(tuple, match_pattern(rand_events, legs, within_seconds=40).collect()),
+        key=_nsk,
+    )
+    want = _kernel_pattern_truth(rand_events, legs_spec, 40)
+    assert got == want and len(got) > 5
+    # row = (user_id, a_id, then (first, last, count) per optional leg, b_id)
+    assert any(sum(r[4:-1:3]) >= 2 for r in got)  # two optional legs present
+
+
 def test_batch_negation_equals_chained_join(spark, rand_events):
     """Shared-fixture pin against the cep.py chained-join lowering: for a
     2-step pattern the NFA's between-leg negation and match_sequence's
@@ -781,9 +813,8 @@ def _first_legs():
 
 
 def test_batch_first_mode_equals_kernel_first(spark, rand_events):
-    """match_pattern(mode='first'): the relational row_number tie-break
-    (per-leg order tuples, NULLs first) reproduces the kernel's canonical
-    first match on a quantifier+negation+optional pattern."""
+    """match_pattern(mode='first') reproduces the kernel's canonical first
+    match on a quantifier+negation+optional pattern."""
     from ksql_spark.operators.cep_nfa import match_pattern
 
     got = sorted(
@@ -1109,9 +1140,9 @@ def test_kernel_skip_to_next_is_first_per_anchor():
 
 
 def test_batch_skip_to_next_equals_kernel(spark, rand_events):
-    """match_pattern(mode='skip_to_next'): the per-anchor row_number
-    rewrite reproduces the kernel's first-per-anchor selection on the
-    quantifier+negation+optional pattern."""
+    """match_pattern(mode='skip_to_next') reproduces the kernel's
+    first-per-anchor selection on the quantifier+negation+optional
+    pattern."""
     from ksql_spark.operators.cep_nfa import match_pattern, pattern_matches
 
     got = sorted(
@@ -1206,8 +1237,8 @@ def test_streaming_skip_to_next_matches_batch(spark, rand_events, tmp_path):
 
 def test_reserved_leg_name_prefix_rejected(spark):
     """ADVICE r6: '__'-prefixed leg names collide with the engine-internal
-    order/key columns (the first/skip_to_next lowerings sweep '__o*') and
-    must be rejected up front."""
+    column namespace (__k, __ts, __id, __p<i>) and must be rejected up
+    front."""
     import pytest
     from pyspark.sql import functions as F
 
@@ -1226,11 +1257,13 @@ def test_reserved_leg_name_prefix_rejected(spark):
         )
 
 
-@pytest.mark.parametrize("mode", ["all", "skip_past_last"])
+@pytest.mark.parametrize("mode", ["all", "first", "skip_to_next", "skip_past_last"])
 def test_null_keys_never_match_batch_equals_streaming(spark, rand_events, tmp_path, mode):
-    """One NULL-key contract for batch and streaming: a user whose key is
-    NULL (a copy of user 0's events, which do match) yields no rows, and
-    the streaming NFA returns exactly the batch rows."""
+    """One NULL contract for batch and streaming: events whose key, ts or
+    id is NULL never match.  A NULL-key user (a copy of user 0's events,
+    which do match) yields no rows; NULL-ts and NULL-id copies of user 1's
+    events (the NULL ids tied on ts with their originals) change nothing;
+    and the streaming NFA returns exactly the batch rows."""
     from ksql_spark.operators.cep_nfa import match_pattern, match_pattern_stream
     from ksql_spark.streaming.sink import ExactlyOnceParquetSink
 
@@ -1240,11 +1273,21 @@ def test_null_keys_never_match_batch_equals_streaming(spark, rand_events, tmp_pa
         "event_type",
         "ts",
     )
-    events = rand_events.unionByName(null_user)
+    user1 = rand_events.filter(Fn.col("user_id") == 1)
+    null_ts = user1.select(
+        (Fn.col("event_id") + 20_000).alias("event_id"), "user_id", "event_type",
+        Fn.lit(None).cast("timestamp").alias("ts"),
+    )
+    null_id = user1.select(
+        Fn.lit(None).cast("bigint").alias("event_id"), "user_id", "event_type", "ts",
+    )
+    events = rand_events.unionByName(null_user).unionByName(null_ts).unionByName(null_id)
     legs = [("a", Fn.col("event_type") == "A", 1, 2), ("b", Fn.col("event_type") == "B", 1, 1)]
     batch = match_pattern(events, legs, within_seconds=40, mode=mode).collect()
     user0 = match_pattern(rand_events.filter(Fn.col("user_id") == 0), legs, 40, mode=mode)
     assert user0.count() > 0  # the NULL-key copy would match if keys did not matter
+    clean = match_pattern(rand_events, legs, within_seconds=40, mode=mode).collect()
+    assert sorted(map(tuple, batch), key=_nsk) == sorted(map(tuple, clean), key=_nsk)
 
     path = str(tmp_path / "ev")
     _write_stream_fixture(spark, events, path)

@@ -285,6 +285,33 @@ def test_cep_plan_no_cartesian_and_bounded(spark, sf):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+@pytest.mark.parametrize("mode", ["all", "first", "skip_to_next", "skip_past_last"])
+def test_batch_cep_pattern_is_one_shuffle_and_one_kernel_pass(spark, sf, mode):
+    """Batch match_pattern, in every mode and with every leg kind, plans one
+    hash exchange on the key and one MapInPandas — no join, no window."""
+    from ksql_spark.operators.cep_nfa import match_pattern
+
+    ev = spark.range(2000).select(
+        Fn.col("id").alias("event_id"),
+        (Fn.col("id") % 50).alias("user_id"),
+        (Fn.col("id") % 3).alias("kind"),
+        Fn.timestamp_seconds(Fn.col("id") * 10).alias("ts"),
+    )
+    legs = [
+        ("a", Fn.col("kind") == 0, 1, 2),
+        ("o", Fn.col("kind") == 1, 0, 1),
+        ("n", Fn.col("kind") == 2, 0, 0),
+        ("b", Fn.col("kind") == 2, 1, 1),
+    ]
+    plan = plan_of(match_pattern(ev, legs, within_seconds=300, mode=mode))
+    tree = plan.split("\n\n")[0]  # the operator tree, one line per node
+    assert tree.count("Exchange") == 1
+    assert plan.count("hashpartitioning(__k") == 1
+    assert tree.count("MapInPandas") == 1
+    assert "Join" not in tree
+    assert "Window" not in tree
+
+
 def test_ann_batch_plan_shuffles_are_narrow(spark, sf):
     """The batched-ANN probe join must not carry embedding payloads: the
     bucket-join side projects ids and buckets only."""
