@@ -286,7 +286,7 @@ def test_cep_plan_no_cartesian_and_bounded(spark, sf):
 
 
 @pytest.mark.parametrize("mode", ["all", "first", "skip_to_next", "skip_past_last"])
-def test_batch_cep_pattern_is_one_shuffle_and_one_kernel_pass(spark, sf, mode):
+def test_batch_cep_pattern_is_one_shuffle_and_one_kernel_pass(spark, mode):
     """Batch match_pattern, in every mode and with every leg kind, plans one
     hash exchange on the key and one MapInPandas — no join, no window."""
     from ksql_spark.operators.cep_nfa import match_pattern
