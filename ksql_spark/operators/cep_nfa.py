@@ -42,7 +42,9 @@ partition by (key, ts, id), then ONE ``mapInPandas`` call per partition:
 columns become Python lists once, key boundaries come from one numpy
 comparison, and the kernel runs once per key over that key's slice —
 no join, no window, no per-key Python call.  The streaming lowering is
-ONE ``applyInPandasWithState`` operator per key:
+ONE stateful operator per key, whose fold and flush (:func:`_pattern_func`)
+run on the keyed-state driver (``streaming/keyed.py``), which loads and
+stores each key's state and re-arms its timeout:
 
   * state = the key's quantified/terminal events inside the active horizon
     plus a flush cursor — O(events-per-within-window), the same bound ONE
@@ -64,16 +66,10 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    ArrayType,
-    BooleanType,
-    LongType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import LongType, StructField, StructType
 
 from ..errors import AnalysisError
+from ..streaming.keyed import apply_keyed
 
 # ---------------------------------------------------------------------------
 # the pure match kernel (unit-testable; shared by batch twin checks)
@@ -449,9 +445,9 @@ def match_quantified_stream(
 ) -> DataFrame:
     """Streaming ``A{m,n}`` then B over a watermarked stream.
 
-    One ``applyInPandasWithState`` operator (update mode + event-time
-    timeout); emits each match exactly once when its anchor's window closes
-    behind the watermark.  Output schema matches ``match_quantified``.
+    One keyed-state operator (update mode + event-time timeout); emits
+    each match exactly once when its anchor's window closes behind the
+    watermark.  Output schema matches ``match_quantified``.
     Two-leg wrapper over :func:`match_pattern_stream`.
     """
     return match_pattern_stream(
@@ -532,12 +528,18 @@ def match_pattern(
 
 
 def _project(df: DataFrame, legs: list, key_col: str, ts_col: str, id_col: str,
-             *extra: Column) -> DataFrame:
+             *extra: Column, pushable: bool = True) -> DataFrame:
     """The narrow projection both lowerings shuffle: key ``__k``, the
     ``extra`` columns, event time ``__ts`` as ``unix_micros``, id
     ``__id``, and one mask ``__p<i>`` per leg.  Keeps only events some
     leg's predicate accepts, and drops events whose key, ts or id is NULL
-    (the module's NULL contract)."""
+    (the module's NULL contract).
+
+    ``pushable=False`` spells the filter as one ``CASE WHEN`` on the event
+    time.  The optimizer pushes a filter's conjuncts that do not read the
+    event-time column below ``EventTimeWatermark``, so the plain spelling
+    lets only leg-matching events move a stream's watermark; one conjunct
+    that reads it stays above, and every event counts."""
     sel = [
         F.col(key_col).alias("__k"),
         *extra,
@@ -548,8 +550,10 @@ def _project(df: DataFrame, legs: list, key_col: str, ts_col: str, id_col: str,
         lambda a, b: a | b,
         [F.coalesce(F.col(f"__p{i}"), F.lit(False)) for i in range(len(legs))],
     )
-    not_null = F.col("__k").isNotNull() & F.col("__ts").isNotNull() & F.col("__id").isNotNull()
-    return df.select(*sel).filter(relevant & not_null)
+    keep = relevant & F.col("__k").isNotNull() & F.col("__ts").isNotNull() & F.col("__id").isNotNull()
+    if not pushable:
+        keep = F.when(F.col("__ts").isNotNull(), keep).otherwise(F.lit(False))
+    return df.select(*sel).filter(keep)
 
 
 def _kernel(mode: str, leg_ev: list, bounds: list, within_us: int,
@@ -676,124 +680,68 @@ def _matches_frame(matches, keys, bounds, out_cols):
     return pd.DataFrame(data)
 
 
+# a ``first``-mode key's state once it matched: O(1), and it never matches
+# again
+_DONE = "done"
+
+
 def _pattern_func(bounds: list, within_us: int, out_cols: list, n_legs: int,
-                  work_cap: int | None, mode: str = "all"):
-    first_only = mode == "first"
-    skip = mode == "skip_past_last"
-    anchor_first = mode == "skip_to_next"
+                  work_cap: int | None, mode: str = "all") -> tuple:
+    """The streaming NFA's ``(fold, flush)`` pair for the keyed-state
+    driver.  A key's state is ``(leg_events, cursor, frontier)`` — the
+    per-leg sorted (ts_us, id) buffers of the active horizon, the flush
+    cursor, and the skip frontier (None outside ``skip_past_last``) — or
+    :data:`_DONE`."""
 
-    def done_state() -> tuple:
-        # first-only tombstone: empty buffers, no cursor, done flag set —
-        # O(1) per matched key, persists so the key never re-matches
-        return tuple([[] for _ in range(2 * n_legs)] + [None, None, True])
+    def fold(key, st, pdf):
+        if st == _DONE:
+            return st  # matched key: drop everything
+        leg_ev, cursor, frontier = st or ([[] for _ in range(n_legs)], None, None)
+        ts_us = pdf["__ts"].astype("int64").tolist()
+        # ids keep their NATIVE values (int, string, ...) — (ts, id)
+        # ordering only needs within-type orderability (ADVICE r5: int(i)
+        # broke string/UUID id columns at runtime)
+        ids = pdf["__id"].tolist()
+        masks = [pdf[f"__p{li}"].fillna(False).tolist() for li in range(n_legs)]
+        for r, ev in enumerate(zip(ts_us, ids)):
+            if cursor is not None and ev <= cursor:
+                continue  # late past every unflushed anchor's reach
+            if frontier is not None and ev <= frontier:
+                continue  # consumed territory behind the skip frontier
+            for li in range(n_legs):
+                if masks[li][r]:
+                    bisect.insort(leg_ev[li], ev)
+        return leg_ev, cursor, frontier
 
-    def flush(key, state: GroupState, leg_ev, cursor, frontier):
-        wm_us = state.getCurrentWatermarkMs() * 1000
+    def flush(key, st, wm_us: int, timed_out: bool):
+        if st == _DONE:
+            return None, st, None
+        leg_ev, cursor, frontier = st
         matches, frontier, cursor = _kernel(
             mode, leg_ev, bounds, within_us, close_before_us=wm_us,
             cursor=cursor, frontier=frontier, work_cap=work_cap,
         )
-        if first_only and matches:
-            state.update(done_state())
-            # no timeout re-arm: the tombstone has nothing left to flush
-        else:
-            keep_from = wm_us - within_us
-            leg_ev = [
-                [e for e in evs
-                 if e[0] >= keep_from and (frontier is None or e > frontier)]
-                for evs in leg_ev
-            ]
-            if any(leg_ev):
-                flat = []
-                for evs in leg_ev:
-                    flat.append([t for t, _ in evs])
-                    flat.append([i for _, i in evs])
-                flat += [cursor[0] if cursor else None, cursor[1] if cursor else None]
-                if first_only:
-                    flat.append(False)
-                if anchor_first:
-                    flat.append(True)  # lineage marker, not read back
-                if skip:
-                    flat += [frontier[0] if frontier else None,
-                             frontier[1] if frontier else None]
-                state.update(tuple(flat))
-                open_anchors = [
-                    t for t, i in leg_ev[0] if cursor is None or (t, i) > cursor
-                ]
-                if open_anchors:
-                    close_ms = (min(open_anchors) + within_us) // 1000
-                    state.setTimeoutTimestamp(max(close_ms, wm_us // 1000 + 1))
-            elif skip and frontier is not None and frontier[0] >= wm_us:
-                # buffers empty but the frontier sits AT the watermark: an
-                # admissible same-timestamp event could still order before
-                # it — persist the frontier alone (O(1)) until the watermark
-                # strictly passes it; the timeout then cleans up
-                flat = [[] for _ in range(2 * n_legs)]
-                flat += [cursor[0] if cursor else None,
-                         cursor[1] if cursor else None,
-                         frontier[0], frontier[1]]
-                state.update(tuple(flat))
-                state.setTimeoutTimestamp(wm_us // 1000 + 1)
-            elif state.exists:
-                state.remove()
-        return _matches_frame(matches, [key[0]] * len(matches), bounds, out_cols)
+        frame = _matches_frame(matches, [key[0]] * len(matches), bounds, out_cols) if matches else None
+        if mode == "first" and matches:
+            return frame, _DONE, None
+        keep_from = wm_us - within_us
+        leg_ev = [
+            [e for e in evs if e[0] >= keep_from and (frontier is None or e > frontier)]
+            for evs in leg_ev
+        ]
+        if any(leg_ev):
+            open_anchors = [t for t, i in leg_ev[0] if cursor is None or (t, i) > cursor]
+            deadline = min(open_anchors) + within_us if open_anchors else None
+            return frame, (leg_ev, cursor, frontier), deadline
+        if mode == "skip_past_last" and frontier is not None and frontier[0] >= wm_us:
+            # buffers empty but the frontier sits AT the watermark: an
+            # admissible same-timestamp event could still order before it —
+            # keep the frontier alone (O(1)) until the watermark strictly
+            # passes it; the next timeout then cleans up
+            return frame, (leg_ev, cursor, frontier), wm_us
+        return frame, None, None
 
-    def load(state: GroupState):
-        if not state.exists:
-            return [[] for _ in range(n_legs)], None, False, None
-        flat = state.get
-        if first_only and bool(flat[2 * n_legs + 2]):
-            return [[] for _ in range(n_legs)], None, True, None
-        leg_ev = []
-        for li in range(n_legs):
-            leg_ev.append(sorted(zip(list(flat[2 * li]), list(flat[2 * li + 1]))))
-        c_ts, c_id = flat[2 * n_legs], flat[2 * n_legs + 1]
-        frontier = None
-        if skip and flat[2 * n_legs + 2] is not None:
-            frontier = (flat[2 * n_legs + 2], flat[2 * n_legs + 3])
-        return leg_ev, ((c_ts, c_id) if c_ts is not None else None), False, frontier
-
-    def func(key, pdf_iter, state: GroupState):
-        leg_ev, cursor, done, frontier = load(state)
-        if done:
-            # matched key: drop everything, keep the tombstone alive (a
-            # pre-match timeout may still fire once — re-assert the state).
-            # Yield NOTHING: building an empty frame per tombstoned key per
-            # batch is pure overhead (r7, guide §4)
-            for _ in pdf_iter:
-                pass
-            if state.hasTimedOut:
-                state.update(done_state())
-            return
-        if state.hasTimedOut:
-            out = flush(key, state, leg_ev, cursor, frontier)
-            if len(out.index):
-                yield out
-            return
-        for pdf in pdf_iter:
-            if pdf.empty:
-                continue
-            ts_us = pdf["__ts"].astype("int64").tolist()
-            # ids keep their NATIVE values (int, string, ...) — the state /
-            # output schemas are built from the actual id column type and
-            # (ts, id) ordering only needs within-type orderability
-            # (ADVICE r5: int(i) broke string/UUID id columns at runtime)
-            ids = pdf["__id"].tolist()
-            masks = [pdf[f"__p{li}"].fillna(False).tolist() for li in range(n_legs)]
-            for r, (t, i) in enumerate(zip(ts_us, ids)):
-                ev = (int(t), i)
-                if cursor is not None and ev <= cursor:
-                    continue  # late past every unflushed anchor's reach
-                if frontier is not None and ev <= frontier:
-                    continue  # consumed territory behind the skip frontier
-                for li in range(n_legs):
-                    if masks[li][r]:
-                        bisect.insort(leg_ev[li], ev)
-        out = flush(key, state, leg_ev, cursor, frontier)
-        if len(out.index):
-            yield out
-
-    return func
+    return fold, flush
 
 
 def match_pattern_stream(
@@ -808,15 +756,15 @@ def match_pattern_stream(
 ) -> DataFrame:
     """Streaming multi-leg quantified pattern over a watermarked stream.
 
-    ONE ``applyInPandasWithState`` operator regardless of leg count or
-    quantifier bounds — per-key state is the per-leg event buffers of the
-    active horizon plus a flush cursor; each match emits exactly once when
-    its anchor's window closes behind the watermark.  Supports the same
-    leg kinds as :func:`match_pattern` (positive / negation ``(0,0)`` /
-    optional ``(0,n)``); output schema matches it.  Negation legs'
-    events are buffered like any other leg (same time-horizon eviction)
-    and checked by the kernel against the guarded gap.  Id values keep
-    their native column type (int, string, ...).
+    ONE keyed-state operator (``streaming/keyed.py``) regardless of leg
+    count or quantifier bounds — per-key state is the per-leg event buffers
+    of the active horizon plus a flush cursor; each match emits exactly
+    once when its anchor's window closes behind the watermark.  Supports
+    the same leg kinds as :func:`match_pattern` (positive / negation
+    ``(0,0)`` / optional ``(0,n)``); output schema matches it.  Negation
+    legs' events are buffered like any other leg (same time-horizon
+    eviction) and checked by the kernel against the guarded gap.  Id
+    values keep their native column type (int, string, ...).
 
     ``max_matches_per_key`` bounds one key's all-combinations output per
     flush: past it the task fails with :class:`PatternWorkCapExceeded` —
@@ -829,12 +777,9 @@ def match_pattern_stream(
     can complete a canonically-earlier match, so emitting before the
     watermark passes the anchor's window would break determinism), and
     the flush-cursor contract makes the choice exactly-once across
-    replays.  On match the key's state collapses to an O(1) done
-    tombstone (buffers dropped, no more enumeration work) — the chained
-    join lowering cannot express this at all (it has no cross-match
-    state).  ``mode="first"`` adds a boolean to the state schema, so it
-    is a different checkpoint lineage from ``mode="all"`` (the resume
-    guard in streaming/sink.py names the mismatch).
+    replays.  On match the key's state collapses to an O(1) done marker
+    (buffers dropped, no more enumeration work) — the chained join
+    lowering cannot express this at all (it has no cross-match state).
 
     ``mode="skip_past_last"`` (AFTER MATCH SKIP PAST LAST ROW): greedy
     NON-OVERLAPPING matches — after each selection the per-key frontier
@@ -843,8 +788,7 @@ def match_pattern_stream(
     dropped on ingest.  Dense keys therefore carry *less* state than
     all-matches mode, and output is linear in the event count (no work
     cap needed).  Selections still happen at anchor close, in canonical
-    order, exactly-once via the persisted (cursor, frontier) pair; state
-    schema gains the two frontier fields (separate checkpoint lineage).
+    order, exactly-once via the persisted (cursor, frontier) pair.
 
     ``mode="skip_to_next"`` (AFTER MATCH SKIP TO NEXT ROW): emit the
     canonically-first match of EACH anchor — matches may overlap but no
@@ -854,43 +798,30 @@ def match_pattern_stream(
     reuse a previous match's events, so nothing extra can be evicted);
     only the per-anchor enumeration changes, aborting at each anchor's
     first match — output and kernel work are linear in the leg-0 event
-    count, so no work cap applies.  The state schema carries a marker
-    field so a mode flip across a checkpoint resume is caught by the
-    resume guard rather than silently reinterpreted.
+    count, so no work cap applies.
+
+    The state's layout tag covers the leg bounds, the window, the mode and
+    the key and id types, so the engine's resume guard
+    (``streaming/engine.py``) refuses a checkpoint written under another
+    pattern shape, window or mode instead of reading it.
+
+    Every event moves the watermark, whether or not a leg accepts it: the
+    leg filter is spelled so the optimizer cannot push it below the
+    watermark (see :func:`_project`).
     """
     _validate_legs(legs, mode)
     if not df.isStreaming:
         raise AnalysisError("match_pattern_stream requires a streaming DataFrame")
-    proj = _project(df, legs, key_col, ts_col, id_col, F.col(ts_col).alias("__wmts"))
-
+    proj = _project(df, legs, key_col, ts_col, id_col, F.col(ts_col).alias("__wmts"),
+                    pushable=False)
     key_type = df.select(F.col(key_col)).schema[0].dataType
     id_type = df.select(F.col(id_col)).schema[0].dataType
     out_fields, out_cols = _out_schema(legs, key_type, id_type)
-    state_fields: list[StructField] = []
-    for i in range(len(legs)):
-        state_fields += [
-            StructField(f"ts{i}", ArrayType(LongType())),
-            StructField(f"id{i}", ArrayType(id_type)),
-        ]
-    state_fields += [StructField("c_ts", LongType()), StructField("c_id", id_type)]
-    if mode == "first":
-        state_fields.append(StructField("done", BooleanType()))
-    elif mode == "skip_past_last":
-        state_fields += [StructField("f_ts", LongType()),
-                         StructField("f_id", id_type)]
-    elif mode == "skip_to_next":
-        # distinct checkpoint lineage from mode="all" (same buffers +
-        # cursor otherwise) — the resume guard names a mode flip
-        state_fields.append(StructField("skip_next", BooleanType()))
-
     bounds = [(m, n) for _, _, m, n in legs]
-    func = _pattern_func(bounds, int(within_seconds * 1_000_000), out_cols,
-                         len(legs), max_matches_per_key, mode=mode)
-    out = proj.groupBy(F.col("__k")).applyInPandasWithState(
-        func,
-        StructType(out_fields),
-        StructType(state_fields),
-        "update",
-        GroupStateTimeout.EventTimeTimeout,
-    )
+    within_us = int(within_seconds * 1_000_000)
+    fold, flush = _pattern_func(bounds, within_us, out_cols, len(legs),
+                                max_matches_per_key, mode=mode)
+    layout = (bounds, within_us, mode, key_type.simpleString(), id_type.simpleString())
+    out = apply_keyed(proj.groupBy(F.col("__k")), StructType(out_fields),
+                      "nfa_match", layout, fold, flush)
     return out.withColumnRenamed("__k", key_col)

@@ -265,7 +265,7 @@ def compile_select(
 
     # session windows under EMIT CHANGES need the custom stateful operator:
     # Spark's session_window aggregation rejects update mode, so the
-    # applyInPandasWithState fallback (streaming/sessions.py) takes over —
+    # keyed-state session kernel (streaming/sessions.py) takes over —
     # it applies its own watermark on the projected event time
     session_changes = (
         streaming

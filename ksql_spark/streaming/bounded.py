@@ -3,9 +3,10 @@
 The native streaming lowering of these aggregates folds ``collect_list``
 state per group — one state value that grows with the group's history, so a
 hot key in a long-running EMIT CHANGES query grows one RocksDB value without
-bound.  This module is the scale path: a custom stateful operator
-(``applyInPandasWithState``, same template as streaming/sessions.py) whose
-per-group state is *bounded by construction*:
+bound.  This module is the scale path: a per-group fold and flush run by
+the keyed-state driver (``streaming/keyed.py``, which loads and stores
+each group's state and re-arms its timeout), whose per-group state is
+*bounded by construction*:
 
   * TOPK(k):          state = the current top-k values (sorted desc, <= k).
     Exact: values are only ever added, so anything outside the running
@@ -25,7 +26,10 @@ per-group state is *bounded by construction*:
 Emission contract (same as the built-in windowed changelog): every
 micro-batch emits an upsert row per touched group; closed windows are
 evicted by event-time timeout once the watermark passes window_end.  Group
-identities never merge, so no tombstones are needed (unlike sessions).
+identities never merge, so no tombstones are needed (unlike sessions).  The
+state's layout tag covers each aggregate's kind, bound, buckets and input
+type plus the key count and windowing, so a resume under another TOPK
+bound or aggregate list is refused.
 
 Scale notes: one shuffle on (window, keys) — identical to the native agg;
 state per group is O(k) / O(limit) / O(capacity) regardless of group size;
@@ -34,11 +38,8 @@ rows cross the Python boundary as Arrow batches (no per-row UDF).
 
 from __future__ import annotations
 
-from typing import Callable, Iterator
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
     LongType,
@@ -50,6 +51,7 @@ from pyspark.sql.types import (
 
 from ..errors import AnalysisError
 from ..expr import CollectList, CollectSet, Histogram, TopK, TopKDistinct, WindowSpec
+from .keyed import apply_keyed
 
 DEFAULT_COLLECT_LIMIT = 1000  # ksqlDB: ksql.functions.collect_list.limit
 
@@ -201,13 +203,14 @@ COLLECTION_KINDS = ("topk", "topk_distinct", "collect_list", "collect_set")
 SCALAR_KINDS = ("count", "sum", "min", "max", "avg")
 
 
-def _bounded_func(specs: list[dict], n_keys: int, windowed: bool) -> Callable:
-    """The multi-aggregate stateful kernel: one state slot group per agg.
+def _bounded_func(specs: list[dict], n_keys: int, windowed: bool) -> tuple:
+    """The multi-aggregate kernel's ``(fold, flush)`` pair for
+    :func:`~.keyed.apply_keyed`.
 
-    ``specs`` is a list of plain dicts {kind, bound, buckets} — picklable,
-    shipped to executors.  State layout is the concatenation of each agg's
-    slots (collection: 1 array; histogram: 3 arrays; count: 1 long;
-    sum/min/max/avg: value + contribution count).
+    ``specs`` is a list of plain dicts {kind, bound, buckets, is_float} —
+    picklable, shipped to executors.  A group's state is one slot per agg
+    (collection: a list; histogram: (keys, counts, errors); count and
+    sum/min/max/avg: (value, contribution count)).
     """
     import pandas as pd  # noqa: PLC0415 — executor-side import
 
@@ -249,114 +252,47 @@ def _bounded_func(specs: list[dict], n_keys: int, windowed: bool) -> Callable:
                 data[f"__n{ai}"] = [n]
         return pd.DataFrame(data)
 
-    def load_state(state: GroupState) -> list:
-        flat = state.get if state.exists else None
-        slots = []
-        pos = 0
-        for spec in specs:
+    def new_slot(spec: dict):
+        kind = spec["kind"]
+        if kind == "histogram":
+            return ([], [], [])
+        if kind in COLLECTION_KINDS:
+            return []
+        return (None, 0)
+
+    def fold(key, slots, pdf) -> list:
+        slots = slots or [new_slot(spec) for spec in specs]
+        for ai, spec in enumerate(specs):
             kind = spec["kind"]
-            if kind == "histogram":
-                slots.append(
-                    (list(flat[pos]), list(flat[pos + 1]), list(flat[pos + 2]))
-                    if flat
-                    else ([], [], [])
+            col = pdf[f"__a{ai}"][~pdf[f"__m{ai}"]]
+            if col.empty:
+                continue
+            batch = col.tolist()
+            if kind == "topk":
+                slots[ai] = merge_topk(slots[ai], batch, spec["bound"], distinct=False)
+            elif kind == "topk_distinct":
+                slots[ai] = merge_topk(slots[ai], batch, spec["bound"], distinct=True)
+            elif kind in ("collect_list", "collect_set"):
+                slots[ai] = merge_collect(
+                    slots[ai], batch, spec["bound"], is_set=kind == "collect_set"
                 )
-                pos += 3
-            elif kind in COLLECTION_KINDS:
-                vals = list(flat[pos]) if flat else []
-                # Arrow/pandas state round-trip stores float NaN as null;
-                # inputs are masked non-null, so any None IS a NaN
-                slots.append([float("nan") if v is None else v for v in vals])
-                pos += 1
-            elif kind == "count":
-                slots.append((None, flat[pos] if flat else 0))
-                pos += 1
+            elif kind == "histogram":
+                counts: dict = {}
+                for v in batch:
+                    sv = str(v)
+                    counts[sv] = counts.get(sv, 0) + 1
+                slots[ai] = merge_spacesaving(*slots[ai], counts, spec["bound"])
             else:
-                if flat:
-                    v, n = flat[pos], flat[pos + 1]
-                    if v is None and n and spec.get("is_float"):
-                        v = float("nan")
-                    slots.append((v, n))
-                else:
-                    slots.append((None, 0))
-                pos += 2
+                slots[ai] = _merge_scalar(
+                    kind, slots[ai][0], slots[ai][1], batch, spec.get("is_float", True)
+                )
         return slots
 
-    def store_state(state: GroupState, slots: list) -> None:
-        flat: list = []
-        for spec, slot in zip(specs, slots):
-            kind = spec["kind"]
-            if kind == "histogram":
-                flat += [slot[0], slot[1], slot[2]]
-            elif kind in COLLECTION_KINDS:
-                flat.append(slot)
-            elif kind == "count":
-                flat.append(slot[1])
-            else:
-                v = slot[0]
-                flat += [None if (v is not None and _is_nan(v)) else v, slot[1]]
-        state.update(tuple(flat))
-
-    # the name shows in the plan: the engine reads it to tell this kernel,
-    # whose timeout only evicts, from one that emits on the watermark
-    def bounded_upsert(key, pdf_iter: Iterator, state: GroupState) -> Iterator:
-        if state.hasTimedOut:
+    def flush(key, slots, wm_us, timed_out: bool):
+        if timed_out:
             # watermark passed window_end: the final upsert is already in the
-            # changelog; just release the state (yield nothing — an empty
-            # frame per evicted key per batch is pure overhead, r7)
-            state.remove()
-            return
-
-        slots = load_state(state)
-        touched = False
-        for pdf in pdf_iter:
-            if pdf.empty:
-                continue
-            touched = True
-            for ai, spec in enumerate(specs):
-                kind = spec["kind"]
-                col = pdf[f"__a{ai}"][~pdf[f"__m{ai}"]]
-                if col.empty:
-                    continue
-                batch = col.tolist()
-                if kind == "topk":
-                    slots[ai] = merge_topk(slots[ai], batch, spec["bound"], distinct=False)
-                elif kind == "topk_distinct":
-                    slots[ai] = merge_topk(slots[ai], batch, spec["bound"], distinct=True)
-                elif kind in ("collect_list", "collect_set"):
-                    slots[ai] = merge_collect(
-                        slots[ai], batch, spec["bound"], is_set=kind == "collect_set"
-                    )
-                elif kind == "histogram":
-                    counts: dict = {}
-                    for v in batch:
-                        sv = str(v)
-                        counts[sv] = counts.get(sv, 0) + 1
-                    slots[ai] = merge_spacesaving(*slots[ai], counts, spec["bound"])
-                else:
-                    slots[ai] = _merge_scalar(
-                        kind, slots[ai][0], slots[ai][1], batch, spec.get("is_float", True)
-                    )
-
-        if not touched:
-            # invoked but no rows (shouldn't happen given the JVM-side
-            # any-input-non-null filter): Spark clears the old timeout on
-            # each invocation, so re-arm it or the window's state leaks
-            if windowed and state.exists:
-                wm_ms = state.getCurrentWatermarkMs()
-                we_ms = int(pd.Timestamp(key[1]).value // 1_000_000)
-                state.setTimeoutTimestamp(max(we_ms, wm_ms + 1))
-            return  # nothing to emit — and no empty frame to build (r7)
-
-        store_state(state, slots)
-        if windowed:
-            wm_ms = state.getCurrentWatermarkMs()
-            # group keys arrive as NAIVE datetimes (session runs in UTC);
-            # datetime.timestamp() would re-interpret them in host-local
-            # time — pd.Timestamp.value is the naive-as-UTC epoch
-            we_ms = int(pd.Timestamp(key[1]).value // 1_000_000)
-            state.setTimeoutTimestamp(max(we_ms, wm_ms + 1))
-
+            # changelog; just release the state
+            return None, None, None
         outs = []
         for spec, slot in zip(specs, slots):
             kind = spec["kind"]
@@ -364,13 +300,15 @@ def _bounded_func(specs: list[dict], n_keys: int, windowed: bool) -> Callable:
                 outs.append(hist_top_buckets(slot[0], slot[1], spec["buckets"]))
             elif kind in ("collect_list", "collect_set"):
                 outs.append(sorted(slot, key=_sort_key))
-            elif kind in COLLECTION_KINDS:
-                outs.append(slot)
             else:
                 outs.append(slot)
-        yield emit(key, outs)
+        # group keys arrive as NAIVE datetimes (session runs in UTC);
+        # datetime.timestamp() would re-interpret them in host-local time —
+        # pd.Timestamp.value is the naive-as-UTC epoch
+        deadline = int(pd.Timestamp(key[1]).value // 1000) if windowed else None
+        return emit(key, outs), slots, deadline
 
-    return bounded_upsert
+    return fold, flush
 
 
 def _spec_of(agg, collect_limit: int, hist_capacity: int | None) -> dict:
@@ -523,7 +461,6 @@ def bounded_agg_changelog(
     )
     key_fields = [StructField(n, proj.schema[n].dataType) for n in key_names]
     out_fields: list[StructField] = []
-    state_fields: list[StructField] = []
     for i, (spec, vt) in enumerate(zip(specs, val_types)):
         kind = spec["kind"]
         if kind == "histogram":
@@ -531,20 +468,13 @@ def bounded_agg_changelog(
                 StructField(f"__hk{i}", ArrayType(StringType())),
                 StructField(f"__hc{i}", ArrayType(LongType())),
             ]
-            state_fields += [
-                StructField(f"hk{i}", ArrayType(StringType())),
-                StructField(f"hc{i}", ArrayType(LongType())),
-                StructField(f"he{i}", ArrayType(LongType())),
-            ]
         elif kind in COLLECTION_KINDS:
             out_fields += [
                 StructField(f"__out{i}", ArrayType(vt)),
                 StructField(f"__nan{i}", LongType()),
             ]
-            state_fields += [StructField(f"vals{i}", ArrayType(vt))]
         elif kind == "count":
             out_fields += [StructField(f"__v{i}", LongType())]
-            state_fields += [StructField(f"n{i}", LongType())]
         else:
             # SUM widens integrals to long (Spark sum semantics); AVG over
             # integrals keeps the EXACT long sum in state and casts to
@@ -558,19 +488,21 @@ def bounded_agg_changelog(
                 StructField(f"__v{i}", st),
                 StructField(f"__n{i}", LongType()),
             ]
-            state_fields += [
-                StructField(f"v{i}", st),
-                StructField(f"n{i}", LongType()),
-            ]
     out_schema = StructType(win_fields + key_fields + out_fields)
-    state_schema = StructType(state_fields)
 
-    func = _bounded_func(specs, len(keys), windowed)
-    timeout = (
-        GroupStateTimeout.EventTimeTimeout if windowed else GroupStateTimeout.NoTimeout
+    fold, flush = _bounded_func(specs, len(keys), windowed)
+    layout = (
+        [(sp["kind"], sp["bound"], sp["buckets"], sp["is_float"], vt.simpleString())
+         for sp, vt in zip(specs, val_types)],
+        len(keys),
+        windowed,
     )
-    out = proj.groupBy(*[F.col(c) for c in group_cols]).applyInPandasWithState(
-        func, out_schema, state_schema, "update", timeout
+    # the name shows in the plan: the engine reads it to tell this kernel,
+    # whose timeout only evicts, from one that emits on the watermark.  A
+    # plain grouped table never closes a group, so it runs without timeout
+    out = apply_keyed(
+        proj.groupBy(*[F.col(c) for c in group_cols]),
+        out_schema, "bounded_upsert", layout, fold, flush, event_time=windowed,
     )
 
     sel: list[Column] = []

@@ -3,10 +3,11 @@
 Spark's built-in ``session_window`` aggregation rejects ``update`` output
 mode (STREAMING_OUTPUT_MODE.UNSUPPORTED_OPERATION), but ksqlDB's session
 windows are changelogs (reference: ksql/window.go:83-88 with EMIT CHANGES,
-select_builder.go:231-234).  This module closes the gap with
-``applyInPandasWithState`` — Spark's Arrow-batched custom-stateful-operator
-API (the sanctioned escape hatch; state lives in the state store, rows move
-as Arrow batches, no per-row Python).
+select_builder.go:231-234).  This module closes the gap with a per-key
+merge kernel that runs on the keyed-state driver (``streaming/keyed.py``):
+this module supplies the fold and the flush, the driver loads and stores
+each key's state in the state store and re-arms its timeout; rows move as
+Arrow batches, no per-row Python.
 
 Semantics (identical to batch ``session_window`` + the changelog contract):
 
@@ -20,7 +21,9 @@ Semantics (identical to batch ``session_window`` + the changelog contract):
     equals the batch recomputation;
   * state per key is the open-session list (closed sessions are evicted on
     event-time timeout once the watermark passes ``window_end``), so state
-    size is bounded by concurrent open sessions, not history.
+    size is bounded by concurrent open sessions, not history; its layout
+    tag covers the gap, the aggregates' slot kinds and the key count, so a
+    resume under another gap or aggregate list is refused.
 
 Scale notes: the only shuffle is the groupBy on the session key (same as any
 session aggregation); per-key state is O(open sessions); Arrow batches keep
@@ -30,13 +33,9 @@ sessions without replay — COUNT / SUM / MIN / MAX / AVG are supported.
 
 from __future__ import annotations
 
-from typing import Callable, Iterator
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
-    ArrayType,
     DoubleType,
     LongType,
     StringType,
@@ -46,6 +45,7 @@ from pyspark.sql.types import (
 
 from ..errors import AnalysisError
 from ..expr import Avg, Count, Max, Min, Sum
+from .keyed import apply_keyed
 
 US = 1_000_000  # microseconds per second
 
@@ -126,19 +126,20 @@ def agg_specs_from_fields(fields, df: DataFrame) -> list[AggSpec]:
     return specs
 
 
-def _session_func(
-    gap_seconds: float, n_keys: int, specs: list[AggSpec]
-) -> Callable:
-    """Build the applyInPandasWithState function (closure, no driver state)."""
+def _session_func(gap_seconds: float, n_keys: int, specs: list[AggSpec]) -> tuple:
+    """The session kernel's ``(fold, flush)`` pair for
+    :func:`~.keyed.apply_keyed` (closures, no driver state).
+
+    A key's state is its list of open sessions ``(start_us, end_us,
+    partial, new)``.  Every stored session was emitted under its current
+    bounds; ``fold`` appends each event as a ``new`` single-event session
+    and ``flush`` merges them in."""
     import pandas as pd  # noqa: PLC0415 — executor-side import
 
     gap_us = int(gap_seconds * US)
-    # flat slot layout across specs; each slot is typed 'long' or 'double'
-    # so integral partials stay exact Python ints (no float64 round-trip)
-    slot_kinds: list[str] = [k for s in specs for k in s.slot_kinds]
-    n_slots = len(slot_kinds)
-    # per-spec (first slot index, merge op per slot); None is the identity
-    # element for every merge (SQL semantics: aggregates skip NULL inputs)
+    n_slots = sum(s.n_slots for s in specs)
+    # None is the identity element for every merge (SQL semantics:
+    # aggregates skip NULL inputs)
     _OPS = {"add": lambda a, b: a + b, "min": min, "max": max}
 
     def _conv(kind: str, v):
@@ -217,141 +218,64 @@ def _session_func(
         data["__op"] = [r[3] for r in rows]
         return pd.DataFrame(data)
 
-    # state keeps two typed flat arrays (long slots, double slots) so
-    # integral partials survive the state round-trip exactly
-    long_idx = [i for i, k in enumerate(slot_kinds) if k == "long"]
-    dbl_idx = [i for i, k in enumerate(slot_kinds) if k == "double"]
-    n_long, n_dbl = len(long_idx), len(dbl_idx)
+    def fold(key, sessions, pdf) -> list:
+        ts_us = (pdf["__ts"].astype("int64").to_numpy() // 1000).tolist()  # ns -> us
+        # vectorized NULL masks + plain-python values once per frame
+        # instead of a pd.isna call per cell (r7)
+        vals = [pdf[s.in_col].to_numpy() for s in specs]
+        nulls = [pd.isna(v) for v in vals]
+        vals = [v.tolist() for v in vals]
+        sessions = list(sessions or [])
+        for r, t in enumerate(ts_us):
+            row_vals = [None if nulls[j][r] else vals[j][r] for j in range(len(specs))]
+            sessions.append((t, t + gap_us, new_partial(row_vals), True))
+        return sessions
 
-    # the name shows in the plan: the engine reads it to tell this kernel,
-    # whose timeout only evicts, from one that emits on the watermark
-    def session_upsert(key, pdf_iter: Iterator, state: GroupState) -> Iterator:
-        # -- load state: parallel arrays of open sessions -------------------
-        if state.exists:
-            starts, ends, e_starts, e_ends, p_long, p_dbl = state.get
-            partials = []
-            for i in range(len(starts)):
-                p: list = [None] * n_slots
-                for j, idx in enumerate(long_idx):
-                    p[idx] = p_long[i * n_long + j]
-                for j, idx in enumerate(dbl_idx):
-                    p[idx] = p_dbl[i * n_dbl + j]
-                partials.append(p)
-            sessions = [
-                {"start": s, "end": e, "emitted": (es, ee), "p": p}
-                for s, e, es, ee, p in zip(starts, ends, e_starts, e_ends, partials)
-            ]
-        else:
-            sessions = []
-
-        wm_us = state.getCurrentWatermarkMs() * 1000
-
-        if state.hasTimedOut:
+    def flush(key, sessions, wm_us: int, timed_out: bool):
+        if timed_out:
             # evict sessions the watermark has closed; nothing to emit (the
             # changelog already carries their final upsert)
-            sessions = [s for s in sessions if s["end"] > wm_us]
-            if sessions:
-                _save(state, sessions)
-                _set_timeout(state, sessions, wm_us)
-            else:
-                state.remove()
-            return  # nothing to emit — and no empty frame to build (r7)
-
-        # -- fold new rows in as single-event sessions ----------------------
-        touched = False
-        for pdf in pdf_iter:
-            if pdf.empty:
-                continue
-            touched = True
-            ts_us = pdf["__ts"].astype("int64").to_numpy() // 1000  # ns -> us
-            # vectorized NULL masks + plain-python values once per batch
-            # instead of a pd.isna call per cell (r7)
-            vals = [pdf[s.in_col].to_numpy() for s in specs]
-            nulls = [pd.isna(v) for v in vals]
-            vals = [v.tolist() for v in vals]
-            for r in range(len(pdf)):
-                row_vals = [
-                    None if nulls[j][r] else vals[j][r] for j in range(len(specs))
-                ]
-                sessions.append(
-                    {
-                        "start": int(ts_us[r]),
-                        "end": int(ts_us[r]) + gap_us,
-                        "emitted": (-1, -1),
-                        "p": new_partial(row_vals),
-                        "new": True,
-                    }
-                )
-        if not touched:
-            # invoked but no usable rows: re-arm the eviction timeout (Spark
-            # clears it on every invocation) or open sessions leak
-            if sessions:
-                _set_timeout(state, sessions, wm_us)
-            return  # nothing to emit — and no empty frame to build (r7)
+            open_sessions = [s for s in sessions if s[1] > wm_us]
+            return None, open_sessions or None, _deadline(open_sessions)
 
         # -- merge overlapping/touching [start, end) intervals --------------
-        sessions.sort(key=lambda s: (s["start"], s["end"]))
-        merged: list[dict] = []
-        consumed_identities: list[tuple[int, int]] = []
-        for s in sessions:
-            if merged and s["start"] < merged[-1]["end"]:
+        merged: list[list] = []  # [start, end, partial, dirty, emitted identity]
+        retracted: list[tuple[int, int]] = []
+        for start, end, p, new in sorted(sessions, key=lambda s: (s[0], s[1])):
+            if merged and start < merged[-1][1]:
                 cur = merged[-1]
-                cur["end"] = max(cur["end"], s["end"])
-                cur["p"] = merge_partial(cur["p"], s["p"])
-                cur["dirty"] = True
+                cur[1] = max(cur[1], end)
+                cur[2] = merge_partial(cur[2], p)
+                cur[3] = True
                 # a previously-emitted identity absorbed by this merge must
                 # be retracted (unless it IS the surviving identity)
-                if s["emitted"] != (-1, -1):
-                    consumed_identities.append(s["emitted"])
+                if not new:
+                    retracted.append((start, end))
             else:
-                s = dict(s)
-                s["dirty"] = bool(s.pop("new", False))
-                merged.append(s)
+                merged.append([start, end, p, new, None if new else (start, end)])
 
         rows = []  # (start_us, end_us, partial, op)
         survivors = set()
-        for s in merged:
-            ident = (s["start"], s["end"])
-            survivors.add(ident)
-            if s["dirty"] or s["emitted"] != ident:
+        for start, end, p, dirty, emitted in merged:
+            survivors.add((start, end))
+            if dirty:
                 # a surviving session whose bounds grew also leaves a stale
                 # previously-emitted identity behind — retract it too
-                if s["emitted"] not in ((-1, -1), ident):
-                    consumed_identities.append(s["emitted"])
-                rows.append((s["start"], s["end"], s["p"], "U"))
-                s["emitted"] = ident
-        for ident in consumed_identities:
+                if emitted not in (None, (start, end)):
+                    retracted.append(emitted)
+                rows.append((start, end, p, "U"))
+        for ident in retracted:
             if ident not in survivors:
                 rows.append((ident[0], ident[1], [None] * n_slots, "D"))
 
-        # -- persist + schedule eviction ------------------------------------
-        open_sessions = [s for s in merged if s["end"] > wm_us]
-        if open_sessions:
-            _save(state, open_sessions)
-            _set_timeout(state, open_sessions, wm_us)
-        elif state.exists:
-            state.remove()
+        open_sessions = [(s, e, p, False) for s, e, p, _, _ in merged if e > wm_us]
+        frame = emit_df(key, rows) if rows else None
+        return frame, open_sessions or None, _deadline(open_sessions)
 
-        if rows:
-            yield emit_df(key, rows)
+    def _deadline(sessions: list) -> int | None:
+        return min(s[1] for s in sessions) if sessions else None
 
-    def _save(state: GroupState, sessions: list[dict]) -> None:
-        state.update(
-            (
-                [s["start"] for s in sessions],
-                [s["end"] for s in sessions],
-                [s["emitted"][0] for s in sessions],
-                [s["emitted"][1] for s in sessions],
-                [s["p"][idx] for s in sessions for idx in long_idx],
-                [s["p"][idx] for s in sessions for idx in dbl_idx],
-            )
-        )
-
-    def _set_timeout(state: GroupState, sessions: list[dict], wm_us: int) -> None:
-        t_ms = min(s["end"] for s in sessions) // 1000
-        state.setTimeoutTimestamp(max(t_ms, wm_us // 1000 + 1))
-
-    return session_upsert
+    return fold, flush
 
 
 def session_changelog(
@@ -394,23 +318,13 @@ def session_changelog(
             StructField("__op", StringType()),
         ]
     )
-    state_schema = StructType(
-        [
-            StructField("starts", ArrayType(LongType())),
-            StructField("ends", ArrayType(LongType())),
-            StructField("e_starts", ArrayType(LongType())),
-            StructField("e_ends", ArrayType(LongType())),
-            StructField("p_long", ArrayType(LongType())),
-            StructField("p_dbl", ArrayType(DoubleType())),
-        ]
-    )
-
-    func = _session_func(gap_seconds, len(key_cols), specs)
-    out = (
-        proj.groupBy(*[F.col(f"__k{i}") for i in range(len(key_cols))])
-        .applyInPandasWithState(
-            func, out_schema, state_schema, "update", GroupStateTimeout.EventTimeTimeout
-        )
+    fold, flush = _session_func(gap_seconds, len(key_cols), specs)
+    layout = (int(gap_seconds * US), [(sp.kind, sp.slot_kinds) for sp in specs], len(key_cols))
+    # the name shows in the plan: the engine reads it to tell this kernel,
+    # whose timeout only evicts, from one that emits on the watermark
+    out = apply_keyed(
+        proj.groupBy(*[F.col(f"__k{i}") for i in range(len(key_cols))]),
+        out_schema, "session_upsert", layout, fold, flush,
     )
     sel = [
         F.col("window_start"),

@@ -711,10 +711,12 @@ def test_compile_leaves_user_expression_unmutated(spark, events_stream):
     assert all("__having" not in c for c in s2.columns)
 
 
-def test_state_schema_change_across_resume_raises(spark, events_stream):
-    """VERDICT r5 #6: a bounded-op query that gains an aggregate across a
-    checkpoint resume must fail with a NAMED AnalysisError (+ migration
-    recipe), never silently deserialize the old state into the new layout."""
+@pytest.mark.parametrize("change", ["one_more_aggregate", "topk_bound"])
+def test_state_schema_change_across_resume_raises(spark, events_stream, change):
+    """VERDICT r5 #6: a bounded-op query whose state layout changes across a
+    checkpoint resume — it gains an aggregate, or its TOPK bound goes from
+    3 to 5 — must fail with a NAMED AnalysisError (+ migration recipe),
+    never silently read the old state under the new layout."""
     from ksql_spark import Count
     from ksql_spark.errors import AnalysisError
 
@@ -729,10 +731,14 @@ def test_state_schema_change_across_resume_raises(spark, events_stream):
     pq = mgr.create_as_select(csas, available_now=True, await_termination=True)
     assert pq.sink.committed_batches()
 
-    # the user edits the DDL: same query name, one more aggregate slot
+    # the user edits the DDL under the same query name
+    fields = (
+        [TopK(F("value"), 3).Alias("tv"), Count(F("event_id")).Alias("n")]
+        if change == "one_more_aggregate"
+        else [TopK(F("value"), 5).Alias("tv")]
+    )
     q2 = (
-        Select(F("user_id"), TopK(F("value"), 3).Alias("tv"),
-               Count(F("event_id")).Alias("n"))
+        Select(F("user_id"), *fields)
         .From(Schema("ev", STREAM))
         .GroupBy(F("user_id"))
         .EmitChanges()

@@ -1307,3 +1307,48 @@ def test_null_keys_never_match_batch_equals_streaming(spark, rand_events, tmp_pa
     assert all(r["user_id"] is not None for r in batch + stream)
     assert sorted(map(tuple, stream), key=_nsk) == sorted(map(tuple, batch), key=_nsk)
     assert len(batch) > 5
+
+
+def test_streaming_watermark_moves_on_non_leg_events(spark, tmp_path):
+    """Every event moves the streaming NFA's watermark, not only the ones a
+    leg accepts: ``a``@t0 and ``b``@t0+10s match within 60 s, and a
+    non-leg ``x`` thirty days later is the only event past that window.
+    The watermark must reach ``x``'s time minus the 1-minute delay, so the
+    a→b match closes and is emitted."""
+    import datetime
+
+    from ksql_spark.operators.cep_nfa import match_pattern_stream
+    from ksql_spark.streaming.sink import ExactlyOnceParquetSink
+
+    t0 = datetime.datetime(2024, 1, 1)
+    far = t0 + datetime.timedelta(days=30)
+    path = str(tmp_path / "ev")
+    spark.createDataFrame(
+        [(1, 7, "a", t0), (2, 7, "b", t0 + datetime.timedelta(seconds=10)), (3, 8, "x", far)],
+        "event_id bigint, user_id bigint, event_type string, ts timestamp",
+    ).coalesce(1).write.parquet(path)
+    src = (
+        spark.readStream.schema("event_id bigint, user_id bigint, event_type string, ts timestamp")
+        .parquet(path)
+        .withWatermark("ts", "1 minute")
+    )
+    legs = [("a", Fn.col("event_type") == "a", 1, 1), ("b", Fn.col("event_type") == "b", 1, 1)]
+    sink = ExactlyOnceParquetSink(str(tmp_path / "sink"))
+    q = (
+        match_pattern_stream(src, legs, within_seconds=60)
+        .writeStream.foreachBatch(sink)
+        .outputMode("update")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    def times(field):
+        return [
+            datetime.datetime.fromisoformat(p["eventTime"][field].replace("Z", "+00:00"))
+            for p in q.recentProgress if field in p["eventTime"]
+        ]
+
+    assert max(times("max")) - min(times("min")) == far - t0
+    assert max(times("watermark")) == max(times("max")) - datetime.timedelta(minutes=1)
+    assert [tuple(r) for r in sink.read_data(spark).collect()] == [(7, 1, 2)]
