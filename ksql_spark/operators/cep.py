@@ -2,34 +2,38 @@
 
 ksqlDB (and the reference client, gulfstream-h/ksql) stops at windowed
 aggregates and joins; a CEP engine (the north rule names one) also needs
-"A followed by B [followed by C ...] within T per key".  The Spark-first
-lowering is a chain of time-bounded self-joins:
+"A followed by B [followed by C ...] within T per key".
 
-  * step i is a filtered view of the event source (its predicate);
-  * consecutive steps join on the key with a strict event-order bound
-    ``(ts_i, id_i) < (ts_i+1, id_i+1)`` — deterministic total order, the
-    same offset contract as LATEST_BY_OFFSET;
-  * every step must land within ``within_seconds`` of step 0 — which is
-    exactly the state-cleanup bound a streaming stream-stream join needs,
-    so THE SAME PLAN runs batch and streaming (Spark 4 chains multiple
-    stateful joins in append mode; each join's state is evicted once the
-    watermark passes the bound).
+:func:`match_sequence` is a front-end to the NFA kernel in ``cep_nfa.py``:
+each step is a ``(name, pred, 1, 1)`` leg, a batch frame runs through
+``cep_nfa.match_pattern`` (one key shuffle and one kernel pass per
+partition) and a stream through ``cep_nfa.match_pattern_stream`` (one
+keyed-state operator, whatever the step count).  ``absent`` and
+``optional`` legs are span checks the kernel applies to each positive
+match before it emits it.
 
-Match semantics: ``mode='all'`` emits every ordered tuple that satisfies
-the pattern (relational semantics — deterministic, oracle-checkable, and
-what a chained join computes anyway); ``mode='first'`` keeps the earliest
-match per key (Flink's AFTER MATCH SKIP TO FIRST analog) via a min-tuple
-aggregate over the matches.
+Match semantics (relational, deterministic, oracle-checkable):
 
-Scale: each join shuffles on the key; state per join is bounded by the
-time window (watermark eviction); no UDFs anywhere — the whole pattern is
-codegen'd joins.
+  * a match is one event per step, strictly increasing in (ts, id) order —
+    the same offset contract as LATEST_BY_OFFSET — with every step within
+    ``within_seconds`` of step 0;
+  * ``mode='all'`` emits every such tuple (an event written twice matches
+    twice); ``mode='first'`` keeps the least match per key by the steps'
+    (ts, id) tuple (Flink's AFTER MATCH SKIP TO FIRST analog);
+  * events with a NULL key, event time or id never match.
+
+On a stream, a pattern of steps only in ``all`` mode is monotone — a later
+event can add matches but never retract one — so each match is emitted in
+the micro-batch that brings its last event.  A pattern with ``absent`` or
+``optional`` legs, or in ``first`` mode, emits a match once the watermark
+passes its first step's window, when no later event can change it.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+
+from .cep_nfa import _match_batch, _match_stream
 
 
 def match_sequence(
@@ -46,192 +50,38 @@ def match_sequence(
     """Detect ordered event sequences per key.
 
     ``steps`` are (name, predicate) pairs; the output carries, per match,
-    the key plus ``<name>_id`` / ``<name>_ts`` for every step.  Works on a
-    batch DataFrame or a watermarked stream (same plan).
+    the key plus ``<name>_id`` for every step and every optional leg.
+    Works on a batch DataFrame or a watermarked stream, with the same rows;
+    a stream's query runs in append output mode.
 
     ``absent`` adds NEGATION legs (Flink MATCH_RECOGNIZE's NOT pattern):
-    each (name, predicate) pair requires that NO matching event for the same
-    key falls strictly between the first and last step of the match (strict
-    (ts, id) event order, same offset contract as the step chain).  Lowered
-    to a time-bounded LEFT OUTER join + IS NULL filter — the outer-join
-    spelling of anti-join that Structured Streaming supports for
-    stream-stream joins (plain left_anti is batch-only), so THE SAME PLAN
-    still runs batch and streaming; the absent side's state is evicted by
-    the same symmetric vs-step-0 watermark bound as the step joins.
+    each (name, predicate) pair drops a match if a matching event of the
+    same key lies strictly between its first and last step in (ts, id)
+    order.
 
-    ``optional`` adds OPTIONAL legs (MATCH_RECOGNIZE's ``X?``): matching
-    events strictly between the first and last step fill ``<name>_id`` /
-    ``<name>_ts``; a match with no such event still emits, with NULLs.
-    Relational all-combinations semantics: a match interval holding k
-    optional events emits k rows (one per event), exactly what the
-    time-bounded LEFT OUTER join computes — deterministic and
-    oracle-checkable, batch == streaming.
+    ``optional`` adds OPTIONAL legs (MATCH_RECOGNIZE's ``X?``): each one
+    contributes every matching event strictly between the first and last
+    step to ``<name>_id``, one row per event, or one NULL row when there is
+    none; several optional legs multiply.
     """
     if len(steps) < 2:
         raise ValueError("a sequence pattern needs at least 2 steps")
     if mode not in ("all", "first"):
         raise ValueError(f"unknown match mode {mode!r}")
-    absent = list(absent or [])
-    optional = list(optional or [])
-    all_names = [n for n, _ in steps] + [n for n, _ in absent] + [n for n, _ in optional]
-    if len(set(all_names)) != len(all_names):
+    spans = [(n, p, True) for n, p in absent or []] + [(n, p, False) for n, p in optional or []]
+    names = [n for n, _ in steps] + [n for n, _, _ in spans]
+    if len(set(names)) != len(names):
         raise ValueError("step names must be unique (they become output columns)")
-
-    def leg(i: int, name: str, pred: Column) -> DataFrame:
-        return df.filter(pred).select(
-            F.col(key_col).alias(f"__k{i}"),
-            F.col(ts_col).alias(f"{name}_ts"),
-            F.col(id_col).alias(f"{name}_id"),
-        )
-
-    names = [n for n, _ in steps]
-    out = leg(0, names[0], steps[0][1])
-    for i, (name, pred) in enumerate(steps[1:], start=1):
-        right = leg(i, name, pred)
-        prev, cur = names[i - 1], name
-        order = (F.col(f"{cur}_ts") > F.col(f"{prev}_ts")) | (
-            (F.col(f"{cur}_ts") == F.col(f"{prev}_ts"))
-            & (F.col(f"{cur}_id") > F.col(f"{prev}_id"))
-        )
-        bound = F.col(f"{cur}_ts") <= F.col(f"{names[0]}_ts") + F.expr(
-            f"INTERVAL {within_seconds} SECONDS"
-        )
-        # the lower bound vs step 0 keeps every join's state cleanup-able on
-        # both sides (symmetric time range, same shape compile.py gives
-        # WITHIN joins)
-        lower = F.col(f"{cur}_ts") >= F.col(f"{names[0]}_ts")
-        out = out.join(
-            right,
-            (F.col("__k0") == F.col(f"__k{i}")) & order & bound & lower,
-            "inner",
-        ).drop(f"__k{i}")
-        if out.isStreaming:
-            # the join's left side must carry exactly ONE event-time column
-            # into the NEXT stateful join (Spark rejects two watermarked
-            # columns per stream once chains grow past two steps).  Strip
-            # the tag off the step just joined — step 0 stays the match's
-            # sole event time; every join's cleanup bound is anchored on it.
-            out = out.withColumn(
-                f"{name}_ts", F.col(f"{name}_ts") + F.expr("INTERVAL 0 SECONDS")
-            )
-
-    # negation legs: NO matching event strictly between the first and last
-    # step (strict (ts, id) order on both ends).  LEFT OUTER + IS NULL is the
-    # anti-join spelling Structured Streaming accepts for stream-stream
-    # joins; the time bound vs the first step keeps the absent side's join
-    # state watermark-evictable (absent events land inside [first_ts,
-    # first_ts + within], the same symmetric window as the step chain).
-    first, last = names[0], names[-1]
-    if (absent or optional) and out.isStreaming:
-        # the inner chain leaves every step's ts watermark-tagged; an OUTER
-        # join requires exactly one event-time column on its left side (it
-        # times null-emission off it).  Re-materialize all but step 0's ts
-        # through a computed expression, which drops the event-time metadata
-        # while keeping the value — step 0 stays the match's event time.
-        for n in names[1:]:
-            out = out.withColumn(f"{n}_ts", F.col(f"{n}_ts") + F.expr("INTERVAL 0 SECONDS"))
-    for i, (name, pred) in enumerate(absent):
-        a = df.filter(pred).select(
-            F.col(key_col).alias(f"__ak{i}"),
-            F.col(ts_col).alias(f"{name}_ts"),
-            F.col(id_col).alias(f"{name}_id"),
-        )
-        after_first = (F.col(f"{name}_ts") > F.col(f"{first}_ts")) | (
-            (F.col(f"{name}_ts") == F.col(f"{first}_ts"))
-            & (F.col(f"{name}_id") > F.col(f"{first}_id"))
-        )
-        before_last = (F.col(f"{name}_ts") < F.col(f"{last}_ts")) | (
-            (F.col(f"{name}_ts") == F.col(f"{last}_ts"))
-            & (F.col(f"{name}_id") < F.col(f"{last}_id"))
-        )
-        bound = F.col(f"{name}_ts") <= F.col(f"{first}_ts") + F.expr(
-            f"INTERVAL {within_seconds} SECONDS"
-        )
-        lower = F.col(f"{name}_ts") >= F.col(f"{first}_ts")
-        out = (
-            out.join(
-                a,
-                (F.col("__k0") == F.col(f"__ak{i}"))
-                & after_first
-                & before_last
-                & bound
-                & lower,
-                "left_outer",
-            )
-            .filter(F.col(f"{name}_id").isNull())
-            .drop(f"__ak{i}", f"{name}_ts", f"{name}_id")
-        )
-
-    # optional legs: same between-first-last window as absent, but the rows
-    # are KEPT either way — matched events fill the leg's columns, unmatched
-    # matches carry NULLs (emitted when the watermark passes the window).
-    for i, (name, pred) in enumerate(optional):
-        o = df.filter(pred).select(
-            F.col(key_col).alias(f"__ok{i}"),
-            F.col(ts_col).alias(f"{name}_ts"),
-            F.col(id_col).alias(f"{name}_id"),
-        )
-        after_first = (F.col(f"{name}_ts") > F.col(f"{first}_ts")) | (
-            (F.col(f"{name}_ts") == F.col(f"{first}_ts"))
-            & (F.col(f"{name}_id") > F.col(f"{first}_id"))
-        )
-        before_last = (F.col(f"{name}_ts") < F.col(f"{last}_ts")) | (
-            (F.col(f"{name}_ts") == F.col(f"{last}_ts"))
-            & (F.col(f"{name}_id") < F.col(f"{last}_id"))
-        )
-        bound = F.col(f"{name}_ts") <= F.col(f"{first}_ts") + F.expr(
-            f"INTERVAL {within_seconds} SECONDS"
-        )
-        lower = F.col(f"{name}_ts") >= F.col(f"{first}_ts")
-        out = out.join(
-            o,
-            (F.col("__k0") == F.col(f"__ok{i}"))
-            & after_first
-            & before_last
-            & bound
-            & lower,
-            "left_outer",
-        ).drop(f"__ok{i}")
-        if out.isStreaming:
-            # the join just added this leg's watermark-tagged ts to the left
-            # side; a SECOND optional/absent leg's outer join again requires
-            # exactly one event-time column on its left (ADVICE r4) — strip
-            # the tag the same way the step chain does, keeping step 0's ts
-            # as the match's sole event time
-            out = out.withColumn(
-                f"{name}_ts", F.col(f"{name}_ts") + F.expr("INTERVAL 0 SECONDS")
-            )
-
-    out_names = names + [n for n, _ in optional]
-    cols = [F.col("__k0").alias(key_col)]
-    for n in out_names:
-        cols += [F.col(f"{n}_id"), F.col(f"{n}_ts")]
-    out = out.select(*cols)
-
-    if mode == "first":
-        # earliest match per key: min over the ordered (ts, id, ...) tuple
-        # (optional legs participate after the steps; NULL orders first in
-        # struct comparison — deterministic)
-        tup = F.struct(
-            *[c for n in out_names for c in (F.col(f"{n}_ts"), F.col(f"{n}_id"))]
-        )
-        out = (
-            out.groupBy(key_col)
-            .agg(F.min(tup).alias("__m"))
-            .select(
-                F.col(key_col),
-                *[F.col(f"__m.{n}_id").alias(f"{n}_id") for n in out_names],
-                *[F.col(f"__m.{n}_ts").alias(f"{n}_ts") for n in out_names],
-            )
-        )
-    return out
+    lower = _match_stream if df.isStreaming else _match_batch
+    return lower(df, [(n, p, 1, 1) for n, p in steps], within_seconds, key_col, ts_col,
+                 id_col, mode, spans)
 
 
 def repeat(name: str, pred: Column, n: int) -> list[tuple[str, Column]]:
     """Quantifier sugar: ``A{n}`` with relaxed contiguity (Flink
     MATCH_RECOGNIZE's default `A A A` semantics) — n ordered occurrences of
-    the same predicate, expanded to chained steps ``<name>1..<name>n``.
-    Splice into a ``match_sequence`` steps list:
+    the same predicate, expanded to steps ``<name>1..<name>n``.  Splice into
+    a ``match_sequence`` steps list:
 
         match_sequence(df, [*repeat("a", pred_a, 3), ("b", pred_b)], ...)
 
@@ -239,11 +89,11 @@ def repeat(name: str, pred: Column, n: int) -> list[tuple[str, Column]]:
     with ``absent``: add an absent leg whose predicate is the negation of
     the allowed fillers.
 
-    PRACTICAL BOUND: each expanded step is another stateful join — n state
-    stores in series on a stream (streaming_cep_repeat4 measures n=4 in
-    bench).  For n > ~4, or for variable bounds A{m,n} / A{m,}, use
-    ``cep_nfa.match_quantified(_stream)`` — one state store regardless of
-    the quantifier, with consecutive-run semantics.
+    Every expanded step is one more ``(1, 1)`` leg of the same NFA
+    operator, so state stays one buffer per key; the match count, though,
+    grows with the number of ordered n-subsets inside the window.  For
+    variable bounds A{m,n} / A{m,}, with consecutive-run semantics, use
+    ``cep_nfa.match_quantified(_stream)``.
     """
     if n < 1:
         raise ValueError("repeat() needs n >= 1")

@@ -200,7 +200,6 @@ def _merge_scalar(kind: str, cur_val, cur_n: int, batch_vals: list, is_float: bo
 
 
 COLLECTION_KINDS = ("topk", "topk_distinct", "collect_list", "collect_set")
-SCALAR_KINDS = ("count", "sum", "min", "max", "avg")
 
 
 def _bounded_func(specs: list[dict], n_keys: int, windowed: bool) -> tuple:
@@ -502,7 +501,7 @@ def bounded_agg_changelog(
     # plain grouped table never closes a group, so it runs without timeout
     out = apply_keyed(
         proj.groupBy(*[F.col(c) for c in group_cols]),
-        out_schema, "bounded_upsert", layout, fold, flush, event_time=windowed,
+        out_schema, "bounded_upsert", layout, fold, flush, "update", event_time=windowed,
     )
 
     sel: list[Column] = []

@@ -46,10 +46,12 @@ _STATE_NODE_RE = re.compile(
 )
 _STREAM_JOIN_RE = re.compile(r"~Join (\w+)")
 
-# The pandas state kernels the engine compiles from a builder EMIT CHANGES
-# query.  Their event-time timeout only evicts state whose final upsert the
-# changelog already holds (sessions.py and bounded.py, ``hasTimedOut``).
-_EVICT_ONLY_KERNELS = frozenset({"session_upsert", "bounded_upsert"})
+# The pandas state kernels whose event-time timeout only evicts: the
+# builder's EMIT CHANGES kernels, whose changelog already holds a key's
+# final upsert (sessions.py and bounded.py, ``hasTimedOut``), and the CEP
+# NFA's on-completion rule, which emits every match in the data batch that
+# completes it (operators/cep_nfa.py ``_eager_func``).
+_EVICT_ONLY_KERNELS = frozenset({"session_upsert", "bounded_upsert", "nfa_eager"})
 
 _NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
 _SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
@@ -119,14 +121,16 @@ def keeps_no_data_batch(plan: str, output_mode: str) -> bool:
     when some operator emits rows as the watermark passes:
 
     * a streaming aggregate under append output mode (EMIT FINAL windows);
-    * a stream join that is not inner (outer null-extension, CEP negation;
-      a stateless stream-static join never gets a no-data batch anyway);
-    * a pandas state kernel with an event-time timeout (the CEP NFA flushes
-      its matches there), except the builder's EMIT CHANGES kernels, whose
-      timeout only evicts.
+    * a stream join that is not inner (outer null-extension; a stateless
+      stream-static join never gets a no-data batch anyway);
+    * a pandas state kernel with an event-time timeout (the CEP NFA's
+      anchor-close rule flushes its matches there), except the builder's
+      EMIT CHANGES kernels and the NFA's on-completion rule, whose timeout
+      only evicts.
 
     Everything else — update-mode aggregates, inner stream-stream joins,
-    watermark deduplication — has emitted every row in the data batches.
+    monotone CEP patterns, watermark deduplication — has emitted every row
+    in the data batches.
     """
     if output_mode == "append" and "~Aggregate" in plan:
         return True

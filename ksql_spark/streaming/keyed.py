@@ -46,14 +46,19 @@ def apply_keyed(
     layout,
     fold: Callable,
     flush: Callable,
+    output_mode: str,
     event_time: bool = True,
 ) -> DataFrame:
-    """Run ``fold`` / ``flush`` per key of ``grouped`` in update mode.
+    """Run ``fold`` / ``flush`` per key of ``grouped``.
 
     ``name`` is the function name the plan shows (the engine's run policy
     reads it); ``layout`` is a tuple of plain values whose ``repr`` is
-    stable.  With ``event_time=False`` the operator has no timeout and
-    ``flush`` gets ``wm_us=None`` and must return no deadline.
+    stable.  ``output_mode`` is the kernel's: ``"update"`` for one that
+    re-emits a key's changed rows (sessions, bounded aggregates),
+    ``"append"`` for one that emits every row exactly once (the CEP NFA).
+    Spark requires the query to run in the same mode, and the engine's
+    resume guard reads it.  With ``event_time=False`` the operator has no
+    timeout and ``flush`` gets ``wm_us=None`` and must return no deadline.
     """
 
     def run(key, pdf_iter, state: GroupState):
@@ -86,6 +91,6 @@ def apply_keyed(
         run,
         out_schema,
         StructType([StructField(f"{name}_{tag}", BinaryType())]),
-        "update",
+        output_mode,
         GroupStateTimeout.EventTimeTimeout if event_time else GroupStateTimeout.NoTimeout,
     )

@@ -324,7 +324,7 @@ def session_changelog(
     # whose timeout only evicts, from one that emits on the watermark
     out = apply_keyed(
         proj.groupBy(*[F.col(f"__k{i}") for i in range(len(key_cols))]),
-        out_schema, "session_upsert", layout, fold, flush,
+        out_schema, "session_upsert", layout, fold, flush, "update",
     )
     sel = [
         F.col("window_start"),

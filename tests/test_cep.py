@@ -82,8 +82,8 @@ def test_rejects_bad_args(spark, events):
 
 
 def test_streaming_matches_batch(spark, events, tmp_path):
-    """The SAME operator compiles to a watermarked append-mode stream-stream
-    join: streaming result == batch result."""
+    """The SAME operator runs on a watermarked stream (the NFA kernel in
+    append mode): streaming result == batch result."""
     import os
 
     from ksql_spark.streaming.sink import ExactlyOnceParquetSink
@@ -173,7 +173,7 @@ def test_negation_boundary_exclusive(spark, events):
 
 def test_negation_duplicate_absent_events_yield_one_suppression(spark, events):
     """Two X events inside the same interval must not duplicate surviving
-    rows (left-outer + IS NULL semantics)."""
+    rows (an absent leg only filters)."""
     xs = spark.createDataFrame(
         [(100, 1, "X", "2024-01-01 00:00:05"), (102, 1, "X", "2024-01-01 00:00:06")],
         "event_id bigint, user_id bigint, event_type string, ts_s string",
@@ -193,9 +193,8 @@ def test_negation_duplicate_absent_events_yield_one_suppression(spark, events):
 
 
 def _wm_sentinels(spark, far_s: str):
-    """One far-future sentinel per leg type on never-joining keys: each leg's
-    filter is pushed below its watermark node, so every leg needs its own
-    watermark-advancing row (global watermark = min over legs)."""
+    """Far-future sentinel rows on keys that never match: they move the
+    watermark past every window, so matches that wait for it are emitted."""
     return spark.createDataFrame(
         [(-1, -1, "A", far_s), (-2, -2, "B", far_s), (-3, -3, "X", far_s)],
         "event_id bigint, user_id bigint, event_type string, ts_s string",
@@ -205,9 +204,9 @@ def _wm_sentinels(spark, far_s: str):
 
 
 def test_streaming_negation_matches_batch(spark, events, tmp_path):
-    """Negation on a stream: the absent leg lowers to a watermark-evictable
-    left-outer join whose null-side flushes once the watermark passes the
-    absent window — result equals the batch recompute."""
+    """Negation on a stream: a match with an absent leg is emitted once the
+    watermark passes its first step's window — result equals the batch
+    recompute."""
     from ksql_spark.streaming.sink import ExactlyOnceParquetSink
 
     ev = _with_blocker(spark, events)
@@ -244,7 +243,7 @@ def test_streaming_negation_matches_batch(spark, events, tmp_path):
 
 def test_streaming_negation_kill_resume_exactly_once(spark, events, tmp_path):
     """Kill the negation query mid-stream, resume from checkpoint: every
-    surviving match emitted exactly once (outer-join state recovered)."""
+    surviving match emitted exactly once (NFA state recovered)."""
     import time
 
     from ksql_spark.streaming.sink import ExactlyOnceParquetSink
@@ -305,7 +304,7 @@ def test_streaming_negation_kill_resume_exactly_once(spark, events, tmp_path):
 
 def test_streaming_cep_kill_resume_exactly_once(spark, events, tmp_path):
     """Stop the streaming pattern query mid-stream, resume from checkpoint:
-    every match emitted exactly once (append-mode join state recovered)."""
+    every match emitted exactly once (the NFA's buffered events recovered)."""
     import time
 
     from ksql_spark.streaming.sink import ExactlyOnceParquetSink
@@ -438,10 +437,8 @@ def test_streaming_optional_matches_batch(spark, events, tmp_path):
 
 
 def test_streaming_two_optional_legs_matches_batch(spark, events, tmp_path):
-    """ADVICE r4: each optional-leg join adds a watermarked {name}_ts to the
-    left side; without re-stripping the event-time tag the SECOND optional
-    leg's outer join fails at query start (two event-time columns on the
-    left).  Two optional legs must start, run, and equal the batch result."""
+    """Two optional legs on a stream must start, run, and equal the batch
+    result (their rows multiply)."""
     from ksql_spark.streaming.sink import ExactlyOnceParquetSink
 
     extra = spark.createDataFrame(
@@ -490,7 +487,7 @@ def test_streaming_two_optional_legs_matches_batch(spark, events, tmp_path):
 
 
 def test_repeat_quantifier_expands_to_chained_steps(spark, events):
-    """A{2} then B == three chained steps with relaxed contiguity."""
+    """A{2} then B == three steps with relaxed contiguity."""
     from ksql_spark.operators.cep import repeat
 
     got = sorted(

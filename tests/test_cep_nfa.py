@@ -202,7 +202,7 @@ def _run_stream(spark, schema, path, tmp_path, m, n, within, ckpt="ckpt", max_fi
     sink = ExactlyOnceParquetSink(str(tmp_path / "sink"))
     q = (
         out.writeStream.foreachBatch(sink)
-        .outputMode("update")
+        .outputMode("append")
         .option("checkpointLocation", str(tmp_path / ckpt))
         .trigger(availableNow=True)
         .start()
@@ -382,7 +382,7 @@ def test_streaming_three_leg_pattern_matches_batch(spark, rand_events, tmp_path)
     sink = ExactlyOnceParquetSink(str(tmp_path / "sink"))
     q = (
         out.writeStream.foreachBatch(sink)
-        .outputMode("update")
+        .outputMode("append")
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
@@ -613,9 +613,9 @@ def test_batch_pattern_seven_optional_legs_equals_kernel(spark, rand_events, mon
 
 
 def test_batch_negation_equals_chained_join(spark, rand_events):
-    """Shared-fixture pin against the cep.py chained-join lowering: for a
-    2-step pattern the NFA's between-leg negation and match_sequence's
-    between-first-and-last negation coincide."""
+    """Shared-fixture pin of the two negation spellings: for a 2-step
+    pattern the NFA's positional (0, 0) leg and match_sequence's absent
+    span leg (between the first and last step) coincide."""
     from ksql_spark.operators.cep import match_sequence
     from ksql_spark.operators.cep_nfa import match_pattern
 
@@ -659,7 +659,7 @@ def test_streaming_pattern_negation_optional_matches_batch(spark, rand_events, t
     sink = ExactlyOnceParquetSink(str(tmp_path / "sink"))
     q = (
         out.writeStream.foreachBatch(sink)
-        .outputMode("update")
+        .outputMode("append")
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
@@ -712,7 +712,7 @@ def test_streaming_string_ids(spark, tmp_path):
     sink = ExactlyOnceParquetSink(str(tmp_path / "sink"))
     q = (
         out.writeStream.foreachBatch(sink)
-        .outputMode("update")
+        .outputMode("append")
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
@@ -859,7 +859,7 @@ def test_streaming_first_mode_matches_batch(spark, rand_events, tmp_path):
     sink = ExactlyOnceParquetSink(str(tmp_path / "sink"))
     q = (
         out.writeStream.foreachBatch(sink)
-        .outputMode("update")
+        .outputMode("append")
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
@@ -1021,7 +1021,7 @@ def test_streaming_skip_matches_batch(spark, rand_events, tmp_path):
     sink = ExactlyOnceParquetSink(str(tmp_path / "sink"))
     q = (
         out.writeStream.foreachBatch(sink)
-        .outputMode("update")
+        .outputMode("append")
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
@@ -1067,7 +1067,7 @@ def test_streaming_skip_kill_resume_exactly_once(spark, rand_events, tmp_path):
         sink = ExactlyOnceParquetSink(str(tmp_path / "sink"))
         q = (
             out.writeStream.foreachBatch(sink)
-            .outputMode("update")
+            .outputMode("append")
             .option("checkpointLocation", str(tmp_path / "ckpt"))
             .trigger(availableNow=True)
             .start()
@@ -1216,7 +1216,7 @@ def test_streaming_skip_to_next_matches_batch(spark, rand_events, tmp_path):
     sink = ExactlyOnceParquetSink(str(tmp_path / "sink"))
     q = (
         out.writeStream.foreachBatch(sink)
-        .outputMode("update")
+        .outputMode("append")
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
@@ -1296,7 +1296,7 @@ def test_null_keys_never_match_batch_equals_streaming(spark, rand_events, tmp_pa
     sink = ExactlyOnceParquetSink(str(tmp_path / "sink"))
     q = (
         out.writeStream.foreachBatch(sink)
-        .outputMode("update")
+        .outputMode("append")
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
@@ -1337,7 +1337,7 @@ def test_streaming_watermark_moves_on_non_leg_events(spark, tmp_path):
     q = (
         match_pattern_stream(src, legs, within_seconds=60)
         .writeStream.foreachBatch(sink)
-        .outputMode("update")
+        .outputMode("append")
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()

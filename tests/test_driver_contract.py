@@ -38,4 +38,4 @@ def test_sentinel_staging_names_an_unknown_events_column(spark, tmp_path):
     })
     pq.write_table(table, str(tmp_path / "events.parquet"))
     with pytest.raises(SchemaError, match="'region'"):
-        entry._stage_events_sentinels(spark, str(tmp_path), str(tmp_path / "work"), ["view"])
+        entry._stage_events_sentinels(spark, str(tmp_path), str(tmp_path / "work"))

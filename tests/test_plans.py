@@ -259,36 +259,14 @@ def test_topk_twolevel_value_concentrated_hot_key(spark, sf):
         spark.conf.unset("spark.ksql.topk.twolevelThresholdBytes")
 
 
-def test_cep_plan_no_cartesian_and_bounded(spark, sf):
-    """CEP joins must stay key-equi (no cartesian/BNL) with the time bound
-    pushed into the join condition."""
-    from pyspark.sql import functions as F
-
-    from ksql_spark.operators.cep import match_sequence
-
-    ev = spark.range(2000).select(
-        Fn.col("id").alias("event_id"),
-        (Fn.col("id") % 50).alias("user_id"),
-        Fn.element_at(
-            Fn.array(Fn.lit("A"), Fn.lit("B")), (Fn.pmod(Fn.col("id"), 2) + 1).cast("int")
-        ).alias("event_type"),
-        Fn.timestamp_seconds(Fn.col("id") * 10).alias("ts"),
-    )
-    plan = plan_of(
-        match_sequence(
-            ev,
-            [("a", Fn.col("event_type") == "A"), ("b", Fn.col("event_type") == "B")],
-            within_seconds=300,
-        )
-    )
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
-@pytest.mark.parametrize("mode", ["all", "first", "skip_to_next", "skip_past_last"])
+@pytest.mark.parametrize(
+    "mode", ["all", "first", "skip_to_next", "skip_past_last", "match_sequence"]
+)
 def test_batch_cep_pattern_is_one_shuffle_and_one_kernel_pass(spark, mode):
-    """Batch match_pattern, in every mode and with every leg kind, plans one
-    hash exchange on the key and one MapInPandas — no join, no window."""
+    """Batch match_pattern, in every mode and with every leg kind, and
+    cep.match_sequence with absent and optional legs, plan one hash
+    exchange on the key and one MapInPandas — no join, no window."""
+    from ksql_spark.operators.cep import match_sequence
     from ksql_spark.operators.cep_nfa import match_pattern
 
     ev = spark.range(2000).select(
@@ -303,7 +281,14 @@ def test_batch_cep_pattern_is_one_shuffle_and_one_kernel_pass(spark, mode):
         ("n", Fn.col("kind") == 2, 0, 0),
         ("b", Fn.col("kind") == 2, 1, 1),
     ]
-    plan = plan_of(match_pattern(ev, legs, within_seconds=300, mode=mode))
+    if mode == "match_sequence":
+        df = match_sequence(
+            ev, [("a", Fn.col("kind") == 0), ("b", Fn.col("kind") == 2)], within_seconds=300,
+            absent=[("n", Fn.col("kind") == 1)], optional=[("o", Fn.col("kind") == 1)],
+        )
+    else:
+        df = match_pattern(ev, legs, within_seconds=300, mode=mode)
+    plan = plan_of(df)
     tree = plan.split("\n\n")[0]  # the operator tree, one line per node
     assert tree.count("Exchange") == 1
     assert plan.count("hashpartitioning(__k") == 1

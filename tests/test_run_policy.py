@@ -85,14 +85,17 @@ def _shapes(spark, cat):
         "native session_window in append mode": (
             _builder(spark, cat, _windowed(n, session, emit_final=True)), "append", True),
         "inner stream-stream join": (_builder(spark, cat, inner_join), "append", False),
-        "left-outer CEP negation": (
+        "CEP negation (NFA, emits on anchor close)": (
             match_sequence(_events(cat), [("u", user), ("a", asst)], within_seconds=600,
                            absent=[("x", Fn.col("event_type") == "tool")]),
             "append", True),
+        "monotone CEP sequence (NFA, emits on completion)": (
+            match_sequence(_events(cat), [("u", user), ("a", asst)], within_seconds=600),
+            "append", False),
         "NFA pattern kernel": (
             match_pattern_stream(_events(cat), [("u", user, 1, 2), ("a", asst, 1, 1)],
                                  within_seconds=600),
-            "update", True),
+            "append", True),
         "builder session EMIT CHANGES": (
             _builder(spark, cat, _windowed(n, session)), "update", False),
         "builder windowed bounded aggregate, EMIT CHANGES": (

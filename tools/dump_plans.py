@@ -138,11 +138,11 @@ def main() -> None:
         "# Streaming analyzed plans (operator frames)",
         "",
         "The NFA quantifier/negation/first/skip modes, the salted",
-        "stream-stream join and the n=4 chained repeat start through",
+        "stream-stream join and the n=4 repeat start through",
         "start_stream, not PersistentQueryManager; their analyzed plans",
         "(pre-execution) show the single FlatMapGroupsInPandasWithState",
-        "store, the (key, __salt) join keys, and the 4-deep chained-join",
-        "shape respectively.  first/skip share the all-matches plan shape —",
+        "store, the (key, __salt) join keys, and the on-completion NFA store",
+        "respectively.  first/skip share the all-matches plan shape —",
         "the mode changes only the kernel's selection policy and shrinks",
         "per-key state (done tombstone / advancing frontier).",
         "",
@@ -165,7 +165,7 @@ def main() -> None:
             src, ("a", Fn.col("event_type") == "view", 2, 3),
             ("b", Fn.col("event_type") == "purchase"), within_seconds=86400,
         ),
-        "streaming_cep_repeat4 (chained joins)": match_sequence(
+        "streaming_cep_repeat4 (NFA, emits on completion)": match_sequence(
             src, [*repeat("a", Fn.col("event_type") == "view", 4),
                   ("b", Fn.col("event_type") == "purchase")],
             within_seconds=172800,
