@@ -265,8 +265,9 @@ def compile_select(
 
     # session windows under EMIT CHANGES need the custom stateful operator:
     # Spark's session_window aggregation rejects update mode, so the
-    # keyed-state session kernel (streaming/sessions.py) takes over —
-    # it applies its own watermark on the projected event time
+    # keyed-state session kernel (streaming/sessions.py, on the aggregate
+    # slots it shares with streaming/bounded.py) takes over — it applies
+    # its own watermark on the projected event time
     session_changes = (
         streaming
         and left_is_stream
@@ -277,8 +278,8 @@ def compile_select(
         # the session changelog path cannot thread HAVING through the
         # stateful operator (a retracted-then-refiltered changelog is not a
         # well-defined upsert stream); reject rather than silently emit
-        # unfiltered rows — same policy as the non-algebraic-aggregate check
-        # in streaming/sessions.agg_specs_from_fields
+        # unfiltered rows — same policy as the non-mergeable-aggregate check
+        # in streaming/sessions.session_changelog
         raise AnalysisError(
             "HAVING is not supported with SESSION windows under EMIT CHANGES; "
             "use EMIT FINAL or a pull query"

@@ -31,6 +31,13 @@ state's layout tag covers each aggregate's kind, bound, buckets and input
 type plus the key count and windowing, so a resume under another TOPK
 bound or aggregate list is refused.
 
+The scalar slots — the spec builder ``_spec_of``, the masked projection
+``masked_inputs``, one ``(value, n)`` slot per aggregate merged by
+``combine``, and the output lowering ``emit_slots`` / ``slot_column`` —
+are the one aggregate-slot algebra the session kernel
+(``streaming/sessions.py``) runs too, so both keep batch's NULL/NaN
+contract the same way.
+
 Scale notes: one shuffle on (window, keys) — identical to the native agg;
 state per group is O(k) / O(limit) / O(capacity) regardless of group size;
 rows cross the Python boundary as Arrow batches (no per-row UDF).
@@ -42,6 +49,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
+    DoubleType,
     LongType,
     StringType,
     StructField,
@@ -162,44 +170,82 @@ def hist_top_buckets(hkeys: list, hcnts: list, buckets: int) -> tuple[list, list
 # ---------------------------------------------------------------------------
 
 
-def _merge_scalar(kind: str, cur_val, cur_n: int, batch_vals: list, is_float: bool = True):
-    """O(1)-state scalar merges (count/sum/min/max/avg-sum).
+def combine(kind: str, a: tuple, b: tuple, is_float: bool) -> tuple:
+    """Merge two ``(value, n)`` aggregate slots of a scalar ``kind``.
 
-    ``batch_vals`` holds the batch's NON-NULL inputs (per-agg mask applied);
-    NaN ordering for min/max matches Spark (NaN is the greatest double).
-    Integral SUM **and AVG** accumulate the exact int sum (ADVICE r4: a
-    double AVG accumulator diverges from Spark's exact long-sum average
-    above 2^53) and raise on int64 overflow — the same failure the native
-    ANSI-mode (Spark 4 default) long sum produces, but with a clear message
-    instead of an Arrow state-store type error.
+    This is the one scalar merge of both keyed aggregate kernels: the
+    bounded fold adds a batch value by value, the session kernel merges
+    two sessions' slots.  ``n`` counts the non-NULL inputs the slot has
+    seen; ``value`` is ``None`` while ``n == 0`` and always for COUNT (its
+    result is ``n``).  Merges are associative and commutative, so any
+    split of the input folds to the same slot (exactly for integral input;
+    for doubles up to float rounding):
+
+      * NaN is the greatest double for MIN/MAX (Spark's ordering) and
+        propagates through SUM/AVG;
+      * integral SUM **and AVG** keep the exact Python-int sum (ADVICE r4:
+        a double accumulator drifts above 2^53) and raise on int64
+        overflow — the failure the native ANSI-mode (Spark 4 default) long
+        sum produces, with a clear message instead of an Arrow type error.
     """
-    n = cur_n + len(batch_vals)
-    if kind == "count":
-        return None, n
+    va, na = a
+    vb, nb = b
+    n = na + nb
+    if kind == "count" or not nb:
+        return va, n
+    if not na:
+        return vb, n
     if kind in ("sum", "avg"):
-        s = cur_val
-        for v in batch_vals:
-            v = float(v) if is_float else int(v)
-            s = v if s is None else s + v
-        if not is_float and s is not None and not (-(1 << 63) <= s < (1 << 63)):
+        s = va + vb
+        if not is_float and not (-(1 << 63) <= s < (1 << 63)):
             raise ArithmeticError(
                 f"[ARITHMETIC_OVERFLOW] long overflow in streaming {kind.upper()} "
                 f"state (ANSI mode matches the native lowering); cast the input "
                 f"to DOUBLE or aggregate a narrower window"
             )
         return s, n
-    # min / max
-    vals = list(batch_vals)
-    if cur_n:
-        vals.append(cur_val)
-    if not vals:
-        return cur_val, n
+    if is_float and (va != va or vb != vb):
+        # NaN is the greatest double (Spark's ordering)
+        lo, hi = (vb, va) if va != va else (va, vb)
+        return (hi if kind == "max" else lo), n
     if kind == "max":
-        return max(vals, key=_sort_key), n
-    return min(vals, key=_sort_key), n
+        return (vb if vb > va else va), n
+    return (vb if vb < va else va), n
 
 
+def _merge_scalar(kind: str, cur_val, cur_n: int, batch_vals: list, is_float: bool = True):
+    """Fold a batch's NON-NULL inputs (per-agg mask applied) into a slot,
+    in arrival order, through :func:`combine`."""
+    slot = (cur_val, cur_n)
+    if kind == "count":
+        return combine(kind, slot, (None, len(batch_vals)), is_float)
+    for v in batch_vals:
+        slot = combine(kind, slot, (v, 1), is_float)
+    return slot
+
+
+SCALAR_KINDS = ("count", "sum", "min", "max", "avg")
 COLLECTION_KINDS = ("topk", "topk_distinct", "collect_list", "collect_set")
+
+
+def emit_slots(data: dict, i: int, kind: str, slots: list) -> None:
+    """Ship scalar aggregate ``i``'s slots, one per output row, into the
+    kernel's output frame ``data``: COUNT as ``__v{i}`` = n; the others as
+    the value ``__v{i}`` plus the input count ``__n{i}``.  A NaN value
+    cannot cross the Arrow output boundary (from_pandas turns it into
+    null), so it ships as None and :func:`slot_column` restores it."""
+    import pandas as pd  # noqa: PLC0415 — executor-side import
+
+    ns = [n for _, n in slots]
+    if kind == "count":
+        data[f"__v{i}"] = ns
+        return
+    # object dtype: a mixed int/None column must NOT collapse to float64
+    # (Arrow converts object int+None to exact int64)
+    data[f"__v{i}"] = pd.Series(
+        [None if (v is None or _is_nan(v)) else v for v, _ in slots], dtype=object
+    )
+    data[f"__n{i}"] = ns
 
 
 def _bounded_func(specs: list[dict], n_keys: int, windowed: bool) -> tuple:
@@ -241,14 +287,8 @@ def _bounded_func(specs: list[dict], n_keys: int, windowed: bool) -> tuple:
                     [[v for v in vals_list if not _is_nan(v)]], dtype=object
                 )
                 data[f"__nan{ai}"] = [nan_ct]
-            elif kind == "count":
-                data[f"__v{ai}"] = [out[1]]
-            else:  # sum / min / max / avg: value (None when NaN/absent) + n
-                v, n = out
-                data[f"__v{ai}"] = pd.Series(
-                    [None if (v is None or _is_nan(v)) else v], dtype=object
-                )
-                data[f"__n{ai}"] = [n]
+            else:
+                emit_slots(data, ai, kind, [out])
         return pd.DataFrame(data)
 
     def new_slot(spec: dict):
@@ -282,9 +322,7 @@ def _bounded_func(specs: list[dict], n_keys: int, windowed: bool) -> tuple:
                     counts[sv] = counts.get(sv, 0) + 1
                 slots[ai] = merge_spacesaving(*slots[ai], counts, spec["bound"])
             else:
-                slots[ai] = _merge_scalar(
-                    kind, slots[ai][0], slots[ai][1], batch, spec.get("is_float", True)
-                )
+                slots[ai] = _merge_scalar(kind, *slots[ai], batch, spec["is_float"])
         return slots
 
     def flush(key, slots, wm_us, timed_out: bool):
@@ -310,39 +348,51 @@ def _bounded_func(specs: list[dict], n_keys: int, windowed: bool) -> tuple:
     return fold, flush
 
 
-def _spec_of(agg, collect_limit: int, hist_capacity: int | None) -> dict:
+_NUMERIC = ("byte", "short", "integer", "long", "float", "double")
+
+
+def _spec_of(
+    agg, vt, collect_limit: int = DEFAULT_COLLECT_LIMIT, hist_capacity: int | None = None
+) -> dict:
+    """The picklable spec {kind, bound, buckets, is_float} of one aggregate
+    over input type ``vt`` — the input contract of both keyed aggregate
+    kernels.  SUM/AVG need an integral or floating-point input; COUNT and
+    MIN/MAX take any orderable type, as batch does."""
     from ..expr import Avg, Count, Max, Min, Sum
 
+    spec = {"bound": 0, "buckets": 0, "is_float": vt.typeName() in ("float", "double")}
     if isinstance(agg, TopKDistinct):
-        return {"kind": "topk_distinct", "bound": agg.k, "buckets": 0}
+        return {**spec, "kind": "topk_distinct", "bound": agg.k}
     if isinstance(agg, TopK):
-        return {"kind": "topk", "bound": agg.k, "buckets": 0}
+        return {**spec, "kind": "topk", "bound": agg.k}
     if isinstance(agg, Histogram):
         return {
+            **spec,
             "kind": "histogram",
             "bound": hist_capacity or max(agg.buckets * 5, 100),
             "buckets": agg.buckets,
         }
     if isinstance(agg, CollectSet):
-        return {"kind": "collect_set", "bound": collect_limit, "buckets": 0}
+        return {**spec, "kind": "collect_set", "bound": collect_limit}
     if isinstance(agg, CollectList):
         if getattr(agg, "order_by", None):
             raise AnalysisError(
                 "COLLECT_LIST with an explicit order key is not supported in the "
                 "bounded streaming path; use EMIT FINAL or a pull query"
             )
-        return {"kind": "collect_list", "bound": collect_limit, "buckets": 0}
-    if isinstance(agg, Count):
-        return {"kind": "count", "bound": 0, "buckets": 0}
-    if isinstance(agg, Sum):
-        return {"kind": "sum", "bound": 0, "buckets": 0}
-    if isinstance(agg, Min):
-        return {"kind": "min", "bound": 0, "buckets": 0}
-    if isinstance(agg, Max):
-        return {"kind": "max", "bound": 0, "buckets": 0}
-    if isinstance(agg, Avg):
-        return {"kind": "avg", "bound": 0, "buckets": 0}
-    raise AnalysisError(f"unsupported bounded aggregate {type(agg).__name__}")
+        return {**spec, "kind": "collect_list", "bound": collect_limit}
+    if isinstance(agg, (Sum, Avg)) and vt.typeName() not in _NUMERIC:
+        raise AnalysisError(
+            f"{type(agg).__name__.upper()} requires a numeric (integral or "
+            f"floating-point) input, got {vt.simpleString()}"
+        )
+    for cls, kind in ((Count, "count"), (Sum, "sum"), (Min, "min"), (Max, "max"), (Avg, "avg")):
+        if isinstance(agg, cls):
+            return {**spec, "kind": kind}
+    raise AnalysisError(
+        f"{type(agg).__name__} has no keyed-state streaming lowering; use EMIT "
+        "FINAL or a pull query"
+    )
 
 
 def _null_default(dtype) -> Column:
@@ -364,6 +414,66 @@ def _null_default(dtype) -> Column:
     if name == "binary":
         return F.lit(b"")
     return F.lit(0).cast(dtype)
+
+
+def masked_inputs(df: DataFrame, aggs) -> tuple[list[Column], list]:
+    """The pre-shuffle projection of every aggregate's input over ``df``,
+    and the input types.
+
+    Aggregates skip NULL inputs, but a row may be NULL for one input and
+    not another, so aggregate ``i`` gets its own NULL mask ``__m{i}``; its
+    value ``__a{i}`` is coalesced to a type-true default, so the
+    Arrow->pandas transfer keeps exact dtypes (a nullable int64 batch
+    would otherwise arrive as float64 and round ids above 2^53).  NaN is a
+    value, not NULL.  HISTOGRAM keys must match the batch lowering
+    bit-for-bit: Spark's cast-to-string, not Python str(), so the cast
+    happens JVM-side.
+    """
+    ins: list[Column] = []
+    for agg in aggs:
+        c = agg.arg.to_column()
+        ins.append(c.cast("string") if isinstance(agg, Histogram) else c)
+    if not ins:
+        return [], []
+    schema = df.select(*[c.alias(f"__a{i}") for i, c in enumerate(ins)]).schema
+    types = [f.dataType for f in schema]
+    cols: list[Column] = []
+    for i, (c, vt) in enumerate(zip(ins, types)):
+        cols += [c.isNull().alias(f"__m{i}"), F.coalesce(c, _null_default(vt)).alias(f"__a{i}")]
+    return cols, types
+
+
+def _slot_type(spec: dict, vt):
+    # SUM widens integrals to long (Spark sum semantics); AVG over
+    # integrals keeps the EXACT long sum and casts to double only at the
+    # final division (ADVICE r4); MIN/MAX keep the input type
+    if spec["kind"] in ("sum", "avg"):
+        return DoubleType() if spec["is_float"] else LongType()
+    return vt
+
+
+def slot_fields(i: int, spec: dict, vt) -> list[StructField]:
+    """The kernel output fields :func:`emit_slots` fills for scalar
+    aggregate ``i`` over input type ``vt``."""
+    if spec["kind"] == "count":
+        return [StructField(f"__v{i}", LongType())]
+    return [StructField(f"__v{i}", _slot_type(spec, vt)), StructField(f"__n{i}", LongType())]
+
+
+def slot_column(i: int, spec: dict, vt) -> Column:
+    """Scalar aggregate ``i``'s result from its shipped slot: NULL with no
+    input, NaN restored (a float value that crossed the boundary as null
+    with n > 0 inputs can only be NaN), AVG = sum / n as a double."""
+    v = F.col(f"__v{i}")
+    if spec["kind"] == "count":
+        return v
+    n = F.col(f"__n{i}")
+    st = _slot_type(spec, vt)
+    if spec["is_float"]:
+        v = F.coalesce(v, F.lit(float("nan")).cast(st))
+    if spec["kind"] == "avg":
+        v, st = v.cast("double") / n, DoubleType()
+    return F.when(n > 0, v).otherwise(F.lit(None).cast(st))
 
 
 def bounded_agg_changelog(
@@ -389,12 +499,13 @@ def bounded_agg_changelog(
     Output: [window_start, window_end,] <keys...>, <agg outputs...> — the
     same shape as the native windowed changelog.
     """
-    from pyspark.sql.types import DoubleType
-
     if not isinstance(aggs, (list, tuple)):
         aggs = [aggs]
     aggs = list(aggs)
-    specs = [_spec_of(a, collect_limit, hist_capacity) for a in aggs]
+    if not aggs:
+        raise AnalysisError("bounded_agg_changelog requires at least one aggregate")
+    agg_cols, val_types = masked_inputs(df, aggs)
+    specs = [_spec_of(a, vt, collect_limit, hist_capacity) for a, vt in zip(aggs, val_types)]
 
     windowed = window is not None
     if windowed and ts_col is None:
@@ -415,29 +526,12 @@ def bounded_agg_changelog(
     else:
         drop_dummy = False
     cols += [c.alias(f"__k{i}") for i, (_, c) in enumerate(keys)]
+    cols += agg_cols
 
-    # per-agg input + null mask.  Aggregates skip NULL inputs, but with
-    # multiple aggs a row may be null for one input and not another, so the
-    # old row-level isNotNull filter becomes a per-agg MASK; the value
-    # column is coalesced to a type-true default so the Arrow->pandas
-    # transfer keeps exact dtypes (a nullable int64 batch would otherwise
-    # arrive as float64 and corrupt ids above 2^53).  HISTOGRAM keys must
-    # match the batch lowering bit-for-bit: Spark's cast-to-string, not
-    # Python str(), so the cast happens JVM-side.
-    raw_inputs: list[Column] = []
-    for i, agg in enumerate(aggs):
-        agg_in = agg.arg.to_column()
-        if isinstance(agg, Histogram):
-            agg_in = agg_in.cast("string")
-        raw_inputs.append(agg_in)
-        cols.append(agg_in.isNull().alias(f"__m{i}"))
-        cols.append(F.coalesce(agg_in, _null_default(df.select(agg_in.alias("x")).schema["x"].dataType)).alias(f"__a{i}"))
-
-    if not aggs:
-        raise AnalysisError("bounded_agg_changelog requires at least one aggregate")
-    keep = raw_inputs[0].isNotNull()
-    for c in raw_inputs[1:]:
-        keep = keep | c.isNotNull()
+    # a row whose every input is NULL contributes to no aggregate
+    keep = ~F.col("__m0")
+    for i in range(1, len(aggs)):
+        keep = keep | ~F.col(f"__m{i}")
     proj = df.select(*cols).filter(keep)
     if windowed:
         proj = proj.select(
@@ -447,9 +541,6 @@ def bounded_agg_changelog(
             *proj.columns[2:],
         )
 
-    val_types = [proj.schema[f"__a{i}"].dataType for i in range(len(aggs))]
-    for spec, vt in zip(specs, val_types):
-        spec["is_float"] = vt.typeName() in ("double", "float")
     key_names = [f"__k{i}" for i in range(len(keys))]
     group_cols = (["__ws", "__we"] if windowed else []) + key_names
 
@@ -472,21 +563,8 @@ def bounded_agg_changelog(
                 StructField(f"__out{i}", ArrayType(vt)),
                 StructField(f"__nan{i}", LongType()),
             ]
-        elif kind == "count":
-            out_fields += [StructField(f"__v{i}", LongType())]
         else:
-            # SUM widens integrals to long (Spark sum semantics); AVG over
-            # integrals keeps the EXACT long sum in state and casts to
-            # double only at the final division — one rounding, matching
-            # the native Average(Long) bit-for-bit above 2^53 (ADVICE r4)
-            if kind in ("sum", "avg"):
-                st = DoubleType() if spec["is_float"] else LongType()
-            else:
-                st = vt
-            out_fields += [
-                StructField(f"__v{i}", st),
-                StructField(f"__n{i}", LongType()),
-            ]
+            out_fields += slot_fields(i, spec, vt)
     out_schema = StructType(win_fields + key_fields + out_fields)
 
     fold, flush = _bounded_func(specs, len(keys), windowed)
@@ -533,32 +611,6 @@ def bounded_agg_changelog(
                 sel.append(rebuilt.alias(name))
             else:
                 sel.append(F.col(f"__out{i}").alias(name))
-        elif kind == "count":
-            sel.append(F.col(f"__v{i}").alias(name))
-        elif kind == "avg":
-            base = F.col(f"__v{i}")
-            if spec["is_float"]:
-                # float NaN crossed the boundary as null; n>0 means it IS NaN
-                base = F.coalesce(base, F.lit(float("nan")))
-            sel.append(
-                F.when(F.col(f"__n{i}") > 0, base.cast("double") / F.col(f"__n{i}"))
-                .otherwise(F.lit(None).cast("double"))
-                .alias(name)
-            )
-        else:  # sum / min / max: NULL when no contributions, NaN restored
-            # a float NaN scalar crossed the boundary as null (from_pandas);
-            # with n>0 contributions the value can only be null if it IS NaN
-            res_type = (
-                (DoubleType() if spec["is_float"] else LongType())
-                if kind == "sum"
-                else vt
-            )
-            base = F.col(f"__v{i}")
-            if spec["is_float"]:
-                base = F.coalesce(base, F.lit(float("nan")).cast(res_type))
-            sel.append(
-                F.when(F.col(f"__n{i}") > 0, base)
-                .otherwise(F.lit(None).cast(res_type))
-                .alias(name)
-            )
+        else:
+            sel.append(slot_column(i, spec, vt).alias(name))
     return out.select(*sel)

@@ -10,13 +10,16 @@ instead of a handful of fixtures.
 from __future__ import annotations
 
 import math
+from functools import reduce
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from ksql_spark.streaming.bounded import (
+    SCALAR_KINDS,
     _merge_scalar,
     _sort_key,
+    combine,
     hist_top_buckets,
     merge_collect,
     merge_spacesaving,
@@ -204,3 +207,42 @@ def test_scalar_min_max_nan_ordering(bs):
         assert mx != mx
     if any(x == x for x in allv):
         assert mn == mn and not math.isnan(mn)
+
+
+# ints beyond ±2^53 whose sum of <= 12 stays inside int64; doubles whose
+# sums are exact in any order (integral values, infinities, NaN), so slot
+# equality is exact for every kind
+big_ints = st.integers(-(2**59), 2**59)
+exact_doubles = st.one_of(
+    st.integers(-(2**40), 2**40).map(float),
+    st.sampled_from([float("nan"), float("inf"), float("-inf")]),
+)
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    st.sampled_from(SCALAR_KINDS),
+    st.one_of(
+        st.tuples(st.just(False), st.lists(big_ints, max_size=12)),
+        st.tuples(st.just(True), st.lists(exact_doubles, max_size=12)),
+    ),
+    st.data(),
+)
+def test_combine_of_split_slots_equals_whole_fold(kind, typed_vals, data):
+    """Folding each part of a random split into a slot and combining the
+    slots in any order gives the slot of folding every value at once —
+    the property the session kernel's interval merge relies on."""
+    is_float, vals = typed_vals
+    cuts = sorted(data.draw(st.lists(st.integers(0, len(vals)), max_size=4)))
+    parts = [vals[a:b] for a, b in zip([0, *cuts], [*cuts, len(vals)])]
+    slots = [_merge_scalar(kind, None, 0, p, is_float) for p in parts]
+    order = data.draw(st.permutations(range(len(slots))))
+    got = reduce(lambda a, b: combine(kind, a, b, is_float), (slots[i] for i in order))
+    want = _merge_scalar(kind, None, 0, vals, is_float)
+
+    def canon(slot):
+        v, n = slot
+        return ("nan" if isinstance(v, float) and v != v else v), n
+
+    assert canon(got) == canon(want)
+    assert got[1] == len(vals) and (got[0] is None) == (kind == "count" or not vals)

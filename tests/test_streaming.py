@@ -453,17 +453,30 @@ def test_session_changelog_backward_extension(spark, workdir):
 
 
 def test_session_changelog_bigint_sum_exact(spark, workdir):
-    """Integral SUM partials stay exact Python ints through the session
-    state round-trip (ADVICE r2: float64 slots lose exactness above 2^53)."""
+    """Session EMIT CHANGES keeps batch ``session_window``'s NULL/NaN
+    contract: integral SUM stays exact above 2^53 with a NULL beside it
+    (a nullable bigint must not reach the kernel as float64), NaN is a
+    value (counted, greatest for MAX, propagated by SUM/AVG), MIN/MAX run
+    over strings, and a session whose inputs are all NULL gives NULL and
+    COUNT 0."""
+    from ksql_spark import Avg, Max, Min, SessionWindow
+
     big = 2**53 + 1  # not representable as float64 (2^53+1 -> 2^53)
+    nan = float("nan")
     base = Fn.lit("2026-01-01 00:00:00").cast("timestamp")
     df = spark.createDataFrame(
-        [("c1", 0, big), ("c1", 1, 2)], "conv_id string, off long, v long"
+        [
+            ("c1", 0, big, 1.0, "b"),
+            ("c1", 1, None, nan, None),
+            ("c1", 2, 2, 2.0, "a"),
+            ("c2", 0, None, None, None),
+        ],
+        "conv_id string, off long, v long, d double, s string",
     ).select(
         "conv_id",
         (base + Fn.col("off") * Fn.expr("INTERVAL 60 SECONDS")).alias("ts"),
         Fn.col("off").alias("turn_idx"),
-        "v",
+        "v", "d", "s",
     )
     path = f"{workdir}/big_transcripts"
     df.coalesce(1).write.mode("overwrite").parquet(path)
@@ -473,21 +486,45 @@ def test_session_changelog_bigint_sum_exact(spark, workdir):
         "big_transcripts", path, ref=STREAM,
         event_time_col="ts", event_order_cols=["ts", "turn_idx"],
     )
-    from ksql_spark import SessionWindow
-
+    aggs = [
+        (Sum, "v"), (Count, "v"), (Min, "v"), (Max, "v"),
+        (Sum, "d"), (Count, "d"), (Avg, "d"), (Min, "d"), (Max, "d"),
+        (Min, "s"), (Max, "s"), (Count, "s"),
+    ]
+    names = [f"{fn.__name__.lower()}_{c}" for fn, c in aggs]
     eng = PersistentQueryManager(spark, cat, workdir=f"{workdir}/big_eng", grace="10 minutes")
     csas = Create(TABLE, "big_stats").AsSelect(
-        Select(F("conv_id"), Sum(F("v")).Alias("s"), Count(F("v")).Alias("n"))
+        Select(F("conv_id"), *[fn(F(c)).Alias(n) for (fn, c), n in zip(aggs, names)])
         .From(Schema("big_transcripts", STREAM))
         .WindowedBy(SessionWindow(30, TimeUnit.MINUTES))
         .GroupBy(F("conv_id"))
         .EmitChanges()
     )
     eng.create_as_select(csas, available_now=True)
-    row = eng.catalog.read("QUERYABLE_big_stats").collect()[0]
-    assert row["s"] == big + 2  # exact: float64 would give 2^53 + 2
-    assert row["n"] == 2
-    assert dict(eng.catalog.read("QUERYABLE_big_stats").dtypes)["s"] == "bigint"
+    got_df = eng.catalog.read("QUERYABLE_big_stats")
+    cols = ["window_start", "window_end", "conv_id", *names]
+
+    def canon(rows):
+        return sorted(
+            tuple("NaN" if isinstance(x, float) and x != x else x for x in r) for r in rows
+        )
+
+    got = canon(got_df.select(*cols).collect())
+    want = canon(
+        spark.read.parquet(path)
+        .groupBy(Fn.session_window("ts", "30 minutes").alias("w"), "conv_id")
+        .agg(*[getattr(Fn, fn.__name__.lower())(c).alias(n) for (fn, c), n in zip(aggs, names)])
+        .select(Fn.col("w.start").alias("window_start"), Fn.col("w.end").alias("window_end"),
+                "conv_id", *names)
+        .collect()
+    )
+    assert got == want
+    c1 = next(r for r in got if r[2] == "c1")
+    assert c1[3] == big + 2  # exact: float64 would give 2^53 + 2
+    dtypes = dict(got_df.dtypes)
+    assert (dtypes["sum_v"], dtypes["count_d"], dtypes["avg_d"], dtypes["max_s"]) == (
+        "bigint", "bigint", "double", "string"
+    )
 
 
 def test_session_changes_having_rejected(spark):
@@ -512,31 +549,47 @@ def test_session_changes_having_rejected(spark):
         compile_select(q, sources={"t": src}, streaming=True)
 
 
-def test_session_changes_non_numeric_minmax_rejected(spark, workdir):
-    """MIN/MAX over a non-numeric column is rejected with AnalysisError in
-    the session-changelog path (ADVICE r2: float(v) would crash at runtime)."""
-    from ksql_spark import Min, SessionWindow
+def test_keyed_aggregates_non_numeric_sum_rejected(spark, workdir):
+    """Both keyed aggregate kernels share one input contract: SUM over a
+    string is refused with AnalysisError at compile time, not inside the
+    streaming task, for a session window and beside a TOPK in a tumbling
+    window; MIN/MAX over a string compile on both."""
+    from ksql_spark import Max, Min, SessionWindow, TopK
     from ksql_spark.errors import AnalysisError
     from ksql_spark.operators.compile import compile_select
 
     path = f"{workdir}/str_transcripts"
     spark.createDataFrame(
-        [("c1", "2026-01-01 00:00:00", "hello")], "conv_id string, ts string, txt string"
+        [("c1", "2026-01-01 00:00:00", "hello", 1)],
+        "conv_id string, ts string, txt string, n long",
     ).select(
-        "conv_id", Fn.col("ts").cast("timestamp").alias("ts"), "txt"
+        "conv_id", Fn.col("ts").cast("timestamp").alias("ts"), "txt", "n"
     ).write.mode("overwrite").parquet(path)
     stream = spark.readStream.schema(
-        "conv_id string, ts timestamp, txt string"
+        "conv_id string, ts timestamp, txt string, n long"
     ).parquet(path)
-    q = (
-        Select(F("conv_id"), Min(F("txt")).Alias("m"))
-        .From(Schema("t", STREAM))
-        .WindowedBy(SessionWindow(30, TimeUnit.MINUTES))
-        .GroupBy(F("conv_id"))
-        .EmitChanges()
-    )
-    with pytest.raises(AnalysisError, match="numeric"):
-        compile_select(q, sources={"t": stream}, streaming=True)
+
+    # a TOPK beside the scalars routes a tumbling query to the bounded kernel
+    for window, topk in (
+        (SessionWindow(30, TimeUnit.MINUTES), []),
+        (TumblingWindow(1, TimeUnit.MINUTES), [TopK(F("n"), 2).Alias("t")]),
+    ):
+        def query(*aggs):
+            return (
+                Select(F("conv_id"), *topk, *aggs)
+                .From(Schema("t", STREAM))
+                .WindowedBy(window)
+                .GroupBy(F("conv_id"))
+                .EmitChanges()
+            )
+
+        with pytest.raises(AnalysisError, match="SUM requires a numeric"):
+            compile_select(query(Sum(F("txt")).Alias("s")), sources={"t": stream}, streaming=True)
+        df = compile_select(
+            query(Min(F("txt")).Alias("lo"), Max(F("txt")).Alias("hi")),
+            sources={"t": stream}, streaming=True,
+        )
+        assert dict(df.dtypes)["lo"] == "string"
 
 
 def test_session_changes_join_keeps_left_watermark(spark, workdir):
