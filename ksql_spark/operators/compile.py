@@ -263,39 +263,13 @@ def compile_select(
 
     left_is_stream = sb.from_expr.ref == Ref.STREAM
 
-    # session windows under EMIT CHANGES need the custom stateful operator:
-    # Spark's session_window aggregation rejects update mode, so the
-    # keyed-state session kernel (streaming/sessions.py, on the aggregate
-    # slots it shares with streaming/bounded.py) takes over — it applies
-    # its own watermark on the projected event time
-    session_changes = (
-        streaming
-        and left_is_stream
-        and isinstance(sb.window, SessionWindow)
-        and sb.emit == EmitMode.CHANGES
-    )
-    if session_changes and sb.having_exprs:
-        # the session changelog path cannot thread HAVING through the
-        # stateful operator (a retracted-then-refiltered changelog is not a
-        # well-defined upsert stream); reject rather than silently emit
-        # unfiltered rows — same policy as the non-mergeable-aggregate check
-        # in streaming/sessions.session_changelog
-        raise AnalysisError(
-            "HAVING is not supported with SESSION windows under EMIT CHANGES; "
-            "use EMIT FINAL or a pull query"
-        )
-
-    # watermark before any stateful streaming op (SURVEY.md §2.5)
+    # watermark before any stateful streaming op (SURVEY.md §2.5); every
+    # aggregate fold, the keyed-state kernels included, reads this one
     needs_state = streaming and (sb.window is not None or sb.group_by or sb.joins)
     if needs_state and left_is_stream:
         if ts_col is None:
             raise AnalysisError("stateful streaming query requires an event-time column")
-        # the session-changelog operator re-applies its own watermark on the
-        # projected event time, so the pre-aggregation watermark is skipped —
-        # UNLESS there is a join first, whose state cleanup needs the left
-        # side watermarked before the join compiles
-        if not session_changes or sb.joins:
-            df = df.withWatermark(ts_col, grace)
+        df = df.withWatermark(ts_col, grace)
 
     # -- joins (left-deep, SURVEY.md §2.3) ---------------------------------
     for j in sb.joins:
@@ -372,80 +346,13 @@ def compile_select(
         df = df.filter(cond.to_column())
 
     # -- aggregation ---------------------------------------------------------
-    agg_fields = [f for f in sb.fields if f.is_aggregate()]
-    if session_changes and df.isStreaming and (agg_fields or sb.group_by):
-        from ..streaming.sessions import session_changelog
-
-        if ts_col is None:
-            raise AnalysisError("session window requires an event-time column")
+    if sb.group_by or any(f.is_aggregate() for f in sb.fields):
         # after a join both sides may carry the event-time column name;
-        # qualify with the left relation alias to keep the reference unambiguous
-        sess_ts = f"{sb.from_expr.effective_name()}.{ts_col}" if sb.joins else ts_col
-        df = session_changelog(
-            df,
-            sess_ts,
-            [(g.output_name(), g.output()) for g in sb.group_by],
-            sb.window.gap_seconds,
-            agg_fields,
-            grace=grace,
-        )
-    elif (
-        df.isStreaming
-        and sb.emit == EmitMode.CHANGES
-        and _is_bounded_streaming_agg(sb, agg_fields)
-    ):
-        # TOPK / COLLECT_* / HISTOGRAM under EMIT CHANGES: the native fold
-        # keeps the whole group's history in one state value; the bounded
-        # stateful operator caps per-group state at O(k) / O(limit) /
-        # O(sketch capacity) — the 100x-horizon fix for hot keys
-        from ..streaming.bounded import bounded_agg_changelog
-
-        # after a join both sides may carry the event-time column name;
-        # qualify with the left relation alias (same as the session branch)
-        b_ts = (
-            f"{sb.from_expr.effective_name()}.{ts_col}"
-            if sb.joins and ts_col is not None
-            else ts_col
-        )
-        # HAVING validation happens BEFORE the operator is built: monotone
-        # predicates post-filter the upsert changelog (a group flips
-        # false->true at most once, so the filtered changelog materializes
-        # to exactly the batch result — no upsert ever needs a retraction);
-        # unselected bounded aggregates become hidden state slots; anything
-        # non-monotone raises AnalysisError — there is no silent fallback
-        # to the unbounded native fold (VERDICT r4 finding #1).
-        h_subs: dict[int, str] = {}
-        h_hidden: list[AggregateFn] = []
-        if sb.having_exprs:
-            h_subs, h_hidden = _validate_bounded_having(sb, agg_fields)
-        df = bounded_agg_changelog(
-            df,
-            b_ts,
-            [(g.output_name(), g.output()) for g in sb.group_by],
-            sb.window,
-            agg_fields + h_hidden,
-        )
-        # filter on the operator's raw output (hidden slots still present),
-        # THEN re-project to the declared field order + aliases so the
-        # bounded path's output shape matches the native lowering exactly
-        for cond in sb.having_exprs:
-            df = df.filter(_lower_with_subs(cond, h_subs))
-        proj: list[Column] = []
-        if sb.window is not None:
-            proj += [F.col("window_start"), F.col("window_end")]
-        for f in sb.fields:
-            if f.is_aggregate():
-                proj.append(F.col(f.output_name()))
-            elif isinstance(f, Field):
-                proj.append(F.col(f.name.split(".")[-1]).alias(f.output_name()))
-            else:
-                proj.append(F.col(f.output_name()))
-        df = df.select(*proj)
-    elif agg_fields or sb.group_by:
-        df = _lower_aggregate(sb, df, ts_col, order_cols)
+        # qualify it with the left relation alias to keep it unambiguous
+        agg_ts = f"{sb.from_expr.effective_name()}.{ts_col}" if sb.joins and ts_col else ts_col
+        df = _lower_aggregate(sb, df, agg_ts, order_cols, streaming)
     else:
-        out_cols = [f.output() for f in sb.fields]
-        df = df.select(*out_cols)
+        df = df.select(*[f.output() for f in sb.fields])
 
     # -- set operations (engine extension, SURVEY.md §2.7) ---------------------
     for op, other in sb.set_ops:
@@ -514,20 +421,10 @@ def _estimated_plan_bytes(df: DataFrame) -> int | None:
 
 def _topk_twolevel_worthwhile(df: DataFrame) -> bool:
     """AQE-spirited switch: engage the salted rewrite only when the input
-    estimate crosses the threshold (override:
-    ``spark.ksql.topk.twolevelThresholdBytes``; 0 = always two-level)."""
-    threshold = TOPK_TWOLEVEL_MIN_BYTES
-    try:
-        threshold = int(
-            df.sparkSession.conf.get(
-                "spark.ksql.topk.twolevelThresholdBytes", str(TOPK_TWOLEVEL_MIN_BYTES)
-            )
-        )
-    except Exception:  # pragma: no cover
-        pass
+    estimate crosses ``TOPK_TWOLEVEL_MIN_BYTES``."""
     size = _estimated_plan_bytes(df)
     # unknown size -> two-level (the safe plan at scale)
-    return size is None or size >= threshold
+    return size is None or size >= TOPK_TWOLEVEL_MIN_BYTES
 
 
 def _agg_matches(a: AggregateFn, b: AggregateFn) -> bool:
@@ -651,80 +548,54 @@ def _is_bounded_scalar(f: AggregateFn) -> bool:
     return isinstance(f, (Count, Sum, Avg, Min, Max))
 
 
-def _is_bounded_streaming_agg(sb: SelectBuilder, agg_fields: list) -> bool:
-    """True when EVERY aggregate in the query has a bounded-state streaming
-    lowering (streaming/bounded.py) and at least one of them is a
-    collection aggregate (TOPK / HISTOGRAM / COLLECT_* — the kinds whose
-    NATIVE streaming fold keeps the whole group history in one state
-    value).  Scalar aggregates (COUNT/SUM/MIN/MAX/AVG) ride along with
-    O(1) state slots, so a mixed `COUNT(*), TOPK(v, 3)` query no longer
-    falls back to the unbounded fold; an all-scalar query keeps the native
-    hash aggregate, which is already O(1) per group.
+def _keyed_fold(sb: SelectBuilder, df: DataFrame, agg_fields: list) -> bool:
+    """True when a keyed-state kernel (streaming/bounded.py) folds the
+    groups of an EMIT CHANGES stream instead of Spark's native aggregate:
 
-    HAVING no longer disables the path (VERDICT r4 next-step #2): once the
-    aggregate shape is bounded, HAVING is validated by
-    _validate_bounded_having — monotone predicates post-filter the upsert
-    stream (unselected bounded aggregates become hidden state slots), and
-    non-monotone predicates raise AnalysisError instead of silently
-    reintroducing the unbounded native fold."""
-    if not agg_fields:
+      * a SESSION window — Spark's session_window aggregation rejects
+        update mode, so the session kernel keeps the open sessions;
+      * every aggregate has a bounded-state lowering and at least one is a
+        collection aggregate (TOPK / HISTOGRAM / COLLECT_*), whose NATIVE
+        fold keeps the whole group history in one state value.  Scalar
+        aggregates ride along as O(1) slots, so a mixed `COUNT(*),
+        TOPK(v, 3)` query stays bounded; an all-scalar query keeps the
+        native hash aggregate, already O(1) per group."""
+    if not (df.isStreaming and sb.emit == EmitMode.CHANGES):
         return False
     if isinstance(sb.window, SessionWindow):
-        return False
-    if not any(_is_bounded_collection(f) for f in agg_fields):
-        return False
-    if not all(_is_bounded_collection(f) or _is_bounded_scalar(f) for f in agg_fields):
-        return False
-    return True
+        return True
+    return any(_is_bounded_collection(f) for f in agg_fields) and all(
+        _is_bounded_collection(f) or _is_bounded_scalar(f) for f in agg_fields
+    )
 
 
-def _validate_bounded_having(
+def _having_slots(
     sb: SelectBuilder, agg_fields: list
 ) -> tuple[dict[int, str], list[AggregateFn]]:
-    """Validate HAVING for the bounded streaming changelog path.
+    """Map each HAVING aggregate to the output column it reads.
 
-    Returns (subs, hidden_aggs): `subs` maps each HAVING AggregateFn id to
-    the state-slot output name it reads (a selected aggregate's alias, or a
-    hidden `__having_i` slot added to the bounded operator for aggregates
-    not in the SELECT list), and `hidden_aggs` are those extra slots.
-
-    Raises AnalysisError — never silently falls back to the unbounded
-    native fold (VERDICT r4 finding #1) — when a predicate is non-monotone
-    (a group could flip true->false and the upsert changelog cannot
-    retract) or references an aggregate with no bounded-state lowering."""
+    Returns (subs, hidden): ``subs`` maps each HAVING AggregateFn id to a
+    selected aggregate's output name when one matches it, else to a hidden
+    ``__having_i`` aggregate; ``hidden`` are those extra aggregates, folded
+    beside the selected ones by whichever fold runs and dropped by the
+    final projection."""
     subs: dict[int, str] = {}
     hidden: list[AggregateFn] = []
-    agg_by_name = {f.output_name(): f for f in agg_fields}
+    h_aggs: list[AggregateFn] = []
     for cond in sb.having_exprs:
-        h_aggs: list[AggregateFn] = []
         _collect_aggs(cond, h_aggs)
-        for a in h_aggs:
-            match = next((f for f in agg_fields if _agg_matches(a, f)), None)
-            if match is not None:
-                subs[id(a)] = match.output_name()
-            elif _is_bounded_collection(a) or _is_bounded_scalar(a):
-                # alias a COPY, not the user's expression object: compile
-                # must stay side-effect-free so the same SelectBuilder can
-                # be lowered again (e.g. the batch oracle twin) without the
-                # hidden-slot alias leaking into that lowering (ADVICE r5)
-                hname = f"__having_{len(hidden)}"
-                slot = copy.copy(a)
-                slot.alias_name = hname
-                subs[id(a)] = hname
-                hidden.append(slot)
-            else:
-                raise AnalysisError(
-                    f"HAVING aggregate {_describe_cond(a)} has no bounded-state "
-                    f"streaming lowering; select it explicitly or use EMIT FINAL"
-                )
-        if not _monotone_safe_having(cond, agg_by_name):
-            raise AnalysisError(
-                f"non-monotone HAVING predicate ({_describe_cond(cond)}) cannot "
-                f"post-filter a bounded streaming upsert changelog under EMIT "
-                f"CHANGES: a group may flip true->false and upserts cannot be "
-                f"retracted.  Use a monotone comparison (COUNT/MAX/TOPK with "
-                f">/>= or MIN with </<=), or EMIT FINAL, or a batch query"
-            )
+    for a in h_aggs:
+        match = next((f for f in agg_fields if _agg_matches(a, f)), None)
+        if match is not None:
+            subs[id(a)] = match.output_name()
+            continue
+        # alias a COPY, not the user's expression object: compile must stay
+        # side-effect-free so the same SelectBuilder can be lowered again
+        # (e.g. the batch oracle twin) without the hidden alias leaking in
+        slot = copy.copy(a)
+        slot.alias_name = f"__having_{len(hidden)}"
+        subs[id(a)] = slot.alias_name
+        hidden.append(slot)
     return subs, hidden
 
 
@@ -845,9 +716,42 @@ def _group_names(sb: SelectBuilder, windowed: bool) -> list[str]:
     return (["__window"] if windowed else []) + [g.output_name() for g in sb.group_by]
 
 
+def _source_name(f: Expr) -> str:
+    """The grouped-output column a non-aggregate SELECT field reads: a
+    field by its unqualified name (grouped output drops relation
+    qualifiers), any other expression by its output name."""
+    return f.name.split(".")[-1] if isinstance(f, Field) else f.output_name()
+
+
+def output_keys(sb: SelectBuilder) -> list[str]:
+    """The output columns that key an aggregate query's result: the window
+    bounds when windowed, then each GROUP BY key under the name the final
+    projection of :func:`_lower_aggregate` gives it.  A GROUP BY key the
+    SELECT list leaves out raises AnalysisError: the result could not be
+    keyed by it."""
+    keys = ["window_start", "window_end"] if sb.window is not None else []
+    plain = [f for f in sb.fields if not f.is_aggregate()]
+    for g in sb.group_by:
+        name = g.output_name()
+        f = next((f for f in plain if _source_name(f) == name), None)
+        if f is None:
+            raise AnalysisError(
+                f"GROUP BY key {name!r} is not in the SELECT list; a table's "
+                f"rows are keyed by every GROUP BY key, so select it"
+            )
+        keys.append(f.output_name())
+    return keys
+
+
 def _lower_aggregate(
-    sb: SelectBuilder, df: DataFrame, ts_col: str | None, order_cols: list[str]
+    sb: SelectBuilder, df: DataFrame, ts_col: str | None, order_cols: list[str], streaming: bool
 ) -> DataFrame:
+    """Lower GROUP BY / aggregates: the one place every fold shares the
+    event-order injection, the HAVING aggregates and filter, and the final
+    projection.  A fold returns ``__window`` (struct start/end) when
+    windowed, the GROUP BY keys under their output names, one column per
+    aggregate (selected and hidden) under its output name, and ``__op``
+    when it emits tombstones."""
     # inject event-order key into LATEST/EARLIEST_BY_OFFSET (parity contract:
     # offset := struct(ts, turn_idx); SURVEY.md §7)
     for f in sb.fields:
@@ -859,63 +763,52 @@ def _lower_aggregate(
                 )
             f.order_by = [Field(c) for c in order_cols]
 
-    group_cols: list[Column] = []
     windowed = sb.window is not None
-    if windowed:
-        if ts_col is None:
-            raise AnalysisError("windowed aggregation requires an event-time column")
-        group_cols.append(sb.window.grouping_column(ts_col).alias("__window"))
-    group_cols.extend(g.output() for g in sb.group_by)
-
-    # hidden aggregates for HAVING (reference: HAVING over aggregates,
-    # select_builder_test.go:92-99)
-    having_aggs: list[AggregateFn] = []
-    for cond in sb.having_exprs:
-        _collect_aggs(cond, having_aggs)
-    subs: dict[int, str] = {}
-    hidden_cols: list[Column] = []
-    for i, agg in enumerate(having_aggs):
-        hname = f"__having_{i}"
-        subs[id(agg)] = hname
-        hidden_cols.append(agg.to_column().alias(hname))
-
+    if windowed and ts_col is None:
+        raise AnalysisError("windowed aggregation requires an event-time column")
     agg_fields = [f for f in sb.fields if f.is_aggregate()]
+    # HAVING over aggregates (reference: select_builder_test.go:92-99)
+    subs, hidden = _having_slots(sb, agg_fields)
 
-    # HISTOGRAM scale path (SURVEY.md §2.4): for batch plans the value->count
-    # map comes from a two-level groupBy — (keys, value) count, then a small
-    # per-key top-`buckets` fold — instead of the single-agg map-fold, whose
-    # per-group cost is O(distinct²) and degenerates on a hot key with a
-    # large distinct value set.  Both shuffles partial-aggregate map-side;
-    # per-key state after level 1 is one row per distinct value, spillable.
-    # Streaming keeps the single-pass fold (state must live in one agg).
-    if (
-        not df.isStreaming
-        and len(agg_fields) == 1
-        and isinstance(agg_fields[0], Histogram)
-        and not sb.having_exprs
+    if streaming and sb.emit == EmitMode.CHANGES and sb.having_exprs and isinstance(
+        sb.window, SessionWindow
     ):
-        out = _lower_histogram_twolevel(sb, df, group_cols, agg_fields[0], windowed)
-    elif (
-        not df.isStreaming
-        and len(agg_fields) == 1
-        and isinstance(agg_fields[0], TopK)  # covers TopKDistinct (subclass)
-        and not sb.having_exprs
-        and _topk_twolevel_worthwhile(df)
-    ):
-        out = _lower_topk_twolevel(sb, df, group_cols, agg_fields[0], windowed)
+        # merged-away sessions are retracted by tombstones; a HAVING filter
+        # over that changelog is not a well-defined upsert stream — reject
+        # rather than silently emit unfiltered rows
+        raise AnalysisError(
+            "HAVING is not supported with SESSION windows under EMIT CHANGES; "
+            "use EMIT FINAL or a pull query"
+        )
+    if _keyed_fold(sb, df, agg_fields):
+        from ..streaming.bounded import bounded_agg_changelog
+
+        # HAVING post-filters the kernel's upsert changelog: only a monotone
+        # predicate (a group flips false->true at most once) keeps it equal
+        # to the batch result, so anything else is refused — never a silent
+        # fallback to the unbounded native fold (VERDICT r4 finding #1)
+        agg_by_name = {f.output_name(): f for f in agg_fields}
+        for cond in sb.having_exprs:
+            if not _monotone_safe_having(cond, agg_by_name):
+                raise AnalysisError(
+                    f"non-monotone HAVING predicate ({_describe_cond(cond)}) cannot "
+                    f"post-filter a bounded streaming upsert changelog under EMIT "
+                    f"CHANGES: a group may flip true->false and upserts cannot be "
+                    f"retracted.  Use a monotone comparison (COUNT/MAX/TOPK with "
+                    f">/>= or MIN with </<=), or EMIT FINAL, or a batch query"
+                )
+        out = bounded_agg_changelog(
+            df,
+            ts_col,
+            [(g.output_name(), g.output()) for g in sb.group_by],
+            sb.window,
+            agg_fields + hidden,
+        )
     else:
-        agg_cols = [f.output() for f in agg_fields]
-        if not agg_cols and not hidden_cols:
-            # GROUP BY with no aggregates == DISTINCT over the keys
-            agg_cols = [F.count(F.lit(1)).alias("__cnt")]
-
-        grouped = df.groupBy(*group_cols) if group_cols else df.groupBy()
-        out = grouped.agg(*agg_cols, *hidden_cols)
+        out = _native_fold(sb, df, ts_col, agg_fields + hidden)
 
     for cond in sb.having_exprs:
         out = out.filter(_lower_with_subs(cond, subs))
-    if subs:
-        out = out.drop(*subs.values())
 
     # final projection in declared order; windows expose window_start/window_end
     proj: list[Column] = []
@@ -925,9 +818,44 @@ def _lower_aggregate(
     for f in sb.fields:
         if f.is_aggregate():
             proj.append(F.col(f.output_name()))
-        elif isinstance(f, Field):
-            # grouped output drops relation qualifiers; re-apply the alias
-            proj.append(F.col(f.name.split(".")[-1]).alias(f.output_name()))
         else:
-            proj.append(F.col(f.output_name()))
+            proj.append(F.col(_source_name(f)).alias(f.output_name()))
+    if "__op" in out.columns:
+        proj.append(F.col("__op"))
     return out.select(*proj)
+
+
+def _native_fold(
+    sb: SelectBuilder, df: DataFrame, ts_col: str | None, aggs: list[AggregateFn]
+) -> DataFrame:
+    """Spark's own aggregation: ``groupBy().agg()``, or for a batch plan
+    whose one aggregate is a HISTOGRAM or a large-input TOPK, a two-level
+    rewrite."""
+    windowed = sb.window is not None
+    group_cols: list[Column] = []
+    if windowed:
+        group_cols.append(sb.window.grouping_column(ts_col).alias("__window"))
+    group_cols.extend(g.output() for g in sb.group_by)
+
+    # HISTOGRAM scale path (SURVEY.md §2.4): for batch plans the value->count
+    # map comes from a two-level groupBy — (keys, value) count, then a small
+    # per-key top-`buckets` fold — instead of the single-agg map-fold, whose
+    # per-group cost is O(distinct²) and degenerates on a hot key with a
+    # large distinct value set.  Both shuffles partial-aggregate map-side;
+    # per-key state after level 1 is one row per distinct value, spillable.
+    # Streaming keeps the single-pass fold (state must live in one agg).
+    if not df.isStreaming and len(aggs) == 1 and isinstance(aggs[0], Histogram):
+        return _lower_histogram_twolevel(sb, df, group_cols, aggs[0], windowed)
+    if (
+        not df.isStreaming
+        and len(aggs) == 1
+        and isinstance(aggs[0], TopK)  # covers TopKDistinct (subclass)
+        and _topk_twolevel_worthwhile(df)
+    ):
+        return _lower_topk_twolevel(sb, df, group_cols, aggs[0], windowed)
+    agg_cols = [f.output() for f in aggs]
+    if not agg_cols:
+        # GROUP BY with no aggregates == DISTINCT over the keys
+        agg_cols = [F.count(F.lit(1)).alias("__cnt")]
+    grouped = df.groupBy(*group_cols) if group_cols else df.groupBy()
+    return grouped.agg(*agg_cols)

@@ -36,7 +36,11 @@ The scalar slots — the spec builder ``_spec_of``, the masked projection
 ``combine``, and the output lowering ``emit_slots`` / ``slot_column`` —
 are the one aggregate-slot algebra the session kernel
 (``streaming/sessions.py``) runs too, so both keep batch's NULL/NaN
-contract the same way.
+contract the same way.  ``bounded_agg_changelog`` is the one keyed
+aggregate entry: given a SESSION window it runs the session kernel, with
+the same key projection, masked inputs, output schema and slot columns.
+A group whose inputs are all NULL is still a group: it emits its empty
+aggregates (COUNT 0, SUM NULL, TOPK []), as batch does.
 
 Scale notes: one shuffle on (window, keys) — identical to the native agg;
 state per group is O(k) / O(limit) / O(capacity) regardless of group size;
@@ -54,11 +58,18 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
-    TimestampType,
 )
 
 from ..errors import AnalysisError
-from ..expr import CollectList, CollectSet, Histogram, TopK, TopKDistinct, WindowSpec
+from ..expr import (
+    CollectList,
+    CollectSet,
+    Histogram,
+    SessionWindow,
+    TopK,
+    TopKDistinct,
+    WindowSpec,
+)
 from .keyed import apply_keyed
 
 DEFAULT_COLLECT_LIMIT = 1000  # ksqlDB: ksql.functions.collect_list.limit
@@ -481,31 +492,38 @@ def bounded_agg_changelog(
     ts_col: str | None,
     keys: list[tuple[str, Column]],
     window: WindowSpec | None,
-    aggs,
+    aggs: list,
     collect_limit: int = DEFAULT_COLLECT_LIMIT,
     hist_capacity: int | None = None,
 ) -> DataFrame:
-    """Compile the bounded-state aggregates over a stream under EMIT CHANGES.
+    """Fold the groups of an EMIT CHANGES stream on a keyed-state kernel.
 
-    ``keys`` are (output_name, expression) pairs; ``window`` is a tumbling or
-    hopping spec (or None for a plain grouped table); ``aggs`` is the list of
-    aggregate fields — any mix of the bounded collection aggregates
-    (TOPK / TOPK_DISTINCT / HISTOGRAM / COLLECT_*) and the O(1)-state
-    scalars (COUNT / SUM / MIN / MAX / AVG), all folded in ONE stateful
-    operator so a mixed query never falls back to the unbounded native
-    collect fold.  Upstream must already carry the event-time watermark
-    (compile_select applies it before any stateful op).
+    ``keys`` are (output_name, expression) pairs; ``window`` is a tumbling,
+    hopping or session spec (or None for a plain grouped table); ``aggs``
+    are the aggregate fields.  A session window runs the session kernel
+    (``streaming/sessions.py``, COUNT / SUM / MIN / MAX / AVG); any other
+    runs the bounded kernel, where the collection aggregates (TOPK /
+    TOPK_DISTINCT / HISTOGRAM / COLLECT_*) and the O(1)-state scalars fold
+    in ONE stateful operator, so a mixed query never falls back to the
+    unbounded native collect fold.  Upstream must already carry the
+    event-time watermark on ``ts_col`` (compile_select applies it before
+    any stateful op).
 
-    Output: [window_start, window_end,] <keys...>, <agg outputs...> — the
-    same shape as the native windowed changelog.
+    Output: [``__window`` struct(start, end),] <keys...>, <aggs...>, and
+    ``__op`` ('U' upsert / 'D' tombstone) for sessions — the group fold
+    shape compile's ``_lower_aggregate`` projects.
     """
-    if not isinstance(aggs, (list, tuple)):
-        aggs = [aggs]
-    aggs = list(aggs)
-    if not aggs:
-        raise AnalysisError("bounded_agg_changelog requires at least one aggregate")
     agg_cols, val_types = masked_inputs(df, aggs)
     specs = [_spec_of(a, vt, collect_limit, hist_capacity) for a, vt in zip(aggs, val_types)]
+    session = isinstance(window, SessionWindow)
+    if session:
+        for a, spec in zip(aggs, specs):
+            if spec["kind"] not in SCALAR_KINDS:
+                raise AnalysisError(
+                    f"session window EMIT CHANGES supports algebraic aggregates "
+                    f"(COUNT/SUM/MIN/MAX/AVG); got {type(a).__name__} — use EMIT "
+                    "FINAL or a pull query for non-mergeable aggregates"
+                )
 
     windowed = window is not None
     if windowed and ts_col is None:
@@ -519,21 +537,14 @@ def bounded_agg_changelog(
         # EventTimeTimeout requires a watermarked column in the stateful
         # operator's child (the tag does not survive `__w.start` extraction)
         cols.append(F.col(ts_col).alias("__ts"))
+    if windowed and not session:
         cols.append(window.grouping_column(ts_col).alias("__w"))
-    if not keys and not windowed:
+    drop_dummy = not keys and not windowed
+    if drop_dummy:
         keys = [("__g", F.lit(0))]
-        drop_dummy = True
-    else:
-        drop_dummy = False
     cols += [c.alias(f"__k{i}") for i, (_, c) in enumerate(keys)]
-    cols += agg_cols
-
-    # a row whose every input is NULL contributes to no aggregate
-    keep = ~F.col("__m0")
-    for i in range(1, len(aggs)):
-        keep = keep | ~F.col(f"__m{i}")
-    proj = df.select(*cols).filter(keep)
-    if windowed:
+    proj = df.select(*cols, *agg_cols)
+    if windowed and not session:
         proj = proj.select(
             F.col("__ts"),
             F.col("__w.start").alias("__ws"),
@@ -542,15 +553,15 @@ def bounded_agg_changelog(
         )
 
     key_names = [f"__k{i}" for i in range(len(keys))]
-    group_cols = (["__ws", "__we"] if windowed else []) + key_names
+    group_cols = (["__ws", "__we"] if windowed and not session else []) + key_names
 
-    win_fields = (
-        [StructField("window_start", TimestampType()), StructField("window_end", TimestampType())]
+    ts_type = proj.schema["__ts"].dataType if windowed else None
+    out_fields = (
+        [StructField("window_start", ts_type), StructField("window_end", ts_type)]
         if windowed
         else []
     )
-    key_fields = [StructField(n, proj.schema[n].dataType) for n in key_names]
-    out_fields: list[StructField] = []
+    out_fields += [StructField(n, proj.schema[n].dataType) for n in key_names]
     for i, (spec, vt) in enumerate(zip(specs, val_types)):
         kind = spec["kind"]
         if kind == "histogram":
@@ -565,31 +576,45 @@ def bounded_agg_changelog(
             ]
         else:
             out_fields += slot_fields(i, spec, vt)
-    out_schema = StructType(win_fields + key_fields + out_fields)
 
-    fold, flush = _bounded_func(specs, len(keys), windowed)
-    layout = (
-        [(sp["kind"], sp["bound"], sp["buckets"], sp["is_float"], vt.simpleString())
-         for sp, vt in zip(specs, val_types)],
-        len(keys),
-        windowed,
-    )
-    # the name shows in the plan: the engine reads it to tell this kernel,
-    # whose timeout only evicts, from one that emits on the watermark.  A
-    # plain grouped table never closes a group, so it runs without timeout
+    # the kernel name shows in the plan: the engine reads it to tell these
+    # kernels, whose timeout only evicts, from one that emits on the
+    # watermark.  A plain grouped table never closes a group, so it runs
+    # without timeout
+    if session:
+        from .sessions import US, _session_func  # noqa: PLC0415 — sessions imports this module
+
+        out_fields.append(StructField("__op", StringType()))
+        fold, flush = _session_func(window.gap_seconds, len(keys), specs)
+        name = "session_upsert"
+        layout = (
+            int(window.gap_seconds * US),
+            [(s["kind"], vt.simpleString()) for s, vt in zip(specs, val_types)],
+            len(keys),
+        )
+    else:
+        fold, flush = _bounded_func(specs, len(keys), windowed)
+        name = "bounded_upsert"
+        layout = (
+            [(sp["kind"], sp["bound"], sp["buckets"], sp["is_float"], vt.simpleString())
+             for sp, vt in zip(specs, val_types)],
+            len(keys),
+            windowed,
+        )
     out = apply_keyed(
         proj.groupBy(*[F.col(c) for c in group_cols]),
-        out_schema, "bounded_upsert", layout, fold, flush, "update", event_time=windowed,
+        StructType(out_fields), name, layout, fold, flush, "update", event_time=windowed,
     )
 
     sel: list[Column] = []
     if windowed:
-        sel += [F.col("window_start"), F.col("window_end")]
-    sel += [
-        F.col(n).alias(keys[i][0])
-        for i, n in enumerate(key_names)
-        if not (drop_dummy and keys[i][0] == "__g")
-    ]
+        sel.append(
+            F.struct(
+                F.col("window_start").alias("start"), F.col("window_end").alias("end")
+            ).alias("__window")
+        )
+    if not drop_dummy:
+        sel += [F.col(n).alias(keys[i][0]) for i, n in enumerate(key_names)]
     for i, (agg, spec, vt) in enumerate(zip(aggs, specs, val_types)):
         kind = spec["kind"]
         name = agg.output_name()
@@ -613,4 +638,6 @@ def bounded_agg_changelog(
                 sel.append(F.col(f"__out{i}").alias(name))
         else:
             sel.append(slot_column(i, spec, vt).alias(name))
+    if session:
+        sel.append(F.col("__op"))
     return out.select(*sel)

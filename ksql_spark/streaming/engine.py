@@ -35,7 +35,7 @@ from pyspark.sql.types import _make_type_verifier
 
 from ..builder import CreateBuilder, EmitMode, InsertBuilder, Ref, SelectBuilder
 from ..errors import AnalysisError, CatalogError, QueryTimeoutError, SchemaError
-from ..operators.compile import DEFAULT_GRACE, compile_select
+from ..operators.compile import DEFAULT_GRACE, compile_select, output_keys
 from ..sources.catalog import QUERYABLE_PREFIX, Catalog, Relation
 from .sink import OP_APPEND, OP_UPSERT, ExactlyOnceParquetSink
 
@@ -302,6 +302,9 @@ class PersistentQueryManager:
         if self.catalog.exists(name):
             raise CatalogError(f"relation {name!r} already exists")
         sb = create.select
+        # a table's rows are keyed by the columns the aggregate lowering
+        # projects its window and GROUP BY keys to (SELECT aliases included)
+        state_keys = output_keys(sb) if create.ref == Ref.TABLE else []
 
         pq = self.queries.get(name)
         if pq is None:
@@ -316,14 +319,13 @@ class PersistentQueryManager:
             pq.state_partitions = state_partitions or self._declared_partitions(sb)
             self.queries[name] = pq
 
-        self._register_output_relation(pq)
+        self._register_output_relation(pq, state_keys)
         self._start(pq, available_now, processing_time, await_termination, max_files_per_trigger)
         return pq
 
-    def _output_mode(self, create: CreateBuilder) -> str:
-        sb = create.select
-        assert sb is not None
-        stateful = bool(sb.group_by or sb.window or sb.fields and any(f.is_aggregate() for f in sb.fields))
+    @staticmethod
+    def _output_mode(sb: SelectBuilder) -> str:
+        stateful = bool(sb.group_by or sb.window or any(f.is_aggregate() for f in sb.fields))
         if not stateful:
             return "append"
         if sb.emit == EmitMode.CHANGES:
@@ -372,7 +374,7 @@ class PersistentQueryManager:
             df,
             pq.sink,
             pq.checkpoint,
-            output_mode=self._output_mode(pq.create),
+            output_mode=self._output_mode(pq.create.select),
             name=pq.name,
             state_partitions=pq.state_partitions,
             available_now=available_now,
@@ -381,17 +383,10 @@ class PersistentQueryManager:
         if await_termination and available_now:
             pq.streaming_query.awaitTermination()
 
-    def _register_output_relation(self, pq: PersistentQuery) -> None:
+    def _register_output_relation(self, pq: PersistentQuery, state_keys: list[str]) -> None:
         create = pq.create
-        sb = create.select
-        assert sb is not None
         if self.catalog.exists(create.name):
             return
-        state_keys: list[str] = []
-        if create.ref == Ref.TABLE:
-            state_keys = [g.output_name() for g in sb.group_by]
-            if sb.window is not None:
-                state_keys = ["window_start", "window_end", *state_keys]
         rel = Relation(
             name=create.name,
             ref=create.ref,
@@ -499,12 +494,11 @@ class PersistentQueryManager:
         df = compile_select(
             sb, spark=self.spark, catalog=self.catalog, streaming=True, grace=self.grace
         )
-        stateful = bool(sb.group_by or sb.window)
         q = start_stream(
             df,
             sink,
             os.path.join(self.workdir, "emit", qname, "_ckpt"),
-            output_mode="update" if stateful else "append",
+            output_mode=self._output_mode(sb),
             name=qname,
             state_partitions=self._declared_partitions(sb),
         )

@@ -7,7 +7,11 @@ select_builder.go:231-234).  This module closes the gap with a per-key
 merge kernel that runs on the keyed-state driver (``streaming/keyed.py``):
 this module supplies the fold and the flush, the driver loads and stores
 each key's state in the state store and re-arms its timeout; rows move as
-Arrow batches, no per-row Python.
+Arrow batches, no per-row Python.  ``bounded.bounded_agg_changelog`` builds
+the operator around it, for a session window as for the bounded kernel:
+the key and masked-input projection, the output schema and the slot
+columns.  The session watermark is the query's own, applied upstream
+before any WHERE filter, so every event moves it.
 
 Semantics (identical to batch ``session_window`` + the changelog contract):
 
@@ -46,21 +50,7 @@ from __future__ import annotations
 
 from itertools import repeat
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
-
-from ..errors import AnalysisError
-from .bounded import (
-    SCALAR_KINDS,
-    _spec_of,
-    combine,
-    emit_slots,
-    masked_inputs,
-    slot_column,
-    slot_fields,
-)
-from .keyed import apply_keyed
+from .bounded import combine, emit_slots
 
 US = 1_000_000  # microseconds per second
 
@@ -160,65 +150,3 @@ def _session_func(gap_seconds: float, n_keys: int, specs: list[dict]) -> tuple:
         return min(s[1] for s in sessions) if sessions else None
 
     return fold, flush
-
-
-def session_changelog(
-    df: DataFrame,
-    ts_col: str,
-    keys: list[tuple[str, Column]],
-    gap_seconds: float,
-    fields,
-    grace: str = "10 minutes",
-) -> DataFrame:
-    """Compile a session-window EMIT CHANGES aggregate over a stream.
-    ``keys`` are (output_name, key expression) pairs; ``fields`` are the
-    builder's aggregate fields (COUNT/SUM/MIN/MAX/AVG only); the watermark
-    (``grace``) is applied here on the projected event time.
-
-    Output: window_start, window_end, <keys...>, <aggs...>, __op — the same
-    shape as the built-in windowed changelog plus the tombstone column.
-    """
-    agg_cols, val_types = masked_inputs(df, fields)
-    specs = [_spec_of(f, vt) for f, vt in zip(fields, val_types)]
-    for f, spec in zip(fields, specs):
-        if spec["kind"] not in SCALAR_KINDS:
-            raise AnalysisError(
-                f"session window EMIT CHANGES supports algebraic aggregates "
-                f"(COUNT/SUM/MIN/MAX/AVG); got {type(f).__name__} — use EMIT FINAL "
-                "or a pull query for non-mergeable aggregates"
-            )
-    proj = df.select(
-        F.col(ts_col).alias("__ts"),
-        *[c.alias(f"__k{i}") for i, (_, c) in enumerate(keys)],
-        *agg_cols,
-    ).withWatermark("__ts", grace)
-
-    out_schema = StructType(
-        [
-            StructField("window_start", proj.schema["__ts"].dataType),
-            StructField("window_end", proj.schema["__ts"].dataType),
-            *[StructField(f"__k{i}", proj.schema[f"__k{i}"].dataType) for i in range(len(keys))],
-            *[f for j, (s, vt) in enumerate(zip(specs, val_types)) for f in slot_fields(j, s, vt)],
-            StructField("__op", StringType()),
-        ]
-    )
-    fold, flush = _session_func(gap_seconds, len(keys), specs)
-    layout = (
-        int(gap_seconds * US),
-        [(s["kind"], vt.simpleString()) for s, vt in zip(specs, val_types)],
-        len(keys),
-    )
-    # the name shows in the plan: the engine reads it to tell this kernel,
-    # whose timeout only evicts, from one that emits on the watermark
-    out = apply_keyed(
-        proj.groupBy(*[F.col(f"__k{i}") for i in range(len(keys))]),
-        out_schema, "session_upsert", layout, fold, flush, "update",
-    )
-    return out.select(
-        F.col("window_start"),
-        F.col("window_end"),
-        *[F.col(f"__k{i}").alias(name) for i, (name, _) in enumerate(keys)],
-        *[slot_column(j, s, vt).alias(f.output_name())
-          for j, (f, s, vt) in enumerate(zip(fields, specs, val_types))],
-        F.col("__op"),
-    )

@@ -296,23 +296,50 @@ def test_streaming_topk_kill_resume_exactly_once(spark, events_stream):
 
 
 def test_bounded_output_shape_matches_native_lowering(spark, events_stream):
-    """Column names AND order of the bounded streaming path must equal the
-    batch lowering of the same query (declared field order, SELECT aliases
-    honored)."""
-    from ksql_spark import compile_select
+    """Every aggregate fold — Spark's native one, the bounded kernel and
+    the session kernel — shares one final projection: the streaming
+    columns (``__op`` aside) equal the batch lowering's in declared order
+    with SELECT aliases honored, and a TABLE keyed by an aliased GROUP BY
+    key materializes to the batch recompute.  A GROUP BY key the SELECT
+    list leaves out cannot key a TABLE and is refused at CREATE."""
+    from ksql_spark import Count, SessionWindow, Sum, compile_select
+    from ksql_spark.errors import AnalysisError
 
     cat, mgr, batch = events_stream
-    q = (
-        Select(TopK(F("value"), 3).Alias("tv"), F("user_id").Alias("uid"))
+    hour = TumblingWindow(1, TimeUnit.HOURS)
+    cases = {
+        "native": (hour, [Count(F("event_id")).Alias("n")]),
+        "bounded": (hour, [TopK(F("value"), 3).Alias("n")]),
+        "session": (
+            SessionWindow(5, TimeUnit.MINUTES),
+            [Count(F("event_id")).Alias("n"), Sum(F("event_id")).Alias("s")],
+        ),
+    }
+    for name, (window, aggs) in cases.items():
+        q = (
+            Select(*aggs, F("user_id").Alias("uid"))
+            .From(Schema("ev", STREAM))
+            .WindowedBy(window)
+            .GroupBy(F("user_id"))
+            .EmitChanges()
+        )
+        want_df = compile_select(q, sources={"ev": batch})
+        stream_df = compile_select(q, spark=spark, catalog=cat, streaming=True, grace="365 days")
+        assert [c for c in stream_df.columns if c != "__op"] == want_df.columns, name
+        names = [a.output_name() for a in aggs]
+        assert want_df.columns == ["window_start", "window_end", *names, "uid"]
+        mgr.create_as_select(Create(TABLE, f"shape_{name}").AsSelect(q), available_now=True)
+        got = _rows(cat.read(f"QUERYABLE_shape_{name}").select(*want_df.columns))
+        assert got == _rows(want_df), name
+
+    q_nokey = (
+        Select(Count(F("event_id")).Alias("n"))
         .From(Schema("ev", STREAM))
         .GroupBy(F("user_id"))
         .EmitChanges()
     )
-    batch_cols = compile_select(q, sources={"ev": batch}).columns
-    stream_df = compile_select(
-        q, spark=spark, catalog=cat, streaming=True, grace="365 days"
-    )
-    assert stream_df.columns == batch_cols == ["tv", "uid"]
+    with pytest.raises(AnalysisError, match="GROUP BY key 'user_id'"):
+        mgr.create_as_select(Create(TABLE, "shape_nokey").AsSelect(q_nokey))
 
 
 def test_streaming_topk_nan_matches_batch(spark, tmp_path):
@@ -509,6 +536,7 @@ def test_mixed_agg_null_handling_per_agg(spark, tmp_path):
         (1, 1, 5.0, None, "2026-01-01 00:00:02"),
         (2, 1, 7.0, "b", "2026-01-01 00:00:03"),
         (3, 2, None, "c", "2026-01-01 00:00:04"),  # user 2: all values NULL
+        (4, 3, None, None, "2026-01-01 00:00:05"),  # user 3: every input NULL
     ]
     df = (
         spark.createDataFrame(
@@ -545,6 +573,7 @@ def test_mixed_agg_null_handling_per_agg(spark, tmp_path):
     }
     assert got[1] == (2, 12.0, ["a", "b"])
     assert got[2] == (0, None, ["c"])  # SUM over no non-null inputs is NULL
+    assert got[3] == (0, None, [])  # a group with no non-null input is still a group
 
 
 def test_non_monotone_having_raises_named_error(spark, events_stream):

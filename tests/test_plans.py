@@ -177,11 +177,12 @@ def test_stream_table_join_broadcasts_dimension(spark, sf, tmp_path):
     assert "broadcast" in plan.lower()
 
 
-def test_topk_twolevel_adaptive(spark, sf):
+def test_topk_twolevel_adaptive(spark, sf, monkeypatch):
     """Small inputs keep the single-agg plan (one shuffle); forcing the
     threshold to 0 engages the salted two-level rewrite (two shuffles,
     hot-key-safe) — the plan you'd want at 100x."""
     from ksql_spark import F, STREAM, Schema, Select, TopK, compile_select
+    from ksql_spark.operators import compile as compile_mod
 
     fact = spark.read.parquet(str(sf / "fact"))
     q = (
@@ -193,25 +194,18 @@ def test_topk_twolevel_adaptive(spark, sf):
     small = plan_of(compile_select(q, sources={"fact": fact}))
     assert "__salt" not in small  # tiny input: single-agg plan, one shuffle
 
-    spark.conf.set("spark.ksql.topk.twolevelThresholdBytes", "0")
-    try:
-        forced = plan_of(compile_select(q, sources={"fact": fact}))
-    finally:
-        spark.conf.unset("spark.ksql.topk.twolevelThresholdBytes")
+    monkeypatch.setattr(compile_mod, "TOPK_TWOLEVEL_MIN_BYTES", 0)
+    forced = plan_of(compile_select(q, sources={"fact": fact}))
     assert "__salt" in forced  # salted rewrite engaged
     # and the rewrite's result is still exact on a skewed input
     skew = spark.range(20_000).select(
         Fn.lit(1).alias("k"), (Fn.col("id") % 977).cast("double").alias("v")
     )
-    spark.conf.set("spark.ksql.topk.twolevelThresholdBytes", "0")
-    try:
-        got = compile_select(q, sources={"fact": skew}).collect()
-    finally:
-        spark.conf.unset("spark.ksql.topk.twolevelThresholdBytes")
+    got = compile_select(q, sources={"fact": skew}).collect()
     assert got[0]["tv"] == [976.0, 976.0, 976.0]
 
 
-def test_topk_twolevel_value_concentrated_hot_key(spark, sf):
+def test_topk_twolevel_value_concentrated_hot_key(spark, sf, monkeypatch):
     """VERDICT r3 #1: a group that is 10^5 copies of ONE value must not land
     in a single salt bucket's collect_list.  The rewrite pre-aggregates
     (keys, value) -> count (plan shows the __tc count before any collect),
@@ -219,6 +213,7 @@ def test_topk_twolevel_value_concentrated_hot_key(spark, sf):
     value-CONCENTRATED hot keys, not just value-diverse ones — and the
     duplicate expansion from exact counts keeps TOPK exact."""
     from ksql_spark import F, STREAM, Schema, Select, TopK, TopKDistinct, compile_select
+    from ksql_spark.operators import compile as compile_mod
 
     hot = spark.range(100_000).select(
         (Fn.col("id") % 2).alias("k"),
@@ -232,31 +227,28 @@ def test_topk_twolevel_value_concentrated_hot_key(spark, sf):
         .GroupBy(F("k"))
         .EmitChanges()
     )
-    spark.conf.set("spark.ksql.topk.twolevelThresholdBytes", "0")
-    try:
-        df = compile_select(q, sources={"fact": hot})
-        plan = plan_of(df)
-        # level 0 pre-aggregation (count per distinct value) precedes the
-        # collect: the hot VALUE collapses to one (value, count) row per task
-        assert "__tc" in plan and "__salt" in plan
-        rows = {r["k"]: list(r["tv"]) for r in df.collect()}
-        assert rows[0] == [7.0, 7.0, 7.0]  # one value, expanded from count
-        assert rows[1] == [49.0, 49.0, 49.0]
+    monkeypatch.setattr(compile_mod, "TOPK_TWOLEVEL_MIN_BYTES", 0)
+    df = compile_select(q, sources={"fact": hot})
+    plan = plan_of(df)
+    # level 0 pre-aggregation (count per distinct value) precedes the
+    # collect: the hot VALUE collapses to one (value, count) row per task
+    assert "__tc" in plan and "__salt" in plan
+    rows = {r["k"]: list(r["tv"]) for r in df.collect()}
+    assert rows[0] == [7.0, 7.0, 7.0]  # one value, expanded from count
+    assert rows[1] == [49.0, 49.0, 49.0]
 
-        qd = (
-            Select(F("k"), TopKDistinct(F("v"), 3).Alias("tv"))
-            .From(Schema("fact", STREAM))
-            .GroupBy(F("k"))
-            .EmitChanges()
-        )
-        rowsd = {
-            r["k"]: list(r["tv"])
-            for r in compile_select(qd, sources={"fact": hot}).collect()
-        }
-        assert rowsd[0] == [7.0]
-        assert rowsd[1] == [49.0, 47.0, 45.0]  # odd ids -> odd residues
-    finally:
-        spark.conf.unset("spark.ksql.topk.twolevelThresholdBytes")
+    qd = (
+        Select(F("k"), TopKDistinct(F("v"), 3).Alias("tv"))
+        .From(Schema("fact", STREAM))
+        .GroupBy(F("k"))
+        .EmitChanges()
+    )
+    rowsd = {
+        r["k"]: list(r["tv"])
+        for r in compile_select(qd, sources={"fact": hot}).collect()
+    }
+    assert rowsd[0] == [7.0]
+    assert rowsd[1] == [49.0, 47.0, 45.0]  # odd ids -> odd residues
 
 
 @pytest.mark.parametrize(
@@ -323,11 +315,12 @@ def test_chunking_plan_no_exchange(spark, sf):
     assert "Exchange" not in plan_of(chunk_documents(docs, chunk_tokens=3, overlap=1))
 
 
-def test_topk_twolevel_keeps_all_null_groups(spark, sf):
+def test_topk_twolevel_keeps_all_null_groups(spark, sf, monkeypatch):
     """A group whose values are all NULL must survive the two-level rewrite
     with an empty array — exactly what the single-agg lowering emits
     (collect_list skips nulls but the group row remains)."""
     from ksql_spark import F, STREAM, Schema, Select, TopK, compile_select
+    from ksql_spark.operators import compile as compile_mod
 
     data = spark.createDataFrame(
         [(1, 5.0), (1, None), (2, None), (2, None)], "k bigint, v double"
@@ -338,10 +331,8 @@ def test_topk_twolevel_keeps_all_null_groups(spark, sf):
         .GroupBy(F("k"))
         .EmitChanges()
     )
-    spark.conf.set("spark.ksql.topk.twolevelThresholdBytes", "0")
-    try:
+    with monkeypatch.context() as m:
+        m.setattr(compile_mod, "TOPK_TWOLEVEL_MIN_BYTES", 0)
         two = {r["k"]: list(r["tv"]) for r in compile_select(q, sources={"t": data}).collect()}
-    finally:
-        spark.conf.unset("spark.ksql.topk.twolevelThresholdBytes")
     single = {r["k"]: list(r["tv"]) for r in compile_select(q, sources={"t": data}).collect()}
     assert two == single == {1: [5.0], 2: []}

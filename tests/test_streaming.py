@@ -593,9 +593,9 @@ def test_keyed_aggregates_non_numeric_sum_rejected(spark, workdir):
 
 
 def test_session_changes_join_keeps_left_watermark(spark, workdir):
-    """session+EMIT CHANGES with a stream-stream join must watermark the
-    left side BEFORE the join (ADVICE r2), not only inside the session
-    operator's projection."""
+    """session+EMIT CHANGES with a stream-stream join must watermark both
+    join inputs BELOW the join (ADVICE r2): the join's state cleanup needs
+    them, and the session kernel reads the same upstream watermark."""
     from ksql_spark import SessionWindow
     from ksql_spark.operators.compile import compile_select
 
@@ -619,9 +619,17 @@ def test_session_changes_join_keeps_left_watermark(spark, workdir):
     )
     df = compile_select(q, sources={"lt": left, "rt": right}, streaming=True)
     assert df.isStreaming
-    plan = df._jdf.queryExecution().analyzed().toString()
-    # left + right pre-join watermarks AND the session operator's own
-    assert plan.count("EventTimeWatermark") >= 3
+
+    def nodes(plan):
+        yield plan
+        for i in range(plan.children().size()):
+            yield from nodes(plan.children().apply(i))
+
+    join = next(n for n in nodes(df._jdf.queryExecution().analyzed()) if n.nodeName() == "Join")
+    sides = [join.children().apply(i) for i in range(join.children().size())]
+    assert len(sides) == 2
+    for side in sides:
+        assert any(n.nodeName() == "EventTimeWatermark" for n in nodes(side))
 
 
 def _conv_counts_table(spark, workdir, name):
