@@ -350,7 +350,17 @@ def compile_select(
         # after a join both sides may carry the event-time column name;
         # qualify it with the left relation alias to keep it unambiguous
         agg_ts = f"{sb.from_expr.effective_name()}.{ts_col}" if sb.joins and ts_col else ts_col
-        df = _lower_aggregate(sb, df, agg_ts, order_cols, streaming)
+        if streaming and sb.emit == EmitMode.CHANGES and sb.having_exprs and isinstance(
+            sb.window, SessionWindow
+        ):
+            # merged-away sessions are retracted by tombstones; a HAVING
+            # filter over that changelog is not a well-defined upsert
+            # stream — reject rather than silently emit unfiltered rows
+            raise AnalysisError(
+                "HAVING is not supported with SESSION windows under EMIT CHANGES; "
+                "use EMIT FINAL or a pull query"
+            )
+        df = _lower_aggregate(sb, df, agg_ts, order_cols)
     else:
         df = df.select(*[f.output() for f in sb.fields])
 
@@ -744,7 +754,7 @@ def output_keys(sb: SelectBuilder) -> list[str]:
 
 
 def _lower_aggregate(
-    sb: SelectBuilder, df: DataFrame, ts_col: str | None, order_cols: list[str], streaming: bool
+    sb: SelectBuilder, df: DataFrame, ts_col: str | None, order_cols: list[str]
 ) -> DataFrame:
     """Lower GROUP BY / aggregates: the one place every fold shares the
     event-order injection, the HAVING aggregates and filter, and the final
@@ -770,16 +780,6 @@ def _lower_aggregate(
     # HAVING over aggregates (reference: select_builder_test.go:92-99)
     subs, hidden = _having_slots(sb, agg_fields)
 
-    if streaming and sb.emit == EmitMode.CHANGES and sb.having_exprs and isinstance(
-        sb.window, SessionWindow
-    ):
-        # merged-away sessions are retracted by tombstones; a HAVING filter
-        # over that changelog is not a well-defined upsert stream — reject
-        # rather than silently emit unfiltered rows
-        raise AnalysisError(
-            "HAVING is not supported with SESSION windows under EMIT CHANGES; "
-            "use EMIT FINAL or a pull query"
-        )
     if _keyed_fold(sb, df, agg_fields):
         from ..streaming.bounded import bounded_agg_changelog
 

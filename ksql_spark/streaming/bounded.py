@@ -515,19 +515,13 @@ def bounded_agg_changelog(
     """
     agg_cols, val_types = masked_inputs(df, aggs)
     specs = [_spec_of(a, vt, collect_limit, hist_capacity) for a, vt in zip(aggs, val_types)]
-    session = isinstance(window, SessionWindow)
-    if session:
-        for a, spec in zip(aggs, specs):
-            if spec["kind"] not in SCALAR_KINDS:
-                raise AnalysisError(
-                    f"session window EMIT CHANGES supports algebraic aggregates "
-                    f"(COUNT/SUM/MIN/MAX/AVG); got {type(a).__name__} — use EMIT "
-                    "FINAL or a pull query for non-mergeable aggregates"
-                )
-
     windowed = window is not None
     if windowed and ts_col is None:
         raise AnalysisError("windowed aggregation requires an event-time column")
+    # a session kernel finds its own windows per key; the bounded kernel
+    # groups by the tumbling/hopping window bounds beside the keys
+    session = isinstance(window, SessionWindow)
+    bucketed = windowed and not session
 
     # narrow pre-shuffle projection; for hopping windows F.window expands one
     # event into size/advance rows (same as the native lowering)
@@ -537,14 +531,14 @@ def bounded_agg_changelog(
         # EventTimeTimeout requires a watermarked column in the stateful
         # operator's child (the tag does not survive `__w.start` extraction)
         cols.append(F.col(ts_col).alias("__ts"))
-    if windowed and not session:
+    if bucketed:
         cols.append(window.grouping_column(ts_col).alias("__w"))
     drop_dummy = not keys and not windowed
     if drop_dummy:
         keys = [("__g", F.lit(0))]
     cols += [c.alias(f"__k{i}") for i, (_, c) in enumerate(keys)]
     proj = df.select(*cols, *agg_cols)
-    if windowed and not session:
+    if bucketed:
         proj = proj.select(
             F.col("__ts"),
             F.col("__w.start").alias("__ws"),
@@ -553,7 +547,7 @@ def bounded_agg_changelog(
         )
 
     key_names = [f"__k{i}" for i in range(len(keys))]
-    group_cols = (["__ws", "__we"] if windowed and not session else []) + key_names
+    group_cols = (["__ws", "__we"] if bucketed else []) + key_names
 
     ts_type = proj.schema["__ts"].dataType if windowed else None
     out_fields = (
@@ -584,7 +578,16 @@ def bounded_agg_changelog(
     if session:
         from .sessions import US, _session_func  # noqa: PLC0415 — sessions imports this module
 
+        for a, spec in zip(aggs, specs):
+            if spec["kind"] not in SCALAR_KINDS:
+                raise AnalysisError(
+                    f"session window EMIT CHANGES supports algebraic aggregates "
+                    f"(COUNT/SUM/MIN/MAX/AVG); got {type(a).__name__} — use EMIT "
+                    "FINAL or a pull query for non-mergeable aggregates"
+                )
+        # merged-away sessions leave as tombstones: the kernel emits __op
         out_fields.append(StructField("__op", StringType()))
+        op_col = [F.col("__op")]
         fold, flush = _session_func(window.gap_seconds, len(keys), specs)
         name = "session_upsert"
         layout = (
@@ -593,6 +596,7 @@ def bounded_agg_changelog(
             len(keys),
         )
     else:
+        op_col = []
         fold, flush = _bounded_func(specs, len(keys), windowed)
         name = "bounded_upsert"
         layout = (
@@ -617,9 +621,9 @@ def bounded_agg_changelog(
         sel += [F.col(n).alias(keys[i][0]) for i, n in enumerate(key_names)]
     for i, (agg, spec, vt) in enumerate(zip(aggs, specs, val_types)):
         kind = spec["kind"]
-        name = agg.output_name()
+        alias = agg.output_name()
         if kind == "histogram":
-            sel.append(F.map_from_arrays(F.col(f"__hk{i}"), F.col(f"__hc{i}")).alias(name))
+            sel.append(F.map_from_arrays(F.col(f"__hk{i}"), F.col(f"__hc{i}")).alias(alias))
         elif kind in COLLECTION_KINDS:
             if spec["is_float"]:
                 # rebuild the NaN elements shipped as a count (see emit()):
@@ -633,11 +637,9 @@ def bounded_agg_changelog(
                     if kind in ("topk", "topk_distinct")
                     else F.concat(F.col(f"__out{i}"), nan_arr)
                 )
-                sel.append(rebuilt.alias(name))
+                sel.append(rebuilt.alias(alias))
             else:
-                sel.append(F.col(f"__out{i}").alias(name))
+                sel.append(F.col(f"__out{i}").alias(alias))
         else:
-            sel.append(slot_column(i, spec, vt).alias(name))
-    if session:
-        sel.append(F.col("__op"))
-    return out.select(*sel)
+            sel.append(slot_column(i, spec, vt).alias(alias))
+    return out.select(*sel, *op_col)

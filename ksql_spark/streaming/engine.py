@@ -169,7 +169,9 @@ def start_stream(
     engine starts a stream, so the run policy is decided in one place.
 
     * A checkpoint whose persisted state layout differs from ``df``'s is
-      refused (:func:`check_state_schema`).
+      refused (:func:`check_state_schema`), and so is a sink whose
+      committed rows carry other column names than ``df``'s: a reader
+      unions every epoch by name, so the old and new rows would mix.
     * ``state_partitions`` pins ``spark.sql.shuffle.partitions``: stateful
       operators open one state store per shuffle partition per batch, and
       Spark bakes the value into the checkpoint at first start.
@@ -184,6 +186,15 @@ def start_stream(
     desc = _state_schema_descriptor(plan)
     if desc is not None:
         check_state_schema(checkpoint, desc, name or checkpoint)
+    written = sink.written_columns()
+    columns = [*df.columns, *([] if "__op" in df.columns else ["__op"])]
+    if written is not None and {c.lower() for c in written} != {c.lower() for c in columns}:
+        raise AnalysisError(
+            f"query {name or checkpoint!r} cannot resume into sink {sink.root}: its "
+            f"committed rows have columns {written}, the compiled query writes "
+            f"{columns}.  Drop the relation and create it again under a fresh "
+            f"workdir, or restore the original SELECT"
+        )
     conf: dict[str, str] = {}
     if state_partitions:
         conf[_SHUFFLE_PARTITIONS] = str(state_partitions)

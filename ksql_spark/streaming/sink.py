@@ -127,6 +127,20 @@ class ExactlyOnceParquetSink:
                 rows.append({"partition": int(f.split("-")[1]), "rows": meta.num_rows})
         return rows
 
+    def written_columns(self) -> list[str] | None:
+        """Column names of the newest committed epoch that wrote a file,
+        from its parquet footer (metadata-only); None before any."""
+        import pyarrow.parquet as pq
+
+        for batch_id in reversed(self.committed_batches()):
+            path = self._batch_path(batch_id)
+            if not os.path.isdir(path):
+                continue
+            parts = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+            if parts:
+                return pq.read_schema(os.path.join(path, parts[0])).names
+        return None
+
     def lineage(self) -> list[dict]:
         """Commit markers in epoch order: ``batch_id``, ``committed_at``,
         ``op``, ``partitions`` (``[{"partition", "rows"}]``) and ``rows``

@@ -296,12 +296,13 @@ def test_streaming_topk_kill_resume_exactly_once(spark, events_stream):
 
 
 def test_bounded_output_shape_matches_native_lowering(spark, events_stream):
-    """Every aggregate fold — Spark's native one, the bounded kernel and
-    the session kernel — shares one final projection: the streaming
-    columns (``__op`` aside) equal the batch lowering's in declared order
-    with SELECT aliases honored, and a TABLE keyed by an aliased GROUP BY
-    key materializes to the batch recompute.  A GROUP BY key the SELECT
-    list leaves out cannot key a TABLE and is refused at CREATE."""
+    """Every aggregate fold — Spark's native one, the bounded kernel
+    (windowed and unwindowed) and the session kernel — shares one final
+    projection: the streaming columns (``__op`` aside) equal the batch
+    lowering's in declared order with SELECT aliases honored, and a TABLE
+    keyed by an aliased GROUP BY key materializes to the batch recompute.
+    A GROUP BY key the SELECT list leaves out cannot key a TABLE and is
+    refused at CREATE."""
     from ksql_spark import Count, SessionWindow, Sum, compile_select
     from ksql_spark.errors import AnalysisError
 
@@ -310,24 +311,22 @@ def test_bounded_output_shape_matches_native_lowering(spark, events_stream):
     cases = {
         "native": (hour, [Count(F("event_id")).Alias("n")]),
         "bounded": (hour, [TopK(F("value"), 3).Alias("n")]),
+        "bounded_unwindowed": (None, [TopK(F("value"), 3).Alias("n")]),
         "session": (
             SessionWindow(5, TimeUnit.MINUTES),
             [Count(F("event_id")).Alias("n"), Sum(F("event_id")).Alias("s")],
         ),
     }
     for name, (window, aggs) in cases.items():
-        q = (
-            Select(*aggs, F("user_id").Alias("uid"))
-            .From(Schema("ev", STREAM))
-            .WindowedBy(window)
-            .GroupBy(F("user_id"))
-            .EmitChanges()
-        )
+        q = Select(*aggs, F("user_id").Alias("uid")).From(Schema("ev", STREAM))
+        if window is not None:
+            q = q.WindowedBy(window)
+        q = q.GroupBy(F("user_id")).EmitChanges()
         want_df = compile_select(q, sources={"ev": batch})
         stream_df = compile_select(q, spark=spark, catalog=cat, streaming=True, grace="365 days")
         assert [c for c in stream_df.columns if c != "__op"] == want_df.columns, name
-        names = [a.output_name() for a in aggs]
-        assert want_df.columns == ["window_start", "window_end", *names, "uid"]
+        bounds = ["window_start", "window_end"] if window is not None else []
+        assert want_df.columns == [*bounds, *(a.output_name() for a in aggs), "uid"], name
         mgr.create_as_select(Create(TABLE, f"shape_{name}").AsSelect(q), available_now=True)
         got = _rows(cat.read(f"QUERYABLE_shape_{name}").select(*want_df.columns))
         assert got == _rows(want_df), name

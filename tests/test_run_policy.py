@@ -178,3 +178,17 @@ def test_bounded_runs_skip_or_keep_the_no_data_batch(spark, workdir, transcripts
     assert runs["changes"][0] >= 1 and runs["changes"][1] == 0
     assert runs["finals"][1] == 1
     assert mgr.queries["finals"].sink.read_data(spark).count() > 0
+
+
+def test_start_refuses_a_sink_written_with_other_columns(spark, workdir):
+    """A sink's readers union every committed epoch by column name, so a
+    restart whose query writes other columns (e.g. a GROUP BY key now under
+    its SELECT alias) is refused before it starts."""
+    from ksql_spark.errors import AnalysisError
+
+    sink = ExactlyOnceParquetSink(f"{workdir}/cols_sink")
+    sink(spark.range(2).select(Fn.col("id").alias("user_id"), Fn.lit(1).alias("n")), 0)
+    assert sink.written_columns() == ["user_id", "n", "__op"]
+    renamed = spark.range(2).select(Fn.lit(1).alias("n"), Fn.col("id").alias("uid"))
+    with pytest.raises(AnalysisError, match="cannot resume into sink"):
+        start_stream(renamed, sink, f"{workdir}/cols_ckpt")
