@@ -32,6 +32,7 @@ from collections.abc import Callable
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as Fn
@@ -82,12 +83,7 @@ from ksql_spark.functions.text import (
 )
 from ksql_spark.migrations import Migrator, create_migration
 from ksql_spark.operators.cep import match_sequence, repeat
-from ksql_spark.operators.cep_nfa import (
-    match_pattern,
-    match_pattern_stream,
-    match_quantified,
-    match_quantified_stream,
-)
+from ksql_spark.operators.cep_nfa import match_pattern
 from ksql_spark.operators.chunking import chunk_documents
 from ksql_spark.operators.compile import DEFAULT_GRACE
 from ksql_spark.operators.dedup import (
@@ -1105,7 +1101,7 @@ def _query_embedding(sf_dir: str, vec_id: int = 0) -> list:
     tbl = pq.read_table(
         os.path.join(sf_dir, "embeddings.parquet"),
         columns=["vec_id", "embedding"],
-        filters=[("vec_id", "==", vec_id)],
+        filters=pc.field("vec_id") == vec_id,
     )
     return list(tbl.column("embedding")[0].as_py())
 
@@ -1397,6 +1393,13 @@ def q_cep_optional(spark: SparkSession, sf_dir: str) -> DataFrame:
     return m.select("user_id", "click_id", "purchase_id", "view_id")
 
 
+def _quantifier_legs():
+    return [
+        ("a", Fn.col("event_type") == "view", 2, 3),
+        ("b", Fn.col("event_type") == "purchase", 1, 1),
+    ]
+
+
 def q_cep_quantifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CEP variable quantifier (VERDICT r4 #3): view{2,3} then purchase per
     user within 24h — 2..3 CONSECUTIVE views (consecutive in the per-user
@@ -1407,11 +1410,8 @@ def q_cep_quantifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/cep_nfa.py match_pattern) — no join, no cartesian.  Oracle =
     the row_number self-join."""
     src = _load(spark, sf_dir, "events")
-    return match_quantified(
-        src["events"],
-        ("a", Fn.col("event_type") == "view", 2, 3),
-        ("b", Fn.col("event_type") == "purchase"),
-        within_seconds=86400,
+    return match_pattern(
+        src["events"], _quantifier_legs(), within_seconds=86400
     ).select(
         "user_id",
         "a_first_id",
@@ -1431,12 +1431,9 @@ def streaming_cep_quantifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     row advances the watermark past every anchor's close, standing in for
     the stream continuing.  Oracle = the identical batch recompute."""
     src, work = _sentinel_events(spark, sf_dir, "ksql_driver_cepq_")
-    m = match_quantified_stream(
-        src,
-        ("a", Fn.col("event_type") == "view", 2, 3),
-        ("b", Fn.col("event_type") == "purchase"),
-        within_seconds=86400,
-    ).filter(Fn.col("user_id") >= 0)
+    m = match_pattern(src, _quantifier_legs(), within_seconds=86400).filter(
+        Fn.col("user_id") >= 0
+    )
     return _drain(m, work).select("user_id", "a_first_id", "a_last_id", "a_count", "b_id")
 
 
@@ -1464,7 +1461,7 @@ def _nfa_stream(spark, sf_dir, prefix, legs, mode, cols=_PATTERN_COLS) -> DataFr
     """A view/click/purchase pattern on the sentinel-staged events stream
     through the streaming NFA (within 24h), sentinel keys dropped."""
     src, work = _sentinel_events(spark, sf_dir, prefix)
-    m = match_pattern_stream(src, legs, within_seconds=86400, mode=mode).filter(
+    m = match_pattern(src, legs, within_seconds=86400, mode=mode).filter(
         Fn.col("user_id") >= 0
     )
     return _drain(m, work).select(*cols)

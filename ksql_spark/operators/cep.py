@@ -4,13 +4,13 @@ ksqlDB (and the reference client, gulfstream-h/ksql) stops at windowed
 aggregates and joins; a CEP engine (the north rule names one) also needs
 "A followed by B [followed by C ...] within T per key".
 
-:func:`match_sequence` is a front-end to the NFA kernel in ``cep_nfa.py``:
-each step is a ``(name, pred, 1, 1)`` leg, a batch frame runs through
-``cep_nfa.match_pattern`` (one key shuffle and one kernel pass per
-partition) and a stream through ``cep_nfa.match_pattern_stream`` (one
-keyed-state operator, whatever the step count).  ``absent`` and
+:func:`match_sequence` is a front-end to ``cep_nfa.match_pattern``'s
+lowering: each step is a ``(name, pred, 1, 1)`` leg, so a batch frame runs
+as one key shuffle and one kernel pass per partition, and a stream as one
+keyed-state operator, whatever the step count.  ``absent`` and
 ``optional`` legs are span checks the kernel applies to each positive
-match before it emits it.
+match before it emits it.  Bad arguments raise ``AnalysisError``, as
+``match_pattern``'s do.
 
 Match semantics (relational, deterministic, oracle-checkable):
 
@@ -33,7 +33,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 
-from .cep_nfa import _match_batch, _match_stream
+from ..errors import AnalysisError
+from .cep_nfa import _lower
 
 
 def match_sequence(
@@ -65,16 +66,12 @@ def match_sequence(
     none; several optional legs multiply.
     """
     if len(steps) < 2:
-        raise ValueError("a sequence pattern needs at least 2 steps")
+        raise AnalysisError("a sequence pattern needs at least 2 steps")
     if mode not in ("all", "first"):
-        raise ValueError(f"unknown match mode {mode!r}")
+        raise AnalysisError(f"unknown match mode {mode!r}: expected 'all' or 'first'")
     spans = [(n, p, True) for n, p in absent or []] + [(n, p, False) for n, p in optional or []]
-    names = [n for n, _ in steps] + [n for n, _, _ in spans]
-    if len(set(names)) != len(names):
-        raise ValueError("step names must be unique (they become output columns)")
-    lower = _match_stream if df.isStreaming else _match_batch
-    return lower(df, [(n, p, 1, 1) for n, p in steps], within_seconds, key_col, ts_col,
-                 id_col, mode, spans)
+    return _lower(df, [(n, p, 1, 1) for n, p in steps], within_seconds, key_col, ts_col,
+                  id_col, mode, spans)
 
 
 def repeat(name: str, pred: Column, n: int) -> list[tuple[str, Column]]:
@@ -93,7 +90,8 @@ def repeat(name: str, pred: Column, n: int) -> list[tuple[str, Column]]:
     operator, so state stays one buffer per key; the match count, though,
     grows with the number of ordered n-subsets inside the window.  For
     variable bounds A{m,n} / A{m,}, with consecutive-run semantics, use
-    ``cep_nfa.match_quantified(_stream)``.
+    ``cep_nfa.match_pattern`` with the legs ``[("a", pred_a, m, n),
+    ("b", pred_b, 1, 1)]``.
     """
     if n < 1:
         raise ValueError("repeat() needs n >= 1")

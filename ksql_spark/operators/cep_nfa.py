@@ -25,14 +25,16 @@ surface at all; Flink MATCH_RECOGNIZE is the inspiration):
     a row_number self-join), with the run length as ``a_count``.
   * ``n=None`` is Kleene-plus: ``A{m,}`` — the within-bound caps the run.
   * Events with a NULL key, a NULL event time or a NULL id never match, in
-    batch or streaming: ``match_pattern`` and ``match_pattern_stream``
-    drop them before any leg sees them (a NULL ts has no place in the
-    (ts, id) order, and a NULL id cannot be ordered against a tied ts).
+    batch or streaming: ``match_pattern`` drops them before any leg sees
+    them (a NULL ts has no place in the (ts, id) order, and a NULL id
+    cannot be ordered against a tied ts).
 
-Both lowerings run the same kernel (:func:`pattern_matches` /
-:func:`pattern_matches_skip`, picked by mode in :func:`_kernel`) over the
-same narrow projection (:func:`_project`: key, ``unix_micros`` ts, id, one
-mask per leg), so batch == streaming holds by construction.
+:func:`match_pattern` is the one entry point; it lowers a batch frame or a
+stream by ``df.isStreaming``.  Both lowerings run the same kernel
+(:func:`pattern_matches` / :func:`pattern_matches_skip`, picked by mode in
+:func:`_kernel`) over the same narrow projection (:func:`_project`: key,
+``unix_micros`` ts, id, one mask per leg), so batch == streaming holds by
+construction.
 
 The batch lowering is one hash shuffle on the key plus a sort within each
 partition by (key, ts, id), then ONE ``mapInPandas`` call per partition:
@@ -81,7 +83,7 @@ from ..streaming.keyed import apply_keyed
 
 
 class PatternWorkCapExceeded(RuntimeError):
-    """One key's pattern evaluation exceeded the configured match cap.
+    """One key's pattern evaluation exceeded the match cap (``_WORK_CAP``).
 
     All-combinations semantics are combinatorial by nature (a dense run of
     quantified-leg matches × a wide bound × multiple legs multiplies match
@@ -184,10 +186,10 @@ def pattern_matches(
             if len(out) > work_cap:
                 raise PatternWorkCapExceeded(
                     f"pattern evaluation produced more than {work_cap} "
-                    f"matches for one key in one flush (all-combinations "
-                    f"semantics over a dense quantified run); raise the cap, "
-                    f"narrow the quantifier bounds, or shrink the "
-                    f"within-window"
+                    f"matches for one key in one kernel call (all-combinations "
+                    f"semantics over a dense run); narrow the quantifier "
+                    f"bounds, shrink the within-window, or pick a selective "
+                    f"match mode"
                 )
 
     def neg_limit(pending: tuple, start_after: tuple[int, int]):
@@ -326,64 +328,6 @@ def pattern_matches_skip(
         evs = [[e for e in l if e > frontier] for l in evs]
 
 
-def quantified_matches(
-    a_events: list[tuple[int, int]],
-    b_events: list[tuple[int, int]],
-    m: int,
-    n: int | None,
-    within_us: int,
-    close_before_us: int | None = None,
-    cursor: tuple[int, int] | None = None,
-) -> tuple[list[tuple[int, int, int, int, int]], tuple[int, int] | None]:
-    """All ``A{m,n}``-then-B matches over sorted (ts_us, id) event lists.
-
-    Two-leg wrapper over :func:`pattern_matches`; each match is
-    (a_first_id, a_last_id, a_count, b_id, a_first_ts_us).
-    """
-    raw, new_cursor = pattern_matches(
-        [a_events, b_events], [(m, n), (1, 1)], within_us,
-        close_before_us=close_before_us, cursor=cursor,
-    )
-    out = [(f0, l0, c0, f1, a_ts) for (f0, l0, c0), (f1, _l1, _c1), a_ts in raw]
-    return out, new_cursor
-
-
-# ---------------------------------------------------------------------------
-# batch lowering: the kernel once per shuffle partition
-# ---------------------------------------------------------------------------
-
-
-def match_quantified(
-    df: DataFrame,
-    quant: tuple[str, Column, int, int | None],
-    terminal: tuple[str, Column],
-    within_seconds: float,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    mode: str = "all",
-) -> DataFrame:
-    """Batch ``A{m,n}`` then B.
-
-    ``quant`` is (name, predicate, m, n) with ``n=None`` for ``A{m,}``;
-    ``terminal`` is (name, predicate).  Output columns:
-    ``key, <a>_first_id, <a>_last_id, <a>_count, <b>_id``.
-
-    Plan shape: one hash shuffle of the pattern-relevant events on the key,
-    a sort within each partition, and one ``mapInPandas`` pass that runs
-    the kernel per key.  Two-leg wrapper over :func:`match_pattern`.
-    """
-    return match_pattern(
-        df,
-        [quant, (terminal[0], terminal[1], 1, 1)],
-        within_seconds,
-        key_col=key_col,
-        ts_col=ts_col,
-        id_col=id_col,
-        mode=mode,
-    )
-
-
 def _check_bounds(m: int, n: int | None) -> None:
     if m < 0:
         raise AnalysisError("quantifier lower bound must be >= 0")
@@ -434,43 +378,6 @@ def _validate_legs(legs: list[tuple[str, Column, int, int | None]], mode: str,
         )
 
 
-# ---------------------------------------------------------------------------
-# streaming lowering: one NFA state store
-# ---------------------------------------------------------------------------
-
-def match_quantified_stream(
-    df: DataFrame,
-    quant: tuple[str, Column, int, int | None],
-    terminal: tuple[str, Column],
-    within_seconds: float,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    mode: str = "all",
-) -> DataFrame:
-    """Streaming ``A{m,n}`` then B over a watermarked stream.
-
-    One keyed-state operator (append mode + event-time timeout); emits
-    each match exactly once when its anchor's window closes behind the
-    watermark.  Output schema matches ``match_quantified``.
-    Two-leg wrapper over :func:`match_pattern_stream`.
-    """
-    return match_pattern_stream(
-        df,
-        [quant, (terminal[0], terminal[1], 1, 1)],
-        within_seconds,
-        key_col=key_col,
-        ts_col=ts_col,
-        id_col=id_col,
-        mode=mode,
-    )
-
-
-# ---------------------------------------------------------------------------
-# multi-leg quantified patterns: L0{m0,n0} L1{m1,n1} ... within T
-# ---------------------------------------------------------------------------
-
-
 def match_pattern(
     df: DataFrame,
     legs: list[tuple[str, Column, int, int | None]],
@@ -480,7 +387,9 @@ def match_pattern(
     id_col: str = "event_id",
     mode: str = "all",
 ) -> DataFrame:
-    """Batch multi-leg quantified pattern: ``L0{m0,n0} L1{m1,n1} ...``.
+    """Multi-leg quantified pattern ``L0{m0,n0} L1{m1,n1} ...`` per key, on
+    a batch DataFrame or a watermarked stream, with the same rows.  A
+    stream's query runs in append output mode.
 
     ``legs`` are (name, predicate, m, n) tuples (``n=None`` = Kleene upper).
     Leg kinds (same contract as :func:`pattern_matches`): positive
@@ -492,10 +401,11 @@ def match_pattern(
     lands within ``within_seconds`` of the match's anchor (leg 0's first
     event).  Output columns per quantified/optional leg:
     ``<name>_first_id, <name>_last_id, <name>_count``; per (1,1) leg:
-    ``<name>_id``; negation legs emit no columns.
+    ``<name>_id``; negation legs emit no columns.  ``A{m,n}`` then B is
+    ``[("a", pred_a, m, n), ("b", pred_b, 1, 1)]``.  Id values keep their
+    native column type (int, string, ...).
 
-    ``mode`` (the AFTER MATCH contract, identical to
-    :func:`match_pattern_stream`'s): ``"all"`` (default) emits every
+    ``mode`` (the AFTER MATCH contract): ``"all"`` (default) emits every
     match; ``"first"`` one row per key — the first match in
     :func:`pattern_matches`'s canonical enumeration order;
     ``"skip_to_next"`` (SKIP TO NEXT ROW) the canonically-first match of
@@ -504,38 +414,74 @@ def match_pattern(
     matches — the canonically-first match, then the next one starting
     strictly after its last consumed element, and so on.
 
-    Lowering, for every mode: :func:`_project` keeps the pattern-relevant
-    events as (key, ts_us, id, leg masks), one hash shuffle on the key
-    and a sort within each partition by (key, ts, id) follow, and ONE
-    ``mapInPandas`` call per partition runs the kernel once per key (see
-    :func:`_partition_func`).  Per-task memory is one shuffle partition's
-    pattern-relevant events — sized by ``spark.sql.shuffle.partitions``,
-    the same knob every wide op here scales with.  Any number of optional
-    legs is accepted: the kernel explores each one's empty branch itself.
+    In ``all`` mode one key's matches in one kernel call are capped at
+    :data:`_WORK_CAP`: past it the task fails with
+    :class:`PatternWorkCapExceeded` — a named error instead of a hot key
+    that stalls its partition.  The other modes emit at most one match per
+    anchor, so no cap applies.
+
+    Batch lowering, for every mode: :func:`_project` keeps the
+    pattern-relevant events as (key, ts_us, id, leg masks), one hash
+    shuffle on the key and a sort within each partition by (key, ts, id)
+    follow, and ONE ``mapInPandas`` call per partition runs the kernel once
+    per key (see :func:`_partition_func`).  Per-task memory is one shuffle
+    partition's pattern-relevant events — sized by
+    ``spark.sql.shuffle.partitions``, the same knob every wide op here
+    scales with.  Any number of optional legs is accepted: the kernel
+    explores each one's empty branch itself.
+
+    Streaming lowering: ONE keyed-state operator whatever the leg count or
+    quantifier bounds, with the emission rule the module docstring
+    describes.  ``first`` collapses a matched key's state to an O(1) done
+    marker; ``skip_past_last`` persists its frontier beside the flush
+    cursor and evicts every buffered event at or before it.  The state's
+    layout tag covers the leg bounds, the window, the mode, the emission
+    rule and the output types, so the engine's resume guard
+    (``streaming/engine.py``) refuses a checkpoint written under another
+    pattern shape, window or mode.  Every event moves the watermark,
+    whether or not a leg accepts it (see :func:`_project`).
     """
-    return _match_batch(df, legs, within_seconds, key_col, ts_col, id_col, mode)
+    return _lower(df, legs, within_seconds, key_col, ts_col, id_col, mode)
 
 
-def _match_batch(df, legs, within_seconds, key_col, ts_col, id_col, mode,
-                 spans=()) -> DataFrame:
+# one key's ``all``-mode matches in one kernel call; read when a pattern is
+# lowered and shipped with its kernel
+_WORK_CAP = 1_000_000
+
+
+def _lower(df, legs, within_seconds, key_col, ts_col, id_col, mode, spans=()) -> DataFrame:
     """:func:`match_pattern`'s lowering, plus the span legs ``spans``:
-    ``(name, pred, absent)`` triples (see :func:`_span_rows`)."""
+    ``(name, pred, absent)`` triples (see :func:`_span_rows`).  A batch
+    frame becomes one ``mapInPandas`` pass per shuffle partition, a stream
+    one keyed-state operator; both run :func:`pattern_matches` over the
+    same projection, output schema, bounds, window and work cap."""
     _validate_legs(legs, mode, spans)
-    if df.isStreaming:
-        raise AnalysisError(
-            "match_pattern requires a batch DataFrame; use match_pattern_stream"
-        )
     out_fields, out_cols = _out_schema(df, legs, spans, key_col, id_col)
-    func = _partition_func(mode, [(m, n) for _, _, m, n in legs],
-                           int(within_seconds * 1_000_000), out_cols,
-                           tuple(a for _, _, a in spans))
-    return (
-        _project(df, legs, spans, key_col, ts_col, id_col)
-        .repartition(F.col("__k"))
-        .sortWithinPartitions("__k", "__ts", "__id")
-        .mapInPandas(func, StructType(out_fields))
-        .withColumnRenamed("__k", key_col)
-    )
+    bounds = [(m, n) for _, _, m, n in legs]
+    flags = tuple(a for _, _, a in spans)
+    within_us = int(within_seconds * 1_000_000)
+    if not df.isStreaming:
+        func = _partition_func(mode, bounds, within_us, out_cols, flags, _WORK_CAP)
+        out = (
+            _project(df, legs, spans, key_col, ts_col, id_col)
+            .repartition(F.col("__k"))
+            .sortWithinPartitions("__k", "__ts", "__id")
+            .mapInPandas(func, StructType(out_fields))
+        )
+    else:
+        proj = _project(df, legs, spans, key_col, ts_col, id_col,
+                        F.col(ts_col).alias("__wmts"), pushable=False)
+        if mode == "all" and not spans and all(b == (1, 1) for b in bounds):
+            name, rule = "nfa_eager", "on_complete"
+            fold, flush = _eager_func(bounds, within_us, out_cols, _WORK_CAP)
+        else:
+            name, rule = "nfa_match", "on_anchor_close"
+            fold, flush = _pattern_func(bounds, within_us, out_cols, _WORK_CAP, mode, flags)
+        layout = (bounds, flags, within_us, mode, rule,
+                  [f.dataType.simpleString() for f in out_fields])
+        out = apply_keyed(proj.groupBy(F.col("__k")), StructType(out_fields),
+                          name, layout, fold, flush, "append")
+    return out.withColumnRenamed("__k", key_col)
 
 
 def _project(df: DataFrame, legs: list, spans, key_col: str, ts_col: str, id_col: str,
@@ -631,7 +577,7 @@ _OUT_CHUNK_ROWS = 10_000
 
 
 def _partition_func(mode: str, bounds: list, within_us: int, out_cols: list,
-                    spans: tuple = ()):
+                    spans: tuple, work_cap: int | None):
     """The batch ``mapInPandas`` function: every key of one shuffle
     partition in one Python call.
 
@@ -669,7 +615,8 @@ def _partition_func(mode: str, bounds: list, within_us: int, out_cols: list,
         key_rows: list = []
         for g in range(len(cuts) - 1):
             leg_ev = [sorted(evs[c[g]:c[g + 1]]) for evs, c in per_leg]
-            found, _, _ = _kernel(mode, leg_ev, bounds, within_us, spans=spans)
+            found, _, _ = _kernel(mode, leg_ev, bounds, within_us, work_cap=work_cap,
+                                  spans=spans)
             if found:
                 matches += found
                 key_rows += [cuts[g]] * len(found)
@@ -850,104 +797,3 @@ def _eager_func(bounds: list, within_us: int, out_cols: list, work_cap: int | No
         return frame, (old, [[] for _ in range(n_legs)]), deadline
 
     return fold, flush
-
-
-def match_pattern_stream(
-    df: DataFrame,
-    legs: list[tuple[str, Column, int, int | None]],
-    within_seconds: float,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    max_matches_per_key: int | None = 1_000_000,
-    mode: str = "all",
-) -> DataFrame:
-    """Streaming multi-leg quantified pattern over a watermarked stream.
-
-    ONE keyed-state operator (``streaming/keyed.py``) regardless of leg
-    count or quantifier bounds — per-key state is the per-leg event buffers
-    of the active horizon plus a flush cursor; each match emits exactly
-    once when its anchor's window closes behind the watermark (a monotone
-    pattern's on completion, see below).  Supports
-    the same leg kinds as :func:`match_pattern` (positive / negation
-    ``(0,0)`` / optional ``(0,n)``); output schema matches it.  Negation
-    legs' events are buffered like any other leg (same time-horizon
-    eviction) and checked by the kernel against the guarded gap.  Id
-    values keep their native column type (int, string, ...).
-
-    ``max_matches_per_key`` bounds one key's all-combinations output per
-    flush: past it the task fails with :class:`PatternWorkCapExceeded` —
-    a named error instead of a silent hot-key stall (pass None to
-    disable).
-
-    ``mode="first"`` (AFTER MATCH ``first``): emit ONE row per key — the
-    first match in the kernel's canonical enumeration order — then stop
-    tracking the key.  Matches still emit at anchor close (a late event
-    can complete a canonically-earlier match, so emitting before the
-    watermark passes the anchor's window would break determinism), and
-    the flush-cursor contract makes the choice exactly-once across
-    replays.  On match the key's state collapses to an O(1) done marker
-    (buffers dropped, no more enumeration work).
-
-    ``mode="skip_past_last"`` (AFTER MATCH SKIP PAST LAST ROW): greedy
-    NON-OVERLAPPING matches — after each selection the per-key frontier
-    advances past the match's last consumed element, buffered events at
-    or before it are evicted immediately, and late arrivals behind it are
-    dropped on ingest.  Dense keys therefore carry *less* state than
-    all-matches mode, and output is linear in the event count (no work
-    cap needed).  Selections still happen at anchor close, in canonical
-    order, exactly-once via the persisted (cursor, frontier) pair.
-
-    ``mode="skip_to_next"`` (AFTER MATCH SKIP TO NEXT ROW): emit the
-    canonically-first match of EACH anchor — matches may overlap but no
-    two share a starting row (the middle ground between all-matches and
-    the non-overlapping skip-past-last).  Buffering, eviction and the
-    flush-cursor contract are identical to ``"all"`` (later anchors may
-    reuse a previous match's events, so nothing extra can be evicted);
-    only the per-anchor enumeration changes, aborting at each anchor's
-    first match — output and kernel work are linear in the leg-0 event
-    count, so no work cap applies.
-
-    A monotone pattern — ``"all"`` mode with only ``(1, 1)`` legs — emits
-    each match on completion instead, in the micro-batch that brings its
-    last event (:func:`_eager_func`).  The query runs in append output
-    mode either way: every match is emitted exactly once.
-
-    The state's layout tag covers the leg bounds, the window, the mode, the
-    emission rule and the output types, so the engine's resume guard
-    (``streaming/engine.py``) refuses a checkpoint written under another
-    pattern shape, window or mode instead of reading it.
-
-    Every event moves the watermark, whether or not a leg accepts it: the
-    leg filter is spelled so the optimizer cannot push it below the
-    watermark (see :func:`_project`).
-    """
-    return _match_stream(df, legs, within_seconds, key_col, ts_col, id_col, mode,
-                         max_matches_per_key=max_matches_per_key)
-
-
-def _match_stream(df, legs, within_seconds, key_col, ts_col, id_col, mode, spans=(),
-                  max_matches_per_key: int | None = 1_000_000) -> DataFrame:
-    """:func:`match_pattern_stream`'s lowering, plus the span legs ``spans``:
-    ``(name, pred, absent)`` triples (see :func:`_span_rows`)."""
-    _validate_legs(legs, mode, spans)
-    if not df.isStreaming:
-        raise AnalysisError("match_pattern_stream requires a streaming DataFrame")
-    proj = _project(df, legs, spans, key_col, ts_col, id_col,
-                    F.col(ts_col).alias("__wmts"), pushable=False)
-    out_fields, out_cols = _out_schema(df, legs, spans, key_col, id_col)
-    bounds = [(m, n) for _, _, m, n in legs]
-    flags = tuple(a for _, _, a in spans)
-    within_us = int(within_seconds * 1_000_000)
-    if mode == "all" and not spans and all(b == (1, 1) for b in bounds):
-        name, rule = "nfa_eager", "on_complete"
-        fold, flush = _eager_func(bounds, within_us, out_cols, max_matches_per_key)
-    else:
-        name, rule = "nfa_match", "on_anchor_close"
-        fold, flush = _pattern_func(bounds, within_us, out_cols, max_matches_per_key,
-                                    mode, flags)
-    layout = (bounds, flags, within_us, mode, rule,
-              [f.dataType.simpleString() for f in out_fields])
-    out = apply_keyed(proj.groupBy(F.col("__k")), StructType(out_fields),
-                      name, layout, fold, flush, "append")
-    return out.withColumnRenamed("__k", key_col)

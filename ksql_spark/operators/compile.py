@@ -777,6 +777,15 @@ def _lower_aggregate(
     if windowed and ts_col is None:
         raise AnalysisError("windowed aggregation requires an event-time column")
     agg_fields = [f for f in sb.fields if f.is_aggregate()]
+    for f in sb.fields:
+        nested: list[AggregateFn] = []
+        _collect_aggs(f, nested)
+        if nested and not f.is_aggregate():
+            raise AnalysisError(
+                f"SELECT field {f.output_name()!r} is an expression over aggregates; "
+                f"a grouped query selects GROUP BY keys and aggregates, so select "
+                f"each aggregate and combine them in a downstream query"
+            )
     # HAVING over aggregates (reference: select_builder_test.go:92-99)
     subs, hidden = _having_slots(sb, agg_fields)
 

@@ -362,9 +362,7 @@ def _bounded_func(specs: list[dict], n_keys: int, windowed: bool) -> tuple:
 _NUMERIC = ("byte", "short", "integer", "long", "float", "double")
 
 
-def _spec_of(
-    agg, vt, collect_limit: int = DEFAULT_COLLECT_LIMIT, hist_capacity: int | None = None
-) -> dict:
+def _spec_of(agg, vt) -> dict:
     """The picklable spec {kind, bound, buckets, is_float} of one aggregate
     over input type ``vt`` — the input contract of both keyed aggregate
     kernels.  SUM/AVG need an integral or floating-point input; COUNT and
@@ -380,18 +378,18 @@ def _spec_of(
         return {
             **spec,
             "kind": "histogram",
-            "bound": hist_capacity or max(agg.buckets * 5, 100),
+            "bound": max(agg.buckets * 5, 100),
             "buckets": agg.buckets,
         }
     if isinstance(agg, CollectSet):
-        return {**spec, "kind": "collect_set", "bound": collect_limit}
+        return {**spec, "kind": "collect_set", "bound": DEFAULT_COLLECT_LIMIT}
     if isinstance(agg, CollectList):
         if getattr(agg, "order_by", None):
             raise AnalysisError(
                 "COLLECT_LIST with an explicit order key is not supported in the "
                 "bounded streaming path; use EMIT FINAL or a pull query"
             )
-        return {**spec, "kind": "collect_list", "bound": collect_limit}
+        return {**spec, "kind": "collect_list", "bound": DEFAULT_COLLECT_LIMIT}
     if isinstance(agg, (Sum, Avg)) and vt.typeName() not in _NUMERIC:
         raise AnalysisError(
             f"{type(agg).__name__.upper()} requires a numeric (integral or "
@@ -493,8 +491,6 @@ def bounded_agg_changelog(
     keys: list[tuple[str, Column]],
     window: WindowSpec | None,
     aggs: list,
-    collect_limit: int = DEFAULT_COLLECT_LIMIT,
-    hist_capacity: int | None = None,
 ) -> DataFrame:
     """Fold the groups of an EMIT CHANGES stream on a keyed-state kernel.
 
@@ -514,7 +510,7 @@ def bounded_agg_changelog(
     shape compile's ``_lower_aggregate`` projects.
     """
     agg_cols, val_types = masked_inputs(df, aggs)
-    specs = [_spec_of(a, vt, collect_limit, hist_capacity) for a, vt in zip(aggs, val_types)]
+    specs = [_spec_of(a, vt) for a, vt in zip(aggs, val_types)]
     windowed = window is not None
     if windowed and ts_col is None:
         raise AnalysisError("windowed aggregation requires an event-time column")

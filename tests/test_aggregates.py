@@ -24,6 +24,7 @@ from ksql_spark import (
     LatestByOffset,
     Schema,
     Select,
+    Sum,
     TopK,
     TopKDistinct,
     compile_select,
@@ -192,6 +193,24 @@ def test_having_arithmetic_wrapped_aggregate_batch(spark, turns):
     )
     got = agg(q, turns)
     assert got == {"c1": (3,)}  # 3*2 > 4; the 2-turn convs fail 2*2 > 4
+
+
+@pytest.mark.parametrize("with_plain_agg", [False, True])
+def test_select_expression_over_aggregates_is_refused(spark, with_plain_agg):
+    """A SELECT field computed over aggregates is neither a GROUP BY key nor
+    an aggregate: it is refused with an AnalysisError naming it, instead of
+    being lowered as a DISTINCT key and failing in Spark as an unresolved
+    column."""
+    df = spark.createDataFrame([("g", 1), ("g", 3)], "k string, v int")
+    plain = [Count(F("v")).Alias("n")] if with_plain_agg else []
+    q = (
+        Select(F("k"), *plain, Sum(F("v")).Div(Count(F("v"))).Alias("a"))
+        .From(Schema("t", STREAM))
+        .GroupBy(F("k"))
+        .EmitChanges()
+    )
+    with pytest.raises(AnalysisError, match="'a' is an expression over aggregates"):
+        compile_select(q, sources={"t": df})
 
 
 def test_histogram_twolevel_skewed_hot_key(spark):

@@ -5,6 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as Fn
 
+from ksql_spark.errors import AnalysisError
 from ksql_spark.operators.cep import match_sequence
 
 
@@ -75,10 +76,14 @@ def test_three_step_requires_full_order(spark, events):
 
 
 def test_rejects_bad_args(spark, events):
-    with pytest.raises(ValueError):
+    with pytest.raises(AnalysisError):
         match_sequence(events, STEPS()[:1], within_seconds=10)
-    with pytest.raises(ValueError):
+    with pytest.raises(AnalysisError):
         match_sequence(events, STEPS(), within_seconds=10, mode="last")
+    with pytest.raises(AnalysisError, match="match mode"):  # a pattern-only mode
+        match_sequence(events, STEPS(), within_seconds=10, mode="skip_past_last")
+    with pytest.raises(AnalysisError, match="unique"):
+        match_sequence(events, STEPS(), within_seconds=10, absent=[("a", Fn.lit(True))])
 
 
 def test_streaming_matches_batch(spark, events, tmp_path):

@@ -13,13 +13,19 @@ import pytest
 from pyspark.sql import functions as Fn
 
 from ksql_spark.errors import AnalysisError
-from ksql_spark.operators.cep_nfa import (
-    match_quantified,
-    match_quantified_stream,
-    quantified_matches,
-)
+from ksql_spark.operators.cep_nfa import match_pattern, pattern_matches
 
 US = 1_000_000
+
+
+def _quant_then_b(a_events, b_events, m, n, within_us, close_before_us=None, cursor=None):
+    """``A{m,n}`` then B on the kernel: one (a_first_id, a_last_id,
+    a_count, b_id, a_first_ts_us) tuple per match, and the new cursor."""
+    raw, new_cursor = pattern_matches(
+        [a_events, b_events], [(m, n), (1, 1)], within_us,
+        close_before_us=close_before_us, cursor=cursor,
+    )
+    return [(f0, l0, c0, f1, a_ts) for (f0, l0, c0), (f1, _, _), a_ts in raw], new_cursor
 
 
 # ---------------------------------------------------------------------------
@@ -31,7 +37,7 @@ def test_kernel_basic_runs_and_bounds():
     # A@0, A@10, A@20, B@25 (ids 1..4), within 30s
     a = [(0, 1), (10 * US, 2), (20 * US, 3)]
     b = [(25 * US, 4)]
-    got, cur = quantified_matches(a, b, m=2, n=3, within_us=30 * US)
+    got, cur = _quant_then_b(a, b, m=2, n=3, within_us=30 * US)
     # anchors: id1 runs {1,2}->(1,2,2) {1,2,3}->(1,3,3); id2 run {2,3}->(2,3,2)
     assert sorted(got) == [
         (1, 2, 2, 4, 0),
@@ -47,14 +53,14 @@ def test_kernel_within_bound_prunes_runs_and_terminals():
     # anchor id1 (horizon 30): run {1,2} ok but B@38 outside; {1,2,3} has
     # last@35 outside.  anchor id2 (horizon 40): run {2,3} last@35 <= 40,
     # B@38 strictly after and inside -> the only match.
-    got, _ = quantified_matches(a, b, m=2, n=3, within_us=30 * US)
+    got, _ = _quant_then_b(a, b, m=2, n=3, within_us=30 * US)
     assert got == [(2, 3, 2, 4, 10 * US)]
 
 
 def test_kernel_kleene_plus_unbounded_upper():
     a = [(i * US, i + 1) for i in range(5)]
     b = [(10 * US, 99)]
-    got, _ = quantified_matches(a, b, m=3, n=None, within_us=60 * US)
+    got, _ = _quant_then_b(a, b, m=3, n=None, within_us=60 * US)
     # runs of length 3..5 from each eligible anchor
     lens = sorted((f, c) for f, _, c, _, _ in got)
     assert lens == [(1, 3), (1, 4), (1, 5), (2, 3), (2, 4), (3, 3)]
@@ -64,7 +70,7 @@ def test_kernel_terminal_strictly_after_last():
     # B at the same (ts) as last A but smaller id: excluded; larger id: kept
     a = [(0, 1), (10 * US, 5)]
     b = [(10 * US, 3), (10 * US, 7)]
-    got, _ = quantified_matches(a, b, m=2, n=2, within_us=30 * US)
+    got, _ = _quant_then_b(a, b, m=2, n=2, within_us=30 * US)
     assert got == [(1, 5, 2, 7, 0)]
 
 
@@ -73,13 +79,13 @@ def test_kernel_cursor_and_close_gate():
     b = [(15 * US, 4), (60 * US, 5)]
     # watermark at 45s: only anchor id1 closes (0+30 <= 45); id2 (10+30=40
     # <=45) also closes; id3 stays open
-    got, cur = quantified_matches(
+    got, cur = _quant_then_b(
         a, b, m=1, n=2, within_us=30 * US, close_before_us=45 * US
     )
     assert cur == (10 * US, 2)
     assert all(f in (1, 2) for f, *_ in got)
     # resume from the cursor with a later watermark: id3's matches appear once
-    got2, cur2 = quantified_matches(
+    got2, cur2 = _quant_then_b(
         a, b, m=1, n=2, within_us=30 * US, close_before_us=200 * US, cursor=cur
     )
     assert cur2 == (50 * US, 3)
@@ -125,7 +131,7 @@ def _kernel_truth(df, m, n, within_s):
             by_key[r["user_id"]][1].append((ts_us, r["event_id"]))
     want = []
     for uid, (a, b) in by_key.items():
-        got, _ = quantified_matches(sorted(a), sorted(b), m, n, within_s * US)
+        got, _ = _quant_then_b(sorted(a), sorted(b), m, n, within_s * US)
         want += [(uid, f, l, c, bid) for f, l, c, bid, _ in got]
     return sorted(want)
 
@@ -135,10 +141,10 @@ def test_batch_join_lowering_equals_kernel(spark, rand_events, m, n, within):
     got = sorted(
         map(
             tuple,
-            match_quantified(
+            match_pattern(
                 rand_events,
-                ("a", Fn.col("event_type") == "A", m, n),
-                ("b", Fn.col("event_type") == "B"),
+                [("a", Fn.col("event_type") == "A", m, n),
+                 ("b", Fn.col("event_type") == "B", 1, 1)],
                 within_seconds=within,
             ).collect(),
         )
@@ -149,14 +155,14 @@ def test_batch_join_lowering_equals_kernel(spark, rand_events, m, n, within):
 
 def test_bad_bounds_rejected(spark, rand_events):
     with pytest.raises(AnalysisError):
-        match_quantified(
-            rand_events, ("a", Fn.col("event_type") == "A", 0, 2),
-            ("b", Fn.col("event_type") == "B"), 10,
+        match_pattern(
+            rand_events, [("a", Fn.col("event_type") == "A", 0, 2),
+                          ("b", Fn.col("event_type") == "B", 1, 1)], 10,
         )
     with pytest.raises(AnalysisError):
-        match_quantified(
-            rand_events, ("a", Fn.col("event_type") == "A", 3, 2),
-            ("b", Fn.col("event_type") == "B"), 10,
+        match_pattern(
+            rand_events, [("a", Fn.col("event_type") == "A", 3, 2),
+                          ("b", Fn.col("event_type") == "B", 1, 1)], 10,
         )
 
 
@@ -193,10 +199,10 @@ def _run_stream(spark, schema, path, tmp_path, m, n, within, ckpt="ckpt", max_fi
     if max_files:
         reader = reader.option("maxFilesPerTrigger", max_files)
     src = reader.parquet(path).withWatermark("ts", "5 seconds")
-    out = match_quantified_stream(
+    out = match_pattern(
         src,
-        ("a", Fn.col("event_type") == "A", m, n),
-        ("b", Fn.col("event_type") == "B"),
+        [("a", Fn.col("event_type") == "A", m, n),
+         ("b", Fn.col("event_type") == "B", 1, 1)],
         within_seconds=within,
     )
     sink = ExactlyOnceParquetSink(str(tmp_path / "sink"))
@@ -270,7 +276,7 @@ def test_state_bounded_by_time_window():
         a_ev.sort()
         b_ev.sort()
         wm = t - 5 * US
-        _, cursor = quantified_matches(
+        _, cursor = _quant_then_b(
             a_ev, b_ev, 2, 4, within, close_before_us=wm, cursor=cursor
         )
         keep_from = wm - within
@@ -287,8 +293,6 @@ def test_state_bounded_by_time_window():
 
 
 def test_kernel_three_leg_pattern():
-    from ksql_spark.operators.cep_nfa import pattern_matches
-
     # A@0 A@5, B@10 B@12, C@20  (ids 1,2,3,4,5), within 60
     a = [(0, 1), (5 * US, 2)]
     b = [(10 * US, 3), (12 * US, 4)]
@@ -304,8 +308,6 @@ def test_kernel_three_leg_pattern():
 
 
 def _kernel_pattern_truth(df, legs, within_s):
-    from ksql_spark.operators.cep_nfa import pattern_matches
-
     rows = df.collect()
     by_key: dict = {}
     for r in rows:
@@ -338,8 +340,6 @@ def _nsk(row):
 
 
 def test_batch_three_leg_pattern_equals_kernel(spark, rand_events):
-    from ksql_spark.operators.cep_nfa import match_pattern
-
     legs_spec = [
         ("a", {"A"}, 1, 2),
         ("b", {"B"}, 1, 2),
@@ -360,7 +360,6 @@ def test_batch_three_leg_pattern_equals_kernel(spark, rand_events):
 def test_streaming_three_leg_pattern_matches_batch(spark, rand_events, tmp_path):
     """The general NFA on a stream: one state store for a 3-leg pattern
     with a Kleene middle leg — result equals the batch twin."""
-    from ksql_spark.operators.cep_nfa import match_pattern, match_pattern_stream
     from ksql_spark.streaming.sink import ExactlyOnceParquetSink
 
     legs = [
@@ -378,7 +377,7 @@ def test_streaming_three_leg_pattern_matches_batch(spark, rand_events, tmp_path)
     sent.coalesce(1).write.mode("append").parquet(path)
 
     src = spark.readStream.schema(rand_events.schema).parquet(path).withWatermark("ts", "5 seconds")
-    out = match_pattern_stream(src, legs, within_seconds=45)
+    out = match_pattern(src, legs, within_seconds=45)
     sink = ExactlyOnceParquetSink(str(tmp_path / "sink"))
     q = (
         out.writeStream.foreachBatch(sink)
@@ -459,8 +458,6 @@ def _mk(match):
 
 
 def test_kernel_negation_basic():
-    from ksql_spark.operators.cep_nfa import pattern_matches
-
     a = [(0, 1), (5 * US, 2)]
     c = [(7 * US, 9)]  # negated: falls between A@5 and B@10 only
     b = [(3 * US, 3), (10 * US, 4)]
@@ -473,8 +470,6 @@ def test_kernel_negation_basic():
 
 
 def test_kernel_optional_basic():
-    from ksql_spark.operators.cep_nfa import pattern_matches
-
     a = [(0, 1)]
     x = [(3 * US, 7), (5 * US, 8)]  # optional 0..1
     b = [(10 * US, 4)]
@@ -492,8 +487,6 @@ def test_kernel_optional_basic():
 
 
 def test_kernel_negation_optional_random_vs_brute():
-    from ksql_spark.operators.cep_nfa import pattern_matches
-
     rng = random.Random(20260817)
     for _ in range(400):
         n_legs = rng.randint(2, 4)
@@ -531,9 +524,44 @@ def test_kernel_work_cap_raises():
         pattern_matches([evs, evs], [(1, None), (1, 1)], 1000 * US, work_cap=50)
 
 
-def test_pattern_shape_validation(spark):
-    from ksql_spark.operators.cep_nfa import match_pattern
+def test_work_cap_fails_batch_and_streaming_alike(spark, tmp_path, monkeypatch):
+    """One work cap for both lowerings: a dense key whose all-combinations
+    matches pass the cap fails the task with PatternWorkCapExceeded, in a
+    batch collect and in a stream's micro-batch alike.  The cap is read
+    when the pattern is lowered, so the patched value reaches the tasks."""
+    import datetime
 
+    from ksql_spark.operators import cep_nfa
+    from ksql_spark.streaming.sink import ExactlyOnceParquetSink
+
+    schema = "event_id bigint, user_id bigint, event_type string, ts timestamp"
+    t0 = datetime.datetime(2024, 1, 1)
+    # one key: six A then six B a second apart -> 36 (a, b) matches
+    rows = [(i, 1, "A" if i < 6 else "B", t0 + datetime.timedelta(seconds=i)) for i in range(12)]
+    df = spark.createDataFrame(rows, schema)
+    legs = [("a", Fn.col("event_type") == "A", 1, 1), ("b", Fn.col("event_type") == "B", 1, 1)]
+    assert match_pattern(df, legs, within_seconds=60).count() == 36
+
+    monkeypatch.setattr(cep_nfa, "_WORK_CAP", 10)
+    with pytest.raises(Exception, match="PatternWorkCapExceeded"):
+        match_pattern(df, legs, within_seconds=60).collect()
+
+    path = str(tmp_path / "ev")
+    df.coalesce(1).write.parquet(path)
+    src = spark.readStream.schema(schema).parquet(path).withWatermark("ts", "1 minute")
+    q = (
+        match_pattern(src, legs, within_seconds=60)
+        .writeStream.foreachBatch(ExactlyOnceParquetSink(str(tmp_path / "sink")))
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    with pytest.raises(Exception, match="PatternWorkCapExceeded"):
+        q.awaitTermination()
+
+
+def test_pattern_shape_validation(spark):
     ev = None  # validation fires before the DataFrame is touched
     with pytest.raises(AnalysisError):  # leading optional: no anchor
         match_pattern(ev, [("x", Fn.lit(True), 0, 1), ("b", Fn.lit(True), 1, 1)], 10)
@@ -544,8 +572,6 @@ def test_pattern_shape_validation(spark):
 
 
 def test_batch_pattern_negation_equals_kernel(spark, rand_events):
-    from ksql_spark.operators.cep_nfa import match_pattern
-
     legs_spec = [("a", {"A"}, 1, 2), ("nc", {"C"}, 0, 0), ("b", {"B"}, 1, 1)]
     legs = [
         ("a", Fn.col("event_type") == "A", 1, 2),
@@ -561,8 +587,6 @@ def test_batch_pattern_negation_equals_kernel(spark, rand_events):
 
 
 def test_batch_pattern_optional_equals_kernel(spark, rand_events):
-    from ksql_spark.operators.cep_nfa import match_pattern
-
     legs_spec = [("a", {"A"}, 2, 3), ("ob", {"B"}, 0, 2), ("c", {"C"}, 1, 1)]
     legs = [
         ("a", Fn.col("event_type") == "A", 2, 3),
@@ -587,7 +611,6 @@ def test_batch_pattern_seven_optional_legs_equals_kernel(spark, rand_events, mon
     keeps the all-combinations match count small.  A 16-row output chunk
     makes each partition yield several frames."""
     from ksql_spark.operators import cep_nfa
-    from ksql_spark.operators.cep_nfa import match_pattern
 
     monkeypatch.setattr(cep_nfa, "_OUT_CHUNK_ROWS", 16)
 
@@ -617,7 +640,6 @@ def test_batch_negation_equals_chained_join(spark, rand_events):
     pattern the NFA's positional (0, 0) leg and match_sequence's absent
     span leg (between the first and last step) coincide."""
     from ksql_spark.operators.cep import match_sequence
-    from ksql_spark.operators.cep_nfa import match_pattern
 
     nfa = match_pattern(
         rand_events,
@@ -642,7 +664,6 @@ def test_batch_negation_equals_chained_join(spark, rand_events):
 def test_streaming_pattern_negation_optional_matches_batch(spark, rand_events, tmp_path):
     """The full NFA on a stream: quantified + negation + optional legs in
     one pattern, ONE state store — result equals the batch twin."""
-    from ksql_spark.operators.cep_nfa import match_pattern, match_pattern_stream
     from ksql_spark.streaming.sink import ExactlyOnceParquetSink
 
     legs = [
@@ -655,7 +676,7 @@ def test_streaming_pattern_negation_optional_matches_batch(spark, rand_events, t
     path = str(tmp_path / "ev")
     _write_stream_fixture(spark, rand_events, path)
     src = spark.readStream.schema(rand_events.schema).parquet(path).withWatermark("ts", "5 seconds")
-    out = match_pattern_stream(src, legs, within_seconds=45)
+    out = match_pattern(src, legs, within_seconds=45)
     sink = ExactlyOnceParquetSink(str(tmp_path / "sink"))
     q = (
         out.writeStream.foreachBatch(sink)
@@ -676,7 +697,6 @@ def test_streaming_pattern_negation_optional_matches_batch(spark, rand_events, t
 def test_streaming_string_ids(spark, tmp_path):
     """ADVICE r5: non-integer id columns must work end-to-end (native id
     values in the NFA state, ordering within the string type)."""
-    from ksql_spark.operators.cep_nfa import match_pattern, match_pattern_stream
     from ksql_spark.streaming.sink import ExactlyOnceParquetSink
 
     rng = random.Random(99)
@@ -708,7 +728,7 @@ def test_streaming_string_ids(spark, tmp_path):
     ).select("event_id", "user_id", "event_type", Fn.col("ts_s").cast("timestamp").alias("ts"))
     sent.coalesce(1).write.mode("append").parquet(path)
     src = spark.readStream.schema(df.schema).parquet(path).withWatermark("ts", "5 seconds")
-    out = match_pattern_stream(src, legs, within_seconds=30, id_col="event_id")
+    out = match_pattern(src, legs, within_seconds=30, id_col="event_id")
     sink = ExactlyOnceParquetSink(str(tmp_path / "sink"))
     q = (
         out.writeStream.foreachBatch(sink)
@@ -734,7 +754,6 @@ def test_streaming_string_ids(spark, tmp_path):
 def test_kernel_first_only_is_head_of_all():
     """first_only returns exactly the head of the all-matches enumeration,
     across positive / negation / optional leg mixes on random fixtures."""
-    from ksql_spark.operators.cep_nfa import pattern_matches
 
     rng = random.Random(77)
     configs = [
@@ -765,7 +784,6 @@ def test_kernel_first_only_is_head_of_all():
 def _kernel_first_truth(df, legs_spec, within_s):
     """Per-key first match (kernel first_only), shaped like match_pattern
     mode='first' output rows."""
-    from ksql_spark.operators.cep_nfa import pattern_matches
 
     rows = df.collect()
     by_key: dict = {}
@@ -815,7 +833,6 @@ def _first_legs():
 def test_batch_first_mode_equals_kernel_first(spark, rand_events):
     """match_pattern(mode='first') reproduces the kernel's canonical first
     match on a quantifier+negation+optional pattern."""
-    from ksql_spark.operators.cep_nfa import match_pattern
 
     got = sorted(
         map(
@@ -837,7 +854,6 @@ def test_streaming_first_mode_matches_batch(spark, rand_events, tmp_path):
     """mode='first' on a stream, forced through many micro-batches: each
     key emits its canonical first match exactly once (done tombstone
     suppresses later batches' matches) and equals the batch twin."""
-    from ksql_spark.operators.cep_nfa import match_pattern, match_pattern_stream
     from ksql_spark.streaming.sink import ExactlyOnceParquetSink
 
     legs = _first_legs()
@@ -855,7 +871,7 @@ def test_streaming_first_mode_matches_batch(spark, rand_events, tmp_path):
         .parquet(path)
         .withWatermark("ts", "5 seconds")
     )
-    out = match_pattern_stream(src, legs, within_seconds=40, mode="first")
+    out = match_pattern(src, legs, within_seconds=40, mode="first")
     sink = ExactlyOnceParquetSink(str(tmp_path / "sink"))
     q = (
         out.writeStream.foreachBatch(sink)
@@ -879,15 +895,14 @@ def test_streaming_first_mode_matches_batch(spark, rand_events, tmp_path):
     assert len({r[0] for r in got}) == len(got)
 
 
-def test_bad_mode_rejected(spark, rand_events):
-    from ksql_spark.operators.cep_nfa import match_pattern, match_pattern_stream
-
+def test_bad_mode_rejected(spark, rand_events, tmp_path):
     legs = [("a", Fn.col("event_type") == "A", 1, 1),
             ("b", Fn.col("event_type") == "B", 1, 1)]
     with pytest.raises(AnalysisError, match="match mode"):
         match_pattern(rand_events, legs, 10, mode="skip-past-last")
+    stream = spark.readStream.schema(rand_events.schema).parquet(str(tmp_path))
     with pytest.raises(AnalysisError, match="match mode"):
-        match_pattern_stream(rand_events, legs, 10, mode="last")
+        match_pattern(stream, legs, 10, mode="last")
 
 
 # ---------------------------------------------------------------------------
@@ -954,7 +969,7 @@ def test_kernel_skip_greedy_vs_brute():
 def test_batch_skip_equals_kernel(spark, rand_events):
     """applyInPandas skip lowering == per-key kernel greedy, on the
     quantifier+negation+optional pattern."""
-    from ksql_spark.operators.cep_nfa import match_pattern, pattern_matches_skip
+    from ksql_spark.operators.cep_nfa import pattern_matches_skip
 
     got = sorted(
         map(
@@ -999,7 +1014,6 @@ def test_batch_skip_equals_kernel(spark, rand_events):
 def test_streaming_skip_matches_batch(spark, rand_events, tmp_path):
     """skip_past_last on a stream through many micro-batches: the persisted
     (cursor, frontier) pair reproduces the batch greedy selection."""
-    from ksql_spark.operators.cep_nfa import match_pattern, match_pattern_stream
     from ksql_spark.streaming.sink import ExactlyOnceParquetSink
 
     legs = _first_legs()
@@ -1017,7 +1031,7 @@ def test_streaming_skip_matches_batch(spark, rand_events, tmp_path):
         .parquet(path)
         .withWatermark("ts", "5 seconds")
     )
-    out = match_pattern_stream(src, legs, within_seconds=40, mode="skip_past_last")
+    out = match_pattern(src, legs, within_seconds=40, mode="skip_past_last")
     sink = ExactlyOnceParquetSink(str(tmp_path / "sink"))
     q = (
         out.writeStream.foreachBatch(sink)
@@ -1046,7 +1060,6 @@ def test_streaming_skip_kill_resume_exactly_once(spark, rand_events, tmp_path):
     once, identical to the uninterrupted batch greedy."""
     import time
 
-    from ksql_spark.operators.cep_nfa import match_pattern, match_pattern_stream
     from ksql_spark.streaming.sink import ExactlyOnceParquetSink
 
     legs = _first_legs()
@@ -1063,7 +1076,7 @@ def test_streaming_skip_kill_resume_exactly_once(spark, rand_events, tmp_path):
         if max_files:
             reader = reader.option("maxFilesPerTrigger", max_files)
         src = reader.parquet(path).withWatermark("ts", "5 seconds")
-        out = match_pattern_stream(src, legs, within_seconds=40, mode="skip_past_last")
+        out = match_pattern(src, legs, within_seconds=40, mode="skip_past_last")
         sink = ExactlyOnceParquetSink(str(tmp_path / "sink"))
         q = (
             out.writeStream.foreachBatch(sink)
@@ -1104,7 +1117,6 @@ def test_kernel_skip_to_next_is_first_per_anchor():
     """per_anchor_first returns exactly the first match of each anchor in
     the all-matches enumeration order, across positive / negation /
     optional leg mixes — and is bounded by the leg-0 event count."""
-    from ksql_spark.operators.cep_nfa import pattern_matches
 
     rng = random.Random(123)
     configs = [
@@ -1143,7 +1155,6 @@ def test_batch_skip_to_next_equals_kernel(spark, rand_events):
     """match_pattern(mode='skip_to_next') reproduces the kernel's
     first-per-anchor selection on the quantifier+negation+optional
     pattern."""
-    from ksql_spark.operators.cep_nfa import match_pattern, pattern_matches
 
     got = sorted(
         map(
@@ -1194,7 +1205,6 @@ def test_batch_skip_to_next_equals_kernel(spark, rand_events):
 def test_streaming_skip_to_next_matches_batch(spark, rand_events, tmp_path):
     """skip_to_next on a stream through many micro-batches: all-mode
     buffering with per-anchor-first enumeration equals the batch twin."""
-    from ksql_spark.operators.cep_nfa import match_pattern, match_pattern_stream
     from ksql_spark.streaming.sink import ExactlyOnceParquetSink
 
     legs = _first_legs()
@@ -1212,7 +1222,7 @@ def test_streaming_skip_to_next_matches_batch(spark, rand_events, tmp_path):
         .parquet(path)
         .withWatermark("ts", "5 seconds")
     )
-    out = match_pattern_stream(src, legs, within_seconds=40, mode="skip_to_next")
+    out = match_pattern(src, legs, within_seconds=40, mode="skip_to_next")
     sink = ExactlyOnceParquetSink(str(tmp_path / "sink"))
     q = (
         out.writeStream.foreachBatch(sink)
@@ -1243,7 +1253,6 @@ def test_reserved_leg_name_prefix_rejected(spark):
     from pyspark.sql import functions as F
 
     from ksql_spark.errors import AnalysisError
-    from ksql_spark.operators.cep_nfa import match_pattern
 
     df = spark.createDataFrame([(1, 1, "a")], "user_id bigint, event_id bigint, event_type string").select(
         "user_id", "event_id", F.current_timestamp().alias("ts"), "event_type"
@@ -1264,7 +1273,6 @@ def test_null_keys_never_match_batch_equals_streaming(spark, rand_events, tmp_pa
     which do match) yields no rows; NULL-ts and NULL-id copies of user 1's
     events (the NULL ids tied on ts with their originals) change nothing;
     and the streaming NFA returns exactly the batch rows."""
-    from ksql_spark.operators.cep_nfa import match_pattern, match_pattern_stream
     from ksql_spark.streaming.sink import ExactlyOnceParquetSink
 
     null_user = rand_events.filter(Fn.col("user_id") == 0).select(
@@ -1292,7 +1300,7 @@ def test_null_keys_never_match_batch_equals_streaming(spark, rand_events, tmp_pa
     path = str(tmp_path / "ev")
     _write_stream_fixture(spark, events, path)
     src = spark.readStream.schema(events.schema).parquet(path).withWatermark("ts", "5 seconds")
-    out = match_pattern_stream(src, legs, within_seconds=40, mode=mode)
+    out = match_pattern(src, legs, within_seconds=40, mode=mode)
     sink = ExactlyOnceParquetSink(str(tmp_path / "sink"))
     q = (
         out.writeStream.foreachBatch(sink)
@@ -1317,7 +1325,6 @@ def test_streaming_watermark_moves_on_non_leg_events(spark, tmp_path):
     a→b match closes and is emitted."""
     import datetime
 
-    from ksql_spark.operators.cep_nfa import match_pattern_stream
     from ksql_spark.streaming.sink import ExactlyOnceParquetSink
 
     t0 = datetime.datetime(2024, 1, 1)
@@ -1335,7 +1342,7 @@ def test_streaming_watermark_moves_on_non_leg_events(spark, tmp_path):
     legs = [("a", Fn.col("event_type") == "a", 1, 1), ("b", Fn.col("event_type") == "b", 1, 1)]
     sink = ExactlyOnceParquetSink(str(tmp_path / "sink"))
     q = (
-        match_pattern_stream(src, legs, within_seconds=60)
+        match_pattern(src, legs, within_seconds=60)
         .writeStream.foreachBatch(sink)
         .outputMode("append")
         .option("checkpointLocation", str(tmp_path / "ckpt"))

@@ -23,7 +23,7 @@ from ksql_spark import (
     compile_select,
 )
 from ksql_spark.operators.cep import match_sequence
-from ksql_spark.operators.cep_nfa import match_pattern_stream
+from ksql_spark.operators.cep_nfa import match_pattern
 from ksql_spark.operators.dedup import exact_dedup_stream
 from ksql_spark.streaming import engine as eng
 from ksql_spark.streaming.engine import PersistentQueryManager, keeps_no_data_batch, start_stream
@@ -93,8 +93,8 @@ def _shapes(spark, cat):
             match_sequence(_events(cat), [("u", user), ("a", asst)], within_seconds=600),
             "append", False),
         "NFA pattern kernel": (
-            match_pattern_stream(_events(cat), [("u", user, 1, 2), ("a", asst, 1, 1)],
-                                 within_seconds=600),
+            match_pattern(_events(cat), [("u", user, 1, 2), ("a", asst, 1, 1)],
+                          within_seconds=600),
             "append", True),
         "builder session EMIT CHANGES": (
             _builder(spark, cat, _windowed(n, session)), "update", False),

@@ -150,7 +150,7 @@ def main() -> None:
     from pyspark.sql import functions as Fn
 
     from ksql_spark.operators.cep import match_sequence, repeat
-    from ksql_spark.operators.cep_nfa import match_pattern_stream, match_quantified_stream
+    from ksql_spark.operators.cep_nfa import match_pattern
     from ksql_spark.streaming.skew import salted_stream_stream_join
 
     ev_schema = spark.read.parquet(os.path.join(SF_DIR, "events.parquet")).schema
@@ -161,37 +161,37 @@ def main() -> None:
         .withWatermark("ts", "30 minutes")
     )
     static = {
-        "streaming_cep_quantifier (NFA)": match_quantified_stream(
-            src, ("a", Fn.col("event_type") == "view", 2, 3),
-            ("b", Fn.col("event_type") == "purchase"), within_seconds=86400,
+        "streaming_cep_quantifier (NFA)": match_pattern(
+            src, [("a", Fn.col("event_type") == "view", 2, 3),
+                  ("b", Fn.col("event_type") == "purchase", 1, 1)], within_seconds=86400,
         ),
         "streaming_cep_repeat4 (NFA, emits on completion)": match_sequence(
             src, [*repeat("a", Fn.col("event_type") == "view", 4),
                   ("b", Fn.col("event_type") == "purchase")],
             within_seconds=172800,
         ),
-        "streaming_cep_pattern_negation (NFA, one store)": match_pattern_stream(
+        "streaming_cep_pattern_negation (NFA, one store)": match_pattern(
             src,
             [("v", Fn.col("event_type") == "view", 1, 2),
              ("nc", Fn.col("event_type") == "click", 0, 0),
              ("p", Fn.col("event_type") == "purchase", 1, 1)],
             within_seconds=86400,
         ),
-        "streaming_cep_pattern_first (NFA, done tombstone)": match_pattern_stream(
+        "streaming_cep_pattern_first (NFA, done tombstone)": match_pattern(
             src,
             [("v", Fn.col("event_type") == "view", 1, 2),
              ("c", Fn.col("event_type") == "click", 1, 1),
              ("p", Fn.col("event_type") == "purchase", 1, 1)],
             within_seconds=86400, mode="first",
         ),
-        "streaming_cep_pattern_skip (NFA, greedy frontier)": match_pattern_stream(
+        "streaming_cep_pattern_skip (NFA, greedy frontier)": match_pattern(
             src,
             [("v", Fn.col("event_type") == "view", 1, 2),
              ("c", Fn.col("event_type") == "click", 1, 1),
              ("p", Fn.col("event_type") == "purchase", 1, 1)],
             within_seconds=86400, mode="skip_past_last",
         ),
-        "streaming_cep_pattern_skip_next (NFA, per-anchor first)": match_pattern_stream(
+        "streaming_cep_pattern_skip_next (NFA, per-anchor first)": match_pattern(
             src,
             [("v", Fn.col("event_type") == "view", 1, 2),
              ("c", Fn.col("event_type") == "click", 1, 1),
