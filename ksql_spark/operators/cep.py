@@ -94,5 +94,5 @@ def repeat(name: str, pred: Column, n: int) -> list[tuple[str, Column]]:
     ("b", pred_b, 1, 1)]``.
     """
     if n < 1:
-        raise ValueError("repeat() needs n >= 1")
+        raise AnalysisError("repeat() needs n >= 1")
     return [(f"{name}{i + 1}", pred) for i in range(n)]

@@ -10,15 +10,19 @@ functions (JVM-side; the only shuffles are the ones the algorithm demands):
   embedding      cosine-similarity near-dup over array<float> embeddings
 
 Scale notes (the part that matters at 100 TB):
-  * every signature is computed in a single projection — one scan, no UDF;
-  * LSH candidate generation shuffles on (band_id, band_hash) — the classic
+  * every signature is computed in one pass over the scan — built-in
+    expressions, except the hyperplane band values (one numpy matmul per
+    Arrow batch);
+  * LSH candidate generation shuffles on the bucket key — the classic
     band-bucket join — and only candidate pairs (a tiny fraction) reach the
-    exact-verification stage;
-  * pair enumeration inside a bucket uses a self-join on the bucket key,
-    with ``id_l < id_r`` pushed into the join condition so each pair
-    materializes once;
-  * the brute-force variants exist as correctness oracles and for small
-    inputs; the banded paths are the 1000-executor plan.
+    exact-verification stage.  Every banded operator enumerates pairs
+    through one bucket join (``_candidate_pairs``: ``id_l < id_r`` pushed
+    into the join condition, so each pair materializes once) and verifies
+    them through one step (``_score_pairs``: payloads are hash-joined back
+    to the deduplicated candidates);
+  * ``ngram_jaccard_pairs`` and ``embedding_neardup_pairs`` are the O(n²)
+    brute-force variants, the correctness oracles and small-input paths;
+    the banded paths are the 1000-executor plan.
 
 All hashes are the md5-based portable hash (functions.text.portable_hash60),
 so the DuckDB oracle can reproduce signatures bit-for-bit.
@@ -27,7 +31,7 @@ so the DuckDB oracle can reproduce signatures bit-for-bit.
 from __future__ import annotations
 
 import threading
-from contextlib import contextmanager
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -41,7 +45,6 @@ from ..functions.text import fingerprint, normalize_text, portable_hash60
 
 _LOCK = threading.RLock()
 _PERSISTED: list[DataFrame] = []
-_SCOPES = threading.local()  # per-thread stack of persist_scope frames
 
 
 def _persist(df: DataFrame) -> DataFrame:
@@ -52,53 +55,21 @@ def _persist(df: DataFrame) -> DataFrame:
     every LSH operator runs 2-4x.  MEMORY_AND_DISK keeps the win at any
     scale (narrow signature tables spill gracefully).
 
-    Lifetime is scoped per invocation, not per process: inside a
-    ``persist_scope()`` the frame is released when the scope exits (after the
-    caller has materialized its results); outside any scope it lands in a
-    lock-guarded session registry drained by ``cleanup_persisted()``.
-    Operators never flush the registry themselves — an earlier result the
-    caller still holds lazily keeps its cache until the OWNER releases it
-    (Spark's LRU eviction is the backstop if nobody does).
+    The frame lands in a lock-guarded session registry drained by
+    ``cleanup_persisted()``.  Operators never flush the registry themselves —
+    an earlier result the caller still holds lazily keeps its cache until
+    the OWNER releases it (Spark's LRU eviction is the backstop if nobody
+    does).
     """
     df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    stack = getattr(_SCOPES, "stack", None)
-    if stack:
-        stack[-1].append(df)
-    else:
-        with _LOCK:
-            _PERSISTED.append(df)
+    with _LOCK:
+        _PERSISTED.append(df)
     return df
 
 
-@contextmanager
-def persist_scope():
-    """Bound the lifetime of operator-internal persisted frames to a block.
-
-    Materialize results inside the block; on exit every frame persisted by
-    operators called within it (on this thread) is unpersisted.  Scopes nest;
-    each releases only its own frames.  This is the pipeline API VERDICT r3
-    asked for: no MEMORY_AND_DISK blocks outlive the pipeline.
-    """
-    stack = getattr(_SCOPES, "stack", None)
-    if stack is None:
-        stack = _SCOPES.stack = []
-    frames: list[DataFrame] = []
-    stack.append(frames)
-    try:
-        yield
-    finally:
-        stack.pop()
-        for df in frames:
-            try:
-                df.unpersist()
-            except Exception:  # session already stopped — nothing to release
-                pass
-
-
 def cleanup_persisted() -> int:
-    """Unpersist every frame in the session registry (frames persisted
-    outside any ``persist_scope``); returns the number released.  Safe at any
-    time: an unpersisted plan recomputes."""
+    """Unpersist every frame in the session registry; returns the number
+    released.  Safe at any time: an unpersisted plan recomputes."""
     n = 0
     with _LOCK:
         frames, _PERSISTED[:] = _PERSISTED[:], []
@@ -148,19 +119,6 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
         .groupBy("__fp")
         .agg(F.min(F.col(id_col)).alias(id_col), F.count(F.lit(1)).alias("dup_count"))
         .drop("__fp")
-    )
-
-
-def exact_dup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Fingerprint groups with >1 member (the duplicates themselves)."""
-    return (
-        df.withColumn("fp", fingerprint(F.col(text_col)))
-        .groupBy("fp")
-        .agg(
-            F.count(F.lit(1)).alias("dup_count"),
-            F.sort_array(F.collect_list(F.col(id_col))).alias("doc_ids"),
-        )
-        .filter(F.col("dup_count") > 1)
     )
 
 
@@ -255,6 +213,8 @@ def _band_explode(base: DataFrame, n_hashes: int, bands: int) -> DataFrame:
     shingle arrays never enter the bucket shuffle.  At 10^9 docs this is
     the difference between shuffling ids and shuffling the corpus.
     """
+    if n_hashes % bands != 0:
+        raise ValueError("n_hashes must be divisible by bands")
     r = n_hashes // bands
     return base.select(
         "id",
@@ -271,6 +231,50 @@ def _band_explode(base: DataFrame, n_hashes: int, bands: int) -> DataFrame:
         ).alias("band"),
     ).select(
         "id", F.col("band.band_id").alias("band_id"), F.col("band.band_hash").alias("band_hash")
+    )
+
+
+def _candidate_pairs(
+    banded: DataFrame, keys: list[str], index: DataFrame | None = None
+) -> DataFrame:
+    """Bucket join: NARROW ``(id, *keys)`` rows -> distinct ``(id_l, id_r)``
+    pairs, ``id_l < id_r``, of ids that share at least one bucket.
+
+    The self-join pushes ``l.id < r.id`` into the join condition, so each
+    pair materializes once per shared bucket.  With ``index`` (an
+    already-indexed corpus, same columns) the ``banded``-vs-``index`` pairs
+    join too: an id may sit on either side there, so that join keeps
+    ``l.id != r.id`` and orders each pair by least/greatest.  One
+    ``dropDuplicates`` over the union collapses pairs that share several
+    buckets.
+    """
+    l_id, r_id = F.col("l.id"), F.col("r.id")
+
+    def bucket_join(other: DataFrame, ids: Column) -> DataFrame:
+        on = [F.col(f"l.{k}") == F.col(f"r.{k}") for k in keys]
+        return banded.alias("l").join(other.alias("r"), on + [ids])
+
+    pairs = bucket_join(banded, l_id < r_id).select(l_id.alias("id_l"), r_id.alias("id_r"))
+    if index is not None:
+        pairs = (
+            bucket_join(index, l_id != r_id)
+            .select(F.least(l_id, r_id).alias("id_l"), F.greatest(l_id, r_id).alias("id_r"))
+            .union(pairs)
+        )
+    return pairs.dropDuplicates(["id_l", "id_r"])
+
+
+def _score_pairs(
+    cand: DataFrame, values: DataFrame, score: Callable[[Column, Column], Column], name: str
+) -> DataFrame:
+    """Verification: hash-join the (deduplicated, small) candidate pairs back
+    to the ``(id, value)`` frame twice -> ``(id_l, id_r, <name>)`` with
+    ``<name> = score(value_l, value_r)``.  Payloads never ride the bucket
+    shuffle; callers filter on their own threshold."""
+    return (
+        cand.join(values.toDF("id_l", "__l"), "id_l")
+        .join(values.toDF("id_r", "__r"), "id_r")
+        .select("id_l", "id_r", score(F.col("__l"), F.col("__r")).alias(name))
     )
 
 
@@ -351,50 +355,21 @@ def minhash_lsh_pairs(
     1-(1-s^r)^b — tuned so s >= threshold is caught with high probability;
     verification removes false positives, so precision is exact.
     """
-    if n_hashes % bands != 0:
-        raise ValueError("n_hashes must be divisible by bands")
-
     # spread per-row signature work across cores even when the source is a
     # single file (locally) — at cluster scale the scan is already parallel
     df = _ensure_parallel(df, id_col)
 
     # one scan: shingles (wide, kept aside) + signature (narrow)
     base = _signature_base(df, id_col, text_col, n_hashes, shingle_n)
-    shingles = base.select("id", "sh")
-    banded = _band_explode(base, n_hashes, bands)
     # persist the NARROW banded table only: the self-join scans it twice, and
     # without the persist the whole md5 signature pass re-executes per branch.
     # The wide shingle table is deliberately NOT persisted — columnar-caching
     # array<string> columns costs more than recomputing the shingle split.
-    banded = _persist(banded)
-
-    l = banded.alias("l")
-    rt = banded.alias("r")
-    cand = (
-        l.join(
-            rt,
-            (F.col("l.band_id") == F.col("r.band_id"))
-            & (F.col("l.band_hash") == F.col("r.band_hash"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(F.col("l.id").alias("id_l"), F.col("r.id").alias("id_r"))
-        .dropDuplicates(["id_l", "id_r"])
-    )
-
-    # exact verification: hash-join the (deduplicated, small) candidate set
-    # back to the shingle table twice
-    sl = shingles.select(F.col("id").alias("id_l"), F.col("sh").alias("sh_l"))
-    sr = shingles.select(F.col("id").alias("id_r"), F.col("sh").alias("sh_r"))
-    return (
-        cand.join(sl, "id_l")
-        .join(sr, "id_r")
-        .select(
-            "id_l",
-            "id_r",
-            portable_round(jaccard(F.col("sh_l"), F.col("sh_r"))).alias("jaccard_sim"),
-        )
-        .filter(F.col("jaccard_sim") >= threshold)
-    )
+    banded = _persist(_band_explode(base, n_hashes, bands))
+    cand = _candidate_pairs(banded, ["band_id", "band_hash"])
+    return _score_pairs(
+        cand, base.select("id", "sh"), lambda a, b: portable_round(jaccard(a, b)), "jaccard_sim"
+    ).filter(F.col("jaccard_sim") >= threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -418,8 +393,6 @@ def minhash_index(
     document ever — ``minhash_lsh_pairs_incremental`` joins a delta against
     it instead of re-signaturing the whole corpus per run.
     """
-    if n_hashes % bands != 0:
-        raise ValueError("n_hashes must be divisible by bands")
     df = _ensure_parallel(df, id_col)
     base = _signature_base(df, id_col, text_col, n_hashes, shingle_n)
     return _band_explode(base, n_hashes, bands).withColumnRenamed("id", id_col)
@@ -455,41 +428,12 @@ def minhash_lsh_pairs_incremental(
     ``corpus`` provides (id, text) for verification.  After this, append
     ``minhash_index(new_df)`` to the index to absorb the batch.
     """
-    if n_hashes % bands != 0:
-        raise ValueError("n_hashes must be divisible by bands")
     new_df = _ensure_parallel(new_df, id_col)
     new_base = _signature_base(new_df, id_col, text_col, n_hashes, shingle_n)
     new_banded = _persist(_band_explode(new_base, n_hashes, bands))
-
-    idx = index.select(
-        F.col(id_col).alias("id"), F.col("band_id"), F.col("band_hash")
-    )
-    # delta-vs-index: order normalized so each pair materializes once
-    ni = (
-        new_banded.alias("l")
-        .join(
-            idx.alias("r"),
-            (F.col("l.band_id") == F.col("r.band_id"))
-            & (F.col("l.band_hash") == F.col("r.band_hash"))
-            & (F.col("l.id") != F.col("r.id")),
-        )
-        .select(
-            F.least(F.col("l.id"), F.col("r.id")).alias("id_l"),
-            F.greatest(F.col("l.id"), F.col("r.id")).alias("id_r"),
-        )
-    )
-    # delta-vs-delta: the new batch also dedups against itself
-    nn = (
-        new_banded.alias("l")
-        .join(
-            new_banded.alias("r"),
-            (F.col("l.band_id") == F.col("r.band_id"))
-            & (F.col("l.band_hash") == F.col("r.band_hash"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(F.col("l.id").alias("id_l"), F.col("r.id").alias("id_r"))
-    )
-    cand = _persist(ni.union(nn).dropDuplicates(["id_l", "id_r"]))
+    idx = index.select(F.col(id_col).alias("id"), F.col("band_id"), F.col("band_hash"))
+    # delta-vs-index plus delta-vs-delta: the new batch also dedups against itself
+    cand = _persist(_candidate_pairs(new_banded, ["band_id", "band_hash"], index=idx))
 
     # verification: re-shingle ONLY candidate docs, fetched via a semi-join
     # on the candidate-id set — the corpus text table is scanned once with
@@ -517,18 +461,9 @@ def minhash_lsh_pairs_incremental(
             "id", word_shingles(F.col("__t"), shingle_n).alias("sh")
         )
     )
-    sl = sh.select(F.col("id").alias("id_l"), F.col("sh").alias("sh_l"))
-    sr = sh.select(F.col("id").alias("id_r"), F.col("sh").alias("sh_r"))
-    return (
-        cand.join(sl, "id_l")
-        .join(sr, "id_r")
-        .select(
-            "id_l",
-            "id_r",
-            portable_round(jaccard(F.col("sh_l"), F.col("sh_r"))).alias("jaccard_sim"),
-        )
-        .filter(F.col("jaccard_sim") >= threshold)
-    )
+    return _score_pairs(
+        cand, sh, lambda a, b: portable_round(jaccard(a, b)), "jaccard_sim"
+    ).filter(F.col("jaccard_sim") >= threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -575,34 +510,6 @@ def hamming(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
 
-def simhash_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bits: int = 32,
-    max_hamming: int = 3,
-) -> DataFrame:
-    """Near-dup pairs with simhash hamming distance <= max_hamming.
-
-    Brute-force pair compare here; the scale path blocks on simhash bytes
-    (split the code into max_hamming+1 segments, pigeonhole: any pair within
-    distance d shares at least one exact segment) — same verification stage.
-    """
-    df = _ensure_parallel(df, id_col)
-    s = _persist(df.select(F.col(id_col).alias("id"), simhash(F.col(text_col), bits).alias("sh")))
-    l = s.alias("l")
-    r = s.alias("r")
-    return (
-        l.join(r, F.col("l.id") < F.col("r.id"))
-        .select(
-            F.col("l.id").alias("id_l"),
-            F.col("r.id").alias("id_r"),
-            hamming(F.col("l.sh"), F.col("r.sh")).cast("int").alias("hamming_dist"),
-        )
-        .filter(F.col("hamming_dist") <= max_hamming)
-    )
-
-
 def simhash_pairs_blocked(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -613,14 +520,15 @@ def simhash_pairs_blocked(
     """Scale path: pigeonhole blocking.  Split the simhash into
     ``max_hamming+1`` segments; any pair within the hamming ball collides on
     >=1 exact segment, so candidates come from a bucket join on
-    (segment_id, segment_value) instead of an n² compare."""
+    (segment_id, segment_value) instead of an n² compare.  The bucket join
+    carries (id, seg_id, seg_val) rows only; the simhash joins back in the
+    verify step."""
     n_seg = max_hamming + 1
     seg_bits = bits // n_seg
     df = _ensure_parallel(df, id_col)
-    s = df.select(F.col(id_col).alias("id"), simhash(F.col(text_col), bits).alias("sh"))
+    s = _persist(df.select(F.col(id_col).alias("id"), simhash(F.col(text_col), bits).alias("sh")))
     segs = s.select(
         "id",
-        "sh",
         F.explode(
             F.array(
                 *[
@@ -634,25 +542,11 @@ def simhash_pairs_blocked(
                 ]
             )
         ).alias("seg"),
-    ).select("id", "sh", "seg.seg_id", "seg.seg_val")
-    segs = _persist(segs)
-    l = segs.alias("l")
-    r = segs.alias("r")
-    cand = (
-        l.join(
-            r,
-            (F.col("l.seg_id") == F.col("r.seg_id"))
-            & (F.col("l.seg_val") == F.col("r.seg_val"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(
-            F.col("l.id").alias("id_l"),
-            F.col("r.id").alias("id_r"),
-            hamming(F.col("l.sh"), F.col("r.sh")).cast("int").alias("hamming_dist"),
-        )
-        .dropDuplicates(["id_l", "id_r"])
-    )
-    return cand.filter(F.col("hamming_dist") <= max_hamming)
+    ).select("id", "seg.seg_id", "seg.seg_val")
+    cand = _candidate_pairs(segs, ["seg_id", "seg_val"])
+    return _score_pairs(
+        cand, s, lambda a, b: hamming(a, b).cast("int"), "hamming_dist"
+    ).filter(F.col("hamming_dist") <= max_hamming)
 
 
 # ---------------------------------------------------------------------------
@@ -697,13 +591,13 @@ def embedding_neardup_pairs_lsh(
     bands: int = 8,
     rows_per_band: int = 6,
     n_dims: int | None = None,
-    vectorized: bool = True,
 ) -> DataFrame:
     """Cosine near-dup pairs via banded random-hyperplane LSH — the scale path.
 
     Same plan shape as ``minhash_lsh_pairs`` (the 1000-executor plan):
       1. one scan computes ``bands`` packed sign-bit band values per vector
-         (``rows_per_band`` hyperplane dots each — all codegen'd built-ins);
+         (``rows_per_band`` hyperplane dots each) — one numpy matmul per
+         Arrow batch (``similarity.band_values_arrow``);
       2. explode to (id, band_id, band_val) — NARROW rows; the vectors never
          enter the bucket shuffle;
       3. self-join on (band_id, band_val) emits candidates (id_l < id_r,
@@ -720,7 +614,7 @@ def embedding_neardup_pairs_lsh(
     Hyperplanes are md5-derived (similarity.hyperplanes) — deterministic,
     engine-portable, no RNG.
     """
-    from ..functions.vectors import cosine, dot, vec_lit
+    from ..functions.vectors import cosine
     from .similarity import band_values_arrow, hyperplanes
 
     if n_dims is None:
@@ -730,58 +624,15 @@ def embedding_neardup_pairs_lsh(
     df = _ensure_parallel(df, id_col)
     v = _persist(df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")))
 
-    if vectorized:
-        # scale path: one numpy matmul per Arrow batch for all plane dots
-        banded = _persist(
-            band_values_arrow(v, "id", "v", planes, bands, rows_per_band).select(
-                "id", F.posexplode("bands").alias("band_id", "band_val")
-            )
+    banded = _persist(
+        band_values_arrow(v, "id", "v", planes, bands, rows_per_band).select(
+            "id", F.posexplode("bands").alias("band_id", "band_val")
         )
-    else:
-        # pure-built-in path: bit-deterministic vs the DuckDB mirror oracle
-        def band_val(b: int) -> Column:
-            out = F.lit(0).cast("long")
-            for j in range(rows_per_band):
-                w = planes[b * rows_per_band + j]
-                out = out + F.when(dot(F.col("v"), vec_lit(w)) >= 0, F.lit(1 << j)).otherwise(
-                    F.lit(0)
-                ).cast("long")
-            return out
-
-        banded = _persist(
-            v.select(
-                "id",
-                F.posexplode(F.array(*[band_val(b) for b in range(bands)])).alias(
-                    "band_id", "band_val"
-                ),
-            )
-        )
-
-    l = banded.alias("l")
-    r = banded.alias("r")
-    cand = (
-        l.join(
-            r,
-            (F.col("l.band_id") == F.col("r.band_id"))
-            & (F.col("l.band_val") == F.col("r.band_val"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(F.col("l.id").alias("id_l"), F.col("r.id").alias("id_r"))
-        .dropDuplicates(["id_l", "id_r"])
     )
-
-    vl = v.select(F.col("id").alias("id_l"), F.col("v").alias("v_l"))
-    vr = v.select(F.col("id").alias("id_r"), F.col("v").alias("v_r"))
-    return (
-        cand.join(vl, "id_l")
-        .join(vr, "id_r")
-        .select(
-            "id_l",
-            "id_r",
-            portable_round(cosine(F.col("v_l"), F.col("v_r"))).alias("cosine_sim"),
-        )
-        .filter(F.col("cosine_sim") >= threshold)
-    )
+    cand = _candidate_pairs(banded, ["band_id", "band_val"])
+    return _score_pairs(
+        cand, v, lambda a, b: portable_round(cosine(a, b)), "cosine_sim"
+    ).filter(F.col("cosine_sim") >= threshold)
 
 
 # ---------------------------------------------------------------------------

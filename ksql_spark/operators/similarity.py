@@ -69,10 +69,11 @@ def band_values_arrow(
     O(dims x planes) expression evaluations per row (~3k for 64-dim x 48
     planes).  At corpus scale (10^9 vectors) that is the signature bottleneck;
     one BLAS matmul per Arrow batch computes every plane projection at
-    hardware speed.  Sign decisions match the HOF path except for dot
-    products within float-rounding distance of 0 (different summation
-    order); a flipped bit only perturbs candidate generation, and the
-    exact-cosine verification stage keeps precision exact either way.
+    hardware speed.  Sign decisions match the built-in ``hyperplane_bucket``
+    over each band's planes except for dot products within float-rounding
+    distance of 0 (different summation order); a flipped bit only perturbs
+    candidate generation, and the exact-cosine verification stage keeps
+    precision exact either way.
     """
     import numpy as np
     import pandas as pd

@@ -506,7 +506,5 @@ def test_repeat_quantifier_expands_to_chained_steps(spark, events):
     # only user 1 has A..A..B in order: A@0, A@20, B@25
     assert got == [(1, 1, 3, 4)]
 
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
+    with pytest.raises(AnalysisError):
         repeat("a", Fn.col("event_type") == "A", 0)

@@ -8,12 +8,10 @@ from pyspark.sql import functions as Fn
 from ksql_spark.operators.dedup import (
     embedding_neardup_pairs,
     exact_dedup,
-    exact_dup_groups,
     minhash_lsh_pairs,
     minhash_signature,
     ngram_jaccard_pairs,
     simhash,
-    simhash_pairs,
     simhash_pairs_blocked,
 )
 
@@ -32,12 +30,9 @@ def docs(spark):
 
 
 def test_exact_dedup_normalized(spark, docs):
-    kept = exact_dedup(docs)
-    assert kept.count() == 4  # 1,2,3 collapse
-    groups = exact_dup_groups(docs).collect()
-    assert len(groups) == 1
-    assert groups[0]["doc_ids"] == [1, 2, 3]
-    assert groups[0]["dup_count"] == 3
+    kept = {r.doc_id: r.dup_count for r in exact_dedup(docs).collect()}
+    assert len(kept) == 4  # 1,2,3 collapse
+    assert kept[1] == 3
 
 
 def test_minhash_lsh_equals_bruteforce(spark, docs):
@@ -59,9 +54,12 @@ def test_minhash_signature_properties(spark, docs):
 
 
 def test_simhash_blocked_equals_bruteforce(spark, docs):
-    bf = simhash_pairs(docs, bits=32, max_hamming=6)
-    bl = simhash_pairs_blocked(docs, bits=32, max_hamming=6)
-    assert sorted(map(tuple, bf.collect())) == sorted(map(tuple, bl.collect()))
+    sh = dict(docs.select("doc_id", simhash(Fn.col("text"), 32)).collect())
+    dist = {(a, b): bin(sh[a] ^ sh[b]).count("1") for a in sh for b in sh if a < b}
+    want = sorted((a, b, d) for (a, b), d in dist.items() if d <= 6)
+    got = sorted(map(tuple, simhash_pairs_blocked(docs, bits=32, max_hamming=6).collect()))
+    assert {(1, 2, 0), (1, 3, 0), (2, 3, 0)} <= set(want)
+    assert got == want
 
 
 def test_simhash_identical_docs_zero_distance(spark, docs):
@@ -126,29 +124,6 @@ def test_cleanup_persisted_releases_blocks(spark, docs):
     assert len(dedup._PERSISTED) == 2 * n_first
     released = dedup.cleanup_persisted()
     assert released == 2 * n_first and not dedup._PERSISTED
-
-
-def test_persist_scope_bounds_block_lifetime(spark, docs):
-    """The pipeline API (VERDICT r3 #9): inside persist_scope operators'
-    internal frames are tracked per-invocation-scope and released on exit —
-    no MEMORY_AND_DISK blocks outlive the pipeline."""
-    from ksql_spark.operators import dedup
-
-    dedup.cleanup_persisted()
-    jsc = spark.sparkContext._jsc.sc()
-
-    def n_cached() -> int:
-        return len([i for i in jsc.getRDDStorageInfo() if i.numCachedPartitions() > 0])
-
-    base = n_cached()
-    with dedup.persist_scope():
-        pairs = dedup.minhash_lsh_pairs(docs, n_hashes=8, bands=4, threshold=0.5)
-        n_pairs = pairs.count()  # materialized INSIDE the scope
-        assert n_cached() > base
-        assert not dedup._PERSISTED  # scoped frames bypass the session registry
-    assert n_cached() == base  # scope exit released every block
-    assert n_pairs == dedup.minhash_lsh_pairs(docs, n_hashes=8, bands=4, threshold=0.5).count()
-    dedup.cleanup_persisted()
 
 
 def test_incremental_dedup_equals_full_recompute_subset(spark, docs):

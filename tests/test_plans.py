@@ -74,7 +74,9 @@ def test_cosine_topk_avoids_full_sort(spark, sf):
 def test_lsh_operators_have_no_cartesian_plan(spark, sf):
     from ksql_spark.operators.dedup import (
         embedding_neardup_pairs_lsh,
+        minhash_index,
         minhash_lsh_pairs,
+        minhash_lsh_pairs_incremental,
         simhash_pairs_blocked,
     )
 
@@ -90,8 +92,12 @@ def test_lsh_operators_have_no_cartesian_plan(spark, sf):
             "embedding"
         ),
     )
+    old, new = docs.filter(Fn.col("doc_id") < 150), docs.filter(Fn.col("doc_id") >= 150)
     for df in (
         minhash_lsh_pairs(docs, n_hashes=16, bands=8),
+        minhash_lsh_pairs_incremental(
+            new, minhash_index(old, n_hashes=16, bands=8), old, n_hashes=16, bands=8
+        ),
         simhash_pairs_blocked(docs),
         embedding_neardup_pairs_lsh(emb, n_dims=8),
     ):

@@ -53,22 +53,27 @@ def test_bucket_assignment_stable(spark, emb):
 
 
 def test_band_values_arrow_matches_hof(spark):
-    """The numpy-vectorized plane projection and the built-in-HOF path must
-    produce identical near-dup pair sets (signs can only differ for dots
-    within float rounding of 0, which the exact-verify stage absorbs)."""
+    """The numpy plane projection packs, per band, the same sign bits as the
+    built-in ``hyperplane_bucket`` over that band's planes, row for row; the
+    near-dup operator built on it finds every scaled copy."""
     import math
 
     from ksql_spark.operators.dedup import embedding_neardup_pairs_lsh
+    from ksql_spark.operators.similarity import band_values_arrow, hyperplane_bucket
 
     rows = [(i, [math.sin(i * 3.7 + d) for d in range(16)]) for i in range(30)]
     rows += [(500 + i, [x * 1.0001 for x in rows[i][1]]) for i in range(0, 30, 6)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    a = embedding_neardup_pairs_lsh(df, threshold=0.99, n_dims=16, vectorized=True)
-    b = embedding_neardup_pairs_lsh(df, threshold=0.99, n_dims=16, vectorized=False)
-    ra = sorted(map(tuple, a.collect()))
-    rb = sorted(map(tuple, b.collect()))
-    assert ra == rb
-    assert len(ra) >= 5  # the scaled copies (cosine == 1.0) are all found
+    bands, r = 8, 6
+    planes = hyperplanes(bands * r, 16)
+    got = band_values_arrow(df, "vec_id", "embedding", planes, bands, r).collect()
+    per_band = [
+        hyperplane_bucket(Fn.col("embedding"), planes[b * r : (b + 1) * r]) for b in range(bands)
+    ]
+    ref = df.select("vec_id", Fn.array(*per_band)).collect()
+    assert sorted((x[0], list(x[1])) for x in got) == sorted((x[0], list(x[1])) for x in ref)
+    pairs = embedding_neardup_pairs_lsh(df, threshold=0.99, n_dims=16).collect()
+    assert len(pairs) >= 5  # the scaled copies (cosine == 1.0) are all found
 
 
 def test_lsh_topk_finds_true_near_neighbors(spark):
