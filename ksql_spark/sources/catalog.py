@@ -16,23 +16,144 @@ Storage formats
                       so readers see committed epochs only.
 ``bucketed_table``  — a managed table bucketed on its join key
                       (:meth:`Catalog.write_bucketed`).
+
+A parquet relation is read two ways: by Spark (:meth:`Catalog.read`,
+:meth:`Catalog.read_stream`), and in-process on Arrow
+(:meth:`Catalog.arrow_source`) for the pull queries the engine serves without
+a Spark job.  ``INSERT ... VALUES`` rows are written with pyarrow
+(:meth:`Catalog.append`).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import uuid
 from dataclasses import dataclass, field
 from typing import Any
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..builder import Ref
 from ..errors import CatalogError, SchemaError
+from ..streaming.sink import LINEAGE_COLUMNS, ExactlyOnceParquetSink
 from ..types import SchemaField, fields_to_struct
 
 QUERYABLE_PREFIX = "QUERYABLE_"  # reference: consts/consts.go:17
+
+# the Spark schema Spark stores in every parquet footer it writes
+SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+# predicate ops the Arrow reader evaluates, with SQL's NULL semantics
+# (a NULL comparison drops the row)
+_ARROW_OPS = {
+    "=": pc.equal,
+    "!=": pc.not_equal,
+    "<": pc.less,
+    "<=": pc.less_equal,
+    ">": pc.greater,
+    ">=": pc.greater_equal,
+    "IN": lambda col, values: pc.is_in(col, value_set=pa.array(values)),
+}
+
+
+class ArrowUnserved(Exception):
+    """The in-process Arrow reader cannot give exactly what Spark reads for
+    this relation or this read; the caller takes the Spark path."""
+
+
+@dataclass
+class ArrowSource:
+    """A relation as the in-process reader sees it (:meth:`Catalog.arrow_source`).
+
+    ``schema`` holds the columns as Spark reads them, ``epochs`` the data
+    files, one group per committed epoch (one group for a plain parquet
+    relation), and ``keys`` the latest-row-per-key columns of a sink-backed
+    TABLE (None for a relation read row by row).  ``uniform`` requires every
+    file's footer to carry the column names and types of ``schema`` (a
+    relation without a declared schema, which Spark infers from one file).
+    """
+
+    schema: T.StructType
+    epochs: list[list[str]]
+    keys: list[str] | None = None
+    uniform: bool = False
+
+    def read(self, columns: list[str], where: list[tuple[str, str, Any]]) -> pa.Table:
+        """``columns`` (names as in ``schema``) of the rows that pass every
+        ``(column, op, literal)`` of ``where``, cast to the Arrow types of
+        their Spark types, so a row converts to what ``collect()`` returns.
+        A sink-backed TABLE's key filter is applied before its latest row
+        per key is picked (a key filter commutes with that pick)."""
+        extra = [*self.keys, "__op"] if self.keys is not None else []
+        names = list(dict.fromkeys([*columns, *(c for c, _, _ in where), *extra]))
+        fields = {f.name: f for f in self.schema.fields}
+        fields["__op"] = T.StructField("__op", T.StringType())
+        try:
+            arrow = to_arrow_schema(T.StructType([fields[n] for n in names]))
+        except TypeError as e:  # a Spark type with no Arrow twin
+            raise ArrowUnserved(str(e)) from e
+        target = pa.schema([pa.field(f.name, f.type) for f in arrow])
+        epochs = []
+        for files in self.epochs:
+            parts = [self._read_file(f, target) for f in files]
+            table = pa.concat_tables(parts) if parts else target.empty_table()
+            for col, op, value in where:
+                table = table.filter(_ARROW_OPS[op](table.column(col), value))
+            epochs.append(table)
+        if self.keys is not None:
+            table = ExactlyOnceParquetSink.latest_rows(epochs, self.keys)
+        else:
+            table = pa.concat_tables(epochs) if epochs else target.empty_table()
+        return table.select(list(dict.fromkeys(columns)))
+
+    def _read_file(self, path: str, target: pa.Schema) -> pa.Table:
+        """One parquet file's ``target`` columns, matched by name without
+        regard to case and missing ones NULL, as Spark's reader matches them."""
+        f = pq.ParquetFile(path, coerce_int96_timestamp_unit="us")
+        physical = f.schema_arrow
+        if self.uniform and _spark_schema(physical.metadata).simpleString() != self.schema.simpleString():
+            raise ArrowUnserved(f"{path} was written with another schema")
+        by_name: dict[str, list[str]] = {}
+        for name in physical.names:
+            by_name.setdefault(name.lower(), []).append(name)
+        found = {}
+        for want in target:
+            names = by_name.get(want.name.lower(), [])
+            if len(names) > 1:
+                raise ArrowUnserved(f"{path} has columns {names}")
+            if names:
+                found[want.name] = names[0]
+        data = f.read(columns=sorted(set(found.values())), use_threads=False)
+        n = f.metadata.num_rows
+        cols = []
+        for want in target:
+            if want.name not in found:
+                cols.append(pa.nulls(n, want.type))
+                continue
+            col = data.column(found[want.name])
+            if not _castable(col.type, want.type):
+                raise ArrowUnserved(f"{path}: {found[want.name]} is {col.type}, not {want.type}")
+            cols.append(col.cast(want.type))
+        return pa.Table.from_arrays(cols, schema=target)
+
+
+def _castable(src: pa.DataType, dst: pa.DataType) -> bool:
+    """Whether a file column of Arrow type ``src`` reads as a Spark column of
+    Arrow type ``dst`` without a conversion Spark's reader would refuse:
+    the same type, an integer widening, any timestamp (INT96 reads as a
+    naive one), or a nested type of the same kind (list element names
+    differ between writers)."""
+    if src == dst or (pa.types.is_timestamp(src) and pa.types.is_timestamp(dst)):
+        return True
+    if pa.types.is_integer(src) and pa.types.is_integer(dst):
+        return src.bit_width <= dst.bit_width
+    return pa.types.is_nested(src) and src.id == dst.id
 
 
 @dataclass
@@ -307,8 +428,51 @@ class Catalog:
             reader = reader.schema(rel.schema)
         return reader.parquet(self._data_glob(rel))
 
-    def read_stream(self, name: str) -> DataFrame:
-        """Unbounded streaming read (STREAM relations)."""
+    def arrow_source(self, name: str) -> ArrowSource:
+        """The relation's files and Spark schema for an in-process read,
+        found without a Spark job: a sink-backed relation's committed epochs
+        (the files Spark's read of it lists), or a parquet relation's files.
+        Raises :class:`ArrowUnserved` for a relation that reader cannot
+        mirror: a bucketed table, a parquet TABLE outside a sink, a sink with
+        no committed file, a directory with subdirectories (Spark reads
+        those as partitions), or a schema no footer or declaration gives."""
+        rel = self.get(name)
+        sink = rel.metadata.get("sink")
+        if sink is not None:
+            epochs = sink.committed_files()
+            first = next((f for files in epochs for f in files), None)
+            if first is None:
+                raise ArrowUnserved(f"{name} has no committed file")
+            schema = _spark_schema(pq.read_schema(first).metadata)
+            schema = T.StructType([f for f in schema.fields if f.name not in LINEAGE_COLUMNS])
+            keys = rel.metadata.get("state_keys") if rel.ref == Ref.TABLE else None
+            if keys:
+                by_name = {f.name.lower(): f.name for f in schema.fields}
+                if any(k.lower() not in by_name for k in keys):
+                    raise ArrowUnserved(f"{name}: keys {keys} are not all in {schema.names}")
+                keys = [by_name[k.lower()] for k in keys]
+            return ArrowSource(schema, epochs, keys or None)
+        if rel.format != "parquet" or rel.ref != Ref.STREAM:
+            raise ArrowUnserved(f"{name} is a {rel.format} {rel.ref.value}")
+        if os.path.isfile(rel.path):
+            files = [rel.path]
+        elif os.path.isdir(rel.path):
+            entries = sorted(f for f in os.listdir(rel.path) if not f.startswith(("_", ".")))
+            files = [os.path.join(rel.path, f) for f in entries]
+            if any(os.path.isdir(f) for f in files):
+                raise ArrowUnserved(f"{rel.path} has subdirectories")
+        else:
+            raise ArrowUnserved(f"{rel.path} does not exist")
+        if rel.schema is not None:
+            return ArrowSource(rel.schema, [files])
+        if not files:
+            raise ArrowUnserved(f"{name} has no file to take a schema from")
+        return ArrowSource(_spark_schema(pq.read_schema(files[0]).metadata), [files], uniform=True)
+
+    def read_stream(self, name: str, max_files_per_trigger: int | None = None) -> DataFrame:
+        """Unbounded streaming read (STREAM relations).  A batch takes at
+        most ``max_files_per_trigger`` new files, by default the relation's
+        ``metadata["max_files_per_trigger"]``, else 16."""
         rel = self.get(name)
         if rel.ref == Ref.TABLE:
             raise CatalogError(f"{name} is a TABLE; use read() for its snapshot")
@@ -327,16 +491,53 @@ class Catalog:
             path = staged
         return (
             self.spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", rel.metadata.get("max_files_per_trigger", 16))
+            .option(
+                "maxFilesPerTrigger",
+                max_files_per_trigger or rel.metadata.get("max_files_per_trigger", 16),
+            )
             .parquet(path)
         )
 
     def _data_glob(self, rel: Relation) -> str:
         return rel.path
 
-    def append(self, name: str, df: DataFrame) -> None:
-        """INSERT-style append (ksql/insert_builder.go runtime path)."""
+    def insertable(self, name: str) -> Relation:
+        """The relation an INSERT may write into.  A TABLE is refused, and so
+        is a persistent query's output: its readers see committed epochs
+        only, so rows written beside them would be lost."""
         rel = self.get(name)
         if rel.ref == Ref.TABLE:
             raise CatalogError(f"INSERT into TABLE {name} is not supported")
-        df.write.mode("append").parquet(rel.path)
+        if rel.metadata.get("sink") is not None:
+            raise CatalogError(
+                f"INSERT into {name} is not supported: it is the output of a persistent "
+                f"query, whose readers see only the epochs the query commits"
+            )
+        return rel
+
+    def append(self, name: str, data: DataFrame | pa.Table) -> None:
+        """INSERT-style append (ksql/insert_builder.go runtime path).
+
+        A DataFrame (``INSERT ... AS SELECT``) is written by a Spark job.  An
+        Arrow table (``INSERT ... VALUES``, already in the relation's Arrow
+        schema) is written in-process as one parquet file: first under a
+        hidden ``.``-prefixed name, which Spark's batch and file-stream
+        listings skip, then renamed to its ``part-`` name in one atomic step,
+        so a reader sees all of the rows or none."""
+        rel = self.insertable(name)
+        if isinstance(data, DataFrame):
+            data.write.mode("append").parquet(rel.path)
+            return
+        os.makedirs(rel.path, exist_ok=True)
+        part = f"part-{uuid.uuid4()}.parquet"
+        tmp = os.path.join(rel.path, f".{part}")
+        pq.write_table(data, tmp)
+        os.rename(tmp, os.path.join(rel.path, part))
+
+
+def _spark_schema(metadata: dict | None) -> T.StructType:
+    """The Spark schema Spark wrote into a parquet footer's ``metadata``."""
+    raw = (metadata or {}).get(SPARK_ROW_METADATA)
+    if raw is None:
+        raise ArrowUnserved("a parquet file has no Spark schema")
+    return T.StructType.fromJson(json.loads(raw))

@@ -29,14 +29,22 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.conversion import ArrowTableToRowsConversion
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import _make_type_verifier
 
 from ..builder import CreateBuilder, EmitMode, InsertBuilder, Ref, SelectBuilder
 from ..errors import AnalysisError, CatalogError, QueryTimeoutError, SchemaError
+from ..expr import Conditional, ExpressionList, Field
 from ..operators.compile import DEFAULT_GRACE, compile_select, output_keys
-from ..sources.catalog import QUERYABLE_PREFIX, Catalog, Relation
+from ..sources.catalog import (
+    QUERYABLE_PREFIX,
+    SPARK_ROW_METADATA,
+    ArrowUnserved,
+    Catalog,
+    Relation,
+)
 from .sink import OP_APPEND, OP_UPSERT, ExactlyOnceParquetSink
 
 
@@ -215,19 +223,17 @@ def start_stream(
         return writer.start()
 
 
-def values_frame(
-    spark: SparkSession, name: str, schema: T.StructType, rows: list[dict[str, Any]]
-) -> DataFrame:
-    """The rows of ``INSERT INTO <name> VALUES`` as a local Arrow relation.
+def values_table(name: str, schema: T.StructType, rows: list[dict[str, Any]]) -> pa.Table:
+    """The rows of ``INSERT INTO <name> VALUES`` as an Arrow table of the
+    relation's schema, ready to be written as one parquet file.
 
     Each row goes through the checks and conversion that
     ``spark.createDataFrame(rows, schema)`` applies (PySpark's row verifier,
     then ``toInternal``), so the same values are accepted and a naive
-    datetime keeps its local-time meaning.  The converted rows then reach
-    the JVM as one Arrow batch, a ``LocalRelation``, instead of pickled rows
-    behind a ``LogicalRDD`` that every action re-runs through Python
-    workers.  A row key that names no column, or a value its column cannot
-    hold, raises :class:`SchemaError`; a column left out is NULL.
+    datetime keeps its local-time meaning.  A row key that names no column,
+    or a value its column cannot hold, raises :class:`SchemaError`; a column
+    left out is NULL.  The footer carries the Spark schema, as Spark's own
+    files do, so a reader that infers the schema gets the declared one.
     """
     columns = set(schema.names)
     verify = _make_type_verifier(schema)
@@ -244,7 +250,49 @@ def values_frame(
             raise SchemaError(f"INSERT into {name}: {e}") from e
         internal.append(dict(zip(schema.names, schema.toInternal(row))))
     table = pa.Table.from_pylist(internal, schema=to_arrow_schema(schema))
-    return spark.createDataFrame(table, schema=schema)
+    return table.replace_schema_metadata({SPARK_ROW_METADATA: schema.json()})
+
+
+# A classic pull's WHERE is a conjunction of ``<column> <op> <literal>`` with
+# these ops, on a string, integral or boolean column.  Arrow compares those
+# as Spark does; floats stay on Spark (it orders NaN above every number),
+# and so do datetimes, whose literals need Spark's coercions.
+_PULL_OPS = frozenset({"=", "!=", "<", "<=", ">", ">=", "IN"})
+_INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+
+
+def _literal_fits(dtype: T.DataType, value: Any) -> bool:
+    """Whether a ``dtype`` column compares to the literal ``value`` on Arrow
+    as it does on Spark."""
+    if dtype == T.StringType():  # the default (binary) collation only
+        return type(value) is str
+    if isinstance(dtype, T.BooleanType):
+        return type(value) is bool
+    if isinstance(dtype, _INTEGRAL):
+        return type(value) is int and -(2**63) <= value < 2**63
+    return False
+
+
+def _conjuncts(exprs: list) -> list[Conditional] | None:
+    """The comparisons of a WHERE list that is a conjunction of them (AND
+    lists flattened), or None."""
+    out: list[Conditional] = []
+    for e in exprs:
+        if type(e) is ExpressionList and e.op == "AND":
+            inner = _conjuncts(e.exprs)
+            if inner is None:
+                return None
+            out.extend(inner)
+        elif type(e) is Conditional:
+            out.append(e)
+        else:
+            return None
+    return out
+
+
+def _plain_field(e: Any) -> bool:
+    """An unqualified column reference (``*`` and ``rel.col`` stay on Spark)."""
+    return type(e) is Field and "." not in e.name and e.name != "*"
 
 
 def _column_types(schema: T.StructType) -> dict[str, str]:
@@ -266,6 +314,9 @@ class PersistentQuery:
         # exception() readable after termination
         self.streaming_query: StreamingQuery | None = None
         self.state_partitions: int | None = None  # fixed at first start (checkpoint)
+        # new source files per batch; every run of this query, resume()
+        # included, reads with it (None: the source relation's default)
+        self.max_files_per_trigger: int | None = None
 
     def is_active(self) -> bool:
         return self.streaming_query is not None and self.streaming_query.isActive
@@ -305,6 +356,9 @@ class PersistentQueryManager:
         ``available_now=True`` (tests/bench) drains all currently available
         input and stops — deterministic micro-batching.  For a continuous
         deployment pass ``processing_time='5 seconds'`` instead.
+        ``max_files_per_trigger`` caps the new source files each batch of
+        this query reads, its runs after :meth:`resume` too; other queries
+        over the same source keep the relation's default.
         """
         create.validate()
         if create.select is None:
@@ -329,9 +383,11 @@ class PersistentQueryManager:
             # session default.  Baked into the checkpoint at first start.
             pq.state_partitions = state_partitions or self._declared_partitions(sb)
             self.queries[name] = pq
+        if max_files_per_trigger is not None:
+            pq.max_files_per_trigger = max_files_per_trigger
 
         self._register_output_relation(pq, state_keys)
-        self._start(pq, available_now, processing_time, await_termination, max_files_per_trigger)
+        self._start(pq, available_now, processing_time, await_termination)
         return pq
 
     @staticmethod
@@ -344,13 +400,23 @@ class PersistentQueryManager:
         # EMIT FINAL or default on windowed aggregate: final-per-window
         return "append"
 
-    def _compile_streaming(self, create: CreateBuilder, max_files_per_trigger: int | None) -> DataFrame:
-        sb = create.select
+    def _compile_streaming(self, pq: PersistentQuery) -> DataFrame:
+        sb = pq.create.select
         assert sb is not None
         sources: dict[str, DataFrame] = {}
-        if max_files_per_trigger is not None and sb.from_expr is not None:
-            rel = self.catalog.get(sb.from_expr.name)
-            rel.metadata["max_files_per_trigger"] = max_files_per_trigger
+        fe = sb.from_expr
+        if (
+            pq.max_files_per_trigger is not None
+            and fe is not None
+            and fe.ref == Ref.STREAM
+            and self.catalog.exists(fe.name)
+            and self.catalog.get(fe.name).ref == Ref.STREAM
+        ):
+            # the query's own file rate, read into its source frame only: the
+            # relation and every other query over it keep their default
+            sources[fe.name] = self.catalog.read_stream(
+                fe.name, max_files_per_trigger=pq.max_files_per_trigger
+            )
         df = compile_select(
             sb,
             spark=self.spark,
@@ -378,9 +444,8 @@ class PersistentQueryManager:
         available_now: bool,
         processing_time: str | None,
         await_termination: bool,
-        max_files_per_trigger: int | None,
     ) -> None:
-        df = self._compile_streaming(pq.create, max_files_per_trigger)
+        df = self._compile_streaming(pq)
         pq.streaming_query = start_stream(
             df,
             pq.sink,
@@ -438,7 +503,8 @@ class PersistentQueryManager:
         processing_time: str | None = None,
         await_termination: bool = True,
     ) -> PersistentQuery:
-        """Restart a stopped query from its checkpoint.
+        """Restart a stopped query from its checkpoint, with the
+        ``max_files_per_trigger`` it was created with.
 
         Structured Streaming replays any uncommitted epoch; the sink's
         commit markers make the replay idempotent -> exactly-once resume.
@@ -448,7 +514,7 @@ class PersistentQueryManager:
             raise CatalogError(f"no persistent query {name!r}")
         if pq.is_active():
             raise AnalysisError(f"query {name!r} is still active; stop it first")
-        self._start(pq, available_now, processing_time, await_termination, None)
+        self._start(pq, available_now, processing_time, await_termination)
         return pq
 
     def drop(self, name: str) -> None:
@@ -464,28 +530,114 @@ class PersistentQueryManager:
     # ------------------------------------------------------------------
 
     def insert(self, ib: InsertBuilder) -> None:
+        """INSERT INTO <stream> VALUES | AS SELECT.
+
+        VALUES rows are checked and converted as ``spark.createDataFrame``
+        would (:func:`values_table`), then written in-process with pyarrow
+        as one parquet file that appears atomically (:meth:`Catalog.append`):
+        no Spark job.  AS SELECT runs its query as a Spark write, refused
+        when its columns differ from the relation's.  A TABLE and a
+        persistent query's output refuse both (:class:`CatalogError`)."""
         ib.validate()
-        rel = self.catalog.get(ib.name)
+        rel = self.catalog.insertable(ib.name)
         schema = rel.schema or self.catalog.read(ib.name).schema
         if ib.rows:
-            df = values_frame(self.spark, ib.name, schema, ib.rows)
+            data: DataFrame | pa.Table = values_table(ib.name, schema, ib.rows)
         else:
             assert ib.select is not None
-            df = compile_select(ib.select, spark=self.spark, catalog=self.catalog)
+            data = compile_select(ib.select, spark=self.spark, catalog=self.catalog)
             # the relation is read back with its schema, so a file of other
             # columns or types would fail every later read of it
-            if _column_types(df.schema) != _column_types(schema):
+            if _column_types(data.schema) != _column_types(schema):
                 raise SchemaError(
-                    f"INSERT into {ib.name}: the query yields {df.schema.simpleString()}, "
+                    f"INSERT into {ib.name}: the query yields {data.schema.simpleString()}, "
                     f"the relation holds {schema.simpleString()}"
                 )
-        self.catalog.append(ib.name, df)
+        self.catalog.append(ib.name, data)
 
     def select_once(self, sb: SelectBuilder) -> list:
         """Pull query: one-shot read of current materialized data
-        (reference: SelectOnce, streams/specification.go:588-620)."""
-        df = compile_select(sb, spark=self.spark, catalog=self.catalog)
-        return df.collect()
+        (reference: SelectOnce, streams/specification.go:588-620).
+
+        A classic pull is answered in-process on Arrow, with no Spark job
+        (:meth:`_pull_in_process`); every other shape is compiled and
+        collected by Spark.  Both give the same rows, types and field names.
+        """
+        sb.validate()
+        pulled = self._pull_in_process(sb)
+        if pulled is None:
+            return compile_select(sb, spark=self.spark, catalog=self.catalog).collect()
+        return ArrowTableToRowsConversion.convert(*pulled)
+
+    def _pull_in_process(self, sb: SelectBuilder) -> tuple[pa.Table, T.StructType] | None:
+        """The result of a classic pull read from the relation's files on
+        Arrow, with its Spark schema, or None for any other shape.
+
+        A classic pull selects plain (optionally aliased) columns of one
+        relation, with a WHERE of ``<column> <op> <literal>`` conjuncts
+        (:data:`_PULL_OPS`, :func:`_literal_fits`) and no join, GROUP BY,
+        window, HAVING, ORDER BY, LIMIT, CTE, set op or EMIT.  On a
+        sink-backed TABLE every conjunct must be on a (non-float) state key,
+        and there must be one: the key filter then commutes with the latest
+        row per key, and a value-column filter keeps the cached Spark state
+        (:meth:`ExactlyOnceParquetSink.read_latest_state`).  The files read
+        and the Spark schema come from :meth:`Catalog.arrow_source`.
+        """
+        fe = sb.from_expr
+        conds = _conjuncts(sb.where_exprs)
+        if (
+            conds is None
+            or sb.joins
+            or sb.group_by
+            or sb.window is not None
+            or sb.having_exprs
+            or sb.order_by
+            or sb.limit_n is not None
+            or sb.cte is not None
+            or sb.set_ops
+            or sb.emit != EmitMode.NONE
+            or not all(_plain_field(f) for f in sb.fields)
+            or not all(_plain_field(c.left) and c.op in _PULL_OPS for c in conds)
+            or not self.catalog.exists(fe.name)
+        ):
+            return None
+        try:
+            src = self.catalog.arrow_source(fe.name)
+            by_name: dict[str, list[T.StructField]] = {}
+            for f in src.schema.fields:
+                by_name.setdefault(f.name.lower(), []).append(f)
+
+            def column(name: str) -> T.StructField:
+                found = by_name.get(name.lower(), [])
+                if len(found) != 1:  # Spark raises its own error for these
+                    raise ArrowUnserved(f"column {name!r} resolves to {found}")
+                return found[0]
+
+            # an unaliased column is named as the query spells it, as in Spark
+            out = [(f.alias_name or f.name, column(f.name)) for f in sb.fields]
+            where = []
+            for c in conds:
+                col = column(c.left.name)
+                values = c.right if c.op == "IN" else [c.right]
+                if not values or not all(_literal_fits(col.dataType, v) for v in values):
+                    return None
+                where.append((col.name, c.op, c.right))
+            if src.keys is not None and (
+                not where
+                or any(name not in src.keys for name, _, _ in where)
+                or any(isinstance(column(k).dataType, T.FractionalType) for k in src.keys)
+            ):
+                return None
+            if any(isinstance(col.dataType, T.TimestampNTZType) for _, col in out):
+                return None
+            table = src.read([col.name for _, col in out], where)
+        except (ArrowUnserved, pa.ArrowException):
+            # a file Arrow cannot read as Spark would: Spark reads it, or
+            # raises its own error
+            return None
+        schema = T.StructType([T.StructField(name, col.dataType) for name, col in out])
+        result = pa.Table.from_arrays([table.column(col.name) for _, col in out], names=schema.names)
+        return result, schema
 
     def select_with_emit(self, sb: SelectBuilder, timeout_seconds: int = 60) -> Iterable:
         """Push query drained to completion over current data

@@ -13,7 +13,11 @@ idempotent by construction:
 * Re-delivered epoch without marker       -> dir overwritten, then marker
   written via ``os.rename`` (atomic on POSIX).  Partial dirs without a
   marker are invisible to readers.
-* Readers union only committed epoch dirs.
+* Readers union only committed epoch dirs.  There are two readers, and both
+  list the epochs through :meth:`committed_batches`: Spark's
+  (:meth:`read`, :meth:`read_data`, :meth:`read_latest_state`) and the
+  in-process Arrow reader of a pull query (:meth:`committed_files`, with
+  :meth:`latest_rows` as the Arrow twin of the latest-row-per-key view).
 
 The changelog carries lineage columns (``__batch_id``, ``__op``) per the
 north rule; per-partition row counts are recorded in every commit marker, so
@@ -30,12 +34,16 @@ import shutil
 import threading
 import time
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 OP_UPSERT = "U"
 OP_APPEND = "A"
 OP_DELETE = "D"
+LINEAGE_COLUMNS = ("__op", "__part_id", "__batch_id")
 
 
 class ExactlyOnceParquetSink:
@@ -74,6 +82,17 @@ class ExactlyOnceParquetSink:
         return sorted(
             int(f[: -len(".json")]) for f in os.listdir(self.commit_dir) if f.endswith(".json")
         )
+
+    def committed_files(self) -> list[list[str]]:
+        """The data files of each committed epoch, in epoch order: the files
+        Spark's :meth:`read` scans (hidden ``_``/``.`` names skipped, as its
+        listing skips them), for a reader that runs without a Spark job."""
+        out = []
+        for batch_id in self.committed_batches():
+            path = self._batch_path(batch_id)
+            names = sorted(f for f in os.listdir(path) if not f.startswith(("_", ".")))
+            out.append([os.path.join(path, f) for f in names])
+        return out
 
     # -- foreachBatch entry point -------------------------------------------
 
@@ -166,7 +185,7 @@ class ExactlyOnceParquetSink:
     def read_data(self, spark: SparkSession) -> DataFrame:
         """Committed rows without lineage columns (parity-comparison view)."""
         df = self.read(spark)
-        drop = [c for c in ("__op", "__part_id", "__batch_id") if c in df.columns]
+        drop = [c for c in LINEAGE_COLUMNS if c in df.columns]
         return df.drop(*drop)
 
     def read_latest_state(self, spark: SparkSession, keys: list[str]) -> DataFrame:
@@ -212,8 +231,7 @@ class ExactlyOnceParquetSink:
 
     @staticmethod
     def _latest_state(df: DataFrame, keys: list[str]) -> DataFrame:
-        lineage = {"__op", "__part_id", "__batch_id"}
-        value_cols = [c for c in df.columns if c not in keys and c not in lineage]
+        value_cols = [c for c in df.columns if c not in keys and c not in LINEAGE_COLUMNS]
         # update-mode changelogs emit at most one row per key per epoch, so
         # the epoch id is a total order per key; carry __op so tombstones
         # ('D', emitted when e.g. two sessions merge) retract the key
@@ -226,4 +244,28 @@ class ExactlyOnceParquetSink:
         out = df.groupBy(*[F.col(k) for k in keys]).agg(*agg)
         out = out.filter(F.col("__v.__op") != OP_DELETE)
         return out.select(*keys, *[F.col(f"__v.{c}").alias(c) for c in value_cols])
+
+    @staticmethod
+    def latest_rows(epochs: list[pa.Table], keys: list[str]) -> pa.Table:
+        """:meth:`_latest_state` on Arrow: ``epochs`` holds rows of each
+        committed epoch in epoch order, each with an ``__op`` column.  Per
+        key (NULL is a key, as in Spark's ``groupBy``) the row of the latest
+        epoch is kept, then ``'D'`` tombstones are dropped; ``__op`` is
+        removed."""
+        table = pa.concat_tables(epochs)
+        n = table.num_rows
+        if n:
+            # one code per row that orders rows by epoch: its max per key
+            # is the latest row, and the code modulo n is the row's position
+            epoch = np.repeat(np.arange(len(epochs), dtype=np.int64), [t.num_rows for t in epochs])
+            code = pa.array(epoch * n + np.arange(n, dtype=np.int64))
+            latest = (
+                table.select(keys)
+                .append_column("__code", code)
+                .group_by(keys, use_threads=False)
+                .aggregate([("__code", "max")])
+            )
+            table = table.take(latest.column("__code_max").to_numpy() % n)
+        table = table.filter(pc.not_equal(table.column("__op"), OP_DELETE))
+        return table.drop_columns(["__op"])
 

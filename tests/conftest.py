@@ -3,6 +3,8 @@ from __future__ import annotations
 import os
 import shutil
 import sys
+import time
+import uuid
 
 import pytest
 
@@ -34,3 +36,31 @@ def transcripts(spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("data") / "transcripts")
     df = write_transcripts(spark, path, n_convs=60, avg_turns=10, partitions=8)
     return path, df
+
+
+@pytest.fixture()
+def count_jobs(spark):
+    """``count_jobs(fn)`` runs ``fn()`` and returns its result and the
+    number of Spark jobs it started.
+
+    The status tracker is fed by the listener bus, which runs behind the
+    jobs; a fence job in a later job group is waited for, so every job
+    ``fn`` started has been counted by then."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group, fence = f"counted-{uuid.uuid4()}", f"counted-fence-{uuid.uuid4()}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup(fence, fence)
+            sc.parallelize([0], 1).count()
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        tracker = sc.statusTracker()
+        deadline = time.time() + 30
+        while not tracker.getJobIdsForGroup(fence) and time.time() < deadline:
+            time.sleep(0.05)
+        return out, len(tracker.getJobIdsForGroup(group))
+
+    return run

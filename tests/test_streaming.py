@@ -716,13 +716,53 @@ def test_drop_releases_cached_state(spark, workdir):
     assert persisted() == before
 
 
-def test_insert_values_frame_is_local_relation(spark):
-    from ksql_spark.streaming.engine import values_frame
+def test_insert_values_starts_no_spark_job(spark, workdir, count_jobs):
+    """INSERT ... VALUES is written in-process with pyarrow: no Spark job,
+    and Spark reads the rows back."""
+    from ksql_spark import Insert, KType, SchemaField
 
-    df = values_frame(spark, "s", spark.range(1).schema, [{"id": 1}, {"id": 2}])
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    assert plan.startswith("LocalRelation") and "LogicalRDD" not in plan
-    assert [r.id for r in df.collect()] == [1, 2]
+    cat = Catalog(spark, root=f"{workdir}/cat")
+    cat.create(Create(STREAM, "s").SchemaFields(SchemaField("id", KType.BIGINT)))
+    eng = PersistentQueryManager(spark, cat, workdir=f"{workdir}/eng")
+    _, jobs = count_jobs(lambda: eng.insert(Insert(STREAM, "s").Rows({"id": 1}, {"id": 2})))
+    assert jobs == 0
+    assert sorted(r.id for r in cat.read("s").collect()) == [1, 2]
+
+
+def test_max_files_per_trigger_stays_with_its_query(spark, workdir):
+    """A query's ``max_files_per_trigger`` is its own: another query over
+    the same source reads with the source's default, and a stop/resume of
+    the first still takes one file per batch."""
+    src = f"{workdir}/mf_src"
+
+    def write(ids):
+        spark.createDataFrame([(i,) for i in ids], "id long").coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+
+    for i in range(3):
+        write([i])
+    cat = Catalog(spark, root=f"{workdir}/mf_cat")
+    cat.register_parquet("src", src, ref=STREAM)
+    eng = PersistentQueryManager(spark, cat, workdir=f"{workdir}/mf_eng")
+
+    def copy(name, **kw):
+        pq = eng.create_as_select(
+            Create(STREAM, name).AsSelect(Select(F("id")).From(Schema("src", STREAM))), **kw
+        )
+        return pq.sink
+
+    one = copy("one_per_batch", max_files_per_trigger=1)
+    default = copy("default_rate")
+    assert "max_files_per_trigger" not in cat.get("src").metadata
+    assert len(one.committed_batches()) == 3
+    assert len(default.committed_batches()) == 1
+    write([3])
+    write([4])
+    eng.stop("one_per_batch")
+    eng.resume("one_per_batch")
+    assert len(one.committed_batches()) == 5
+    assert sorted(r.id for r in one.read_data(spark).collect()) == [0, 1, 2, 3, 4]
 
 
 def test_select_with_emit_timeout_stops_query(spark, engine):
